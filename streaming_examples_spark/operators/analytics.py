@@ -220,10 +220,15 @@ def numeric_quantiles(lineitem: DataFrame, n_buckets: int | None = None) -> Data
        cumulative-sum window over the ≤ groups×n_buckets count rows
        builds the rank offsets, broadcast back.
 
-    The interpolated value at each rank is identical under both
+    Both strategies are defined over the NON-NULL values only (NULL
+    prices are dropped before ranking, so ``n_items`` counts non-null
+    prices): a NULL has no bucket — ``floor(null)`` under ``least()``
+    would land it in the top bucket while the window form ranks it
+    first. The interpolated value at each rank is identical under both
     strategies: equal v always land in the same bucket, and any
     v-consistent total order selects the same value at a given rank
-    (row-identity is pinned by a test at sf0.01). ``n_buckets``
+    (row-identity is pinned by a test at sf0.01). The size estimate
+    reads a private JVM API; if that call fails the window form runs. ``n_buckets``
     defaults to 4× the cluster parallelism — derived from
     defaultParallelism, so it scales with the deployment rather than
     being tuned to local[32]; passing it explicitly forces the
@@ -234,7 +239,9 @@ def numeric_quantiles(lineitem: DataFrame, n_buckets: int | None = None) -> Data
 
     from pyspark.sql import Window
 
-    b0 = lineitem.select("l_returnflag", F.col("l_extendedprice").alias("v"))
+    b0 = lineitem.where(F.col("l_extendedprice").isNotNull()).select(
+        "l_returnflag", F.col("l_extendedprice").alias("v")
+    )
     force_bucketed = n_buckets is not None
     if n_buckets is None:
         n_buckets = max(16, b0.sparkSession.sparkContext.defaultParallelism * 4)
@@ -244,7 +251,14 @@ def numeric_quantiles(lineitem: DataFrame, n_buckets: int | None = None) -> Data
         )
     except ValueError:
         min_bytes = 256 << 20
-    est_bytes = b0._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    from py4j.protocol import Py4JError
+
+    try:
+        est_bytes = int(
+            str(b0._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        )
+    except (Py4JError, AttributeError, TypeError, ValueError):
+        est_bytes = 0  # private JVM API unavailable: the window form is safe
 
     if force_bucketed or est_bytes > min_bytes:
         stats = b0.groupBy("l_returnflag").agg(
@@ -369,7 +383,8 @@ def numeric_quantiles_approx(lineitem: DataFrame, accuracy: int = 10000) -> Data
     1/accuracy. Columns mirror the exact operator so the two are
     directly comparable; correctness is pytest-checked against the
     exact quantiles within sketch tolerance (not hash-checked — the
-    sketch is engine-specific by design)."""
+    sketch is engine-specific by design). NULL prices are ignored, as
+    in the exact operator."""
     q = F.percentile_approx(
         F.col("l_extendedprice"), F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)), accuracy
     )
@@ -378,7 +393,7 @@ def numeric_quantiles_approx(lineitem: DataFrame, accuracy: int = 10000) -> Data
         F.round(q.getItem(1), 2).alias("p50_price"),
         F.round(q.getItem(2), 2).alias("p75_price"),
         F.round(F.avg("l_extendedprice"), 2).alias("avg_price"),
-        F.count(F.lit(1)).alias("n_items"),
+        F.count("l_extendedprice").alias("n_items"),
     )
 
 

@@ -8,13 +8,19 @@ transactions — complete ones are applied in commit-LSN order through
 ``tx_denormalize``; incomplete ones (a micro-batch may split a
 transaction, poc.md:343) carry over via a persisted state directory.
 
-State layout (parquet, atomically swapped per batch):
-    <state_dir>/order_state/_bucket=N/  latest order image per id,
-                                        hash-bucketed by order key
-    <state_dir>/line_state/_bucket=N/   latest line image per line id,
-                                        hash-bucketed by ORDER key
-    <state_dir>/carry_orders/  incomplete-tx order events
-    <state_dir>/carry_lines/   incomplete-tx line events
+State layout (parquet; one version dir per committed batch, named by
+the backend's commit pointer — a ``CURRENT`` file or ``_pointer/``):
+    <state_dir>/_layout.json   the seal: {"format": 1, "backend": ...,
+                               "n_buckets": N}
+    <state_dir>/v<V>/order_state/_bucket=K/  latest order image per id,
+                                             hash-bucketed by order key
+    <state_dir>/v<V>/line_state/_bucket=K/   latest line image per line
+                                             id, hash-bucketed by ORDER key
+    <state_dir>/v<V>/carry_orders/, carry_lines/, carry_txs/
+                               incomplete-tx events and tx metadata
+    <state_dir>/v<V>/applied_txs/  recently applied txs (replay dedup)
+    <state_dir>/v<V>/_parts.json   {"format": 2, "frames": {...}}: the
+                                   exact bucket-part set of the version
 
 The two big state tables are hash-bucketed on the order key and
 maintained *incrementally*: a batch loads and rewrites only the
@@ -37,6 +43,14 @@ redelivery dedup) retains the last ``applied_retention_batches``
 batches — bounded state; a duplicate older than the horizon re-emits
 (at-least-once) but cannot corrupt state, since tx application is
 idempotent per commit_lsn.
+
+One on-disk format: the processor reads and writes exactly the layout
+above. A state dir without a readable format-1 seal (unless it is
+fresh), sealed by another backend or bucket count, or whose committed
+version lacks a format-2 ``_parts.json`` is refused with a
+``ValueError`` (``state_backend.check_layout``) — never read as empty.
+To recover, rebuild the state dir from the event log: move it aside
+and replay the source from its start into an empty dir.
 """
 
 from __future__ import annotations
@@ -49,36 +63,15 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from streaming_examples_spark.operators.txjoin import TxDenormResult, tx_denormalize
 from streaming_examples_spark.streaming.state_backend import (
+    REBUILD_HINT,
     LocalPosixBackend,
     StateStorageBackend,
     acquire_build,
+    check_layout,
+    write_layout,
 )
 
 _VERSION_DIR_RE = re.compile(r"v\d+")
-
-# frame dirs the pre-versioned (r5 and earlier) layout kept at the
-# state root; their presence without a CURRENT pointer means existing
-# state a silent reset would destroy — refuse instead (_check_layout)
-_LEGACY_FRAME_DIRS = (
-    "order_state",
-    "line_state",
-    "carry_orders",
-    "carry_lines",
-    "carry_txs",
-    "applied_txs",
-)
-
-
-class StateAdoptionError(RuntimeError):
-    """A pre-r11 (sidecar-less) state version could not be adopted
-    because a backend listing disagreed with a GET witness — the
-    listing is stale (list-after-write lag). Raised INSTEAD of
-    silently loading state as None/empty, the failure mode that bit
-    twice before (r10 detector ``_load_store``, r11 tx
-    ``_load_buckets``). Retryable: re-open the store once the old
-    writer has been stopped for longer than the store's
-    list-after-write horizon."""
-
 
 class TxDenormBatchProcessor:
     """The ``foreachBatch`` body, also usable standalone for replaying
@@ -161,11 +154,9 @@ class TxDenormBatchProcessor:
         # emissions schema from the last non-idle batch — lets the idle
         # fast path return a correctly-shaped empty frame jobs-free
         self._emissions_schema = None
-        # memoized legacy-adoption synthesis, keyed by version: read
-        # paths never WRITE the adopted sidecar (a reader must stay
-        # read-only on a store it does not own), so without the memo a
-        # long-lived reader would re-list the legacy version per read
-        self._adopted_parts: dict[int, dict[str, list[str]]] = {}
+        # whether state_dir carries its _layout.json seal (checked at
+        # every batch start; a fresh dir is sealed by its first commit)
+        self._sealed = False
         os.makedirs(state_dir, exist_ok=True)
 
     def _bucket_of(self, key) -> F.Column:
@@ -184,105 +175,18 @@ class TxDenormBatchProcessor:
     # permanently-incomplete tx WITH a commit LSN, which holds the
     # emission barrier forever.
 
-    def _layout_path(self) -> str:
-        return os.path.join(self.state_dir, "_layout.json")
-
     def _check_layout(self) -> None:
         """State hashed into N buckets read back by a processor declaring
         M buckets loads the WRONG buckets — `_load_buckets` selects the
         `_bucket=pmod(hash(key), M)` paths over dirs written at
         `pmod(hash(key), N)`, so touched keys silently see empty state
         and every emission reconstructs from batch events alone (no
-        error, corrupt docs).
-        The layout file written with the first commit makes a restart
-        with a different n_buckets raise instead — same guard the
-        incremental-dedup store carries for its bucket counts."""
-        marker = os.path.join(self.state_dir, "_migration.json")
-        if os.path.exists(marker):
-            # tools/migrate_state.py writes this FIRST and removes it
-            # LAST: its presence means a legacy-layout migration is in
-            # progress or crashed mid-way — frames may be split between
-            # the root and v1/, so neither layout is readable yet
-            raise ValueError(
-                f"tx state at {self.state_dir} has a migration marker "
-                "(_migration.json): a legacy-layout migration is in progress "
-                "or crashed part-way. Re-run tools/migrate_state.py on this "
-                "directory to complete it, then restart the processor."
-            )
-        if not os.path.exists(self._layout_path()):
-            if self._current_version() == 0:
-                # no committed version — but a PRE-versioned (legacy
-                # per-frame) layout also has no CURRENT pointer, and
-                # treating it as fresh would silently ignore all its
-                # state (carry events, applied txs) and restart from
-                # empty — existing-but-unreadable state must raise
-                legacy = [
-                    d
-                    for d in _LEGACY_FRAME_DIRS
-                    if os.path.isdir(os.path.join(self.state_dir, d))
-                ]
-                if legacy:
-                    raise ValueError(
-                        f"tx state at {self.state_dir} holds legacy "
-                        f"per-frame state dirs ({', '.join(legacy)}) but no "
-                        "CURRENT pointer; reading it as a fresh store would "
-                        "silently discard that state. Migrate: move the "
-                        "frame dirs under a v1/ subdirectory, write the "
-                        "version number '1' to a CURRENT file, and write "
-                        '_layout.json ({"n_buckets": N}) with the bucket '
-                        "count the store was built with — or rebuild from "
-                        "the event log."
-                    )
-                return  # fresh state dir: layout written with first commit
-            raise ValueError(
-                f"tx state at {self.state_dir} has committed versions but no "
-                "_layout.json; its bucket count cannot be validated and "
-                "reading with a wrong n_buckets silently loads empty state. "
-                "Write _layout.json with the store's true n_buckets, or "
-                "rebuild the state dir."
-            )
-        with open(self._layout_path()) as fh:
-            layout = json.load(fh)
-        have = layout.get("n_buckets")
-        if have != self.n_buckets:
-            raise ValueError(
-                f"tx state at {self.state_dir} was written with "
-                f"n_buckets={have} but this processor declares "
-                f"n_buckets={self.n_buckets}; a mismatched restart loads the "
-                "wrong state buckets (silently empty touched keys, corrupt "
-                "emissions). Pass the stored count or rebuild the state dir."
-            )
-        # pre-r8 layouts carry no backend key; they were all written by
-        # the POSIX backend
-        have_backend = layout.get("backend", "local-posix")
-        if have_backend != self.backend.layout_id:
-            raise ValueError(
-                f"tx state at {self.state_dir} was committed by the "
-                f"{have_backend!r} storage backend but this processor uses "
-                f"{self.backend.layout_id!r}; the two encode the commit "
-                "pointer differently, so a cross-backend reopen reads "
-                "version 0 and the batch-start GC would delete the live "
-                "versions as garbage. Reopen with the matching backend (or "
-                "migrate the state explicitly)."
-            )
-
-    def _write_layout(self) -> None:
-        if os.path.exists(self._layout_path()):
-            return
-        tmp = self._layout_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            # backend identity sealed alongside the bucket count: the two
-            # backends encode the commit pointer differently (CURRENT
-            # file vs _pointer/gen-*), so a cross-backend reopen reads
-            # version 0, treats live state as fresh, and the batch-start
-            # GC would DELETE the other backend's committed versions as
-            # garbage — the same silent-loss class as an n_buckets
-            # mismatch, guarded the same way
-            json.dump(
-                {"n_buckets": self.n_buckets, "backend": self.backend.layout_id},
-                fh,
-            )
-        os.replace(tmp, self._layout_path())
+        error, corrupt docs). The seal written before the first commit
+        makes such a restart — and any other backend or on-disk format
+        — raise instead (state_backend.check_layout)."""
+        self._sealed = check_layout(
+            self.backend, self.state_dir, {"n_buckets": self.n_buckets}
+        )
 
     def _current_version(self) -> int:
         # 0 = fresh state dir: v0 is the (absent) empty state
@@ -333,18 +237,6 @@ class TxDenormBatchProcessor:
         path = self._frame_path(name)
         if not os.path.exists(path):
             return None
-        # a PARTITIONED write of zero rows leaves only _SUCCESS in the
-        # dir (plain zero-row frames still write schema-bearing empty
-        # part files, so this never triggers for them): such a dir is
-        # a known-empty frame, not a read error — reachable via legacy
-        # adoption of a pre-r11 store whose bucketed frame was emptied
-        # (no parts → not in the adopted enumeration → lands here)
-        names = os.listdir(path)
-        if not any(
-            n.endswith(".parquet") or n.startswith(("part-", "_bucket="))
-            for n in names
-        ):
-            return None
         return self.spark.read.parquet(path)
 
     def _read_tx_hwm(self) -> int | None:
@@ -359,36 +251,32 @@ class TxDenormBatchProcessor:
             return None
         return json.loads(raw).get("hwm")
 
-    def _read_parts_sidecar(self, version: int) -> tuple[dict, bool] | None:
-        """The committed version's bucket-part enumeration sidecar
-        (``_parts.json``), read through the backend's ``read_file``
-        seam: a GET, fresh under list-after-write lag — which is the
-        point: every later enumeration reads THIS instead of a
-        lag-prone listing. Returns ``(frames, exact)`` where frames
-        maps frame name → sorted part names:
-
-        * format 2 (r12+): ``{"format": 2, "frames": {...}}`` — EXACT:
-          every listed part exists (Spark-written parts enumerated
-          from the writer's own scan-time file index, carried parts
-          from the carry loop itself), so readers and the next carry
-          need no existence probe at all.
-        * format 1 (r11): a bare ``{frame: [parts]}`` map — a SUPERSET
-          (touched ∪ carried; a touched bucket whose every key was
-          deleted wrote no dir), so consumers must tolerate absent
-          parts (``read_locations`` is empty-safe) or probe.
-
-        ``None`` for version 0 or a pre-r11 version (no sidecar)."""
+    def _parts(self, version: int) -> dict[str, list[str]]:
+        """The committed version's bucket-part enumeration: frame name
+        → sorted part names, from its ``_parts.json`` sidecar
+        ``{"format": 2, "frames": {...}}``, read through the backend's
+        ``read_file`` seam — a GET, fresh under list-after-write lag,
+        which is the point: every enumeration reads THIS instead of a
+        lag-prone listing. EXACT: every listed part exists
+        (Spark-written parts enumerated from the writer's own
+        scan-time file index, carried parts from the carry loop
+        itself), so readers and the next carry need no existence
+        probe. Version 0 (no committed state) is empty; a committed
+        version without a format-2 sidecar is refused, never read as
+        empty."""
         if version <= 0:
-            return None
-        raw = self.backend.read_file(
-            os.path.join(self._root(version), "_parts.json")
-        )
-        if raw is None:
-            return None
-        data = json.loads(raw)
-        if data.get("format") == 2:
-            return data["frames"], True
-        return data, False
+            return {}
+        path = os.path.join(self._root(version), "_parts.json")
+        raw = self.backend.read_file(path)
+        data = json.loads(raw) if raw is not None else None
+        if not isinstance(data, dict) or data.get("format") != 2:
+            raise ValueError(
+                f"tx state at {self.state_dir}: committed version {version} "
+                f"has no format-2 {path} (found {raw!r}), so its bucket parts "
+                "cannot be enumerated and reading it would silently load "
+                f"empty state: {REBUILD_HINT}"
+            )
+        return data["frames"]
 
     def _written_parts(self, path: str) -> list[str]:
         """``_bucket=K`` partition dirs our OWN just-issued Spark write
@@ -422,117 +310,6 @@ class TxDenormBatchProcessor:
         }
         return sorted(parts)
 
-    def _adopt_legacy_parts(self, version: int) -> dict[str, list[str]]:
-        """Synthesize the part enumeration for a committed PRE-r11
-        version (no ``_parts.json``) — the one store state whose
-        enumeration cannot come from a GET, because the legacy writer
-        never published one. Adoption must therefore read backend
-        listings, and every listing is cross-checked against a GET
-        witness; any disagreement raises :class:`StateAdoptionError`
-        instead of silently treating stale-absent as empty (the bug
-        class that emptied state twice: r10 detector ``_load_store``,
-        r11 tx ``_load_buckets``; reference contract: checkpoint
-        restore never silently drops state,
-        TxAwareTwoInputNonBroadcastJoinProcessOperator.java:100-160).
-
-        Witnesses, in order:
-
-        1. the committed POINTER (a GET) names this version, so its
-           dir exists — a probe that says otherwise IS a stale
-           listing: raise.
-        2. every committed tx-store version physically contains BOTH
-           bucketed frame dirs (a zero-row partitioned write still
-           creates its dir), so a root listing missing ``order_state``
-           or ``line_state`` is stale — this catches the stale-PARTIAL
-           listing a crashed-then-retried build can freeze (the lag
-           double keeps the OLDEST snapshot, which may be the crashed
-           attempt's half-written frame set). Only the bucketed frames
-           need the witness: PLAIN frames never read through this
-           enumeration (``read_state`` resolves them via ``_load``'s
-           direct GET), and requiring all six would wedge a
-           legitimately-sparse migrated legacy store forever: raise.
-        3. every frame dir the root listing names must itself probe
-           present (manifest-GET fence first, then the LIST probe) —
-           a miss is a stale per-dir view: raise.
-
-        Under the lagged double these witnesses are complete: a stale
-        root view either predates the version's ``prepare_dir``
-        (probes ABSENT → witness 1) or froze a crashed attempt's
-        partial tree (→ witness 2); frame-dir windows cannot outlive
-        the root's (every frame mutation re-extends the root's
-        window), and witness 3 backstops them anyway. On a real store
-        the residual is a listing stale enough to fabricate a complete
-        six-frame tree with different PART sets — operationally
-        excluded by adopting only after the legacy writer has been
-        stopped past the store's list-after-write horizon (the
-        documented migration recipe).
-
-        Read-only: the synthesis is memoized in-process but NOT
-        published into the committed dir — a reader must not write a
-        store it does not own. The owning writer's next commit writes
-        a format-2 sidecar, closing adoption permanently."""
-        cached = self._adopted_parts.get(version)
-        if cached is not None:
-            return cached
-        root = self._root(version)
-        if not self.backend.dir_exists(root):
-            raise StateAdoptionError(
-                f"adopting pre-r11 tx state at {self.state_dir}: the "
-                f"committed pointer names version {version} but the "
-                f"version dir probes absent — the backend listing is "
-                "stale (list-after-write lag). Retry after the store's "
-                "listing horizon; state was NOT silently loaded as empty."
-            )
-        listing = self.backend.list_dir(root)
-        missing = [
-            f for f in ("order_state", "line_state") if f not in listing
-        ]
-        if missing:
-            raise StateAdoptionError(
-                f"adopting pre-r11 tx state at {self.state_dir}: the "
-                f"root listing of version {version} is missing frame "
-                f"dirs {missing} that every committed version contains "
-                "— the listing is stale or partial (list-after-write "
-                "lag / frozen crashed-build view). Retry after the "
-                "store's listing horizon; state was NOT silently "
-                "loaded as empty."
-            )
-        frames: dict[str, list[str]] = {}
-        for entry in listing:
-            if entry.startswith(("_", ".")):
-                continue  # scalar sidecars / internal files
-            frame_path = os.path.join(root, entry)
-            if not self.backend.dir_exists(frame_path):
-                raise StateAdoptionError(
-                    f"adopting pre-r11 tx state at {self.state_dir}: the "
-                    f"root listing names frame {entry!r} but its dir "
-                    "probes absent — a stale per-dir view "
-                    "(list-after-write lag). Retry after the store's "
-                    "listing horizon."
-                )
-            parts = [
-                p
-                for p in self.backend.list_dir(frame_path)
-                if p.startswith("_bucket=")
-            ]
-            if parts:
-                frames[entry] = sorted(parts)
-        self._adopted_parts[version] = frames
-        return frames
-
-    def _parts_enumeration(self, version: int) -> tuple[dict, bool]:
-        """The part enumeration for ``version``, from the sidecar (a
-        GET) when one exists, else fail-loud legacy adoption — never a
-        bare dir probe. ``(frames, exact)`` as `_read_parts_sidecar`;
-        adoption synthesizes from listings that existed at adoption
-        time, hence exact. Version 0 (no committed state) is empty."""
-        if version <= 0:
-            return {}, True
-        sidecar = self._read_parts_sidecar(version)
-        if sidecar is not None:
-            return sidecar
-        return self._adopt_legacy_parts(version), True
-
     def _load_buckets(self, name: str, buckets: list[int]) -> DataFrame | None:
         """Read only the listed hash buckets of a bucketed state table.
 
@@ -548,14 +325,9 @@ class TxDenormBatchProcessor:
         # Existence is resolved from the committed POINTER plus the
         # version's ``_parts.json`` sidecar — both GETs — never from a
         # dir probe: the probe reads a listing that can lag the very
-        # Spark write that created the dir. The r11 lag windows
-        # (note_spark_write) caught exactly that here — state loaded as
-        # None one batch after it was written, the same LIST-gated-read
-        # class the detector's _load_store fixed in r10. A pre-r11
-        # version (no sidecar) goes through fail-loud adoption
-        # (_adopt_legacy_parts) — never the old silent dir probe.
-        frames, _exact = self._parts_enumeration(cur)
-        parts = frames.get(name)
+        # Spark write that created the dir (state loaded as None one
+        # batch after it was written)
+        parts = self._parts(cur).get(name)
         if parts is None:
             return None  # frame absent from the committed enumeration
         known = set(parts)
@@ -573,19 +345,20 @@ class TxDenormBatchProcessor:
         only correct way to inspect state under a manifest backend,
         where a carried bucket has no local bytes at its logical path
         (a direct ``spark.read.parquet`` on the version dir would
-        silently miss it). Returns None for an absent/empty frame."""
+        silently miss it). Returns None for an absent/empty frame;
+        raises on a dir that is not in this processor's sealed format."""
+        self._check_layout()
         path = self._frame_path(name)
         cur = self._current_version()
         if cur == 0:
             return self._load(name)
         # bucketed frames enumerate from the committed sidecar (a GET)
-        # — same lag-immunity as _load_buckets; a pre-r11 version goes
-        # through fail-loud adoption. A name outside the enumeration
-        # is a PLAIN frame (Spark-written whole every batch, physical
-        # tree == logical content): _load resolves it with a GET
-        # (os.path.exists) + Spark's own scan — no backend listing on
-        # any branch.
-        frames, _exact = self._parts_enumeration(cur)
+        # — same lag-immunity as _load_buckets. A name outside the
+        # enumeration is a PLAIN frame (Spark-written whole every
+        # batch, physical tree == logical content): _load resolves it
+        # with a GET (os.path.exists) + Spark's own scan — no backend
+        # listing on any branch.
+        frames = self._parts(cur)
         if name not in frames:
             return self._load(name)
         # a bucketed frame enumerated with ZERO parts is known-empty
@@ -595,8 +368,6 @@ class TxDenormBatchProcessor:
         parts = list(frames[name])
         if not parts:
             return None
-        # v1 superset contract: absent parts resolve to no locations
-        # below (read_locations is empty-safe) — no dir probe needed
         locs: list[str] = []
         for part in parts:
             locs.extend(self.backend.read_locations(os.path.join(path, part)))
@@ -637,6 +408,12 @@ class TxDenormBatchProcessor:
         → conditional put — same single-commit design."""
         cur = self._current_version()
         new_root = self._root(cur + 1)
+        # seal a fresh dir BEFORE its first write: every crash window
+        # after this leaves a sealed dir whose garbage the next batch's
+        # GC reclaims (an unsealed non-empty dir is refused)
+        if not self._sealed:
+            write_layout(self.backend, self.state_dir, {"n_buckets": self.n_buckets})
+            self._sealed = True
         # claim FIRST (conditional put; raises on a live foreign
         # builder — two hosts can hold the per-filesystem advisory
         # lock), THEN clear any crashed prior attempt's leftovers:
@@ -653,7 +430,7 @@ class TxDenormBatchProcessor:
         for name, df in frames.items():
             self.backend.note_spark_write(os.path.join(new_root, name))
             df.write.mode("overwrite").parquet(os.path.join(new_root, name))
-        prev_frames, prev_exact = self._parts_enumeration(cur)
+        prev_frames = self._parts(cur)
         new_parts: dict[str, list[str]] = {}
         for name, (df, buckets) in (bucketed or {}).items():
             new_path = os.path.join(new_root, name)
@@ -668,19 +445,13 @@ class TxDenormBatchProcessor:
             # file index (never a backend LIST; see _written_parts) —
             # a touched bucket whose every key was deleted wrote no
             # dir and is recorded as such, so the next batch's carry
-            # needs no existence probe at all (r11 ADVICE: the
-            # superset sidecar forced a lag-prone dir_exists skip).
+            # needs no existence probe at all.
             written = self._written_parts(new_path)
             old_path = self._frame_path(name, cur)
             touched = {f"_bucket={b}" for b in buckets}
-            # Carry enumeration source: the previous version's part
-            # enumeration — the _parts.json sidecar (a GET, immune to
-            # list-after-write lag) or fail-loud legacy adoption for a
-            # pre-r11 store; never a bare backend listing. Format-2
-            # sidecars are EXACT (every listed part exists); the r11
-            # format-1 superset needs the dir probe below for exactly
-            # one transition batch, after which this commit's format-2
-            # sidecar retires it.
+            # Carry enumeration source: the previous version's exact
+            # part enumeration — the _parts.json sidecar (a GET, immune
+            # to list-after-write lag), never a bare backend listing.
             # Per-part FILE listings remain backend listings: carried
             # files are manifest-tracked (the manifest half of list_dir
             # is a GET — fresh); physical files were Spark-written one
@@ -692,8 +463,6 @@ class TxDenormBatchProcessor:
                 if not part.startswith("_bucket=") or part in touched:
                     continue
                 src_dir = os.path.join(old_path, part)
-                if not prev_exact and not self.backend.dir_exists(src_dir):
-                    continue  # legitimately-empty part (v1 superset)
                 self.backend.prepare_dir(os.path.join(new_path, part))
                 for f in self.backend.list_dir(src_dir):
                     self.backend.carry_file(
@@ -701,17 +470,13 @@ class TxDenormBatchProcessor:
                     )
                 carried.append(part)
             new_parts[name] = sorted(set(written) | set(carried))
-        # published UNCONDITIONALLY (r11 ADVICE: a version committed
-        # without bucketed frames must still carry a sidecar — its
-        # truthful enumeration is empty — or the next reader would
-        # fall back to legacy adoption on a post-r11 store)
+        # published UNCONDITIONALLY: a version committed without
+        # bucketed frames still carries a sidecar — its truthful
+        # enumeration is empty — or the next reader would refuse it
         self.backend.publish_file(
             os.path.join(new_root, "_parts.json"),
             json.dumps({"format": 2, "frames": new_parts}).encode(),
         )
-        # bucket layout sealed before any version can commit: a restart
-        # with a different n_buckets must raise, not read wrong buckets
-        self._write_layout()
         # fencing re-validation: the build claim must still be ours —
         # a missing/foreign marker means another writer GC'd and
         # re-claimed this dir while we wrote; committing would publish
@@ -808,7 +573,8 @@ class TxDenormBatchProcessor:
             # bloats the directory a long-running quiet stream writes.
             if self.emission_sink is not None:
                 self.emission_sink(empty, batch_id)
-            self.metrics.observe_batch(0, _time.time() - _batch_t0, 0)
+            # no observe_batch: an idle batch commits no tx, and the
+            # throughput gauge keeps the last non-idle batch's value
             return empty
         # no committed version yet = this batch is the initial load
         # (the snapshot phase, for the per-table RowsScanned counter)

@@ -27,9 +27,7 @@ Design (all equi-joins, no pair space, state ∝ unique corpus):
     100 TB deployment must host on object storage, so the commit
     protocol carries no POSIX assumption (proven by running the crash
     suite over ``LocalPosixBackend`` AND ``ManifestBackend``,
-    tests/test_incremental_dedup.py). Pre-r9 root-level stores are
-    adopted in place (``_adopt_legacy``: files → ``v1`` + pointer,
-    pure same-directory renames under the writer lock).
+    tests/test_incremental_dedup.py).
   * Per batch: new docs are shingled once (`shingle_base_hashes`, one
     md5 per shingle); candidates come from an equi-join on
     (band_id, band_key) against the store AND a within-batch band
@@ -60,17 +58,25 @@ bucket-compatible (each batch appends one file set per bucket;
 ``compact`` restores one file per bucket), and a restart re-registers
 the tables over the existing files — bucket ids live in the file
 names, so a fresh session's catalog recovers full bucket-awareness
-from DDL alone. The bucket counts are persisted in
-``state_dir/_layout.json`` on first write and validated at init:
-re-opening a store with a different count would silently hash probes
-into the wrong buckets (permanent recall loss), so a mismatch raises
-instead. The default (None) keeps plain append-only parquet for
-warehouse-free tests.
+from DDL alone. The default (None) keeps plain append-only parquet
+for warehouse-free tests.
+
+One on-disk format: the state dir is sealed with ``_layout.json`` =
+``{"format": 1, "backend": ..., "bands_buckets": ..., "sigs_buckets":
+...}`` before the first append and validated at init
+(``state_backend.check_layout``). Re-opening with a different bucket
+count would silently hash probes into the wrong buckets (permanent
+recall loss), a different backend would read no committed epoch and
+reclaim live files, and any other on-disk shape (a dir without the
+seal, an older seal) cannot be validated — all raise ``ValueError``
+instead of reading the store as empty. To recover, rebuild the state
+dir from the event log: move it aside and replay the source from its
+start into an empty dir.
 
 Single-writer contract: ``process_batch`` and ``compact`` take an
 advisory writer lock on the state dir (``_writer.lock``) — running
-them concurrently could lose appends inside compact's directory swap,
-so the overlap raises loudly instead; a crashed local owner's lock is
+them concurrently could lose appends that land in the epoch compact is
+superseding, so the overlap raises loudly instead; a crashed local owner's lock is
 broken automatically (see ``_writer_lock``).
 
 Reference parity: the reference has no incremental near-dup operator —
@@ -81,11 +87,9 @@ dedup: TxAware...Operator.java:357-430) to the training-data domain.
 from __future__ import annotations
 
 import contextlib
-import glob
 import json
 import os
 import re
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -106,6 +110,8 @@ from streaming_examples_spark.streaming.locks import (  # noqa: F401
 from streaming_examples_spark.streaming.state_backend import (
     LocalPosixBackend,
     StateStorageBackend,
+    check_layout,
+    write_layout,
 )
 
 _SIG_SCHEMA = "doc_id long, sig array<long>"
@@ -237,7 +243,12 @@ class IncrementalNearDup:
             tag = hashlib.md5(os.path.abspath(state_dir).encode()).hexdigest()[:12]
             self._bands_table = "incdedup_bands_" + tag
             self._sigs_table = "incdedup_sigs_" + tag
-        self._check_layout()
+        self._layout = {
+            "bands_buckets": self.bands_buckets,
+            "sigs_buckets": self.sigs_buckets,
+        }
+        # a fresh dir is sealed by its first append (_append_store)
+        self._sealed = check_layout(self.backend, state_dir, self._layout)
 
     # -- state layout ---------------------------------------------------
     # Each store (bands, sigs, band_hot) is its own pointer-committed
@@ -245,8 +256,7 @@ class IncrementalNearDup:
     # backend's per-store pointer names E. Appends write into the
     # current epoch (Spark's job commit makes files appear whole);
     # only compaction creates a new epoch and flips the pointer — the
-    # single atomic commit point, replacing the pre-r9 two-rename
-    # directory swaps that could not run on an object store.
+    # single atomic commit point, with no directory rename anywhere.
     def _path(self, name: str) -> str:
         """Store ROOT (pointer + epoch dirs live under it)."""
         return os.path.join(self.state_dir, name)
@@ -264,8 +274,8 @@ class IncrementalNearDup:
     def _ensure_epoch(self, name: str) -> tuple[int, str]:
         """Create-and-commit epoch 1 on first use; return the current
         (epoch, epoch dir). A crash between prepare and commit leaves
-        an empty v1 with no pointer — healed by ``_adopt_legacy``'s
-        pointer-finalize pass (same end state as a crashed adoption)."""
+        an empty v1 with no pointer, which the next locked op's
+        ``_gc_epochs`` reclaims before this recreates it."""
         e = self._epoch(name)
         if e == 0:
             path = os.path.join(self._path(name), "v1")
@@ -287,9 +297,8 @@ class IncrementalNearDup:
         a flat pre-layout dir) — epochs ≥ 2 are created exclusively by
         compaction, which requires a committed pointer first. Treating
         them as orphans would GC the live store and silently re-admit
-        every known doc; a v1 with no pointer is the adoption /
-        first-append crash window and is finalized by
-        ``_adopt_legacy`` before this runs."""
+        every known doc; a v1 with no pointer is the first-append
+        crash window (nothing was appended into it) and is reclaimed."""
         for name in (*_STORES, "band_hot"):
             root = self._path(name)
             if not self.backend.dir_exists(root):
@@ -411,9 +420,9 @@ class IncrementalNearDup:
 
     def store_table(self, name: str) -> str:
         """Public: the registered table name of a bucketed store's
-        current epoch (plan tests / operational inspection). Adopts a
-        pre-r9 dir first; raises (instead of returning a never-created
-        ``_v0`` name) while the store has no committed epoch.
+        current epoch (plan tests / operational inspection); raises
+        (instead of returning a never-created ``_v0`` name) while the
+        store has no committed epoch.
 
         UNLOCKED reader: the name (and the directory behind it) is only
         stable while no ``compact()``/``process_batch()`` runs — a
@@ -427,7 +436,6 @@ class IncrementalNearDup:
                 "only bucketed stores register a table — read it with "
                 "read_store() instead"
             )
-        self._adopt_if_legacy()
         e = self._epoch(name)
         if e == 0:
             raise ValueError(
@@ -436,97 +444,6 @@ class IncrementalNearDup:
             )
         self._ensure_table(name, e)
         return self._table(name, e)
-
-    def _layout_path(self) -> str:
-        return os.path.join(self.state_dir, "_layout.json")
-
-    def _check_layout(self) -> None:
-        """A store hashed into N buckets read back as M buckets probes
-        the wrong files — silent, permanent recall loss. The layout file
-        written with the first append makes the mismatch loud instead.
-
-        A pre-layout (legacy) store is adopted ONLY when both sides are
-        verifiably flat: a bucketed declaration over legacy files (or
-        files whose names carry bucket ids under a flat declaration)
-        cannot be validated, and adopting a wrong count would be exactly
-        the silent recall loss this guard exists to stop — then SEAL the
-        wrong count into the layout file. Refuse instead."""
-        declared = {"bands_buckets": self.bands_buckets, "sigs_buckets": self.sigs_buckets}
-        if not os.path.exists(self._layout_path()):
-            store_files = [
-                f
-                for n in _STORES
-                # root level (pre-layout legacy) AND epoch dirs (a
-                # layout file deleted out from under a live store)
-                for pat in ("*.parquet", "v*/*.parquet")
-                for f in glob.glob(os.path.join(self._path(n), pat))
-            ]
-            if not store_files:
-                return  # fresh state dir: layout written with first append
-            looks_bucketed = any(
-                _BUCKET_ID_RE.search(os.path.basename(f)) for f in store_files
-            )
-            if self.bands_buckets or self.sigs_buckets or looks_bucketed:
-                raise ValueError(
-                    f"incremental-dedup state at {self.state_dir} predates the "
-                    "layout file and a bucketed layout is involved (declared "
-                    f"bands_buckets={self.bands_buckets}/sigs_buckets="
-                    f"{self.sigs_buckets}, files "
-                    f"{'carry' if looks_bucketed else 'carry no'} bucket ids): "
-                    "the bucket count cannot be validated, and probing with a "
-                    "wrong count is silent recall loss. Write _layout.json "
-                    "with the store's true counts, or rebuild the store."
-                )
-            return  # legacy flat store + flat declaration: safe to adopt
-        try:
-            with open(self._layout_path()) as fh:
-                stored = json.load(fh)
-        except ValueError as exc:
-            raise ValueError(
-                f"incremental-dedup layout file {self._layout_path()} is "
-                f"unreadable ({exc}); it seals the store's bucket counts and "
-                "storage backend, so a torn/corrupted seal cannot be "
-                "adopted silently. Restore it with the store's true values."
-            ) from exc
-        # backend identity first (the tx store's r8 seal): the two
-        # backends encode pointers differently, so a foreign reopen
-        # would read epoch 0 and GC live state. Missing key = the
-        # local-posix default every pre-r9 layout was written under.
-        have_backend = stored.get("backend", LocalPosixBackend.layout_id)
-        if have_backend != self.backend.layout_id:
-            raise ValueError(
-                f"incremental-dedup state at {self.state_dir} was committed "
-                f"by the '{have_backend}' storage backend but this detector "
-                f"runs '{self.backend.layout_id}'; the pointer encodings "
-                "differ, so a cross-backend reopen would read no committed "
-                "epoch and reclaim live files. Reopen with the sealed "
-                "backend, or migrate the store explicitly."
-            )
-        for key, want in declared.items():
-            have = stored.get(key)
-            if have != want:
-                raise ValueError(
-                    f"incremental-dedup state at {self.state_dir} was written "
-                    f"with {key}={have} but this detector declares {key}={want}; "
-                    "re-opening with a different bucket count would probe the "
-                    "wrong buckets (silent recall loss). Pass the stored count, "
-                    "or compact()+migrate the store explicitly."
-                )
-
-    def _write_layout(self) -> None:
-        if os.path.exists(self._layout_path()):
-            return
-        os.makedirs(self.state_dir, exist_ok=True)
-        self.backend.publish_file(
-            self._layout_path(),
-            json.dumps(
-                {
-                    "bands_buckets": self.bands_buckets,
-                    "sigs_buckets": self.sigs_buckets,
-                    "backend": self.backend.layout_id,
-                }
-            ).encode(),
-        )
 
     # -- single-writer mutual exclusion ---------------------------------
     def _lock_path(self) -> str:
@@ -571,72 +488,6 @@ class IncrementalNearDup:
             yield
 
     # -- state I/O ------------------------------------------------------
-    def _adopt_legacy(self) -> None:
-        """Adopt a pre-r9 store in place, under the writer lock.
-
-        Legacy layout: live files at the store ROOT, compaction via
-        two-rename directory swaps (the ``.old`` window ``_recover``
-        used to heal). Adoption: heal any crashed swap first, then move
-        the root-level files into ``v1`` and commit the pointer — pure
-        same-directory renames, so POSIX-only; a manifest-backed dir
-        can never be legacy (the layout seal refuses foreign dirs
-        before this runs, and pre-r9 dirs seal as local-posix).
-        Crash-safe by re-entry: files move one by one (re-running moves
-        the rest), and the pointer-commit is the last step — a dir with
-        everything in ``v1`` and no pointer just gets the commit."""
-        names = (*_STORES, "band_hot")
-        legacy: dict[str, list[str]] = {}
-        for name in names:
-            root = self._path(name)
-            old, tmp = root + ".old", root + ".compact"
-            if os.path.isdir(old):
-                # crashed pre-r9 compact swap: live dir missing → the
-                # old copy IS the store (the compaction is lost);
-                # otherwise the swap completed and .old is garbage
-                if not os.path.isdir(root):
-                    os.rename(old, root)
-                else:
-                    shutil.rmtree(old, ignore_errors=True)
-            if os.path.isdir(tmp):
-                shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.isdir(root):
-                continue
-            files = [
-                n
-                for n in os.listdir(root)
-                if n.endswith(".parquet") or n == "_files.json"
-            ]
-            if files:
-                legacy[name] = files
-            elif os.path.isdir(os.path.join(root, "v1")) and (
-                self.backend.read_pointer(root) == 0
-            ):
-                # all files moved (or first epoch prepared) but the
-                # pointer-commit never ran: finalize it
-                self.backend.commit_pointer(root, 1)
-        if not legacy:
-            return
-        if self.backend.layout_id != LocalPosixBackend.layout_id:
-            raise ValueError(
-                f"incremental-dedup state at {self.state_dir} holds pre-r9 "
-                "root-level store files, which only the local-posix backend "
-                f"can adopt (renames); backend '{self.backend.layout_id}' "
-                "cannot host this dir. Adopt it with a local detector first."
-            )
-        for name, files in legacy.items():
-            root = self._path(name)
-            if self.backend.read_pointer(root) != 0:
-                raise ValueError(
-                    f"incremental-dedup store {root} has BOTH root-level "
-                    "files and a committed epoch pointer — not a state this "
-                    "engine writes; refusing to guess which is live."
-                )
-            v1 = os.path.join(root, "v1")
-            os.makedirs(v1, exist_ok=True)
-            for n in files:
-                os.replace(os.path.join(root, n), os.path.join(v1, n))
-            self.backend.commit_pointer(root, 1)
-
     def _ensure_table(self, name: str, epoch: int | None = None) -> None:
         """Re-register the external bucketed table after a restart: a
         fresh session's catalog doesn't know it, but the bucket ids
@@ -687,41 +538,19 @@ class IncrementalNearDup:
             # running this suite under LaggedManifestBackend: batch
             # N+1 read batch N's store as absent). Spark enumerates
             # the data files itself; detector stores never receive
-            # carried (manifest-referenced) files — appends, rewrites
-            # and POSIX-only adoption all land physical files — so the
-            # dir IS the content on every backend.
+            # carried (manifest-referenced) files — appends and
+            # rewrites both land physical files — so the dir IS the
+            # content on every backend.
             return self.spark.read.schema(schema).parquet(path)
         self._ensure_table(name, e)
         if self.spark.catalog.tableExists(self._table(name, e)):
             return self.spark.table(self._table(name, e))
         return self.spark.createDataFrame([], schema)
 
-    def _adopt_if_legacy(self) -> None:
-        """Public-read entry to adoption: the locked ops adopt as their
-        first step, but an inspection call on a pre-r9 dir must not
-        silently read an empty store just because no batch has run yet
-        (the changelog promises old dirs open fine). Takes the writer
-        lock only when there is something to adopt."""
-        for name in (*_STORES, "band_hot"):
-            root = self._path(name)
-            if not os.path.isdir(root):
-                continue
-            legacy_files = any(
-                n.endswith(".parquet") or n == "_files.json"
-                for n in os.listdir(root)
-            )
-            unfinalized = os.path.isdir(os.path.join(root, "v1")) and (
-                self.backend.read_pointer(root) == 0
-            )
-            if legacy_files or unfinalized or os.path.isdir(root + ".old"):
-                with self._writer_lock("adopt"):
-                    self._adopt_legacy()
-                return
-
     def read_store(self, name: str) -> DataFrame:
         """Public, backend-aware snapshot of a store's committed
         content (operational inspection and tests; mirrors the tx
-        processor's ``read_state``). Adopts a pre-r9 dir first.
+        processor's ``read_state``).
 
         UNLOCKED reader: the returned frame is LAZY and resolves its
         files at action time — a concurrent ``compact()``/
@@ -729,7 +558,6 @@ class IncrementalNearDup:
         directory it reads (``LocalPosixBackend`` removes immediately),
         failing the action. Run it to completion (or
         ``localCheckpoint``) before letting a writer proceed."""
-        self._adopt_if_legacy()
         return self._load_store(name)
 
     def _count_files(self, path: str) -> int:
@@ -786,7 +614,9 @@ class IncrementalNearDup:
         return out
 
     def _append_store(self, name: str, rows: DataFrame) -> None:
-        self._write_layout()
+        if not self._sealed:
+            write_layout(self.backend, self.state_dir, self._layout)
+            self._sealed = True
         epoch, path = self._ensure_epoch(name)
         # one backend LIST per append, not two: the pre-append count is
         # the previous append's post-count when we have it (advisory
@@ -1053,7 +883,6 @@ class IncrementalNearDup:
                 raise
 
     def _process_batch_locked(self, docs: DataFrame, batch_id: int) -> DataFrame:
-        self._adopt_legacy()
         self._gc_epochs()
         self.metrics.observe_batch_start()
         sigs_store = self._load_store("sigs")
@@ -1270,7 +1099,6 @@ class IncrementalNearDup:
     def _compact_locked(
         self, target_partitions: int, hot_bucket_threshold: int | None
     ) -> None:
-        self._adopt_legacy()
         self._gc_epochs()
         for name, (schema, cols, _) in _STORES.items():
             cur = self._epoch(name)

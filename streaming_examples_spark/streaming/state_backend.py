@@ -1,4 +1,4 @@
-"""Storage seam for the versioned tx state commit.
+"""Storage seam and on-disk seal for the two state stores.
 
 The pointer-commit protocol in ``cdc_stream._store_all`` (write all
 frames under the NEXT version dir, carry untouched bucket files over,
@@ -36,6 +36,18 @@ protocol itself — reads resolve through ``read_locations`` and carry
 listings through ``list_dir``, never by assuming the physical tree is
 the logical content.
 
+One on-disk format per store: both stores (the tx store in
+``cdc_stream.py``, the near-dup store in ``incremental_dedup.py``)
+seal their state dir with ``_layout.json`` =
+``{"format": 1, "backend": <layout_id>, <bucket fields>}`` through
+:func:`write_layout` before their first write, and validate it with
+:func:`check_layout` on every open. A dir that is absent or holds only
+the writer lock is fresh; anything else without a readable format-1
+seal, or sealed by another backend or bucket count, is refused with a
+``ValueError`` — an unreadable store is never read as empty. There is
+no migration path: rebuild the state dir from the event log (move it
+aside, then replay the source from its start into an empty dir).
+
 Reference parity: the reference delegates the equivalent durability to
 Kafka-backed Flink checkpoints (streaming-examples
 KafkaChangelogJob.java + Flink's state backend config); this engine
@@ -45,6 +57,7 @@ owns its state files, so it owns the commit protocol too.
 from __future__ import annotations
 
 import errno
+import json
 import os
 import shutil
 import time
@@ -94,6 +107,91 @@ def _atomic_publish(path: str, data: bytes) -> None:
     os.replace(tmp, path)
 
 
+# -- the one sealed on-disk format ----------------------------------------
+#: the only ``_layout.json`` format either store reads or writes
+LAYOUT_FORMAT = 1
+_LAYOUT = "_layout.json"
+#: the one recovery path for a refused dir, quoted by every refusal
+REBUILD_HINT = (
+    "rebuild the state dir from the event log (move it aside, then replay "
+    "the source from its start into an empty dir)"
+)
+
+
+def check_layout(
+    backend: "StateStorageBackend", state_dir: str, buckets: dict
+) -> bool:
+    """Validate ``state_dir``'s seal against the opener's backend and
+    bucket fields. Returns False for a fresh dir — absent, or holding
+    only the advisory writer lock (``_writer.lock*``) and dot-prefixed
+    publish temps — and True for a matching format-1 seal. Raises
+    ``ValueError`` for everything else: entries without a seal, an
+    unreadable seal, any other format, a backend mismatch (the two
+    backends encode the commit pointer differently, so a foreign
+    reopen would read no committed version and GC live state), or a
+    bucket mismatch (probes hash into the wrong buckets: silently
+    empty state)."""
+    raw = backend.read_file(os.path.join(state_dir, _LAYOUT))
+    if raw is None:
+        try:
+            entries = os.listdir(state_dir)
+        except FileNotFoundError:
+            return False
+        stray = sorted(
+            e for e in entries if not e.startswith(("_writer.lock", "."))
+        )
+        if not stray:
+            return False
+        raise ValueError(
+            f"state dir {state_dir} holds {stray} but no {_LAYOUT} seal, and a "
+            "store that cannot be validated is never read as empty: "
+            f"{REBUILD_HINT}"
+        )
+    try:
+        layout = json.loads(raw)
+        fmt = layout.get("format")
+    except (ValueError, AttributeError) as exc:
+        raise ValueError(
+            f"state dir {state_dir} has an unreadable {_LAYOUT} ({exc!r}): "
+            f"{REBUILD_HINT}"
+        ) from exc
+    if fmt != LAYOUT_FORMAT:
+        raise ValueError(
+            f"state dir {state_dir} is sealed with {_LAYOUT} format {fmt!r}, "
+            f"but only format {LAYOUT_FORMAT} is readable: {REBUILD_HINT}"
+        )
+    if layout.get("backend") != backend.layout_id:
+        raise ValueError(
+            f"state dir {state_dir} was committed by the "
+            f"{layout.get('backend')!r} storage backend but is opened with "
+            f"{backend.layout_id!r}: reopen with the sealed backend, or "
+            f"{REBUILD_HINT}"
+        )
+    for key, want in buckets.items():
+        if layout.get(key) != want:
+            raise ValueError(
+                f"state dir {state_dir} was sealed with {key}={layout.get(key)} "
+                f"but is opened with {key}={want}: pass the sealed value, or "
+                f"{REBUILD_HINT}"
+            )
+    return True
+
+
+def write_layout(
+    backend: "StateStorageBackend", state_dir: str, buckets: dict
+) -> None:
+    """Seal a fresh ``state_dir`` (see :func:`check_layout`). Stores
+    call this before their first write into the dir, so every crash
+    window after it leaves a sealed dir."""
+    os.makedirs(state_dir, exist_ok=True)
+    backend.publish_file(
+        os.path.join(state_dir, _LAYOUT),
+        json.dumps(
+            {"format": LAYOUT_FORMAT, "backend": backend.layout_id, **buckets}
+        ).encode(),
+    )
+
+
 class StateStorageBackend:
     """Abstract storage primitives behind the versioned state commit.
 
@@ -106,8 +204,7 @@ class StateStorageBackend:
 
     #: identity sealed into the state dir's _layout.json — the two
     #: backends encode the commit pointer differently, so a state dir
-    #: must be reopened by the backend that committed it (cdc_stream
-    #: validates this in _check_layout)
+    #: must be reopened by the backend that committed it (check_layout)
     layout_id: str = "abstract"
 
     def prepare_dir(self, path: str) -> None:
@@ -529,14 +626,8 @@ class ManifestBackend(_ExclusiveCreateBuildMarkers, StateStorageBackend):
       latest generation WITHOUT trusting the prefix listing: a
       ``_latest`` hint object (PUT after every successful create,
       BEFORE superseded-generation cleanup) plus forward exact-key
-      GET probes recover the true latest even when the LIST serves a
-      stale view — see ``_gen_candidates`` for the invariant. A store
-      written only by pre-hint code (no ``_latest`` object) resolves
-      from the listing alone, exactly as before; its first commit
-      under this code publishes the hint. Adopting such a store on a
-      stale-LIST backend is therefore a one-commit window — close it
-      by running ``tools/publish_pointer_hint.py`` from a host with a
-      fresh listing before cutover.
+      GET probes recover the true latest with no LIST at all — see
+      ``_gen_candidates`` for the invariant.
     - **synchronous prefix delete** — ``remove_tree`` is DEFERRED: a
       file still referenced from the committed version's manifests
       survives (deleting it would destroy carried state — the POSIX
@@ -600,15 +691,13 @@ class ManifestBackend(_ExclusiveCreateBuildMarkers, StateStorageBackend):
         per generation (callers may ignore it)."""
         gen_dir = os.path.join(state_dir, "_pointer")
         os.makedirs(gen_dir, exist_ok=True)
-        # resolve the next generation from CANDIDATES (listing ∪ hint ∪
-        # forward GET probes), not the raw listing: under list-after-
-        # write lag a stale listing can miss recent generations, and if
-        # the colliding name was already reclaimed by a superseder's
-        # cleanup, the old listing-only nxt would EXCLUSIVE-CREATE an
-        # already-spent generation number — a silently lost commit
-        # (readers resolve a higher gen, this writer thinks it won).
-        # The r10/r11 LIST-gated state-load bugs were the read-side
-        # twins of exactly this class.
+        # resolve the next generation from the hint + forward GET
+        # probes, never a listing: under list-after-write lag a stale
+        # listing can miss recent generations, and if the colliding
+        # name was already reclaimed by a superseder's cleanup, a
+        # listing-derived nxt would EXCLUSIVE-CREATE an already-spent
+        # generation number — a silently lost commit (readers resolve
+        # a higher gen, this writer thinks it won)
         prev = self._gen_candidates(gen_dir)
         nxt = (prev[-1][0] + 1) if prev else 1
         target = os.path.join(gen_dir, f"gen-{nxt:012d}")
@@ -654,41 +743,39 @@ class ManifestBackend(_ExclusiveCreateBuildMarkers, StateStorageBackend):
                 stacklevel=2,
             )
             return nxt
-        # superseded generations: plain object deletes, best-effort —
-        # plus any crash-orphaned publish temps old enough that no
-        # writer can still be mid-PUT on them
-        for g, name in prev:
-            try:
-                os.unlink(os.path.join(gen_dir, name))
-            except OSError:
-                pass
-        self._reclaim_stale_put_temps(gen_dir)
+        self._reclaim_pointer_garbage(gen_dir, nxt)
         return nxt
 
     @staticmethod
-    def _reclaim_stale_put_temps(dirpath: str, min_age_s: float = 60.0) -> None:
-        """Unlink ``.<name>.put-*`` temps a crash stranded between the
-        write and the rename. ``_pointer/`` is never remove_tree'd, so
-        without this sweep they would accumulate forever (hidden from
-        logical listings by the dot prefix). The age floor keeps a
-        concurrent writer's in-flight temp (lifetime: microseconds)
-        safe; deleting one anyway only fails that writer's advisory
-        hint PUT, which commit_pointer tolerates."""
-        import time as _time
-
-        now = _time.time()
+    def _reclaim_pointer_garbage(
+        gen_dir: str, live_gen: int, min_age_s: float = 60.0
+    ) -> None:
+        """Best-effort object deletes after a commit published its
+        hint: every generation below ``live_gen`` (superseded, torn,
+        or left by a crash between an earlier hint PUT and its
+        cleanup — all safe to delete under a hint ≥ ``live_gen``), and
+        ``.<name>.put-*`` temps a crash stranded between write and
+        rename. ``_pointer/`` is never remove_tree'd, so without this
+        sweep both would accumulate forever. The listing only picks
+        garbage — resolution never reads it, so a stale one merely
+        defers a delete. The age floor keeps a concurrent writer's
+        in-flight temp (lifetime: microseconds) safe; deleting one
+        anyway only fails that writer's advisory hint PUT, which
+        commit_pointer tolerates."""
+        now = time.time()
         try:
-            names = os.listdir(dirpath)
+            names = os.listdir(gen_dir)
         except FileNotFoundError:
             return
         for name in names:
-            if ".put-" not in name:
-                continue
-            full = os.path.join(dirpath, name)
+            full = os.path.join(gen_dir, name)
             try:
-                if now - os.path.getmtime(full) > min_age_s:
+                if name.startswith("gen-"):
+                    if int(name[4:]) < live_gen:
+                        os.unlink(full)
+                elif ".put-" in name and now - os.path.getmtime(full) > min_age_s:
                     os.unlink(full)
-            except OSError:
+            except (OSError, ValueError):
                 pass
 
     # -- generation resolution (LIST-free by design) ----------------------
@@ -701,8 +788,8 @@ class ManifestBackend(_ExclusiveCreateBuildMarkers, StateStorageBackend):
         except ValueError:
             # publish_file is an atomic PUT on every store this
             # protocol targets; unreadable bytes here mean the store
-            # broke that contract — degrading silently to the listing
-            # would be the r10 bug class, so fail loud instead
+            # broke that contract — resolving without it could return
+            # a stale or zero pointer, so fail loud instead
             raise RuntimeError(
                 f"corrupt pointer hint {gen_dir}/{self.LATEST}: "
                 f"{raw!r} is not a generation number"
@@ -736,47 +823,22 @@ class ManifestBackend(_ExclusiveCreateBuildMarkers, StateStorageBackend):
         finally:
             os.close(fd)  # closing releases the flock
 
-    def _generations(self, gen_dir: str) -> list[tuple[int, str]]:
-        """Generation objects visible to the prefix LISTING — possibly
-        stale under list-after-write lag (the eventual-consistency
-        double lags this through ``_physical_listing``). Never used
-        alone for resolution; see ``_gen_candidates``."""
-        out = []
-        try:
-            names = self._physical_listing(gen_dir)
-        except FileNotFoundError:
-            return []
-        for name in names:
-            if name.startswith("gen-"):
-                try:
-                    out.append((int(name[4:]), name))
-                except ValueError:
-                    pass
-        return sorted(out)
-
     def _gen_candidates(self, gen_dir: str) -> list[tuple[int, str]]:
-        """The generations that MAY be latest: (possibly stale)
-        listing ∪ the ``_latest`` hint ∪ forward exact-key GET probes
-        from the highest of those. Correctness argument:
-
-        - With a hint: cleanup only ever deletes a generation after a
-          hint ≥ its superseder is published (commit order: create →
-          hint → delete; the hint write is monotonic), so the
-          generation at the current hint value exists, and every
-          LIVE generation above it is reachable by dense +1 probes
-          (creates are dense: nxt = max-observed + 1, collisions fail
-          loud). Exact-key GETs are read-your-writes fresh — the
-          listing's staleness cannot hide the latest.
-        - Without a hint (store written only by pre-hint code): the
-          listing is the only source, exactly the legacy behavior;
-          its freshness is the documented adoption requirement
-          (tools/publish_pointer_hint.py closes it one-time).
-        """
-        cands = dict(self._generations(gen_dir))
-        hint = self._read_hint(gen_dir)
-        if hint:
-            cands.setdefault(hint, f"gen-{hint:012d}")
-        g = max(cands) if cands else 0
+        """The generations that MAY be latest: the ``_latest`` hint
+        plus forward exact-key GET probes from it (from 0 when there
+        is no hint — a store whose first hint PUT failed). No LIST:
+        cleanup only ever deletes a generation after a hint ≥ its
+        superseder is published (commit order: create → hint →
+        delete; the hint write is monotonic), so the generation at the
+        current hint value exists unless superseded, and every LIVE
+        generation above it is reachable by dense +1 probes (creates
+        are dense: nxt = max-observed + 1, collisions fail loud).
+        Exact-key GETs are read-your-writes fresh, so no listing
+        staleness can hide the latest."""
+        cands = {}
+        g = self._read_hint(gen_dir)
+        if g:
+            cands[g] = f"gen-{g:012d}"
         while True:
             name = f"gen-{g + 1:012d}"
             if os.path.exists(os.path.join(gen_dir, name)):  # exact-key GET
@@ -814,16 +876,15 @@ class ManifestBackend(_ExclusiveCreateBuildMarkers, StateStorageBackend):
                 # one whose object it just found deleted is only
                 # legitimate transiently (a superseder mid-publish);
                 # unbounded it means the store broke the PUT-visibility
-                # contract (e.g. a regressed hint AND a stale listing
-                # hiding the live generation) — fail loud, never spin
+                # contract (e.g. a regressed hint below a deleted gap
+                # the +1 probes cannot cross) — fail loud, never spin
                 # or silently return a stale/zero pointer
                 stalled += 1
                 if stalled > 100:
                     raise RuntimeError(
                         f"pointer resolution stalled in {gen_dir}: "
                         f"candidate gen-{top} repeatedly deleted with no "
-                        "higher generation visible via hint, listing, or "
-                        "probes"
+                        "higher generation visible via the hint or probes"
                     )
             for _g, name in reversed(gens):
                 p = os.path.join(gen_dir, name)
@@ -961,10 +1022,10 @@ class LaggedManifestBackend(ManifestBackend):
     stay
     fresh: that is the read-your-writes guarantee real stores do give,
     and it is why the protocol's commit point is a pointer GET, never
-    a listing. Since r12 the ``_pointer/`` prefix listing itself is
-    lagged too (``commit_pointer`` snaps it): generation resolution
-    no longer assumes a fresh LIST — it rides the ``_latest`` hint
-    object plus exact-key GET probes (``_gen_candidates``), with the
+    a listing. The ``_pointer/`` prefix listing is lagged too
+    (``commit_pointer`` snaps it); generation resolution never reads
+    it — it rides the ``_latest`` hint object plus exact-key GET
+    probes (``_gen_candidates``), with the
     dual-writer lost-commit scenario and stale-listing reads pinned
     by tests. Running the full crash/lifecycle suite under this
     double is what proves the GC's deferred-delete and carry
@@ -1073,10 +1134,9 @@ class LaggedManifestBackend(ManifestBackend):
     def commit_pointer(self, state_dir: str, version: int) -> int:
         # the generation CAS, hint PUT, and superseded-gen deletes all
         # mutate _pointer/: freeze its listing like any other prefix.
-        # Since r12 the pointer LISTING is allowed to be stale —
-        # resolution rides the _latest hint + exact-key GET probes
-        # (_gen_candidates), and running every suite with this window
-        # open is what proves it.
+        # Resolution never reads it (the _latest hint + exact-key GET
+        # probes of _gen_candidates), and running every suite with
+        # this window open is what proves it.
         self._snap(os.path.join(os.path.abspath(state_dir), "_pointer"))
         return super().commit_pointer(state_dir, version)
 

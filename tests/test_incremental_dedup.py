@@ -3,6 +3,8 @@ matching, replay idempotence, store growth ∝ unique content."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from tests.conftest import spark  # noqa: F401
@@ -32,7 +34,7 @@ def _backends():
         # stale for 5 ops after a mutation, GETs fresh) — the same
         # third parameterization the tx suite runs. The detector does
         # the same carry/list/dir_exists dance over the same seam
-        # (epoch GC, adoption, compaction pointer flips), so the exact
+        # (epoch GC, compaction pointer flips), so the exact
         # bug class the lagged double caught there (stale-absent
         # dir_exists = silent state loss) must be probed here too.
         "manifest-lagged": LaggedManifestBackend,
@@ -486,56 +488,79 @@ def test_cross_backend_reopen_refused(spark, tmp_path):
     assert r[2]["is_dup"] and r[2]["dup_of"] == 1
 
 
-def test_legacy_root_level_store_adopted_in_place(spark, tmp_path):
-    """A pre-r9 store (live parquet at the store ROOT, no pointer) is
-    adopted at the first locked operation: files move into v1, the
-    pointer commits, and every pre-adoption canonical still matches —
-    including across a crash mid-adoption (re-entry completes it)."""
-    import os
-
+@pytest.fixture(scope="module")
+def committed_detector_state(spark, tmp_path_factory):
+    """One committed single-batch plain near-dup state dir, copied by
+    each test that reshapes it."""
     from streaming_examples_spark.streaming.incremental_dedup import IncrementalNearDup
 
-    state = str(tmp_path / "state")
-    det = IncrementalNearDup(spark, state, threshold=0.5)
-    det.process_batch(_docs(spark, [(1, BASE), (2, OTHER)]), 0)
+    state = str(tmp_path_factory.mktemp("committed") / "state")
+    IncrementalNearDup(spark, state, threshold=0.5).process_batch(
+        _docs(spark, [(1, BASE), (2, OTHER)]), 0
+    ).collect()
+    return state
 
-    # demote to the legacy layout: move epoch files back to the roots,
-    # drop the pointers (exactly what an r8 store looks like on disk)
+
+def _demote_to_root_level(state):
+    """The pre-epoch shape: live parquet at each store ROOT, no
+    pointer, no seal."""
     import shutil
 
     for name in ("sigs", "bands"):
         root = os.path.join(state, name)
-        epoch_dir = os.path.join(root, f"v{det.backend.read_pointer(root)}")
-        for n in os.listdir(epoch_dir):
-            os.rename(os.path.join(epoch_dir, n), os.path.join(root, n))
-        shutil.rmtree(epoch_dir)
+        for n in os.listdir(os.path.join(root, "v1")):
+            os.rename(os.path.join(root, "v1", n), os.path.join(root, n))
+        shutil.rmtree(os.path.join(root, "v1"))
         os.unlink(os.path.join(root, "CURRENT"))
-    # r9 layouts seal the backend; r8 layouts had only bucket counts
+    os.unlink(os.path.join(state, "_layout.json"))
+
+
+def _write_layout_json(state, data):
     import json
 
     with open(os.path.join(state, "_layout.json"), "w") as fh:
-        json.dump({"bands_buckets": None, "sigs_buckets": None}, fh)
+        json.dump(data, fh)
 
-    # a PUBLIC read on the un-adopted dir must see the state too
-    # (adopt-on-read), not silently report an empty store
-    inspect = IncrementalNearDup(spark, state, threshold=0.5)
-    assert sorted(
-        r["doc_id"] for r in inspect.read_store("sigs").collect()
-    ) == [1, 2]
 
-    fresh = IncrementalNearDup(spark, state, threshold=0.5)
-    r = {x["doc_id"]: x for x in fresh.process_batch(_docs(spark, [(3, NEAR)]), 1).collect()}
-    assert r[3]["is_dup"] and r[3]["dup_of"] == 1
-    # adopted: files now live under v1 with a committed pointer
-    for name in ("sigs", "bands"):
-        root = os.path.join(state, name)
-        assert fresh.backend.read_pointer(root) >= 1
-        assert not [n for n in os.listdir(root) if n.endswith(".parquet")]
-    # a manifest detector cannot adopt a POSIX-sealed legacy dir
-    from streaming_examples_spark.streaming.state_backend import ManifestBackend
+def _swapped_to_old(state):
+    """A crashed directory-swap compaction: the live store renamed to
+    ``<store>.old``, under a seal without a format."""
+    os.rename(os.path.join(state, "sigs"), os.path.join(state, "sigs.old"))
+    _write_layout_json(state, {"bands_buckets": None, "sigs_buckets": None})
 
-    with pytest.raises(ValueError, match="storage backend"):
-        IncrementalNearDup(spark, state, threshold=0.5, backend=ManifestBackend())
+
+_RETIRED_DETECTOR_SHAPES = {
+    "root-level-parquet": _demote_to_root_level,
+    "old-swap-dir": _swapped_to_old,
+    "layout-without-format": lambda st: _write_layout_json(
+        st, {"bands_buckets": None, "sigs_buckets": None, "backend": "local-posix"}
+    ),
+    "unreadable-layout": lambda st: _write_layout_json(st, ["format", 1]),
+    "committed-without-layout": lambda st: os.unlink(
+        os.path.join(st, "_layout.json")
+    ),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_RETIRED_DETECTOR_SHAPES))
+def test_retired_detector_state_shapes_refused(
+    spark, tmp_path, committed_detector_state, shape
+):
+    """The near-dup store reads exactly one on-disk format: opening any
+    retired shape raises a ValueError naming the rebuild recipe — no
+    store is read as empty (every known doc re-admitted) — and the
+    refused open leaves the dir untouched."""
+    import shutil
+
+    from streaming_examples_spark.streaming.incremental_dedup import IncrementalNearDup
+
+    state = str(tmp_path / "state")
+    shutil.copytree(committed_detector_state, state)
+    _RETIRED_DETECTOR_SHAPES[shape](state)
+    before = sorted(os.walk(state))
+    with pytest.raises(ValueError, match="rebuild the state dir from the event log"):
+        IncrementalNearDup(spark, state, threshold=0.5)
+    assert sorted(os.walk(state)) == before
 
 
 def test_per_bucket_compaction_touches_only_hot_buckets(spark, tmp_path):

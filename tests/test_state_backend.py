@@ -242,11 +242,9 @@ def test_manifest_commit_is_conditional_put(tmp_path):
     # simulate the race: b resolves the generation candidates (its
     # read of the current etag), a commits first, then b acts on the
     # STALE resolution — b's exclusive create of the same generation
-    # object must fail. (Freeze the full _gen_candidates resolution:
-    # since r12 a stale LISTING alone is healed by the _latest hint +
-    # forward GET probes, which is a separate test; the genuinely
-    # simultaneous read-before-either-creates race is what the CAS
-    # alone must catch.)
+    # object must fail. (Freeze the _gen_candidates resolution: the
+    # genuinely simultaneous read-before-either-creates race is what
+    # the CAS alone must catch.)
     gen_dir = os.path.join(state, "_pointer")
     stale = b._gen_candidates(gen_dir)
     a.commit_pointer(state, 2)
@@ -379,12 +377,11 @@ def test_manifest_torn_generation_skipped_not_unlinked(tmp_path):
     assert be.read_pointer(state2) == 0
 
 
-# -- r12: generation resolution must not trust the _pointer/ LISTING.
-# The _latest hint object (PUT after every create, BEFORE superseded-
-# generation cleanup) + forward exact-key GET probes are the resolution
-# path; the prefix listing is only a hint. These tests run the lag
-# double with the pointer listing frozen STALE — the last implicit
-# correctness-bearing LIST in the protocol, retired here.
+# -- generation resolution never reads the _pointer/ LISTING: the
+# _latest hint object (PUT after every create, BEFORE superseded-
+# generation cleanup) + forward exact-key GET probes are the whole
+# resolution path. These tests run the lag double with the pointer
+# listing frozen STALE.
 
 
 def test_pointer_resolution_with_permanently_stale_listing(tmp_path):
@@ -424,7 +421,8 @@ def test_dual_writer_stale_pointer_listing_no_lost_commit(tmp_path):
     b.note_spark_write(gen_dir)  # freeze B's LIST view at {gen-5}
     for v in range(6, 9):
         a.commit_pointer(state, v)  # cleanup reclaims gens 5..7
-    assert [g for g, _ in b._generations(gen_dir)] == [5]  # stale view
+    stale_view = [n for n in b._physical_listing(gen_dir) if n.startswith("gen-")]
+    assert stale_view == ["gen-000000000005"]
     won = b.commit_pointer(state, 99)
     assert won == 9, "stale listing must not re-win a reclaimed generation"
     assert ManifestBackend().read_pointer(state) == 99
@@ -473,34 +471,54 @@ def test_failed_hint_publish_does_not_fail_the_committed_batch(tmp_path):
     assert lag.read_pointer(state) == 4
     assert not os.path.exists(os.path.join(gen_dir, "gen-000000000002"))
 
+    # a store whose FIRST hint publish failed has no _latest at all:
+    # resolution probes up from gen 0, so the commit is found with the
+    # pointer listing frozen stale-empty, and the next commit heals
+    first = str(tmp_path / "first")
+    os.makedirs(first)
+    first_gens = os.path.join(first, "_pointer")
+    fresh_lag = LaggedManifestBackend(lag_ops=10_000)
+    crashed.clear()
+    fresh_lag.publish_file = crash_on_hint.__get__(fresh_lag)
+    with pytest.warns(RuntimeWarning, match="hint publish failed"):
+        assert fresh_lag.commit_pointer(first, 7) == 1
+    assert crashed
+    assert fresh_lag._read_hint(first_gens) == 0
+    assert fresh_lag._physical_listing(first_gens) == []
+    assert fresh_lag.read_pointer(first) == 7
+    assert ManifestBackend().read_pointer(first) == 7
+    assert fresh_lag.commit_pointer(first, 8) == 2
+    assert fresh_lag._read_hint(first_gens) == 2
+    assert fresh_lag.read_pointer(first) == 8
 
-def test_hint_publish_is_monotonic_and_legacy_stores_still_resolve(tmp_path):
-    """(a) A delayed writer must never move the hint backwards — the
-    deletion invariant readers rely on assumes monotonicity. (b) A
-    store written only by pre-hint code (gens present, no _latest)
-    resolves from the listing exactly as before, and its first commit
-    under hint-aware code publishes the hint, closing the adoption
-    window for every later read."""
+
+def test_hint_publish_is_monotonic(tmp_path):
+    """A delayed writer must never move the hint backwards — the
+    deletion invariant readers rely on assumes monotonicity — and a
+    reader whose pointer listing is stale resolves by hint + probes."""
     state = str(tmp_path / "state")
     gen_dir = os.path.join(state, "_pointer")
-    os.makedirs(gen_dir)
-    # legacy layout: cleanup already ran (only the live gen remains)
-    with open(os.path.join(gen_dir, "gen-000000000003"), "w") as fh:
-        fh.write("30")
+    os.makedirs(state)
     be = ManifestBackend()
-    assert be._read_hint(gen_dir) == 0  # genuinely hint-less
-    assert be.read_pointer(state) == 30  # legacy listing path
-    assert be.commit_pointer(state, 40) == 4  # numbers above legacy gens
-    assert be._read_hint(gen_dir) == 4  # hint published on first commit
-    # (a) the guard: a stale writer's lower hint write is a no-op
-    be._publish_hint(gen_dir, 2)
-    assert be._read_hint(gen_dir) == 4
-    # from here even a stale-listing reader resolves correctly
+    assert [be.commit_pointer(state, v) for v in (30, 40)] == [1, 2]
+    assert be._read_hint(gen_dir) == 2
+    # the guard: a stale writer's lower hint write is a no-op
+    be._publish_hint(gen_dir, 1)
+    assert be._read_hint(gen_dir) == 2
     lag = LaggedManifestBackend(lag_ops=10_000)
-    lag.note_spark_write(gen_dir)
+    lag.note_spark_write(gen_dir)  # freeze the LIST view at {gen-2}
     be.commit_pointer(state, 50)
-    assert [g for g, _ in lag._generations(gen_dir)] == [4]  # stale
+    assert "gen-000000000003" not in lag._physical_listing(gen_dir)
     assert lag.read_pointer(state) == 50
+    # a generation a crash stranded below the hint (after the hint PUT,
+    # before cleanup) is out of the probes' reach; the next commit's
+    # sweep still reclaims it
+    with open(os.path.join(gen_dir, "gen-000000000001"), "w") as fh:
+        fh.write("30")
+    assert be.commit_pointer(state, 60) == 4
+    assert [n for n in os.listdir(gen_dir) if n.startswith("gen-")] == [
+        "gen-000000000004"
+    ]
 
 
 def test_hint_guard_is_atomic_under_interleaved_writers(tmp_path):
@@ -554,46 +572,6 @@ def test_corrupt_pointer_hint_fails_loud_not_silent(tmp_path):
         be.read_pointer(state)
     with pytest.raises(RuntimeError, match="corrupt pointer hint"):
         be.commit_pointer(state, 6)
-
-
-def test_publish_pointer_hint_tool_closes_adoption_window(tmp_path):
-    """tools/publish_pointer_hint.py is the documented one-time
-    adoption step for pre-r12 manifest stores: run where the listing
-    is fresh, it publishes _latest so every LATER read resolves by GET
-    even under a stale pointer listing. POSIX-layout and empty dirs
-    are explicit no-ops."""
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from publish_pointer_hint import publish_hint
-
-    # pre-r12 store: live gen only (legacy cleanup ran), no hint
-    state = str(tmp_path / "state")
-    gen_dir = os.path.join(state, "_pointer")
-    os.makedirs(gen_dir)
-    with open(os.path.join(gen_dir, "gen-000000000007"), "w") as fh:
-        fh.write("70")
-    msg = publish_hint(state)
-    assert "published _latest = gen-7" in msg
-    # a reader whose pointer listing is frozen stale-empty now resolves
-    lag = LaggedManifestBackend(lag_ops=10_000)
-    lag.note_spark_write(gen_dir)
-    with open(os.path.join(gen_dir, "gen-000000000008"), "w") as fh:
-        fh.write("80")  # adversarial: a gen the stale listing never shows
-    ManifestBackend()._publish_hint(gen_dir, 8)
-    assert [g for g, _ in lag._generations(gen_dir)] == [7]  # stale LIST
-    assert lag.read_pointer(state) == 80
-    # idempotent + refuses regression
-    assert "no-op" in publish_hint(state)
-    # POSIX layout: explicit no-op
-    pstate = str(tmp_path / "posix")
-    os.makedirs(pstate)
-    LocalPosixBackend().commit_pointer(pstate, 3)
-    assert "POSIX layout" in publish_hint(pstate)
-    # nothing committed: explicit no-op
-    estate = str(tmp_path / "empty")
-    os.makedirs(os.path.join(estate, "_pointer"))
-    assert "nothing committed" in publish_hint(estate)
 
 
 def test_backends_exclude_writer_sidecars_from_logical_namespace(tmp_path):
@@ -1002,7 +980,7 @@ def test_stream_runs_on_manifest_backend(spark, tmp_path):
 
     with open(os.path.join(dirs["state"], "_layout.json")) as fh:
         layout = json.load(fh)
-    assert layout == {"n_buckets": 4, "backend": "manifest"}
+    assert layout == {"format": 1, "backend": "manifest", "n_buckets": 4}
 
 
 @pytest.mark.parametrize("backend_key", sorted(BACKENDS))
@@ -1349,15 +1327,13 @@ def test_stream_gc_horizon_trims_delete_markers(spark, tmp_path):
     assert {r["order_key"]: r["op"] for r in st2} == {30009: "c"}
 
 
-def test_carry_enumeration_sidecar_and_pre_r11_fallback(spark, tmp_path):
-    """r11/r12: the untouched-bucket carry enumerates from the
-    committed version's ``_parts.json`` sidecar (a GET — immune to
-    list-after-write lag). r12 writes format 2, an EXACT enumeration
-    (every listed part physically exists — a touched bucket whose
-    every key was deleted is NOT listed), so the carry needs no
-    existence probe. A pre-r11 version without the sidecar goes
-    through witness-checked legacy adoption (fresh listings here —
-    POSIX backend — so adoption succeeds and still carries)."""
+def test_carry_enumeration_reads_exact_parts_sidecar(spark, tmp_path):
+    """The untouched-bucket carry enumerates from the committed
+    version's ``_parts.json`` sidecar (a GET — immune to
+    list-after-write lag). It is format 2, an EXACT enumeration (every
+    listed part physically exists — a touched bucket whose every key
+    was deleted is NOT listed), so the carry needs no existence
+    probe."""
     import json as _json
 
     state, proc = _first_batch(spark, tmp_path, LocalPosixBackend())
@@ -1382,161 +1358,14 @@ def test_carry_enumeration_sidecar_and_pre_r11_fallback(spark, tmp_path):
                 f"format-2 sidecar lists absent part {name}/{part}"
             )
 
-    # pre-r11 shape: no sidecar → witness-checked adoption must carry
-    os.remove(sidecar_path)
-    proc._adopted_parts.clear()
-    d = proc.process(
-        *_dfs(spark, _one_line_tx(95000, 950, 300073, 30007, "3.00")),
-        batch_id=2,
-    ).collect()
-    assert sorted(str(l["price"]) for l in d[0]["lines"]) == ["3.00", "5.00"]
-    # an order untouched since batch 0 survived the fallback carry…
-    d2 = proc.process(
-        *_dfs(spark, _one_line_tx(97000, 970, 300011, 30001, "2.00")),
-        batch_id=3,
-    ).collect()
-    assert sorted(str(l["price"]) for l in d2[0]["lines"]) == ["2.00", "5.00"]
-    # …and the post-fallback commits write the sidecar again
-    assert os.path.exists(
-        os.path.join(state, f"v{proc._current_version()}", "_parts.json")
-    )
-
-
-# -- pre-r11 (sidecar-less) store adoption: the last LIST-gated read --
-# r12 (VERDICT r11 #1): a store committed by pre-r11 code has no
-# _parts.json, so its part enumeration can only come from backend
-# listings — the exact read class that silently emptied state twice
-# (r10 detector _load_store, r11 tx _load_buckets). Adoption must
-# therefore be witness-checked: any listing that disagrees with a GET
-# raises StateAdoptionError instead of loading state as None.
-
-
-def _strip_sidecar(state, version):
-    os.remove(os.path.join(state, f"v{version}", "_parts.json"))
-
-
-def test_pre_r11_adoption_fails_loud_under_open_lag_window(spark, tmp_path):
-    """Adopting a sidecar-less store while the legacy writer's
-    list-after-write windows (including spark-write windows) are still
-    open must raise StateAdoptionError — never silently load state as
-    None. Once the windows expire, the SAME store adopts correctly:
-    reads resolve every key, a follow-up batch carries untouched
-    buckets, and its commit reinstates a format-2 sidecar."""
-    import json as _json
-
-    from streaming_examples_spark.streaming.cdc_stream import (
-        StateAdoptionError,
-    )
-
-    # lag_ops large enough that every window opened by the final
-    # legacy batch is still open at adoption time (reads never advance
-    # the double's op clock, so the window provably spans the attempt)
-    backend = LaggedManifestBackend(lag_ops=64)
-    state, proc = _first_batch(spark, tmp_path, backend)
-    assert (
-        proc.process(
-            *_dfs(spark, _one_line_tx(90000, 900, 300001, 30000, "9.00")),
-            batch_id=1,
-        ).count()
-        == 1
-    )
-    v = proc._current_version()
-    _strip_sidecar(state, v)  # raw remove: simulates a pre-r11 writer
-
-    # a FRESH processor (adoption path — empty memo) on the same
-    # still-lagged backend: the version root's stale view predates its
-    # prepare_dir, so witness 1 (committed pointer vs dir probe) fires
-    fresh = TxDenormBatchProcessor(spark, state, n_buckets=8, backend=backend)
-    with pytest.raises(StateAdoptionError, match="stale"):
-        fresh.read_state("order_state")
-    with pytest.raises(StateAdoptionError, match="stale"):
-        fresh._load_buckets("order_state", [0, 1, 2, 3])
-    # the writer path refuses too: processing a batch over the adopted
-    # store must not commit against silently-empty state
-    with pytest.raises(StateAdoptionError, match="stale"):
-        fresh.process(
-            *_dfs(spark, _one_line_tx(95000, 950, 300073, 30007, "3.00")),
-            batch_id=2,
-        )
-
-    # expire every window (mutations advance the op clock; reads do
-    # not), then the same store adopts from fresh listings
-    scratch = tmp_path / "scratch"
-    os.makedirs(scratch, exist_ok=True)
-    for i in range(70):
-        backend.publish_file(str(scratch / f"x{i}"), b"")
-    adopted = TxDenormBatchProcessor(
-        spark, state, n_buckets=8, backend=backend
-    )
-    keys = {
-        r["order_key"]
-        for r in adopted.read_state("order_state")
-        .select("order_key")
-        .collect()
-    }
-    assert keys == {30000 + i for i in range(8)}
-    # follow-up batch: a bucket untouched since batch 0 still carries
-    d = adopted.process(
-        *_dfs(spark, _one_line_tx(95000, 950, 300073, 30007, "3.00")),
-        batch_id=2,
-    ).collect()
-    assert sorted(str(l["price"]) for l in d[0]["lines"]) == ["3.00", "5.00"]
-    # …and the adopting commit wrote an exact format-2 sidecar
-    raw = backend.read_file(
-        os.path.join(state, f"v{adopted._current_version()}", "_parts.json")
-    )
-    assert _json.loads(raw)["format"] == 2
-
-
-def test_adoption_witness_catches_partial_root_listing(spark, tmp_path):
-    """Witness 2: a stale root listing frozen from a crashed build
-    attempt can be PRESENT but PARTIAL (missing frame dirs every
-    committed version contains) — adoption must refuse it."""
-    from streaming_examples_spark.streaming.cdc_stream import (
-        StateAdoptionError,
-    )
-
-    backend = LaggedManifestBackend(lag_ops=5)
-    state, proc = _first_batch(spark, tmp_path, backend)
-    v = proc._current_version()
-    _strip_sidecar(state, v)
-    root = os.path.abspath(os.path.join(state, f"v{v}"))
-    # freeze a partial view: the dir "exists" but lists only two of
-    # the six frame dirs (what a crashed attempt's snapshot looks like)
-    backend._stale[root] = (
-        backend._ops + 1000,
-        True,
-        ["order_state", "carry_orders"],
-    )
-    fresh = TxDenormBatchProcessor(spark, state, n_buckets=8, backend=backend)
-    with pytest.raises(StateAdoptionError, match="missing frame dirs"):
-        fresh.read_state("order_state")
-
-
-def test_adoption_witness_catches_frame_probe_mismatch(spark, tmp_path):
-    """Witness 3: a frame dir the (fresh) root listing names must
-    itself probe present; a stale per-dir absent view raises."""
-    from streaming_examples_spark.streaming.cdc_stream import (
-        StateAdoptionError,
-    )
-
-    backend = LaggedManifestBackend(lag_ops=5)
-    state, proc = _first_batch(spark, tmp_path, backend)
-    v = proc._current_version()
-    _strip_sidecar(state, v)
-    frame = os.path.abspath(os.path.join(state, f"v{v}", "order_state"))
-    backend._stale[frame] = (backend._ops + 1000, False, None)
-    fresh = TxDenormBatchProcessor(spark, state, n_buckets=8, backend=backend)
-    with pytest.raises(StateAdoptionError, match="probes absent"):
-        fresh.read_state("order_state")
 
 
 def test_store_all_publishes_sidecar_without_bucketed_frames(
     spark, tmp_path, backend_cls
 ):
-    """r11 ADVICE: a version committed with NO bucketed frames must
-    still publish the sidecar (truthfully empty) — otherwise the next
-    reader of a post-r11 store would fall into legacy adoption."""
+    """A version committed with NO bucketed frames must still publish
+    the sidecar (truthfully empty) — otherwise the next reader would
+    refuse the version as unenumerable."""
     import json as _json
 
     backend = backend_cls()
@@ -1657,8 +1486,7 @@ def test_stream_gc_horizon_ahead_of_inflight_is_refused(spark, tmp_path):
 
 def test_marker_bearing_store_through_public_readers(spark, tmp_path):
     """VERDICT r11 #5: every public reader of a marker-bearing store
-    must see the r11 contract — op='d' rows with NULL after — and
-    survive sidecar-less adoption without dropping markers."""
+    must see the r11 contract — op='d' rows with NULL after."""
     state = str(tmp_path / "state")
     _, _, states, _ = _run_marker_batches(spark, state, {})
     assert (30000, "d") in states[3]
@@ -1678,17 +1506,6 @@ def test_marker_bearing_store_through_public_readers(spark, tmp_path):
         for r in fresh._load_buckets("order_state", [0]).collect()
     }
     assert lb[30000] == "d"
-
-    # sidecar-less adoption (pre-r11 store shape): markers survive —
-    # adoption enumerates PARTS, never filters rows
-    v = fresh._current_version()
-    _strip_sidecar(state, v)
-    adopted = TxDenormBatchProcessor(spark, state, n_buckets=1)
-    arows = {
-        r["order_key"]: r["op"]
-        for r in adopted.read_state("order_state").collect()
-    }
-    assert arows[30000] == "d"
 
 
 # -- COMPOSED adversarial soak: dual-host × list-after-write lag × crash
@@ -1846,9 +1663,8 @@ def test_bucketed_frame_emptied_by_deletes_roundtrip(spark, tmp_path):
     """A touched bucket whose EVERY key is deleted writes no part dirs
     (partitionBy of zero rows leaves only _SUCCESS): the format-2
     sidecar records the frame with zero parts, reads return None
-    instead of tripping schema inference on the empty dir, the next
-    batch carries nothing for it, and sidecar-less adoption of the
-    same shape degrades identically."""
+    instead of tripping schema inference on the empty dir, and the next
+    batch carries nothing for it."""
     import json as _json
 
     state = str(tmp_path / "state")
@@ -1882,19 +1698,12 @@ def test_bucketed_frame_emptied_by_deletes_roundtrip(spark, tmp_path):
     # the marker is still readable through both paths
     assert proc.read_state("order_state").count() == 1
 
-    # adoption of the same shape (pre-r11 store): the empty bucketed
-    # frame is absent from the adopted enumeration and reads as None
-    _strip_sidecar(state, v)
-    adopted = TxDenormBatchProcessor(spark, state, n_buckets=1)
-    assert adopted.read_state("line_state") is None
-    assert adopted.read_state("order_state").count() == 1
-
     # the next batch commits cleanly over the empty frame (carry loop
     # iterates zero parts) and the new sidecar is exact again
-    d = adopted.process(*batch(c2, c3), batch_id=2).collect()
+    d = proc.process(*batch(c2, c3), batch_id=2).collect()
     assert len(d) == 1 and d[0]["id"] == 30009
-    raw2 = adopted.backend.read_file(
-        os.path.join(state, f"v{adopted._current_version()}", "_parts.json")
+    raw2 = proc.backend.read_file(
+        os.path.join(state, f"v{proc._current_version()}", "_parts.json")
     )
     frames2 = _json.loads(raw2)["frames"]
     assert len(frames2["line_state"]) == 1

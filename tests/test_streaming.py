@@ -3,6 +3,8 @@ stateful fill-forward, and the UDTF (PTF) surface."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -737,9 +739,9 @@ def test_emissions_cache_does_not_accumulate_across_batches(spark, tmp_path):
 
 def test_legacy_per_frame_state_dir_refused_not_reset(spark, tmp_path):
     """A pre-versioned state dir (frames at the root, no CURRENT
-    pointer) must raise with a migration hint — silently treating it
-    as fresh would discard all existing state (carry events, applied
-    txs) and restart from empty."""
+    pointer, no seal) must raise with the rebuild recipe — silently
+    treating it as fresh would discard all existing state (carry
+    events, applied txs) and restart from empty."""
     import os
 
     state = tmp_path / "state"
@@ -748,13 +750,15 @@ def test_legacy_per_frame_state_dir_refused_not_reset(spark, tmp_path):
     log = TxLog()
     log.tx(lambda t: t.insert_order(10001), lambda t: t.insert_line(100001, 10001))
     proc = TxDenormBatchProcessor(spark, str(state))
-    with pytest.raises(ValueError, match="legacy per-frame state dirs"):
+    with pytest.raises(ValueError, match="no _layout.json seal"):
         proc.process(
             log.order_events_df(spark),
             log.line_events_df(spark),
             log.tx_events_df(spark),
             0,
         )
+    with pytest.raises(ValueError, match="no _layout.json seal"):
+        proc.read_state("carry_orders")
 
 
 def test_hardlink_refused_falls_back_to_copy(spark, tmp_path, monkeypatch):
@@ -853,201 +857,86 @@ def test_failed_batch_emissions_cache_reclaimed_on_retry(spark, tmp_path):
     assert lvl.useMemory or lvl.useDisk
 
 
-def _demigrate(state: str) -> None:
-    """Turn a committed versioned state dir back into the r5 legacy
-    layout (frames at the root, no pointer/layout) — the fixture for
-    migration tests, built from REAL state so the migrated store's
-    content is genuine."""
-    import os
+@pytest.fixture(scope="module")
+def committed_tx_state(spark, tmp_path_factory):
+    """One committed single-batch tx state dir (n_buckets=8), copied by
+    each test that reshapes it."""
+    state = str(tmp_path_factory.mktemp("committed") / "state")
+    log = TxLog()
+    log.tx(
+        lambda t: t.insert_order(10001),
+        lambda t: t.insert_line(100001, 10001, price="7.00"),
+    )
+    proc = TxDenormBatchProcessor(spark, state, n_buckets=8)
+    assert proc.process(
+        log.order_events_df(spark),
+        log.line_events_df(spark),
+        log.tx_events_df(spark),
+        0,
+    ).count() == 1
+    return state
+
+
+def _write_json(state, stem, data):
+    import json
+
+    with open(os.path.join(state, stem + ".json"), "w") as fh:
+        json.dump(data, fh)
+
+
+# every on-disk shape an earlier layout left behind, besides the
+# per-frame root dirs of test_legacy_per_frame_state_dir_refused_not_reset:
+# (fresh dir?, reshape)
+_RETIRED_TX_SHAPES = {
+    "migration-marker": (True, lambda st: _write_json(
+        st, "_migration", {"n_buckets": 8}
+    )),
+    "layout-without-format": (False, lambda st: _write_json(
+        st, "_layout", {"n_buckets": 8, "backend": "local-posix"}
+    )),
+    "committed-without-layout": (False, lambda st: os.remove(
+        os.path.join(st, "_layout.json")
+    )),
+    "format-1-parts-sidecar": (False, lambda st: _write_json(
+        st, "v1/_parts", {"order_state": ["_bucket=1"], "line_state": ["_bucket=1"]}
+    )),
+    "no-parts-sidecar": (False, lambda st: os.remove(
+        os.path.join(st, "v1", "_parts.json")
+    )),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_RETIRED_TX_SHAPES))
+def test_retired_tx_state_shapes_refused(spark, tmp_path, committed_tx_state, shape):
+    """The tx store reads exactly one on-disk format: every retired
+    shape raises a ValueError naming the rebuild recipe from both the
+    writer (process) and the public reader (read_state) — never a
+    silent fresh start or an empty read — and the refused open leaves
+    the dir untouched."""
     import shutil
 
-    v1 = os.path.join(state, "v1")
-    for d in os.listdir(v1):
-        os.rename(os.path.join(v1, d), os.path.join(state, d))
-    os.rmdir(v1)
-    for f in ("CURRENT", "_layout.json"):
-        p = os.path.join(state, f)
-        if os.path.exists(p):
-            os.unlink(p)
-    shutil.rmtree(os.path.join(state, "_pointer"), ignore_errors=True)
-
-
-def test_migrate_state_tool_end_to_end(spark, tmp_path):
-    """tools/migrate_state.py performs the refusal message's manual
-    steps: legacy frames → v1/, CURRENT=1, sealed _layout.json. After
-    migration a fresh processor resumes with the prior state VISIBLE
-    (the whole point — a reset would silently pass too); dry-run
-    changes nothing and the refusal stays in force."""
-    import sys
-
-    sys.path.insert(0, "tools")
-    from migrate_state import migrate
-
-    log = TxLog()
-    log.tx(
-        lambda t: t.insert_order(10001),
-        lambda t: t.insert_line(100001, 10001, price="7.00"),
-    )
+    fresh, reshape = _RETIRED_TX_SHAPES[shape]
     state = str(tmp_path / "state")
-    proc = TxDenormBatchProcessor(spark, state, n_buckets=8)
-    assert proc.process(
-        log.order_events_df(spark),
-        log.line_events_df(spark),
-        log.tx_events_df(spark),
-        0,
-    ).count() == 1
-    _demigrate(state)
-
-    log2 = TxLog()
-    log2._lsn, log2._next_tx = 90000, 900
-    log2.tx(lambda t: t.insert_line(100002, 10001, price="3.00"))
-    b1 = (
-        log2.order_events_df(spark),
-        log2.line_events_df(spark),
-        log2.tx_events_df(spark),
-    )
-    # un-migrated: refused (the r7 guard)
-    with pytest.raises(ValueError, match="legacy per-frame state dirs"):
-        TxDenormBatchProcessor(spark, state, n_buckets=8).process(*b1, 1)
-    # dry run: prints the plan, writes nothing → still refused
-    migrate(state, 8, dry_run=True)
-    with pytest.raises(ValueError, match="legacy per-frame state dirs"):
-        TxDenormBatchProcessor(spark, state, n_buckets=8).process(*b1, 1)
-
-    migrate(state, 8)
-    fresh = TxDenormBatchProcessor(spark, state, n_buckets=8)
-    docs = fresh.process(*b1, 1).collect()
-    assert len(docs) == 1
-    # prior state visible: the pre-migration line joins the new one
-    assert sorted(str(l["price"]) for l in docs[0]["lines"]) == ["3.00", "7.00"]
-
-
-def test_migrate_state_tool_crash_resume_and_guards(spark, tmp_path):
-    """A migration that crashes mid-move leaves the marker: the
-    processor refuses with the migration hint (not the legacy hint,
-    not a silent fresh start), and re-running the tool completes
-    idempotently. Wrong --n-buckets values are refused up front."""
-    import os
-    import sys
-
-    sys.path.insert(0, "tools")
-    import pytest as _pytest
-
-    from migrate_state import MigrationError, migrate, plan_migration
-
+    if fresh:
+        os.makedirs(state)
+    else:
+        shutil.copytree(committed_tx_state, state)
+    reshape(state)
+    before = sorted(os.listdir(state))
     log = TxLog()
-    log.tx(
-        lambda t: t.insert_order(10001),
-        lambda t: t.insert_line(100001, 10001, price="7.00"),
-    )
-    state = str(tmp_path / "state")
+    log._lsn, log._next_tx = 90000, 900
+    log.tx(lambda t: t.insert_line(100002, 10001, price="3.00"))
     proc = TxDenormBatchProcessor(spark, state, n_buckets=8)
-    assert proc.process(
-        log.order_events_df(spark),
-        log.line_events_df(spark),
-        log.tx_events_df(spark),
-        0,
-    ).count() == 1
-    _demigrate(state)
-
-    # a declared count smaller than an existing bucket id is provably
-    # wrong — refused before anything moves
-    buckets = [
-        int(e.split("=")[1])
-        for e in os.listdir(os.path.join(state, "order_state"))
-        if e.startswith("_bucket=")
-    ] + [
-        int(e.split("=")[1])
-        for e in os.listdir(os.path.join(state, "line_state"))
-        if e.startswith("_bucket=")
-    ]
-    too_small = max(buckets)  # at least one id ≥ this count exists
-    if too_small > 0:
-        with _pytest.raises(SystemExit, match="provably wrong"):
-            plan_migration(state, too_small)
-
-    # simulate a crash: marker written, ONE frame moved, then death
-    import json
-
-    with open(os.path.join(state, "_migration.json"), "w") as fh:
-        json.dump({"n_buckets": 8}, fh)
-    os.makedirs(os.path.join(state, "v1"), exist_ok=True)
-    os.rename(
-        os.path.join(state, "carry_txs"), os.path.join(state, "v1", "carry_txs")
-    )
-
-    log2 = TxLog()
-    log2._lsn, log2._next_tx = 90000, 900
-    log2.tx(lambda t: t.insert_line(100002, 10001, price="3.00"))
-    b1 = (
-        log2.order_events_df(spark),
-        log2.line_events_df(spark),
-        log2.tx_events_df(spark),
-    )
-    with pytest.raises(ValueError, match="migration marker"):
-        TxDenormBatchProcessor(spark, state, n_buckets=8).process(*b1, 1)
-    # resuming with a DIFFERENT count is refused
-    with _pytest.raises(SystemExit, match="crashed migration recorded"):
-        migrate(state, 16)
-    migrate(state, 8)  # resume completes the remaining moves
-    docs = TxDenormBatchProcessor(spark, state, n_buckets=8).process(*b1, 1).collect()
-    assert sorted(str(l["price"]) for l in docs[0]["lines"]) == ["3.00", "7.00"]
-
-
-def test_migrate_state_tool_finalizes_pointer_marker_window(spark, tmp_path):
-    """Crash in the LAST window — pointer committed, marker not yet
-    removed: the dir holds BOTH. The processor refuses while the marker
-    exists; the tool must finalize (remove the marker only) instead of
-    raising 'already has a committed version pointer' — which would
-    wedge the dir permanently against its own documented remedy."""
-    import json
-    import os
-    import sys
-
-    sys.path.insert(0, "tools")
-    import pytest as _pytest
-
-    from migrate_state import migrate, plan_migration
-
-    log = TxLog()
-    log.tx(
-        lambda t: t.insert_order(10001),
-        lambda t: t.insert_line(100001, 10001, price="7.00"),
-    )
-    state = str(tmp_path / "state")
-    proc = TxDenormBatchProcessor(spark, state, n_buckets=8)
-    assert proc.process(
-        log.order_events_df(spark),
-        log.line_events_df(spark),
-        log.tx_events_df(spark),
-        0,
-    ).count() == 1
-    _demigrate(state)
-    migrate(state, 8)
-    # re-create the crash window: marker back, everything else committed
-    with open(os.path.join(state, "_migration.json"), "w") as fh:
-        json.dump({"n_buckets": 8}, fh)
-
-    log2 = TxLog()
-    log2._lsn, log2._next_tx = 90000, 900
-    log2.tx(lambda t: t.insert_line(100002, 10001, price="3.00"))
-    b1 = (
-        log2.order_events_df(spark),
-        log2.line_events_df(spark),
-        log2.tx_events_df(spark),
-    )
-    with pytest.raises(ValueError, match="migration marker"):
-        TxDenormBatchProcessor(spark, state, n_buckets=8).process(*b1, 1)
-    # finalizing with the WRONG count is refused (the marker records 8)
-    with _pytest.raises(SystemExit, match="crashed migration recorded"):
-        plan_migration(state, 16)
-    assert plan_migration(state, 8) == [
-        ("remove-marker", os.path.join(state, "_migration.json"))
-    ]
-    migrate(state, 8)  # re-run completes idempotently, as documented
-    assert not os.path.exists(os.path.join(state, "_migration.json"))
-    docs = TxDenormBatchProcessor(spark, state, n_buckets=8).process(*b1, 1).collect()
-    assert sorted(str(l["price"]) for l in docs[0]["lines"]) == ["3.00", "7.00"]
+    with pytest.raises(ValueError, match="rebuild the state dir from the event log"):
+        proc.process(
+            log.order_events_df(spark),
+            log.line_events_df(spark),
+            log.tx_events_df(spark),
+            1,
+        )
+    with pytest.raises(ValueError, match="rebuild the state dir from the event log"):
+        proc.read_state("order_state")
+    assert sorted(os.listdir(state)) == before
 
 
 def test_idle_microbatch_fast_path(spark, tmp_path, monkeypatch):
@@ -1085,6 +974,7 @@ def test_idle_microbatch_fast_path(spark, tmp_path, monkeypatch):
     b = LocalPosixBackend()
     v_before = b.read_pointer(state)
     committed_before = proc.metrics.committed_transactions
+    gauge_before = proc.metrics.last_batch_events_per_sec
     empty = TxLog()
 
     def idle_dfs():
@@ -1106,9 +996,10 @@ def test_idle_microbatch_fast_path(spark, tmp_path, monkeypatch):
     assert idle.count() == 0
     assert idle.schema == real.schema
     assert b.read_pointer(state) == v_before  # no state rewrite
-    # still metered through the same per-batch hook as the slow path
+    # an idle batch commits nothing and leaves the throughput gauge at
+    # the last non-idle batch's value
     assert proc.metrics.committed_transactions == committed_before
-    assert proc.metrics.last_batch_events_per_sec == 0.0
+    assert proc.metrics.last_batch_events_per_sec == gauge_before > 0
     # the per-batch emission_sink contract survives idle triggers
     # (sinks may advance progress markers per batch): called with the
     # batch id and an empty frame
