@@ -154,7 +154,8 @@ def q_pricing_summary(spark, sf_dir):
       SELECT l_returnflag, l_extendedprice AS v,
              row_number() OVER (PARTITION BY l_returnflag ORDER BY l_extendedprice) AS rn,
              count(*) OVER (PARTITION BY l_returnflag) AS n
-      FROM lineitem)
+      FROM lineitem
+      WHERE l_extendedprice IS NOT NULL)
     SELECT l_returnflag,
            floor((max(CASE WHEN rn = floor(0.25*(n-1))+1 THEN v END)
                  + (max(CASE WHEN rn = ceil(0.25*(n-1))+1 THEN v END)

@@ -88,6 +88,8 @@ def _order_versions(norm_orders: DataFrame) -> DataFrame:
 def _line_versions(norm_lines: DataFrame) -> DataFrame:
     return norm_lines.select(
         F.col("key").alias("order_key"),
+        # the order a re-point moves the line away from (else order_key)
+        F.coalesce(F.col("before.order_id"), F.col("key")).alias("from_order_key"),
         F.coalesce(F.col("after.id"), F.col("before.id")).alias("line_id"),
         "op",
         "after",
@@ -251,7 +253,11 @@ def tx_denormalize(
     if order_state is not None:
         o_versions = o_versions.unionByName(order_state)
     if line_state is not None:
-        l_versions = l_versions.unionByName(line_state)
+        # state rows are keyed by the line's current order and were
+        # re-pointed (if ever) in an earlier batch: no from-order
+        l_versions = l_versions.unionByName(
+            line_state.withColumn("from_order_key", F.col("order_key"))
+        )
     # The version pools each feed TWO consumers per batch: the as-of
     # join (emissions) and the state roll-forward — without a persist
     # the whole upstream lineage (envelope normalization, LSN stamping,
@@ -310,11 +316,28 @@ def tx_denormalize(
     )
 
     # -- 3b. as-of line set per touched pair -----------------------------
+    # A re-point version (line moved from order A to B) is keyed under
+    # BOTH orders here: under B it adds the line, under A it is the
+    # line's newest version there, so a later doc of A in the same pool
+    # sees the move and drops the line — keyed under B alone, A's docs
+    # would resolve the line to its pre-move version and still list it.
+    # One explode of the persisted pool, no extra scan; the state roll
+    # below keeps one row per line, keyed by its current order.
+    l_asof_versions = l_versions.select(
+        F.explode(F.array_distinct(F.array("order_key", "from_order_key"))).alias(
+            "order_key"
+        ),
+        "line_id",
+        "op",
+        "after",
+        "commit_lsn",
+        "event_lsn",
+    )
     line_asof = (
         touched.hint("SHUFFLE_HASH").join(
-            l_versions,
-            (l_versions["order_key"] == touched["t_key"])
-            & (l_versions["commit_lsn"] <= touched["t_lsn"]),
+            l_asof_versions,
+            (l_asof_versions["order_key"] == touched["t_key"])
+            & (l_asof_versions["commit_lsn"] <= touched["t_lsn"]),
             "inner",
         )
         .groupBy("t_key", "t_lsn", "line_id")

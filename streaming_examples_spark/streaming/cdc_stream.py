@@ -34,11 +34,24 @@ In production the same layout is a Delta/Iceberg MERGE target; the
 bucket swap here is the plain-parquet equivalent of MERGE touching
 only affected files.
 
-Durability order per batch: emissions are materialized and written to
-the sink BEFORE any state dir is swapped. A crash between the two
-replays the batch against the old state and re-emits the same docs —
-duplicate output, never lost output (AT_LEAST_ONCE, matching the
-reference sink, DataStreamV2Job.java:102). ``applied_txs`` (replay/
+Durability order per batch:
+  1. materialize: the emissions are cached by the batch's one Spark
+     action before the sink (the emitted-LSN high-watermark rides it
+     as an observation; the inputs are pinned once, so every later
+     consumer reads the cache instead of the source lineage);
+  2. sink: the output_dir append and the ``emission_sink`` callback;
+  3. concurrent writes: the NEXT version dir is claimed and its
+     high-watermark sidecar published, then all six state frames are
+     written on a thread pool, next to the metric-only counts (the
+     backlog is observed on the carry writes themselves);
+  4. sidecars: the untouched buckets are carried and ``_parts.json``
+     enumerates the version;
+  5. flip: one atomic pointer replace commits the version.
+Every state-backend call is made from the calling thread, in this
+order. A crash anywhere before the flip replays the batch against the
+old state and re-emits the same docs — duplicate output, never lost
+output (AT_LEAST_ONCE, matching the reference sink,
+DataStreamV2Job.java:102). ``applied_txs`` (replay/
 redelivery dedup) retains the last ``applied_retention_batches``
 batches — bounded state; a duplicate older than the horizon re-emits
 (at-least-once) but cannot corrupt state, since tx application is
@@ -55,11 +68,15 @@ and replay the source from its start into an empty dir.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 from streaming_examples_spark.operators.txjoin import TxDenormResult, tx_denormalize
 from streaming_examples_spark.streaming.state_backend import (
@@ -151,6 +168,10 @@ class TxDenormBatchProcessor:
         # batch's start (the caller may still read the CURRENT batch's
         # frame after process() returns, so same-batch unpersist races)
         self._prev_emissions: DataFrame | None = None
+        # the current batch's pinned frames (its inputs and the
+        # operator's intra-batch caches), freed after its commit — or,
+        # for a failed batch, at the next batch's start
+        self._pinned: list[DataFrame] = []
         # emissions schema from the last non-idle batch — lets the idle
         # fast path return a correctly-shaped empty frame jobs-free
         self._emissions_schema = None
@@ -161,6 +182,11 @@ class TxDenormBatchProcessor:
 
     def _bucket_of(self, key) -> F.Column:
         return F.pmod(F.hash(key), F.lit(self.n_buckets))
+
+    def _unpin(self) -> None:
+        for df in self._pinned:
+            df.unpersist()
+        self._pinned = []
 
     # -- versioned state root --------------------------------------------
     # Every batch's state frames live under ONE version dir
@@ -278,38 +304,6 @@ class TxDenormBatchProcessor:
             )
         return data["frames"]
 
-    def _written_parts(self, path: str) -> list[str]:
-        """``_bucket=K`` partition dirs our OWN just-issued Spark write
-        created under ``path`` — enumerated through Spark's scan-time
-        file index (``DataFrame.inputFiles``), never a backend LIST.
-        This is the one listing class the protocol's SCOPE note
-        documents as consistent by contract: the store's listing
-        guarantee to Spark itself, which every parquet-on-object-store
-        deployment already requires (and S3/GCS/Azure give today); the
-        eventual-consistency double accordingly does not lag it. The
-        dir is the writer's pre-commit private output — no carried
-        (manifest-only) entries can exist in it yet. Empty when the
-        write produced no rows (zero-row frame → only ``_SUCCESS``,
-        schema non-inferable). Only that exact failure maps to empty —
-        anything else re-raises: mapping a real read error to [] would
-        silently drop this frame's written parts from the committed
-        enumeration (state loss at the next carry)."""
-        from pyspark.errors import AnalysisException
-
-        try:
-            files = self.spark.read.parquet(path).inputFiles()
-        except AnalysisException as e:
-            if "UNABLE_TO_INFER_SCHEMA" in str(e) or "infer schema" in str(e):
-                return []
-            raise
-        parts = {
-            m.group(1)
-            for f in files
-            for m in [re.search(r"(_bucket=\d+)/", f)]
-            if m is not None
-        }
-        return sorted(parts)
-
     def _load_buckets(self, name: str, buckets: list[int]) -> DataFrame | None:
         """Read only the listed hash buckets of a bucketed state table.
 
@@ -380,9 +374,29 @@ class TxDenormBatchProcessor:
         frames: dict[str, DataFrame],
         bucketed: dict[str, tuple[DataFrame, list[int]]] | None = None,
         scalars: dict[str, bytes] | None = None,
-    ) -> None:
+        *,
+        alongside: dict[str, Callable[[], object]] | None = None,
+        before_commit: Callable[[dict[str, object]], None] | None = None,
+    ) -> dict[str, object]:
         """Write every new state frame under the NEXT version dir, then
         commit the batch with ONE atomic pointer replace.
+
+        Order, after the caller's materialization and sink:
+          1. seal a fresh dir, claim the version dir, publish the
+             scalar sidecars (e.g. the emitted-LSN high-watermark) and
+             announce every frame's Spark write (``note_spark_write``);
+          2. run all frame writes CONCURRENTLY on a thread pool, with
+             the ``alongside`` Spark actions (metric-only counts) next
+             to them — each bucketed write followed by its written-part
+             enumeration. The threads inherit the caller's job group
+             and local properties. If any task fails, every task is
+             waited for, the first error (in submission order) is
+             raised and the pointer is never flipped;
+          3. on the calling thread: ``before_commit(results)``, the
+             untouched-bucket carry, ``_parts.json``, the build-claim
+             re-validation, the pointer flip and the cleanup.
+        Every backend call is made from the calling thread, in this
+        order. Returns the ``alongside`` results by name.
 
         Crash anywhere BEFORE the flip: ``CURRENT`` still names the old
         version — the replay re-runs the batch against complete OLD
@@ -394,7 +408,8 @@ class TxDenormBatchProcessor:
 
         The new frames' plans read the OLD version's files (lazy
         scans), which the new-dir writes never touch — no
-        write-invalidates-read ordering to maintain.
+        write-invalidates-read ordering to maintain, and no ordering
+        between the concurrent writes either.
 
         Bucketed frames write only their touched buckets' rows (a
         touched bucket whose every key was deleted simply has no dir in
@@ -406,6 +421,8 @@ class TxDenormBatchProcessor:
         ``self.backend`` (state_backend.py), whose docstrings carry the
         object-store translation: carry → manifest entry, pointer flip
         → conditional put — same single-commit design."""
+        bucketed = bucketed or {}
+        alongside = alongside or {}
         cur = self._current_version()
         new_root = self._root(cur + 1)
         # seal a fresh dir BEFORE its first write: every crash window
@@ -422,31 +439,30 @@ class TxDenormBatchProcessor:
         acquire_build(self.backend, new_root, self._writer_token)
         self.backend.remove_tree(new_root)
         self.backend.prepare_dir(new_root)
-        # scalar sidecars (e.g. the emitted-LSN high-watermark) ride the
-        # same single commit point as the frames: written under the new
-        # version BEFORE the pointer flip, visible only once it lands
+        # scalar sidecars ride the same single commit point as the
+        # frames: written under the new version BEFORE the pointer
+        # flip, visible only once it lands
         for name, data in (scalars or {}).items():
             self.backend.publish_file(os.path.join(new_root, name), data)
+        tasks: dict[str, Callable[[], object]] = {}
         for name, df in frames.items():
-            self.backend.note_spark_write(os.path.join(new_root, name))
-            df.write.mode("overwrite").parquet(os.path.join(new_root, name))
+            path = os.path.join(new_root, name)
+            self.backend.note_spark_write(path)
+            tasks[name] = functools.partial(
+                df.write.mode("overwrite").parquet, path
+            )
+        for name, (df, _) in bucketed.items():
+            path = os.path.join(new_root, name)
+            self.backend.note_spark_write(path)
+            tasks[name] = functools.partial(self._write_bucketed, df, path)
+        results = self._run_concurrently({**tasks, **alongside})
+        got = {name: results[name] for name in alongside}
+        if before_commit is not None:
+            before_commit(got)
         prev_frames = self._parts(cur)
         new_parts: dict[str, list[str]] = {}
-        for name, (df, buckets) in (bucketed or {}).items():
+        for name, (_, buckets) in bucketed.items():
             new_path = os.path.join(new_root, name)
-            self.backend.note_spark_write(new_path)
-            (
-                df.withColumn("_bucket", self._bucket_of(F.col("order_key")))
-                .write.mode("overwrite")
-                .partitionBy("_bucket")
-                .parquet(new_path)
-            )
-            # EXACT written-part set, from the writer's own scan-time
-            # file index (never a backend LIST; see _written_parts) —
-            # a touched bucket whose every key was deleted wrote no
-            # dir and is recorded as such, so the next batch's carry
-            # needs no existence probe at all.
-            written = self._written_parts(new_path)
             old_path = self._frame_path(name, cur)
             touched = {f"_bucket={b}" for b in buckets}
             # Carry enumeration source: the previous version's exact
@@ -469,7 +485,7 @@ class TxDenormBatchProcessor:
                         os.path.join(src_dir, f), os.path.join(new_path, part, f)
                     )
                 carried.append(part)
-            new_parts[name] = sorted(set(written) | set(carried))
+            new_parts[name] = sorted(set(results[name]) | set(carried))
         # published UNCONDITIONALLY: a version committed without
         # bucketed frames still carries a sidecar — its truthful
         # enumeration is empty — or the next reader would refuse it
@@ -493,6 +509,61 @@ class TxDenormBatchProcessor:
         # and once the dir is gone no listing resurfaces it
         self.backend.release_build(self._root(cur))
         self.backend.remove_tree(self._root(cur))
+        return got
+
+    def _write_bucketed(self, df: DataFrame, path: str) -> list[str]:
+        """Write a bucketed state frame's rows under ``path``, partitioned
+        by ``_bucket``, and return the EXACT ``_bucket=K`` part set the
+        write created — a touched bucket whose every key was deleted
+        wrote no dir and is recorded as such, so the next batch's carry
+        needs no existence probe at all. Spark-only: runs on a pool
+        thread.
+
+        The parts are enumerated through Spark's scan-time file index
+        (``DataFrame.inputFiles``), never a backend LIST. This is the
+        one listing class the protocol's SCOPE note documents as
+        consistent by contract: the store's listing guarantee to Spark
+        itself, which every parquet-on-object-store deployment already
+        requires (and S3/GCS/Azure give today); the eventual-consistency
+        double accordingly does not lag it. The dir is the writer's
+        pre-commit private output — no carried (manifest-only) entries
+        can exist in it yet. It is read with the written frame's
+        schema, so nothing is inferred: a write of zero rows (only
+        ``_SUCCESS``) enumerates as empty, and every read error raises
+        — mapping one to [] would silently drop this frame's written
+        parts from the committed enumeration (state loss at the next
+        carry)."""
+        (
+            df.withColumn("_bucket", self._bucket_of(F.col("order_key")))
+            .write.mode("overwrite")
+            .partitionBy("_bucket")
+            .parquet(path)
+        )
+        files = self.spark.read.schema(df.schema).parquet(path).inputFiles()
+        return sorted(
+            {
+                m.group(1)
+                for f in files
+                for m in [re.search(r"(_bucket=\d+)/", f)]
+                if m is not None
+            }
+        )
+
+    def _run_concurrently(self, tasks: dict[str, Callable[[], object]]) -> dict[str, object]:
+        """Run Spark-only tasks on a thread pool and return their results
+        by name. Each thread inherits the calling thread's local
+        properties (job group, scheduler pool) and session tags, so the
+        jobs it runs are attributed like the caller's own. Waits for
+        every task before returning or raising; on failure raises the
+        first error in submission order."""
+        inherit = inheritable_thread_target(self.spark)
+        with ThreadPoolExecutor(max_workers=max(1, len(tasks))) as pool:
+            futures = {name: pool.submit(inherit(fn)) for name, fn in tasks.items()}
+        # the with-block joined every thread: no job is left running
+        for fut in futures.values():
+            if fut.exception() is not None:
+                raise fut.exception()
+        return {name: fut.result() for name, fut in futures.items()}
 
     def process(
         self,
@@ -502,7 +573,8 @@ class TxDenormBatchProcessor:
         batch_id: int = 0,
     ) -> DataFrame:
         """Apply one micro-batch; returns (and optionally writes) the
-        emissions in commit-LSN order.
+        emissions in commit-LSN order. The three inputs are persisted
+        for the batch and unpersisted once it commits.
 
         Holds the state dir's advisory writer lock for the whole batch
         (``streaming/locks.py``): the versioned pointer-commit in
@@ -533,6 +605,16 @@ class TxDenormBatchProcessor:
         import time as _time
 
         _batch_t0 = _time.time()
+        # per-phase wall seconds, timed on the calling thread (no Spark job)
+        phases: dict[str, float] = {}
+        lap_t = _time.perf_counter()
+
+        def lap(name: str) -> None:
+            nonlocal lap_t
+            now = _time.perf_counter()
+            phases[name] = now - lap_t
+            lap_t = now
+
         # free the PREVIOUS batch's emissions cache: it was kept alive
         # past its own batch so the caller could still read the
         # returned frame; by the next batch nothing references it, and
@@ -541,6 +623,9 @@ class TxDenormBatchProcessor:
         if self._prev_emissions is not None:
             self._prev_emissions.unpersist()
             self._prev_emissions = None
+        # a failed batch's pinned frames (a successful batch frees its
+        # own after the commit)
+        self._unpin()
         # validate the bucket layout, then drop any crash garbage
         # (half-written next version / superseded old version) BEFORE
         # reading state, under the same writer lock
@@ -584,20 +669,20 @@ class TxDenormBatchProcessor:
         # arrive batches before/after its data events. GC below drops
         # metadata of emitted txs (the :130-151 pruning heuristic, but
         # exact: we know which txs completed).
-        carry_txs = self._load("carry_txs")
-        tx_all = (
-            tx_events.unionByName(carry_txs) if carry_txs is not None else tx_events
-        ).dropDuplicates(["status", "id"])
-
         # at-least-once replay protection: a tx already applied must
         # never re-block the barrier nor re-emit — drop its metadata
         # AND its data events (the (txId, lsn) dedup of SURVEY §7.4).
+        # Carried tx metadata needs no such filter: a version's
+        # carry_txs and applied_txs are disjoint by construction (the
+        # carry is this batch's filtered metadata minus what it
+        # emitted; applied is the kept old set plus what it emitted).
         applied = self._load("applied_txs")
         if applied is not None:
             applied_b = F.broadcast(applied)
-            tx_all = tx_all.join(
+            tx_events = tx_events.join(
                 applied_b,
-                F.split(tx_all["id"], ":").getItem(0).cast("long") == applied["tx_id"],
+                F.split(tx_events["id"], ":").getItem(0).cast("long")
+                == applied["tx_id"],
                 "left_anti",
             )
             order_events = order_events.join(
@@ -610,15 +695,26 @@ class TxDenormBatchProcessor:
                 line_events["source.txId"] == applied["tx_id"],
                 "left_anti",
             )
+        # pin the inputs once: the intake check, the touched pass, every
+        # tx_denormalize branch, the metric aggregates and the carry
+        # writes all read them, and without the cache each re-executes
+        # the caller's source lineage (Python-side scans included)
+        order_events, line_events, tx_events = (
+            df.persist() for df in (order_events, line_events, tx_events)
+        )
+        self._pinned.extend((order_events, line_events, tx_events))
+        carry_txs = self._load("carry_txs")
+        tx_all = (
+            tx_events.unionByName(carry_txs) if carry_txs is not None else tx_events
+        ).dropDuplicates(["status", "id"])
 
         # -- tx-metadata delivery-order intake check (the contract in
         # start_tx_denorm_stream's docstring, enforced): an END at or
         # below the emitted high-watermark can no longer emit in commit
-        # order. Checked on THIS batch's arrivals only (tx_events,
-        # filtered before anything joins in — the frame is tiny and
-        # almost always empty, so the one bounded job stays cheap; the
-        # earlier tx_all variant dragged the carry-union + dedup +
-        # anti-join lineage into every batch for nothing):
+        # order. Checked on THIS batch's arrivals only (the pinned
+        # tx_events — tiny and almost always empty, so the one bounded
+        # job stays cheap; the earlier tx_all variant dragged the
+        # carry-union + dedup lineage into every batch for nothing):
         #   * carried ENDs cannot be offenders in enforcing mode — the
         #     barrier guarantees every emitted LSN is below every
         #     carried tx's LSN, so any offender is a fresh arrival;
@@ -640,17 +736,12 @@ class TxDenormBatchProcessor:
                 (F.col("status") == "END")
                 & (_parts.getItem(1).cast("long") <= prev_hwm)
             )
-            if applied is not None:
-                fresh = fresh.join(
-                    F.broadcast(applied),
-                    F.split(fresh["id"], ":").getItem(0).cast("long")
-                    == applied["tx_id"],
-                    "left_anti",
-                )
             # bounded driver transfer (r10 ADVICE): a pathological batch
             # (e.g. a large tx-metadata replay after applied-retention
             # expiry) can make every END an offender — cap the sample
             # pulled for the message and count the rest distributed
+            # (over the pinned input, so the count re-reads the cache,
+            # never the source lineage)
             _OFFENDER_SAMPLE = 16
             offender_frame = fresh.select(
                 _parts.getItem(0).cast("long").alias("tx_id"),
@@ -660,17 +751,7 @@ class TxDenormBatchProcessor:
             if len(offenders) < _OFFENDER_SAMPLE:
                 n_offenders = len(offenders)
             else:
-                # ≥ sample size: count the rest distributed — against a
-                # PERSISTED frame so the count never re-executes the
-                # `fresh` lineage a second time (r11 ADVICE: the
-                # pathological huge-offender batch this bounds is
-                # exactly when a double recompute hurts most, and two
-                # executions could in principle see different plans)
-                offender_frame = offender_frame.persist()
-                try:
-                    n_offenders = offender_frame.count()
-                finally:
-                    offender_frame.unpersist()
+                n_offenders = offender_frame.count()
             if offenders:
                 more = (
                     f" (+{n_offenders - 1} more this batch)"
@@ -704,24 +785,29 @@ class TxDenormBatchProcessor:
         # these hash buckets of the state tables are read and rewritten
         # BOTH sides of a line re-point touch state: before.order_id's
         # bucket holds the stale row that must be loaded (so the as-of
-        # "re-pointed line drops out" filter sees it) and rewritten
-        keys = (
-            order_events.select(
-                F.coalesce(F.col("after.id"), F.col("before.id")).alias("key")
+        # "re-pointed line drops out" filter sees it) and rewritten.
+        # A fresh store has no buckets to load, prune or carry, so the
+        # pass (a Spark job) is skipped and the first commit writes
+        # every bucket its rows hash into.
+        touched_buckets: list[int] = []
+        if not initial_load:
+            keys = (
+                order_events.select(
+                    F.coalesce(F.col("after.id"), F.col("before.id")).alias("key")
+                )
+                .unionByName(line_events.select(F.col("after.order_id").alias("key")))
+                .unionByName(line_events.select(F.col("before.order_id").alias("key")))
             )
-            .unionByName(line_events.select(F.col("after.order_id").alias("key")))
-            .unionByName(line_events.select(F.col("before.order_id").alias("key")))
-        )
-        for carry in (carry_orders, carry_lines):
-            if carry is not None:
-                keys = keys.unionByName(carry.select("key"))
-        touched_buckets = sorted(
-            r["b"]
-            for r in keys.where(F.col("key").isNotNull())
-            .select(self._bucket_of(F.col("key")).alias("b"))
-            .distinct()
-            .collect()  # bounded: ≤ n_buckets ints
-        )
+            for carry in (carry_orders, carry_lines):
+                if carry is not None:
+                    keys = keys.unionByName(carry.select("key"))
+            touched_buckets = sorted(
+                r["b"]
+                for r in keys.where(F.col("key").isNotNull())
+                .select(self._bucket_of(F.col("key")).alias("b"))
+                .distinct()
+                .collect()  # bounded: ≤ n_buckets ints
+            )
 
         gc_horizon = (
             self.order_delete_gc_horizon_lsn()
@@ -776,6 +862,7 @@ class TxDenormBatchProcessor:
                     "(pg_replication_slots.restart_lsn) instead — it is "
                     "≤ every in-flight LSN by definition."
                 )
+        lap("intake")
         res: TxDenormResult = tx_denormalize(
             order_events,
             line_events,
@@ -792,11 +879,10 @@ class TxDenormBatchProcessor:
             dedup_events=True,
             order_delete_gc_horizon_lsn=gc_horizon,
         )
-        # emitted_txs feeds three consumers (the tx_keep anti-join, the
-        # committed-tx metric, and new_applied in _store_all); it comes
-        # pre-persisted from tx_denormalize so the full emission lineage
-        # — which reads the PRE-swap state files — is evaluated a single
-        # time per micro-batch; unpersisted below once the batch commits
+        # pinned for intra-batch reuse by the operator (emitted_txs
+        # among them: it feeds the tx_keep anti-join, the committed-tx
+        # count and new_applied); freed with the inputs after the commit
+        self._pinned.extend(res.pinned)
         emitted_txs = res.emitted_txs
         emitted = emitted_txs.select(
             F.col("tx_id").cast("string").alias("_emitted_tx")
@@ -821,43 +907,19 @@ class TxDenormBatchProcessor:
         # the returned frame stays readable until the NEXT batch — is
         # unaffected, since unpersist still happens only at that start)
         self._prev_emissions = emissions
-        emissions.count()  # materialize before any state dir changes
-        # monitoring (§6 metric catalog): events seen, source lag, backlog
-        n_order_events, n_line_events = order_events.count(), line_events.count()
-        n_events = n_order_events + n_line_events
-        if initial_load:
-            # snapshot-phase RowsScanned (per table): the first batch
-            # over a fresh state dir is this engine's initial load —
-            # the reference tracks the same counter per table through
-            # its JMX snapshot metrics (jmx_exporter_config.yml:12-18).
-            # batch_id dedupes an at-least-once RETRY of this batch
-            # (crash after the counts, before the version commit).
-            self.metrics.observe_initial_load(
-                "orders", n_order_events, batch_id=batch_id
-            )
-            self.metrics.observe_initial_load(
-                "lines", n_line_events, batch_id=batch_id
-            )
-        # committed-tx count MUST be taken before _store_all swaps the
-        # state dirs: emitted_txs' lineage reads the pre-swap state
-        # files, so a post-swap action would re-evaluate against the
-        # wrong (or deleted) state — same ordering hazard as the sink
-        n_committed = emitted_txs.count()
-        # emitted-LSN high-watermark: max over the (already cached)
-        # emissions, monotone across batches. Computed here — before
-        # the sink/state writes — over the cached frame, so it costs
-        # one short job on in-memory blocks, never a lineage re-read.
-        batch_max_lsn = emissions.agg(F.max("commit_lsn")).first()[0]
+        lap("plan")
+        # THE one Spark action before the sink: materialize the
+        # emissions before any state dir changes. The emitted-LSN
+        # high-watermark rides it as an observation over the cached
+        # rows (above the range partitioner, whose sample pass re-runs
+        # the plan below it; max would be idempotent there anyway).
+        hwm_seen = Observation("tx_emitted_hwm")
+        emissions.observe(hwm_seen, F.max("commit_lsn").alias("hwm")).count()
+        batch_max_lsn = hwm_seen.get["hwm"]
         new_hwm = prev_hwm
         if batch_max_lsn is not None:
             new_hwm = batch_max_lsn if prev_hwm is None else max(prev_hwm, batch_max_lsn)
-        self.metrics.total_events_seen += n_events
-        max_ts = (
-            order_events.select(F.max("ts_ms")).first()[0]
-            if n_events
-            else None
-        )
-        self.metrics.observe_event_time(max_ts)
+        lap("emit")
         # -- sink BEFORE state swap: a crash in between replays the
         # batch against the old state and re-emits the same docs —
         # duplicate output, never lost output (AT_LEAST_ONCE). The
@@ -871,6 +933,7 @@ class TxDenormBatchProcessor:
             )
         if self.emission_sink is not None:
             self.emission_sink(emissions, batch_id)
+        lap("sink")
         new_applied = emitted_txs.withColumn(
             "applied_in_batch", F.lit(batch_id).cast("long")
         )
@@ -882,13 +945,40 @@ class TxDenormBatchProcessor:
             horizon = batch_id - self.applied_retention_batches
             applied_keep = applied.filter(F.col("applied_in_batch") >= horizon)
             new_applied = applied_keep.unionByName(new_applied).dropDuplicates(["tx_id"])
-        self._store_all(
-            {
-                "carry_orders": res.carryover_orders,
-                "carry_lines": res.carryover_lines,
-                "carry_txs": tx_keep,
-                "applied_txs": new_applied,
-            },
+        # backlog (carried incomplete-tx events) = the row counts the
+        # two carry writes observe while they run: no re-read
+        backlog: dict[str, Observation] = {}
+        carries: dict[str, DataFrame] = {}
+        for name, df in (
+            ("carry_orders", res.carryover_orders),
+            ("carry_lines", res.carryover_lines),
+        ):
+            backlog[name] = Observation(f"tx_{name}_rows")
+            carries[name] = df.observe(backlog[name], F.count(F.lit(1)).alias("n"))
+
+        def observe_intake(got: dict) -> None:
+            # monitoring (§6 metric catalog): events seen, source lag,
+            # snapshot rows — landed before the pointer flip
+            n_events = got["orders"]["n"] + got["lines"]
+            if initial_load:
+                # snapshot-phase RowsScanned (per table): the first
+                # batch over a fresh state dir is this engine's initial
+                # load — the reference tracks the same counter per
+                # table through its JMX snapshot metrics
+                # (jmx_exporter_config.yml:12-18). batch_id dedupes an
+                # at-least-once RETRY of this batch (crash after the
+                # counts, before the version commit).
+                self.metrics.observe_initial_load(
+                    "orders", got["orders"]["n"], batch_id=batch_id
+                )
+                self.metrics.observe_initial_load(
+                    "lines", got["lines"], batch_id=batch_id
+                )
+            self.metrics.total_events_seen += n_events
+            self.metrics.observe_event_time(got["orders"]["max_ts"])
+
+        got = self._store_all(
+            {**carries, "carry_txs": tx_keep, "applied_txs": new_applied},
             bucketed={
                 "order_state": (res.order_state, touched_buckets),
                 "line_state": (res.line_state, touched_buckets),
@@ -898,18 +988,30 @@ class TxDenormBatchProcessor:
                     {"hwm": new_hwm, "batch_id": batch_id}
                 ).encode()
             },
+            # the metric-only actions run alongside the state writes;
+            # emitted_txs' lineage reads the PRE-swap state files, so
+            # its count must finish before the flip — which it does
+            alongside={
+                "orders": lambda: order_events.agg(
+                    F.count(F.lit(1)).alias("n"), F.max("ts_ms").alias("max_ts")
+                ).first(),
+                "lines": line_events.count,
+                "committed": emitted_txs.count,
+            },
+            before_commit=observe_intake,
         )
-        self.metrics.observe_backlog(
-            self.spark.read.parquet(self._frame_path("carry_orders")).count()
-            + self.spark.read.parquet(self._frame_path("carry_lines")).count()
-        )
+        self.metrics.observe_backlog(sum(o.get["n"] for o in backlog.values()))
         # committed txs = txs that cleared the emission barrier this
         # batch (NumberOfCommittedTransactions analog)
-        self.metrics.observe_batch(n_events, _time.time() - _batch_t0, n_committed)
-        # new_applied was materialized by _store_all's parquet write;
-        # nothing reads the operator's pinned frames after this point
-        for frame in res.pinned:
-            frame.unpersist()
+        self.metrics.observe_batch(
+            got["orders"]["n"] + got["lines"],
+            _time.time() - _batch_t0,
+            got["committed"],
+        )
+        # every write is done and nothing reads the pinned frames now
+        self._unpin()
+        lap("commit")
+        self.metrics.last_batch_phase_s = phases
         # emissions stays cached until the next batch starts (caller
         # may still read it); tracked above so that batch unpersists it
         self._emissions_schema = emissions.schema  # idle fast path's shape

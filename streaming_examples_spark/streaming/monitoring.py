@@ -52,6 +52,12 @@ class PipelineMetrics:
     tx_order_regressions: int = 0
     last_batch_id: int = -1
     batches: int = 0
+    #: wall seconds of the last non-idle processor batch, per
+    #: phase: ``intake`` (state load, intake checks, touched buckets),
+    #: ``plan`` (operator plan build), ``emit`` (emission
+    #: materialization), ``sink`` and ``commit`` (state writes, metric
+    #: actions, pointer flip). Timed on the calling thread, no Spark job.
+    last_batch_phase_s: dict[str, float] = field(default_factory=dict)
     _last_event_wall_ms: float | None = None
 
     def observe_progress(self, progress: dict) -> None:
@@ -140,6 +146,7 @@ class PipelineMetrics:
             "backlog_rows": self.backlog_rows,
             "tx_order_regressions": self.tx_order_regressions,
             "batches": self.batches,
+            "last_batch_phase_s": dict(self.last_batch_phase_s),
         }
 
 

@@ -7,7 +7,9 @@ agnostic, but its primitives are not: the shipped implementation is
 POSIX (hardlink carry, ``os.replace`` flip, directory fsync). This
 module isolates those primitives behind ``StateStorageBackend``
 so a deployer can swap in an object-store backend without touching the
-protocol. The translation each method documents is the one LSM engines
+protocol. The stores call a backend from one thread only (the tx
+store's concurrent frame writes are Spark writes, announced through
+``note_spark_write`` beforehand), so a backend needs no locking. The translation each method documents is the one LSM engines
 and table formats ship on S3/GCS:
 
   carry_file      → a manifest entry referencing the old object (no

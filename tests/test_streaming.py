@@ -4,6 +4,8 @@ stateful fill-forward, and the UDTF (PTF) surface."""
 from __future__ import annotations
 
 import os
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -69,7 +71,10 @@ def test_single_batch_metrics_populated(spark, tmp_path):
         log.tx_events_df(spark),
     )
     proc = TxDenormBatchProcessor(spark, str(tmp_path / "state"))
-    assert proc.process(o, l, x, 0).count() == 1
+    t0 = time.perf_counter()
+    out = proc.process(o, l, x, 0)
+    wall = time.perf_counter() - t0
+    assert out.count() == 1
     snap = proc.metrics.snapshot()
     assert snap["committed_transactions"] == 1
     assert snap["total_events_seen"] == 2  # one order + one line event
@@ -77,6 +82,151 @@ def test_single_batch_metrics_populated(spark, tmp_path):
     assert snap["ms_behind_source"] is not None
     assert snap["batches"] == 0  # observe_progress is the stream's job
     assert snap["backlog_rows"] == 0  # tx complete, no carryover
+    # per-phase wall: every phase timed, none beyond the batch
+    phases = snap["last_batch_phase_s"]
+    assert set(phases) == {"intake", "plan", "emit", "sink", "commit"}
+    assert all(v >= 0 for v in phases.values()), phases
+    assert sum(phases.values()) <= wall, (phases, wall)
+
+
+def _held_tx_log():
+    """Three txs: A (order 1 + two lines), B (order 2 + one line) and
+    C (an update of order 1). Batch 0 lacks B's line, so B is
+    incomplete and C, committed after it, is held by the barrier;
+    batch 1 delivers the line and both emit."""
+    log = TxLog()
+    log.tx(
+        lambda t: t.insert_order(1),
+        lambda t: t.insert_line(10, 1, price="1.00"),
+        lambda t: t.insert_line(11, 1, price="2.00"),
+    )
+    log.tx(lambda t: t.insert_order(2), lambda t: t.insert_line(20, 2, price="3.00"))
+    log.tx(lambda t: t.update_order(1, shipping_address="9 Elm St"))
+    return log
+
+
+class _ThreadRecordingBackend:
+    """Passes every call through to ``inner`` and records the thread
+    that made it."""
+
+    def __init__(self, inner):
+        self._inner = inner
+        self.threads: set[int] = set()
+
+    def __getattr__(self, name):
+        attr = getattr(self._inner, name)
+        if not callable(attr):
+            return attr
+
+        def call(*args, **kwargs):
+            self.threads.add(threading.get_ident())
+            return attr(*args, **kwargs)
+
+        return call
+
+
+def test_two_batch_metrics_and_job_group(spark, tmp_path):
+    """The metric values a held-then-released two-batch run reports —
+    events seen, initial-load rows, committed txs, backlog — and the
+    committed high-watermark sidecar, which equals the largest emitted
+    commit LSN. Every Spark job both batches run, including those run
+    on the state commit's worker threads, carries the caller's job
+    group, and every state-backend call is made from the caller's
+    thread."""
+    import json
+
+    from streaming_examples_spark.streaming.state_backend import LocalPosixBackend
+
+    log = _held_tx_log()
+    orders, lines, txs = (
+        log.order_events_df(spark),
+        log.line_events_df(spark),
+        log.tx_events_df(spark),
+    )
+    late = F.col("after.order_id") == 2
+    backend = _ThreadRecordingBackend(LocalPosixBackend())
+    proc = TxDenormBatchProcessor(
+        spark, str(tmp_path / "state"), n_buckets=4, backend=backend
+    )
+    sc = spark.sparkContext
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("tx-two-batch", "two tx micro-batches")
+    try:
+        out0 = proc.process(orders, lines.filter(~late), txs, batch_id=0).collect()
+        snap0 = proc.metrics.snapshot()
+        out1 = proc.process(
+            orders.limit(0), lines.filter(late), txs.limit(0), batch_id=1
+        ).collect()
+        snap1 = proc.metrics.snapshot()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("tx-two-batch")
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) <= ungrouped
+    assert backend.threads == {threading.get_ident()}
+
+    assert [r["order_key"] for r in out0] == [1]
+    assert [r["order_key"] for r in out1] == [2, 1]
+    assert snap0["total_events_seen"] == 5  # 3 order + 2 line events
+    assert snap0["snapshot_rows_scanned"] == {"orders": 3, "lines": 2}
+    assert snap0["committed_transactions"] == 1
+    assert snap0["backlog_rows"] == 2  # B's order event, C's update
+    assert snap1["total_events_seen"] == 6
+    assert snap1["snapshot_rows_scanned"] == {"orders": 3, "lines": 2}
+    assert snap1["committed_transactions"] == 3
+    assert snap1["backlog_rows"] == 0
+    raw = proc.backend.read_file(os.path.join(proc._root(), "_tx_hwm.json"))
+    assert json.loads(raw) == {
+        "hwm": max(r["commit_lsn"] for r in out0 + out1),
+        "batch_id": 1,
+    }
+
+
+@pytest.mark.slow
+def test_failed_state_write_leaves_pointer_and_replays(spark, tmp_path, monkeypatch):
+    """One state frame's write raising on its worker thread: process
+    raises it only after every concurrent write and metric job has
+    finished (no job left running), the pointer stays on the old
+    version, and a fresh processor re-emits the same docs."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from streaming_examples_spark.streaming.state_backend import LocalPosixBackend
+
+    log = _held_tx_log()
+    orders, lines, txs = (
+        log.order_events_df(spark),
+        log.line_events_df(spark),
+        log.tx_events_df(spark),
+    )
+    late = F.col("after.order_id") == 2
+    state = str(tmp_path / "state")
+    sunk = []
+    proc = TxDenormBatchProcessor(
+        spark, state, n_buckets=4,
+        emission_sink=lambda df, b: sunk.append(sorted(map(tuple, df.collect()))),
+    )
+    proc.process(orders, lines.filter(~late), txs, batch_id=0)
+
+    real_parquet = DataFrameWriter.parquet
+
+    def failing_parquet(self, path, *a, **kw):
+        if os.path.basename(str(path)) == "carry_txs":
+            raise RuntimeError("injected write failure")
+        return real_parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    batch1 = (orders.limit(0), lines.filter(late), txs.limit(0))
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        proc.process(*batch1, batch_id=1)
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert LocalPosixBackend().read_pointer(state) == 1
+    monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
+
+    fresh = TxDenormBatchProcessor(spark, state, n_buckets=4)
+    again = sorted(map(tuple, fresh.process(*batch1, batch_id=1).collect()))
+    assert [r[0] for r in again] == [1, 2]
+    assert again == sunk[1]
+    assert LocalPosixBackend().read_pointer(state) == 2
 
 
 def test_initial_load_rows_counter_over_two_tables(spark, tmp_path):

@@ -266,6 +266,29 @@ def test_order_without_lines_emits_empty_array(spark):
     assert out[0]["lines"] == []
 
 
+def test_repointed_line_leaves_old_orders_later_doc(spark):
+    """A line moved to another order in the same pool must drop out of
+    the OLD order's later docs: the re-point version is keyed under the
+    new order, so the old order's as-of line set has to see it too. The
+    rolled-forward state keeps the line once, under its current order."""
+    log = TxLog()
+    log.tx(
+        lambda t: t.insert_order(1),
+        lambda t: t.insert_line(10, 1),
+        lambda t: t.insert_line(11, 1),
+    )
+    log.tx(lambda t: t.insert_order(2))
+    log.tx(lambda t: t.update_line(10, order_id=2))
+    log.tx(lambda t: t.update_order(1, shipping_address="9 Elm St"))
+    out, res = run(spark, log)
+    docs = [(e["order_key"], [ln["id"] for ln in e["lines"]]) for e in out]
+    assert docs == [(1, [10, 11]), (2, []), (2, [10]), (1, [11])]
+    assert sorted((r["line_id"], r["order_key"]) for r in res.line_state.collect()) == [
+        (10, 2),
+        (11, 1),
+    ]
+
+
 # -- incomplete tx carries over; completes with state ----------------------
 @pytest.mark.slow
 def test_tx_split_across_batches(spark):
