@@ -31,6 +31,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from streaming_examples_spark import get_spark
+from streaming_examples_spark.session import driver_mem
 from streaming_examples_spark.catalog import entries
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -116,16 +117,16 @@ def pretouch_conf() -> dict:
     start; on this sandbox VM guest RAM is backed lazily by the host
     (~160 MB/s), so without it the first ~2 min of query runs pay the
     page-backing cost inside the timed regions (r12: identical warm
-    runs swung 0.5 → 22 s). NOTE the failure mode of default-on
-    pretouch: the JVM now commits the full 16 GiB up front, so on a
-    host with less free RAM the bench fails to launch where lazy
-    allocation worked — set SPARK_GRAFT_PRETOUCH=0 (restores lazy
-    allocation) or SPARK_GRAFT_DRIVER_MEM to something the host can
-    back."""
+    runs swung 0.5 → 22 s). The pretouched heap is the session's own
+    (``session.driver_mem``: half the RAM, at most 16g), so the JVM
+    commits up front only what the host can back; on a host with less
+    FREE RAM set SPARK_GRAFT_PRETOUCH=0 (restores lazy allocation) or
+    SPARK_GRAFT_DRIVER_MEM."""
     conf = {"spark.ui.showConsoleProgress": "false"}
     if os.environ.get("SPARK_GRAFT_PRETOUCH", "1") != "0":
-        mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-        conf["spark.driver.extraJavaOptions"] = f"-Xms{mem} -XX:+AlwaysPreTouch"
+        conf["spark.driver.extraJavaOptions"] = (
+            f"-Xms{driver_mem()} -XX:+AlwaysPreTouch"
+        )
     return conf
 
 

@@ -35,6 +35,8 @@ from streaming_examples_spark.operators.dedup import (
     simhash_near_pairs,
 )
 from streaming_examples_spark.operators.multimodal import (
+    MM_FUSED_SCHEMA,
+    decode_meta_fused,
     payload_meta,
     with_binary_payload,
 )
@@ -1083,32 +1085,11 @@ def q_text_stats(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
-#: unified column set for the fused multimodal entry: one row grain per
-#: operator family, discriminated by `kind`, columns null where a
-#: family has no value (nullable-int columns canonicalize identically
-#: through pandas on both engines)
-_MM_COLS: list[tuple[str, str]] = [
-    ("doc_id", "bigint"),
-    ("kind", "string"),
-    ("n_bytes", "bigint"),
-    ("prefix_hex", "string"),
-    ("width", "int"),
-    ("height", "int"),
-    ("n_bands", "int"),
-    ("band", "int"),
-    ("band_mean", "double"),
-    ("band_max", "int"),
-    ("checksum", "bigint"),
-    ("frame_idx", "int"),
-    ("frame_ts_ms", "bigint"),
-    ("frame_md5", "string"),
-    ("sample_rate_hz", "int"),
-    ("n_samples", "int"),
-    ("duration_ms", "double"),
-    ("rms", "double"),
-    ("peak", "int"),
-    ("zero_crossings", "int"),
-]
+#: the fused multimodal entry's columns: one row grain per operator
+#: family, discriminated by `kind`, columns null where a family has no
+#: value (nullable-int columns canonicalize identically through pandas
+#: on both engines)
+_MM_COLS = [(f.name, f.dataType) for f in MM_FUSED_SCHEMA.fields]
 
 
 def _mm_align(df, kind: str):
@@ -1264,32 +1245,33 @@ def _mm_align(df, kind: str):
     ),
 )
 def q_multimodal_meta(spark, sf_dir):
-    from streaming_examples_spark.operators.multimodal import decode_meta_fused
+    return _mm_fused(t_wide(spark, sf_dir, "documents", key="doc_id"))
 
-    # ONE fused Arrow pass over (doc_id, text) replaces the r12 form's
-    # FIVE mapInPandas stages (image decode, resize, resize re-decode,
-    # frame demux, audio decode) plus four Catalyst payload assemblies
-    # and the 4-way union (guide §4.2/§4.5): the text bytes cross the
-    # JVM→Python boundary once and every decoder runs on them in the
-    # worker. Row-identity with the branch union is pinned by
-    # test_fused_multimodal_matches_branch_union and by the oracle
-    # hash; rounding stays in Catalyst (same F.round the branches ran).
-    docs = t_wide(spark, sf_dir, "documents", key="doc_id")
+
+def _mm_fused(docs):
+    """``multimodal_meta`` over ``docs`` in ONE fused Arrow pass: the
+    text bytes cross the JVM→Python boundary once and every decoder
+    runs on them in the worker, where the branch form ran five
+    mapInPandas stages plus four Catalyst payload assemblies and a
+    4-way union (guide §4.2/§4.5). Rounding stays in Catalyst (the
+    same F.round the branches run)."""
     fused = decode_meta_fused(docs, widen=False)
-    cols = []
-    for name, typ in _MM_COLS:
-        if name in ("band_mean", "duration_ms", "rms"):
-            cols.append(F.round(F.col(name), 4).cast(typ).alias(name))
-        else:
-            cols.append(F.col(name).cast(typ).alias(name))
-    return fused.select(*cols)
+    return fused.select(
+        *(
+            F.round(name, 4).alias(name)
+            if name in ("band_mean", "duration_ms", "rms")
+            else name
+            for name, _ in _MM_COLS
+        )
+    )
 
 
-def _mm_quartet_branches(spark, sf_dir):
-    """The pre-r13 four-branch construction of ``multimodal_meta`` —
-    kept as the equivalence REFERENCE for the fused pass (each branch
-    runs its own Arrow stage; `test_fused_multimodal_matches_branch_
-    union` asserts row-identity against :func:`q_multimodal_meta`)."""
+def _mm_quartet_branches(docs):
+    """The four-branch construction of ``multimodal_meta`` over
+    ``docs``: the standalone operators, one Arrow stage each — the
+    equivalence REFERENCE for :func:`_mm_fused`
+    (`test_fused_multimodal_matches_branch_union` and the edge-case
+    test assert row-identity)."""
     from streaming_examples_spark.operators.multimodal import (
         decode_and_featurize,
         decode_audio,
@@ -1299,15 +1281,6 @@ def _mm_quartet_branches(spark, sf_dir):
         with_video_payload,
     )
 
-    # localCheckpoint: docs feeds FOUR decode branches (image, resize,
-    # frame, audio) and each would otherwise re-run the scan + balance
-    # shuffle + payload derivation per branch (union branches evaluate
-    # their lineage independently — guide §2.4). Materialized it is the
-    # narrow (doc_id, text, source) fixture frame; blocks free on GC.
-    # Measured r12 at sf0.1: warm 1.88 s → 1.66 s, rows identical.
-    docs = t_wide(spark, sf_dir, "documents", key="doc_id").localCheckpoint(
-        eager=False
-    )
     wp = with_binary_payload(docs)
     meta = payload_meta(wp)
 
@@ -1331,12 +1304,6 @@ def _mm_quartet_branches(spark, sf_dir):
     # the image decoder, so the hash covers the emitted SIMG layout too
     rz = band_grain(
         decode_and_featurize(
-            # widen=False: wp is already t_wide-repartitioned to full
-            # parallelism — resize's default widen=True would add a
-            # second round-robin shuffle of the payload column for
-            # nothing (explicit overrides apply on adaptive plans too
-            # since r6, so the caller must say so when the input is
-            # known-wide)
             resize_payloads(wp, width=8, height=8, widen=False)
             .filter(F.col("valid"))
             .select("doc_id", F.col("resized").alias("payload"))

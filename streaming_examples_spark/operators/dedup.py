@@ -114,11 +114,11 @@ def minhash_lsh_pairs(
     recall degrades gracefully instead of the join exploding. None (the
     default, used by the driver-checked catalog entry at test SF)
     disables the cap; at 100 TB set **256** — measured, not guessed:
-    `tools/probe_bucket_cap.py` shows legitimate-cluster recall exactly
-    1.0 at cap 256 across 1×/10×/50× corpora while the planted viral
-    template's quadratic pair term (1.09 M pairs at 2k copies, growing
-    n²) is suppressed 99 % (SCALE_NOTES.md recall-vs-cap table; the
-    probe asserts the recall property and fails if it regresses).
+    legitimate-cluster recall is exactly 1.0 at cap 256 across
+    1×/10×/50× corpora while the planted viral template's quadratic
+    pair term (1.09 M pairs at 2k copies, growing n²) is suppressed
+    99 % (SCALE_NOTES.md, "Dedup/curation capstones": the
+    recall-vs-cap curve).
     Skipped-bucket volume is observable via the band-count aggregate
     this adds.
     """
@@ -432,9 +432,10 @@ def dedup_groups(
 
     ``max_bucket_size``: production default **256** (pass it; None here
     only because the driver oracle is bit-exact uncapped at test SF) —
-    the recall-vs-cap probe (`tools/probe_bucket_cap.py`, SCALE_NOTES)
-    measured legitimate-cluster recall 1.0 at 256 across 1×/10×/50×
-    while a planted viral template's quadratic pair term is suppressed.
+    the recall-vs-cap curve (SCALE_NOTES.md, "Dedup/curation
+    capstones") measured legitimate-cluster recall 1.0 at 256 across
+    1×/10×/50× while a planted viral template's quadratic pair term is
+    suppressed.
 
     Docs in no near-dup pair are their own singleton cluster (left join
     + coalesce). The component and size frames are NOT broadcast-hinted:

@@ -8,7 +8,7 @@ duration) is typed columns; decode/resize/frame-sample run as
 bounded batch of bytes. Partitioning stays row-count based
 (``maxRecordsPerBatch`` keeps batches memory-safe for large blobs).
 
-The payloads are REAL structured formats (SIMG/SAUD/SVID below — the
+The payloads are REAL structured formats (SIMG/SVID/SAUD below — the
 container has no image/video libs, so the codecs are synthetic, but
 the byte layouts, header parsing, validation, per-band statistics,
 nearest-neighbor resampling, and frame demuxing are genuine binary
@@ -18,35 +18,37 @@ valid SIMG bytes; ``sample_frames`` really demuxes the SVID container
 into per-frame SIMG payloads that feed straight back into
 ``decode_and_featurize``.
 
-SIMG payload layout (big-endian, 10-byte header):
-
-    bytes 0-3   magic "SIMG"
-    byte  4     version (0x01)
-    bytes 5-6   width   uint16
-    byte  7     n_bands uint8   (band-interleaved pixel layout)
-    bytes 8-9   height  uint16
-    bytes 10+   width*height*n_bands pixel bytes; pixel p's band b
-                sample sits at offset p*n_bands + b
+Each format is defined once, in the per-format cores below: its
+header layout (``SIMG``/``SVID``/``SAUD``), the doc-id derivation of a
+document's synthetic payload (``_simg_dims``/``_svid_dims``/
+``_saud_dims``, evaluated on Python ints or on Catalyst columns) and
+its decode arithmetic. The Catalyst ``with_*_payload`` builders, the
+four standalone decoders and the fused pass (:func:`decode_meta_fused`)
+are all built from those cores.
 """
 
 from __future__ import annotations
 
+import hashlib
 import struct
+import sys
 import warnings
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark import cloudpickle
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
-SIMG_MAGIC = b"SIMG"
-SIMG_HEADER_LEN = 10
+# the Arrow stage functions call this module's cores on the executors:
+# ship them by value, so a worker never has to import the package
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 #: one Arrow task realizing this many payload bytes, on a stage the
 #: auto gate declined to widen, means the size estimate was badly wrong
 #: (compressed/expression-built blobs) — warn loudly (16× the gate)
 LOUD_BYTES_PER_TASK = 64 << 20
-
 
 
 def _widen_for_python(
@@ -208,30 +210,196 @@ def _arrow_map(
     return out
 
 
+# --------------------------------------------------------------------------
+# per-format cores: header layouts, doc-id derivations, decode arithmetic
+# --------------------------------------------------------------------------
+
+
+class _Header:
+    """A payload format's big-endian header: 4-byte magic, version byte
+    0x01, then the format's uint8 (``B``) / uint16 (``H``) fields.
+    ``pack``/``parse`` serve the Python decoders, ``expr`` the Catalyst
+    builders."""
+
+    def __init__(self, magic: bytes, fields: str):
+        self.magic = magic
+        self.fields = fields
+        self.fmt = ">4sB" + fields
+        self.size = struct.calcsize(self.fmt)
+
+    def pack(self, *values: int) -> bytes:
+        return struct.pack(self.fmt, self.magic, 1, *values)
+
+    def parse(self, raw) -> list[int] | None:
+        """The header fields of ``raw``; None when it is null, shorter
+        than the header, or another magic/version."""
+        if raw is None or len(raw) < self.size:
+            return None
+        magic, version, *values = struct.unpack_from(self.fmt, raw)
+        return values if magic == self.magic and version == 1 else None
+
+    def expr(self, *values: Column) -> Column:
+        """The header bytes in Catalyst (hex assembly + unhex)."""
+        return F.unhex(
+            F.concat(
+                F.lit((self.magic + b"\x01").hex()),
+                *(
+                    F.lpad(F.hex(v), 2 * struct.calcsize(">" + f), "0")
+                    for f, v in zip(self.fields, values)
+                ),
+            )
+        )
+
+
+#: SIMG: width, n_bands, height; then
+#: width*height*n_bands pixel bytes, pixel p's band b sample at offset
+#: p*n_bands + b
+SIMG = _Header(b"SIMG", "HBH")
+#: SVID: width, n_bands, height, n_frames, frame_interval_ms; then
+#: n_frames planes of width*height*n_bands bytes, frame-major — each
+#: plane is exactly a SIMG pixel region
+SVID = _Header(b"SVID", "HBHHH")
+#: SAUD: sample_rate_hz, n_samples; then n_samples int16 big-endian
+#: PCM samples
+SAUD = _Header(b"SAUD", "HH")
+
+#: every dim/count header field is a uint16
+U16_MAX = 65535
+SAUD_RATES_HZ = (8000, 16000, 44100)
+
+
+def _id_mod(doc_id, m: int, off: int = 0):
+    """``doc_id mod m + off`` on a Python int or a Catalyst column
+    (``pmod`` is Python's ``%``) — the builders and the fused pass
+    evaluate the same derivation."""
+    if isinstance(doc_id, Column):
+        return (F.pmod(doc_id, F.lit(m)) + off).cast("int")
+    return doc_id % m + off
+
+
+def _capped_div(n, d):
+    """How many ``d``-byte units fit in ``n`` text bytes, capped at the
+    uint16 header field that stores the count."""
+    if isinstance(n, Column):
+        return F.least(F.floor(n / d), F.lit(U16_MAX)).cast("int")
+    return min(n // d, U16_MAX)
+
+
+def _simg_dims(doc_id, n_bytes):
+    """(width, n_bands, height) of a document's SIMG image: the pixels
+    are the leading ``width*height*n_bands`` bytes of its UTF-8 text."""
+    w, b = _id_mod(doc_id, 9, 8), _id_mod(doc_id, 3, 1)
+    return w, b, _capped_div(n_bytes, w * b)
+
+
+def _svid_dims(doc_id, n_bytes):
+    """(width, n_bands, height, n_frames, frame_interval_ms) of a
+    document's SVID clip: the planes are the leading
+    ``width*height*n_bands*n_frames`` bytes of its UTF-8 text."""
+    w, b, nf = _id_mod(doc_id, 5, 4), _id_mod(doc_id, 2, 1), _id_mod(doc_id, 4, 2)
+    return w, b, _capped_div(n_bytes, w * b * nf), nf, _id_mod(doc_id, 3, 1) * 40
+
+
+def _saud_dims(doc_id, n_bytes):
+    """(sample_rate_hz, n_samples) of a document's SAUD clip: the
+    samples are the leading ``2*n_samples`` bytes of its UTF-8 text."""
+    if isinstance(doc_id, Column):
+        rates = F.array(*map(F.lit, SAUD_RATES_HZ))
+        rate = F.element_at(rates, _id_mod(doc_id, len(SAUD_RATES_HZ), 1))
+    else:
+        rate = SAUD_RATES_HZ[_id_mod(doc_id, len(SAUD_RATES_HZ))]
+    return rate, _capped_div(n_bytes, 2)
+
+
+def _band_stats(px: np.ndarray, n_bands: int, per_band: int):
+    """(band means, band maxes, checksum) of band-interleaved uint8
+    samples. Integer sums are exact, so each mean is ONE IEEE division —
+    the op the SQL oracle performs. A zero-pixel image has null band
+    stats and checksum 0."""
+    if per_band:
+        means = [
+            int(px[b::n_bands].sum(dtype=np.int64)) / per_band for b in range(n_bands)
+        ]
+        maxes = [int(px[b::n_bands].max()) for b in range(n_bands)]
+    else:
+        means = maxes = [None] * n_bands
+    return means, maxes, int(px.sum(dtype=np.int64))
+
+
+def _nn_resize(px: np.ndarray, w: int, h: int, n_bands: int, tw: int, th: int, maps):
+    """Nearest-neighbor resample of a band-interleaved ``h``×``w`` image
+    to ``th``×``tw`` (source index ``(i*src)//dst`` — PIL NEAREST's
+    arithmetic), flattened band-interleaved. ``maps`` caches the index
+    map per (source, target) extent for the caller."""
+
+    def index(src: int, dst: int) -> np.ndarray:
+        idx = maps.get((src, dst))
+        if idx is None:
+            idx = maps[(src, dst)] = (np.arange(dst) * src) // dst
+        return idx
+
+    return px.reshape(h, w, n_bands)[index(h, th)][:, index(w, tw)].reshape(-1)
+
+
+def _svid_frames(footage, w, n_bands, h, n_total, interval_ms, n_frames):
+    """``n_frames`` evenly spaced frames of a clip (the first kept; all
+    of them when the clip is shorter) as ``(source frame index,
+    timestamp ms, SIMG frame payload)``; ``footage`` starts at frame 0's
+    plane."""
+    plane = w * h * n_bands
+    header = SIMG.pack(w, n_bands, h)
+    k = min(n_frames, n_total)
+    frames = []
+    for i in range(k):
+        fi = (i * n_total) // k
+        frame = header + footage[fi * plane : (fi + 1) * plane]
+        frames.append((fi, fi * interval_ms, frame))
+    return frames
+
+
+def _saud_features(body, n: int, rate: int):
+    """(duration_ms, rms, peak, zero_crossings) of the first ``n``
+    int16 big-endian samples in ``body``; an empty clip has duration 0,
+    no RMS or peak, and 0 crossings."""
+    if n == 0:
+        return 0.0, None, None, 0
+    s = np.frombuffer(body, dtype=">i2", count=n).astype(np.int64)
+    return (
+        n * 1000.0 / rate,
+        float(np.sqrt((s * s).sum() / n)),
+        int(np.abs(s).max()),
+        int((np.signbit(s[1:]) != np.signbit(s[:-1])).sum()),
+    )
+
+
+def _frame(rows: list[dict], schema: T.StructType) -> pd.DataFrame:
+    """One output batch of ``schema`` from row dicts; a field missing
+    from a row is null. Object columns: Arrow converts them straight to
+    the schema's types, where pandas' per-column dtype inference cost 4×
+    the conversion."""
+    return pd.DataFrame(
+        {n: pd.Series([r.get(n) for r in rows], dtype=object) for n in schema.names}
+    )
+
+
+# --------------------------------------------------------------------------
+# Catalyst payload builders and the standalone decoders
+# --------------------------------------------------------------------------
+
+
 def with_binary_payload(
     docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Attach a structured binary column + typed metadata (stands in
     for image bytes; on real data this column comes from the source).
 
-    The payload is a valid SIMG byte string (module docstring):
-    deterministic dims derived from the doc id, pixel bytes = the
-    leading ``width*height*n_bands`` bytes of the UTF-8 text. Pure
+    The payload is a valid SIMG byte string: dims derived from the doc
+    id, pixel bytes from the UTF-8 text (:func:`_simg_dims`). Pure
     Catalyst construction (hex-string assembly + unhex + binary
     concat) — map-only, no Python."""
     tb = F.encode(F.col(text_col), "utf-8")
-    n = F.octet_length(tb)
-    w = (F.pmod(F.col(id_col), F.lit(9)) + 8).cast("int")
-    b = (F.pmod(F.col(id_col), F.lit(3)) + 1).cast("int")
-    h = F.least(F.floor(n / (w * b)), F.lit(65535)).cast("int")
-    header_hex = F.concat(
-        F.lit("53494D47"),  # "SIMG"
-        F.lit("01"),
-        F.lpad(F.hex(w), 4, "0"),
-        F.lpad(F.hex(b), 2, "0"),
-        F.lpad(F.hex(h), 4, "0"),
-    )
-    payload = F.concat(F.unhex(header_hex), tb.substr(F.lit(1), w * h * b))
+    w, b, h = _simg_dims(F.col(id_col), F.octet_length(tb))
+    payload = F.concat(SIMG.expr(w, b, h), tb.substr(F.lit(1), w * h * b))
     return docs.withColumn("payload", payload).withColumn(
         "payload_meta",
         F.struct(
@@ -277,55 +445,30 @@ def decode_and_featurize(
     per-band strided reductions, and only KB-sized stats cross back —
     the binary column itself never re-enters the JVM.
     """
-    import numpy as np
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in DECODED_SCHEMA.fields}
-
-            def emit(doc_id, valid, width=None, height=None, n_bands=None,
-                     band_mean=None, band_max=None, checksum=None):
-                rows["doc_id"].append(doc_id)
-                rows["valid"].append(valid)
-                rows["width"].append(width)
-                rows["height"].append(height)
-                rows["n_bands"].append(n_bands)
-                rows["band_mean"].append(band_mean)
-                rows["band_max"].append(band_max)
-                rows["checksum"].append(checksum)
-
+            rows: list[dict] = []
             for doc_id, raw in zip(pdf["doc_id"], pdf["payload"]):
-                if raw is None or len(raw) < SIMG_HEADER_LEN:
-                    emit(doc_id, False)
+                hdr = SIMG.parse(raw)
+                if hdr is None:
+                    rows.append(dict(doc_id=doc_id, valid=False))
                     continue
-                buf = bytes(raw)
-                if buf[:4] != SIMG_MAGIC or buf[4] != 1:
-                    emit(doc_id, False)
-                    continue
-                width, = struct.unpack(">H", buf[5:7])
-                n_bands = buf[7]
-                height, = struct.unpack(">H", buf[8:10])
+                width, n_bands, height = hdr
+                dims = dict(width=width, height=height, n_bands=n_bands)
                 npx = width * height * n_bands
-                pix = buf[SIMG_HEADER_LEN : SIMG_HEADER_LEN + npx]
+                pix = raw[SIMG.size : SIMG.size + npx]
                 if len(pix) < npx or n_bands == 0:
-                    emit(doc_id, False, width, height, n_bands)
+                    rows.append(dict(doc_id=doc_id, valid=False, **dims))
                     continue
-                arr = np.frombuffer(pix, dtype=np.uint8)
-                per_band = width * height
-                if per_band:
-                    # integer sums are exact → the mean division is the
-                    # same single IEEE op the SQL oracle performs
-                    band_mean = [
-                        int(arr[b::n_bands].sum(dtype=np.int64)) / per_band
-                        for b in range(n_bands)
-                    ]
-                    band_max = [int(arr[b::n_bands].max()) for b in range(n_bands)]
-                else:
-                    band_mean = [None] * n_bands
-                    band_max = [None] * n_bands
-                emit(doc_id, True, width, height, n_bands, band_mean, band_max,
-                     int(arr.sum(dtype=np.int64)))
-            yield pd.DataFrame(rows)
+                means, maxes, checksum = _band_stats(
+                    np.frombuffer(pix, dtype=np.uint8), n_bands, width * height
+                )
+                rows.append(dict(
+                    doc_id=doc_id, valid=True, **dims,
+                    band_mean=means, band_max=maxes, checksum=checksum,
+                ))
+            yield _frame(rows, DECODED_SCHEMA)
 
     return _arrow_map(
         docs_with_payload.select("doc_id", "payload"),
@@ -370,53 +513,32 @@ def resize_payloads(
     not exceptions. Resizing to the source's own dims is the identity
     (byte-identical payload).
     """
-    import numpy as np
-
     tw, th = width, height
-    ys_for = {}  # source height -> target row index map (tiny, reused)
-    xs_for = {}
+    maps: dict = {}
 
     def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in RESIZED_SCHEMA.fields}
-
-            def emit(doc_id, valid, n_bands=None, blob=None):
-                rows["doc_id"].append(doc_id)
-                rows["valid"].append(valid)
-                rows["width"].append(tw)
-                rows["height"].append(th)
-                rows["n_bands"].append(n_bands)
-                rows["resized"].append(blob)
-
+            rows: list[dict] = []
             for doc_id, raw in zip(pdf["doc_id"], pdf["payload"]):
-                if raw is None or len(raw) < SIMG_HEADER_LEN:
-                    emit(doc_id, False)
+                hdr = SIMG.parse(raw)
+                if hdr is None:
+                    rows.append(dict(doc_id=doc_id, valid=False, width=tw, height=th))
                     continue
-                buf = bytes(raw)
-                if buf[:4] != SIMG_MAGIC or buf[4] != 1:
-                    emit(doc_id, False)
-                    continue
-                sw, = struct.unpack(">H", buf[5:7])
-                nb = buf[7]
-                sh, = struct.unpack(">H", buf[8:10])
+                sw, nb, sh = hdr
                 npx = sw * sh * nb
-                pix = buf[SIMG_HEADER_LEN : SIMG_HEADER_LEN + npx]
-                if len(pix) < npx or nb == 0 or sw == 0 or sh == 0:
-                    emit(doc_id, False, nb)
+                pix = raw[SIMG.size : SIMG.size + npx]
+                if len(pix) < npx or npx == 0:
+                    rows.append(
+                        dict(doc_id=doc_id, valid=False, width=tw, height=th, n_bands=nb)
+                    )
                     continue
-                arr = np.frombuffer(pix, dtype=np.uint8).reshape(sh, sw, nb)
-                ys = ys_for.get(sh)
-                if ys is None:
-                    ys = ys_for[sh] = (np.arange(th) * sh) // th
-                xs = xs_for.get(sw)
-                if xs is None:
-                    xs = xs_for[sw] = (np.arange(tw) * sw) // tw
-                out = arr[ys][:, xs]  # nearest-neighbor gather
-                header = SIMG_MAGIC + b"\x01" + struct.pack(">H", tw) + bytes(
-                    [nb]
-                ) + struct.pack(">H", th)
-                emit(doc_id, True, nb, header + out.tobytes())
-            yield pd.DataFrame(rows)
+                px = np.frombuffer(pix, dtype=np.uint8)
+                out = _nn_resize(px, sw, sh, nb, tw, th, maps)
+                rows.append(dict(
+                    doc_id=doc_id, valid=True, width=tw, height=th, n_bands=nb,
+                    resized=SIMG.pack(tw, nb, th) + out.tobytes(),
+                ))
+            yield _frame(rows, RESIZED_SCHEMA)
 
     return _arrow_map(
         docs_with_payload.select("doc_id", "payload"),
@@ -427,48 +549,21 @@ def resize_payloads(
     )
 
 
-SVID_MAGIC = b"SVID"
-SVID_HEADER_LEN = 14
-
-
 def with_video_payload(
     docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Attach a structured video binary column (the video leg of the
     image/audio/video triad; on real data this column comes from the
-    source). SVID layout (big-endian, 14-byte header):
-
-        bytes 0-3    magic "SVID"
-        byte  4      version (0x01)
-        bytes 5-6    width  uint16
-        byte  7      n_bands uint8
-        bytes 8-9    height uint16
-        bytes 10-11  n_frames uint16
-        bytes 12-13  frame_interval_ms uint16 (40/80/120 by doc id)
-        bytes 14+    n_frames planes of width*height*n_bands bytes,
-                     frame-major, band-interleaved within a frame —
-                     i.e. each plane is exactly a SIMG pixel region
-
-    Planes are the leading ``w*h*b*n_frames`` bytes of the UTF-8 text —
-    synthetic footage, genuine byte layout. Pure Catalyst (hex
-    assembly + unhex + concat), map-only."""
+    source): a valid SVID byte string (layout at ``SVID``) whose
+    dims, frame count and frame interval derive from the doc id and
+    whose planes are the document's UTF-8 text bytes
+    (:func:`_svid_dims`) — synthetic footage, genuine byte layout.
+    Pure Catalyst (hex assembly + unhex + concat), map-only."""
     tb = F.encode(F.col(text_col), "utf-8")
-    n = F.octet_length(tb)
-    w = (F.pmod(F.col(id_col), F.lit(5)) + 4).cast("int")
-    b = (F.pmod(F.col(id_col), F.lit(2)) + 1).cast("int")
-    nf = (F.pmod(F.col(id_col), F.lit(4)) + 2).cast("int")
-    h = F.least(F.floor(n / (w * b * nf)), F.lit(65535)).cast("int")
-    interval = ((F.pmod(F.col(id_col), F.lit(3)) + 1) * 40).cast("int")
-    header_hex = F.concat(
-        F.lit("53564944"),  # "SVID"
-        F.lit("01"),
-        F.lpad(F.hex(w), 4, "0"),
-        F.lpad(F.hex(b), 2, "0"),
-        F.lpad(F.hex(h), 4, "0"),
-        F.lpad(F.hex(nf), 4, "0"),
-        F.lpad(F.hex(interval), 4, "0"),
+    w, b, h, nf, interval = _svid_dims(F.col(id_col), F.octet_length(tb))
+    payload = F.concat(
+        SVID.expr(w, b, h, nf, interval), tb.substr(F.lit(1), w * h * b * nf)
     )
-    payload = F.concat(F.unhex(header_hex), tb.substr(F.lit(1), w * h * b * nf))
     return docs.withColumn("video", payload)
 
 
@@ -506,39 +601,23 @@ def sample_frames(
 
     def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids, idxs, tss, blobs = [], [], [], []
+            rows: list[dict] = []
             for doc_id, raw in zip(pdf["doc_id"], pdf["video"]):
-                if raw is None or len(raw) < SVID_HEADER_LEN:
+                hdr = SVID.parse(raw)
+                if hdr is None:
                     continue
-                buf = bytes(raw)
-                if buf[:4] != SVID_MAGIC or buf[4] != 1:
-                    continue
-                sw, = struct.unpack(">H", buf[5:7])
-                nb = buf[7]
-                sh, = struct.unpack(">H", buf[8:10])
-                total, interval = struct.unpack(">HH", buf[10:14])
+                sw, nb, sh, total, interval = hdr
                 plane = sw * sh * nb
-                if plane == 0 or total == 0:
-                    continue
-                if len(buf) < SVID_HEADER_LEN + plane * total:
-                    continue  # truncated footage
-                simg_header = SIMG_MAGIC + b"\x01" + buf[5:10]
-                k = min(n_frames, total)
-                for i in range(k):
-                    fi = (i * total) // k  # evenly spaced, first frame kept
-                    off = SVID_HEADER_LEN + fi * plane
-                    ids.append(doc_id)
-                    idxs.append(fi)
-                    tss.append(fi * interval)
-                    blobs.append(simg_header + buf[off : off + plane])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "frame_ts_ms": pd.Series(tss, dtype="int64"),
-                    "frame": pd.Series(blobs, dtype=object),
-                }
-            )
+                if plane == 0 or total == 0 or len(raw) < SVID.size + plane * total:
+                    continue  # empty or truncated footage
+                footage = memoryview(raw)[SVID.size :]
+                for fi, ts, frame in _svid_frames(
+                    footage, sw, nb, sh, total, interval, n_frames
+                ):
+                    rows.append(
+                        dict(doc_id=doc_id, frame_idx=fi, frame_ts_ms=ts, frame=frame)
+                    )
+            yield _frame(rows, FRAMES_SCHEMA)
 
     return _arrow_map(
         docs_with_video.select("doc_id", "video"),
@@ -549,39 +628,19 @@ def sample_frames(
     )
 
 
-SAUD_MAGIC = b"SAUD"
-SAUD_HEADER_LEN = 9
-
-
 def with_audio_payload(
     docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Attach a structured audio binary column (the audio leg of the
     image/audio/video triad; on real data this column comes from the
-    source). SAUD layout (big-endian, 9-byte header):
-
-        bytes 0-3  magic "SAUD"
-        byte  4    version (0x01)
-        bytes 5-6  sample_rate_hz uint16 (8000/16000/44100 by doc id)
-        bytes 7-8  n_samples uint16
-        bytes 9+   n_samples int16 big-endian PCM samples
-
-    Samples are the leading ``2*n_samples`` bytes of the UTF-8 text —
-    synthetic waveform, genuine byte layout. Pure Catalyst (hex
-    assembly + unhex + concat), map-only."""
+    source): a valid SAUD byte string (layout at ``SAUD``) whose sample
+    rate derives from the doc id and whose samples are the document's
+    UTF-8 text bytes (:func:`_saud_dims`) — synthetic waveform, genuine
+    byte layout. Pure Catalyst (hex assembly + unhex + concat),
+    map-only."""
     tb = F.encode(F.col(text_col), "utf-8")
-    rate = F.element_at(
-        F.array(F.lit(8000), F.lit(16000), F.lit(44100)),
-        (F.pmod(F.col(id_col), F.lit(3)) + 1).cast("int"),
-    )
-    n_samples = F.least(F.floor(F.octet_length(tb) / 2), F.lit(65535)).cast("int")
-    header_hex = F.concat(
-        F.lit("53415544"),  # "SAUD"
-        F.lit("01"),
-        F.lpad(F.hex(rate), 4, "0"),
-        F.lpad(F.hex(n_samples), 4, "0"),
-    )
-    payload = F.concat(F.unhex(header_hex), tb.substr(F.lit(1), n_samples * 2))
+    rate, n_samples = _saud_dims(F.col(id_col), F.octet_length(tb))
+    payload = F.concat(SAUD.expr(rate, n_samples), tb.substr(F.lit(1), n_samples * 2))
     return docs.withColumn("audio", payload)
 
 
@@ -607,51 +666,28 @@ def decode_audio(docs_with_audio: DataFrame, *, widen: bool | None = None) -> Da
     any expensive ASR pass). numpy int16 vectorized over Arrow batches;
     malformed payloads become ``valid = false`` rows, not exceptions.
     """
-    import numpy as np
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in AUDIO_SCHEMA.fields}
-
-            def emit(doc_id, valid, rate=None, n=None, dur=None, rms=None,
-                     peak=None, zc=None):
-                rows["doc_id"].append(doc_id)
-                rows["valid"].append(valid)
-                rows["sample_rate_hz"].append(rate)
-                rows["n_samples"].append(n)
-                rows["duration_ms"].append(dur)
-                rows["rms"].append(rms)
-                rows["peak"].append(peak)
-                rows["zero_crossings"].append(zc)
-
+            rows: list[dict] = []
             for doc_id, raw in zip(pdf["doc_id"], pdf["audio"]):
-                if raw is None or len(raw) < SAUD_HEADER_LEN:
-                    emit(doc_id, False)
+                hdr = SAUD.parse(raw)
+                if hdr is None:
+                    rows.append(dict(doc_id=doc_id, valid=False))
                     continue
-                buf = bytes(raw)
-                if buf[:4] != SAUD_MAGIC or buf[4] != 1:
-                    emit(doc_id, False)
-                    continue
-                rate, n = struct.unpack(">HH", buf[5:9])
-                body = buf[SAUD_HEADER_LEN : SAUD_HEADER_LEN + 2 * n]
+                rate, n = hdr
+                body = raw[SAUD.size : SAUD.size + 2 * n]
                 if len(body) < 2 * n or rate == 0:
-                    emit(doc_id, False, rate, n)
+                    rows.append(
+                        dict(doc_id=doc_id, valid=False, sample_rate_hz=rate, n_samples=n)
+                    )
                     continue
-                if n == 0:
-                    emit(doc_id, True, rate, 0, 0.0, None, None, 0)
-                    continue
-                s = np.frombuffer(body, dtype=">i2").astype(np.int64)
-                emit(
-                    doc_id,
-                    True,
-                    rate,
-                    n,
-                    n * 1000.0 / rate,
-                    float(np.sqrt((s * s).sum() / n)),
-                    int(np.abs(s).max()),
-                    int((np.signbit(s[1:]) != np.signbit(s[:-1])).sum()),
-                )
-            yield pd.DataFrame(rows)
+                dur, rms, peak, zc = _saud_features(body, n, rate)
+                rows.append(dict(
+                    doc_id=doc_id, valid=True, sample_rate_hz=rate, n_samples=n,
+                    duration_ms=dur, rms=rms, peak=peak, zero_crossings=zc,
+                ))
+            yield _frame(rows, AUDIO_SCHEMA)
 
     return _arrow_map(
         docs_with_audio.select("doc_id", "audio"),
@@ -710,53 +746,32 @@ def decode_meta_fused(
     of the payload bytes; here the text bytes cross once and every
     decoder runs on them while they are hot in the worker.
 
-    Per-row logic mirrors :func:`decode_and_featurize`,
-    :func:`resize_payloads`, :func:`sample_frames` and
-    :func:`decode_audio` over payloads built exactly as
-    :func:`with_binary_payload` / :func:`with_video_payload` /
-    :func:`with_audio_payload` assemble them in Catalyst (slicing the
-    same UTF-8 text bytes under the same headers) — equivalence is
-    pinned by ``test_fused_multimodal_matches_branch_union`` and by the
-    DuckDB oracle hash of the ``multimodal_meta`` entry. Invalid-source
-    semantics follow the branch form: image rows only for valid SIMG
-    (always, by construction), resize rows only when the source has
-    pixels, frame rows only when a plane exists, audio rows for every
-    doc. ``band_mean``/``duration_ms``/``rms`` come back unrounded;
-    round in Catalyst like the branch form did."""
-    import hashlib
-
-    import numpy as np
-
+    The payloads are never assembled: the per-format cores derive each
+    document's dims exactly as the ``with_*_payload`` builders do and
+    decode straight from the text bytes, with the arithmetic the
+    standalone decoders run — equivalence is pinned by
+    ``test_fused_multimodal_matches_branch_union`` (and its edge-doc
+    twin) and by the DuckDB oracle hash of the ``multimodal_meta``
+    entry. Invalid-source semantics follow the branch form: image rows
+    only for valid SIMG (always, by construction), resize rows only
+    when the source has pixels, frame rows only when a plane exists,
+    audio rows for every doc. ``band_mean``/``duration_ms``/``rms``
+    come back unrounded; round in Catalyst like the branch form did."""
     tw, th = resize_to
-    ys_for: dict = {}
-    xs_for: dict = {}
+    maps: dict = {}
 
     def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in MM_FUSED_SCHEMA.fields}
+            rows: list[dict] = []
 
-            def emit(doc_id, kind, **kw):
-                for f in MM_FUSED_SCHEMA.fields:
-                    if f.name == "doc_id":
-                        rows["doc_id"].append(doc_id)
-                    elif f.name == "kind":
-                        rows["kind"].append(kind)
-                    else:
-                        rows[f.name].append(kw.get(f.name))
-
-            def band_rows(arr, n_bands, per_band):
-                # identical arithmetic to decode_and_featurize: exact
-                # integer sums, ONE IEEE division per band
-                if per_band:
-                    means = [
-                        int(arr[b::n_bands].sum(dtype=np.int64)) / per_band
-                        for b in range(n_bands)
-                    ]
-                    maxes = [int(arr[b::n_bands].max()) for b in range(n_bands)]
-                else:
-                    means = [None] * n_bands
-                    maxes = [None] * n_bands
-                return means, maxes, int(arr.sum(dtype=np.int64))
+            def add_bands(doc_id, kind, n_bands, stats, **kw):
+                means, maxes, checksum = stats
+                for band in range(n_bands):
+                    rows.append(dict(
+                        doc_id=doc_id, kind=kind, n_bands=n_bands, band=band,
+                        band_mean=means[band], band_max=maxes[band],
+                        checksum=checksum, **kw,
+                    ))
 
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
                 if text is None:
@@ -770,100 +785,45 @@ def decode_meta_fused(
                 n = len(tb)
 
                 # ---- image: with_binary_payload + decode_and_featurize
-                w = doc_id % 9 + 8
-                b = doc_id % 3 + 1
-                h = min(n // (w * b), 65535)
-                pix = tb[: w * h * b]
-                payload = (
-                    SIMG_MAGIC
-                    + b"\x01"
-                    + struct.pack(">H", w)
-                    + bytes([b])
-                    + struct.pack(">H", h)
-                    + pix
+                w, b, h = _simg_dims(doc_id, n)
+                px = np.frombuffer(tb, dtype=np.uint8, count=w * h * b)
+                add_bands(
+                    doc_id, "image", b, _band_stats(px, b, w * h),
+                    n_bytes=SIMG.size + w * h * b,
+                    prefix_hex=SIMG.pack(w, b, h)[:8].hex(),
+                    width=w, height=h,
                 )
-                arr = np.frombuffer(pix, dtype=np.uint8)
-                means, maxes, checksum = band_rows(arr, b, w * h)
-                n_bytes = len(payload)
-                prefix_hex = payload[:8].hex()
-                for band in range(b):
-                    emit(
-                        doc_id, "image",
-                        n_bytes=n_bytes, prefix_hex=prefix_hex,
-                        width=w, height=h, n_bands=b, band=band,
-                        band_mean=means[band], band_max=maxes[band],
-                        checksum=checksum,
-                    )
 
-                # ---- resize re-decode: resize_payloads(8×8) → decode
+                # ---- resize re-decode: resize_payloads → decode
                 if w * h > 0:
-                    src = arr.reshape(h, w, b)
-                    ys = ys_for.get(h)
-                    if ys is None:
-                        ys = ys_for[h] = (np.arange(th) * h) // th
-                    xs = xs_for.get(w)
-                    if xs is None:
-                        xs = xs_for[w] = (np.arange(tw) * w) // tw
-                    rz = np.ascontiguousarray(src[ys][:, xs]).reshape(-1)
-                    rmeans, rmaxes, rchecksum = band_rows(rz, b, tw * th)
-                    for band in range(b):
-                        emit(
-                            doc_id, "resize",
-                            width=tw, height=th, n_bands=b, band=band,
-                            band_mean=rmeans[band], band_max=rmaxes[band],
-                            checksum=rchecksum,
-                        )
+                    rz = _nn_resize(px, w, h, b, tw, th, maps)
+                    add_bands(
+                        doc_id, "resize", b, _band_stats(rz, b, tw * th),
+                        width=tw, height=th,
+                    )
 
                 # ---- frames: with_video_payload + sample_frames +
                 #      md5(lower(hex(frame)))
-                vw = doc_id % 5 + 4
-                vb = doc_id % 2 + 1
-                nf = doc_id % 4 + 2
-                iv = (doc_id % 3 + 1) * 40
-                fh = min(n // (vw * vb * nf), 65535)
-                plane = vw * fh * vb
-                if plane > 0:
-                    simg_header = (
-                        SIMG_MAGIC
-                        + b"\x01"
-                        + struct.pack(">H", vw)
-                        + bytes([vb])
-                        + struct.pack(">H", fh)
-                    )
-                    k = min(n_frames, nf)
-                    for i in range(k):
-                        fi = (i * nf) // k
-                        frame = simg_header + tb[fi * plane : (fi + 1) * plane]
-                        emit(
-                            doc_id, "frame",
-                            frame_idx=fi, frame_ts_ms=fi * iv,
-                            frame_md5=hashlib.md5(
-                                frame.hex().encode()
-                            ).hexdigest(),
-                        )
+                vw, vb, vh, nf, interval = _svid_dims(doc_id, n)
+                if vw * vh * vb > 0:
+                    for fi, ts, frame in _svid_frames(
+                        tb, vw, vb, vh, nf, interval, n_frames
+                    ):
+                        rows.append(dict(
+                            doc_id=doc_id, kind="frame", frame_idx=fi,
+                            frame_ts_ms=ts,
+                            frame_md5=hashlib.md5(frame.hex().encode()).hexdigest(),
+                        ))
 
                 # ---- audio: with_audio_payload + decode_audio
-                rate = (8000, 16000, 44100)[doc_id % 3]
-                ns = min(n // 2, 65535)
-                if ns == 0:
-                    emit(
-                        doc_id, "audio",
-                        sample_rate_hz=rate, n_samples=0,
-                        duration_ms=0.0, zero_crossings=0,
-                    )
-                else:
-                    s = np.frombuffer(tb[: 2 * ns], dtype=">i2").astype(np.int64)
-                    emit(
-                        doc_id, "audio",
-                        sample_rate_hz=rate, n_samples=ns,
-                        duration_ms=ns * 1000.0 / rate,
-                        rms=float(np.sqrt((s * s).sum() / ns)),
-                        peak=int(np.abs(s).max()),
-                        zero_crossings=int(
-                            (np.signbit(s[1:]) != np.signbit(s[:-1])).sum()
-                        ),
-                    )
-            yield pd.DataFrame(rows)
+                rate, ns = _saud_dims(doc_id, n)
+                dur, rms, peak, zc = _saud_features(tb, ns, rate)
+                rows.append(dict(
+                    doc_id=doc_id, kind="audio", sample_rate_hz=rate,
+                    n_samples=ns, duration_ms=dur, rms=rms, peak=peak,
+                    zero_crossings=zc,
+                ))
+            yield _frame(rows, MM_FUSED_SCHEMA)
 
     return _arrow_map(
         docs.select(id_col, text_col),

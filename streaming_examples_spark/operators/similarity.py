@@ -168,7 +168,8 @@ def _exact_rerank(
     stage of a PQ index: compressed codes produce the candidate set,
     the RAW vectors decide the final order (recall within a tight
     cluster needs resolution the code budget doesn't carry; see the
-    probe_ann_recall clustered sweep). Returns (query_id, neighbor_id,
+    clustered sweep in SCALE_NOTES.md, "ANN recall-vs-cost dial
+    sweep"). Returns (query_id, neighbor_id,
     rank, cos).
 
     Scale shape: the shortlist (#queries × R rows, bounded) and query
@@ -198,7 +199,7 @@ def lsh_table_buckets(
     set). Public so cost probes measure candidates from the SAME index
     the operator queries — a drifted re-implementation would silently
     pair recall from one bucketing with cost from another
-    (tools/probe_ann_recall.py)."""
+    (SCALE_NOTES.md, "ANN recall-vs-cost dial sweep")."""
     return F.array(
         *[lsh_bucket(vec, dim, n_planes, salt_base=t * 1000) for t in range(n_tables)]
     )

@@ -195,7 +195,8 @@ def tx_denormalize(
     # Pinned below; cdc_stream / catalog.release() unpersist it.
     #
     # persist_ends=False is the GIANT-batch escape hatch (measured at
-    # 20 M txs / 70 M events, tools/probe_tx_scale.py r7): a 20 M-row
+    # 20 M txs / 70 M events, SCALE_NOTES.md "Flagship tx pipeline",
+    # round 7): a 20 M-row
     # END cache evicts the heap the 20 M-key gate broadcasts need —
     # the broadcast build OOMs at the default 16 g driver, and even at
     # 48 g the cached run is 3× slower than recomputing the agg per

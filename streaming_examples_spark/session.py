@@ -14,6 +14,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_mem() -> str:
+    """The driver heap: ``SPARK_GRAFT_DRIVER_MEM`` when set, else half
+    the machine's physical RAM capped at 16g. A long run grows the JVM
+    toward its heap limit, and a heap sized past the RAM gets the JVM
+    killed by the kernel instead of collected."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem:
+        return mem
+    try:
+        with open("/proc/meminfo") as f:
+            kb = int(next(l for l in f if l.startswith("MemTotal")).split()[1])
+    except (OSError, StopIteration, ValueError):
+        return "16g"  # no /proc: the cap
+    return f"{min(16 * 1024, kb // 2048)}m"
+
+
 def get_spark(
     app_name: str = "streaming_examples_spark",
     *,
@@ -94,7 +110,7 @@ def get_spark(
         # -- determinism -----------------------------------------------------
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

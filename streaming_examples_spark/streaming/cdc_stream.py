@@ -104,7 +104,6 @@ class TxDenormBatchProcessor:
         applied_retention_batches: int = 8,
         backend: StateStorageBackend | None = None,
         emission_sink=None,
-        enforce_tx_order: bool = True,
         order_delete_gc_horizon_lsn=None,
     ):
         from streaming_examples_spark.streaming.monitoring import PipelineMetrics
@@ -128,22 +127,6 @@ class TxDenormBatchProcessor:
         #:   "order_key", ...)   (sources/kafka.py — tombstones as
         #: null values, KafkaChangelogJob.java:50-65)
         self.emission_sink = emission_sink
-        #: enforce the tx-metadata delivery-order contract (see
-        #: start_tx_denorm_stream's docstring): an incoming END whose
-        #: commit LSN is ≤ the already-EMITTED high-watermark can no
-        #: longer be emitted in commit order — the source delivered tx
-        #: metadata out of order (impossible for the reference's
-        #: single-partition tx topic, DataStreamV2Job.java:70-97; easy
-        #: for a misconfigured multi-partition topic or an mtime-tied
-        #: file source). True (default) raises; False counts the
-        #: regression in metrics.tx_order_regressions and proceeds,
-        #: emitting out of order — for operators who prefer lag over
-        #: a halted pipeline. NOTE: with at-least-once redelivery, an
-        #: END replayed LATER than applied_retention_batches is
-        #: indistinguishable from a reordering source and trips this
-        #: check — size the retention to the source's redelivery
-        #: horizon.
-        self.enforce_tx_order = enforce_tx_order
         #: GC dial for deleted-order markers (txjoin state retention):
         #: ``None`` (default) keeps them forever — reference parity; an
         #: int drops markers below that LSN at every state roll; a
@@ -715,20 +698,15 @@ class TxDenormBatchProcessor:
         # tx_events — tiny and almost always empty, so the one bounded
         # job stays cheap; the earlier tx_all variant dragged the
         # carry-union + dedup lineage into every batch for nothing):
-        #   * carried ENDs cannot be offenders in enforcing mode — the
-        #     barrier guarantees every emitted LSN is below every
-        #     carried tx's LSN, so any offender is a fresh arrival;
+        #   * carried ENDs cannot be offenders — the barrier guarantees
+        #     every emitted LSN is below every carried tx's LSN, so any
+        #     offender is a fresh arrival;
         #   * at-least-once redelivery of APPLIED txs (within
-        #     retention) is anti-joined away before the check;
-        #   * each offending END counts once per ARRIVAL in lenient
-        #     mode (a tolerated offender carried while its tx stays
-        #     incomplete is not recounted; a redelivery is a new
-        #     arrival and recounts);
-        #   * the one uncovered edge: state carrying offenders a
-        #     LENIENT run tolerated lets them emit out of order when
-        #     they complete under a later enforcing restart — the
-        #     check meters arrivals, and those arrived on the lenient
-        #     run's watch.
+        #     retention) is anti-joined away before the check. An END
+        #     replayed LATER than applied_retention_batches is
+        #     indistinguishable from a reordering source and trips the
+        #     check — size the retention to the source's redelivery
+        #     horizon.
         prev_hwm = self._read_tx_hwm()
         if prev_hwm is not None:
             _parts = F.split(F.col("id"), ":")
@@ -758,7 +736,7 @@ class TxDenormBatchProcessor:
                     if n_offenders > 1
                     else ""
                 )
-                msg = (
+                raise RuntimeError(
                     f"tx-metadata delivery-order violation in batch "
                     f"{batch_id}: END of tx {offenders[0]['tx_id']} arrived "
                     f"with commit_lsn {offenders[0]['commit_lsn']} ≤ the "
@@ -770,12 +748,6 @@ class TxDenormBatchProcessor:
                     "outlived applied_retention_batches="
                     f"{self.applied_retention_batches}."
                 )
-                if self.enforce_tx_order:
-                    raise RuntimeError(msg)
-                import warnings
-
-                warnings.warn(msg)
-                self.metrics.tx_order_regressions += n_offenders
 
         carry_orders = self._load("carry_orders")
         carry_lines = self._load("carry_lines")
@@ -1031,7 +1003,6 @@ def start_tx_denorm_stream(
     emission_sink=None,
     n_buckets: int = 32,
     backend=None,
-    enforce_tx_order: bool = True,
     order_delete_gc_horizon_lsn=None,
 ):
     """Wire the three CDC streams (orders / order_lines / transaction
@@ -1056,9 +1027,8 @@ def start_tx_denorm_stream(
 
     ENFORCED since r10: the processor checks every incoming END
     against the persisted emitted-LSN high-watermark and raises on a
-    regression (``enforce_tx_order=False`` downgrades to a warning +
-    the ``tx_order_regressions`` metric) — a broken source wiring
-    fails loudly instead of silently emitting out of commit order.
+    regression — a broken source wiring fails loudly instead of
+    silently emitting out of commit order.
     """
     tagged = (
         order_stream.select(F.lit("orders").alias("_stream"), F.to_json(F.struct("*")).alias("payload"))
@@ -1076,7 +1046,6 @@ def start_tx_denorm_stream(
         n_buckets=n_buckets,
         backend=backend,
         emission_sink=emission_sink,
-        enforce_tx_order=enforce_tx_order,
         order_delete_gc_horizon_lsn=order_delete_gc_horizon_lsn,
     )
 

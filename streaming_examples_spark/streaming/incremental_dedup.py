@@ -934,7 +934,8 @@ class IncrementalNearDup:
             #     which _cap_store_viral tracks incrementally.
             # Dropped from probe and self-join alike; near-dups still
             # pair via their other, selective bands (recall measured at
-            # the batch family's cap: tools/probe_bucket_cap.py).
+            # the batch family's cap: SCALE_NOTES.md, "Dedup/curation
+            # capstones").
             self._refresh_cap_counts()
             cap = self.max_bucket_size
             base = lambda key: self._cap_hot.get(key, 0) + self._cap_delta.get(key, 0)  # noqa: E731

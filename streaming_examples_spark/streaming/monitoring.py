@@ -39,17 +39,6 @@ class PipelineMetrics:
     committed_transactions: int = 0
     last_batch_events_per_sec: float | None = None
     backlog_rows: int = 0
-    #: END events that arrived with a commit LSN at or below the
-    #: already-emitted high-watermark — a violated delivery-order
-    #: contract (the reference's single-partition tx topic makes this
-    #: impossible by construction; a misconfigured multi-partition
-    #: topic or a reordering file source makes it silent). Counted
-    #: when the processor runs with enforce_tx_order=False — one count
-    #: per offending END **arrival** (a batch with three reordered
-    #: ENDs counts 3; a tolerated offender carried while its tx stays
-    #: incomplete is not recounted; an at-least-once redelivery is a
-    #: new arrival and recounts). The default mode raises instead.
-    tx_order_regressions: int = 0
     last_batch_id: int = -1
     batches: int = 0
     #: wall seconds of the last non-idle processor batch, per
@@ -144,7 +133,6 @@ class PipelineMetrics:
             "rows_scanned": dict(self.rows_scanned),
             "snapshot_rows_scanned": dict(self.snapshot_rows_scanned),
             "backlog_rows": self.backlog_rows,
-            "tx_order_regressions": self.tx_order_regressions,
             "batches": self.batches,
             "last_batch_phase_s": dict(self.last_batch_phase_s),
         }

@@ -617,7 +617,7 @@ def test_fused_multimodal_matches_branch_union(spark):
     import math
     import os
 
-    from streaming_examples_spark.catalog import entries, release
+    from streaming_examples_spark.catalog import entries, release, t_wide
     from streaming_examples_spark.catalog_datapipe import _mm_quartet_branches
 
     sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -635,11 +635,63 @@ def test_fused_multimodal_matches_branch_union(spark):
 
     try:
         fused = entries()["multimodal_meta"].fn(spark, sf_dir)
-        ref = _mm_quartet_branches(spark, sf_dir)
+        ref = _mm_quartet_branches(t_wide(spark, sf_dir, "documents", key="doc_id"))
         assert fused.columns == ref.columns
         assert canon(fused) == canon(ref)
     finally:
         release(spark, "multimodal_meta", sf_dir)
+
+
+def test_fused_multimodal_matches_branch_union_on_edge_docs(spark):
+    """The fused pass against the four-branch reference on documents
+    the fixtures never hold: NULL and empty text, a 1-byte text (a
+    zero-pixel image, no resize row), multi-byte UTF-8, a doc whose
+    SIMG height hits the uint16 cap and one whose audio hits the
+    65535-sample cap."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from streaming_examples_spark.catalog_datapipe import (
+        _mm_fused,
+        _mm_quartet_branches,
+    )
+
+    varied = "".join(chr(32 + (i * 7) % 95) for i in range(600_000))
+    docs = spark.createDataFrame(
+        [
+            (1, None),
+            (2, ""),
+            (3, "x"),
+            (4, "héllo wörld ✓ 漢字 🙂 " * 40),
+            (5, "日本語のテキスト ünïcödé " * 5_000),  # ~140 KB: audio cap
+            (9, varied),  # w=8, one band: height cap
+        ],
+        "doc_id long, text string",
+    )
+
+    def canon(df):
+        rows = [
+            tuple(None if isinstance(v, float) and math.isnan(v) else v for v in r)
+            for r in df.collect()
+        ]
+        return sorted(rows, key=lambda x: tuple(str(v) for v in x))
+
+    fused = _mm_fused(docs)
+    ref = _mm_quartet_branches(docs)
+    assert fused.columns == ref.columns
+    got = canon(fused)
+    assert got == canon(ref)
+    assert 1 not in {r[0] for r in got}  # NULL text: no rows at all
+    capped = fused.filter(
+        ((F.col("kind") == "image") & (F.col("height") == 65535))
+        | ((F.col("kind") == "audio") & (F.col("n_samples") == 65535))
+    )
+    assert {(r["doc_id"], r["kind"]) for r in capped.collect()} == {
+        (9, "image"),
+        (9, "audio"),
+        (5, "audio"),
+    }
 
 
 def test_bucketed_quantiles_row_identical_to_window_form(spark, tables):

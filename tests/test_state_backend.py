@@ -701,10 +701,7 @@ def test_tx_metadata_order_regression_raises_not_silent(
     single-partition tx topic, DataStreamV2Job.java:70-97). The
     watermark sidecar rides _store_all's single commit point, so the
     check also holds across a restart; at-least-once REPLAY of an
-    applied tx must NOT trip it (anti-joined away before the check);
-    enforce_tx_order=False downgrades to warn + counter."""
-    import warnings
-
+    applied tx must NOT trip it (anti-joined away before the check)."""
     state, proc = _first_batch(spark, tmp_path, backend_cls())
     # batch 1 at high LSNs emits and advances the watermark to ~90k
     batch1 = _dfs(spark, _one_line_tx(90000, 900, 300001, 30000, "9.00"))
@@ -737,18 +734,6 @@ def test_tx_metadata_order_regression_raises_not_silent(
         "5.00",
         "9.00",
     ]
-
-    # quarantine mode: warn + count, emissions proceed (operator's
-    # choice of lag over a halted pipeline)
-    lenient = TxDenormBatchProcessor(
-        spark, state, n_buckets=8, backend=backend_cls(),
-        enforce_tx_order=False,
-    )
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        assert lenient.process(*late, batch_id=5).count() == 1
-    assert any("delivery-order violation" in str(w.message) for w in caught)
-    assert lenient.metrics.tx_order_regressions == 1
 
 
 @pytest.mark.slow

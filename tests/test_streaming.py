@@ -328,6 +328,7 @@ def test_fill_forward_stream_batch_semantics(spark):
         (1001, 40, "u", TOAST_SENTINEL),
         (1002, 15, "c", TOAST_SENTINEL),  # no prior value → stays null
         (1002, 25, "d", "x"),
+        (1002, 35, "u", TOAST_SENTINEL),  # after delete: state cleared → null
     ]
     df = spark.createDataFrame(rows, "id long, event_lsn long, op string, value string")
     out = fill_forward_stream(df, key_col="id", value_col="value").collect()
@@ -336,6 +337,7 @@ def test_fill_forward_stream_batch_semantics(spark):
     assert got[(1001, 40)] == "updated biography"
     assert got[(1002, 15)] is None
     assert got[(1002, 25)] is None
+    assert got[(1002, 35)] is None
 
 
 def test_fill_forward_true_streaming_state_across_batches(spark, tmp_path):

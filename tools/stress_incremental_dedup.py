@@ -20,10 +20,10 @@ layouts.
 double (no hardlinks/renames, deferred deletes) — the same batches,
 plan checks, and compaction passes must hold under both backends.
 
-``--seed M`` pre-folds M synthetic docs (the curation probe's
-generator) into the store before streaming the sf batches — the
-big-store regime where the bucketed layout's elided store-side
-shuffle should beat the plain layout's per-batch store shuffle.
+``--seed M`` pre-folds M synthetic docs (``synth_docs``) into the
+store before streaming the sf batches — the big-store regime where the
+bucketed layout's elided store-side shuffle should beat the plain
+layout's per-batch store shuffle.
 """
 
 from __future__ import annotations
@@ -36,13 +36,56 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql import DataFrame, SparkSession, functions as F  # noqa: E402
 
 from streaming_examples_spark import get_spark  # noqa: E402
 from streaming_examples_spark.streaming.incremental_dedup import (  # noqa: E402
     IncrementalNearDup,
 )
 from streaming_examples_spark.tables import load_table  # noqa: E402
+
+VOCAB = [
+    "spark", "query", "batch", "line", "column", "order", "small", "sort",
+    "vector", "part", "scan", "fast", "agg", "join", "shuffle", "plan",
+    "stream", "state", "window", "hash", "merge", "index", "cache", "store",
+    "read", "write", "group", "filter", "map", "reduce", "stage", "task",
+    "node", "disk", "memory", "codec", "page", "block", "row", "span",
+]
+
+
+def synth_docs(spark: SparkSession, n_docs: int) -> DataFrame:
+    """(doc_id, text) near-dup corpus generated on the executors with
+    pure Catalyst expressions, deterministic in doc_id. Docs whose ids
+    fall in the same family share a base text; ~15% of word slots are
+    perturbed per non-canonical member, so same-family docs sit near
+    Jaccard 0.7-0.95 — the regime dedup_groups clusters at."""
+    vocab_sql = "array(" + ",".join(f"'{w}'" for w in VOCAB) + ")"
+    fam_size = "(1 + pmod(xxhash64('fam', CAST(fam AS STRING)), 8))"
+    return (
+        spark.range(n_docs)
+        .select(F.col("id").alias("doc_id"))
+        # family id: ids partition into runs of 8; within a run the
+        # family keeps its first `fam_size` members, the rest are
+        # singletons (their "family" is themselves)
+        .withColumn("fam", F.expr("CAST(doc_id / 8 AS BIGINT)"))
+        .withColumn(
+            "base",
+            F.expr(f"IF(pmod(doc_id, 8) < {fam_size}, fam * 8, doc_id)"),
+        )
+        .withColumn("n_words", F.expr("40 + pmod(xxhash64('len', CAST(base AS STRING)), 21)"))
+        .withColumn(
+            "text",
+            F.expr(
+                "array_join(transform(sequence(1, n_words), j -> "
+                f"  IF(pmod(xxhash64('mut', CAST(doc_id AS STRING), j), 7) = 0"
+                f"     AND base <> doc_id, "
+                f"     element_at({vocab_sql}, 1 + CAST(pmod(xxhash64('alt', CAST(doc_id AS STRING), j), 40) AS INT)), "
+                f"     element_at({vocab_sql}, 1 + CAST(pmod(xxhash64('w', CAST(base AS STRING), j), 40) AS INT)))"
+                "), ' ')"
+            ),
+        )
+        .select("doc_id", "text")
+    )
 
 
 def main() -> int:
@@ -94,8 +137,6 @@ def main() -> int:
     )
 
     if seed:
-        from tools.scale_probe_curation import synth_docs
-
         # seed ids offset past the sf corpus so they never collide
         big = synth_docs(spark, seed).select(
             (F.col("doc_id") + 10**9).alias("doc_id"), "text"
