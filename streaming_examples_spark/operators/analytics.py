@@ -251,16 +251,12 @@ def numeric_quantiles(lineitem: DataFrame, n_buckets: int | None = None) -> Data
         )
     except ValueError:
         min_bytes = 256 << 20
-    from py4j.protocol import Py4JError
+    from streaming_examples_spark.plans.inspect import plan_bytes
 
-    try:
-        est_bytes = int(
-            str(b0._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-    except (Py4JError, AttributeError, TypeError, ValueError):
-        est_bytes = 0  # private JVM API unavailable: the window form is safe
+    # no estimate (private JVM API unavailable): the window form is safe
+    est_bytes = plan_bytes(b0)
 
-    if force_bucketed or est_bytes > min_bytes:
+    if force_bucketed or (est_bytes is not None and est_bytes > min_bytes):
         stats = b0.groupBy("l_returnflag").agg(
             F.min("v").alias("_vmin"), F.max("v").alias("_vmax")
         )

@@ -133,10 +133,9 @@ def _widen_for_python(
         # feeding an expanding decode warns instead of silently
         # serializing (escape hatch: widen=True, handled above).
         return df, "shuffled-input"
-    try:
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        est = None  # stats unavailable → assume heavy (safe at scale)
+    from streaming_examples_spark.plans.inspect import plan_bytes
+
+    est = plan_bytes(df)  # None: stats unavailable → assume heavy (safe at scale)
     if est is not None and est // target < min_bytes_per_task:
         return df, "declined-small"
     return df.repartition(target), "widened"

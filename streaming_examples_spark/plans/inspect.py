@@ -16,6 +16,20 @@ import re
 from pyspark.sql import DataFrame
 
 
+def plan_bytes(df: DataFrame) -> int | None:
+    """The optimizer's size estimate of ``df`` in bytes, or None when it
+    cannot be read. A materialized cached frame reports the bytes its
+    cache actually holds; a file scan its files' size. The call reaches
+    a private JVM API, so every caller decides what None means (size
+    gates treat it as large)."""
+    from py4j.protocol import Py4JError
+
+    try:
+        return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    except (Py4JError, AttributeError, TypeError, ValueError):
+        return None
+
+
 def formatted_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().explainString(
         df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")

@@ -35,14 +35,22 @@ bucket swap here is the plain-parquet equivalent of MERGE touching
 only affected files.
 
 Durability order per batch:
-  1. materialize: the emissions are cached by the batch's one Spark
-     action before the sink (the emitted-LSN high-watermark rides it
-     as an observation; the inputs are pinned once, so every later
-     consumer reads the cache instead of the source lineage);
+  0. pin, materialize and size the inputs: the three inputs are pinned
+     once (every later consumer reads the cache instead of the source
+     lineage) and built in one concurrent round of aggregates that
+     also yields the event counts, the delivery-order offender count,
+     the GC horizon's in-flight floor and the touched buckets. A batch
+     whose cached inputs and loaded state fit one advisory partition
+     (``spark.sql.adaptive.advisoryPartitionSizeInBytes``) is planned
+     on one partition: no hash exchange, one task per stage, one file
+     per written bucket; a larger batch keeps the wide plan;
+  1. materialize: the emissions are cached by the one Spark action
+     between the intake round and the sink (the emitted-LSN
+     high-watermark rides it as an observation);
   2. sink: the output_dir append and the ``emission_sink`` callback;
   3. concurrent writes: the NEXT version dir is claimed and its
      high-watermark sidecar published, then all six state frames are
-     written on a thread pool, next to the metric-only counts (the
+     written on a thread pool, next to the committed-tx count (the
      backlog is observed on the carry writes themselves);
   4. sidecars: the untouched buckets are carried and ``_parts.json``
      enumerates the version;
@@ -79,6 +87,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.util import inheritable_thread_target
 
 from streaming_examples_spark.operators.txjoin import TxDenormResult, tx_denormalize
+from streaming_examples_spark.plans.inspect import plan_bytes
 from streaming_examples_spark.streaming.state_backend import (
     REBUILD_HINT,
     LocalPosixBackend,
@@ -548,6 +557,120 @@ class TxDenormBatchProcessor:
                 raise fut.exception()
         return {name: fut.result() for name, fut in futures.items()}
 
+    def _intake_round(
+        self,
+        order_events: DataFrame,
+        line_events: DataFrame,
+        tx_events: DataFrame,
+        carried: tuple[DataFrame | None, DataFrame | None, DataFrame | None],
+        *,
+        prev_hwm: int | None,
+        gc_horizon: int | None,
+        initial_load: bool,
+    ) -> dict[str, object]:
+        """Materialize the three pinned inputs in ONE concurrent round:
+        one aggregate per input, plus one over the carried
+        ``(carry_orders, carry_lines, carry_txs)`` frames when any
+        exists. Returns what the batch needs before it plans:
+
+          * ``orders``, ``lines``, ``max_ts``: the event counts and the
+            newest source timestamp (monitoring);
+          * ``offenders``: ENDs at or below ``prev_hwm`` (the
+            delivery-order check; 0 without a high-watermark);
+          * ``floor``: the oldest in-flight LSN over the inputs and the
+            carried frames (None without a GC horizon);
+          * ``buckets``: the sorted hash buckets the batch touches —
+            the inputs' order keys, both order keys of a line event and
+            the carried keys (empty on a fresh store)."""
+        carry_orders, carry_lines, carry_txs = carried
+        end_lsn = F.split(F.col("id"), ":").getItem(1).cast("long")
+        is_end = F.col("status") == "END"
+        event_lsn = F.col("source.lsn").cast("long")
+
+        def buckets(key: F.Column) -> F.Column:
+            return F.collect_set(F.when(key.isNotNull(), self._bucket_of(key)))
+
+        count = F.count(F.lit(1)).alias("n")
+        order_aggs = [count, F.max("ts_ms").alias("max_ts")]
+        line_aggs = [count]
+        tx_aggs = [count]
+        if not initial_load:
+            order_aggs.append(
+                buckets(F.coalesce(F.col("after.id"), F.col("before.id"))).alias("b")
+            )
+            line_aggs.append(buckets(F.col("after.order_id")).alias("b"))
+            line_aggs.append(buckets(F.col("before.order_id")).alias("b_from"))
+        if prev_hwm is not None:
+            tx_aggs.append(
+                F.count(F.when(is_end & (end_lsn <= prev_hwm), True)).alias("offenders")
+            )
+        if gc_horizon is not None:
+            order_aggs.append(F.min(event_lsn).alias("floor"))
+            line_aggs.append(F.min(event_lsn).alias("floor"))
+            tx_aggs.append(F.min(F.when(is_end, end_lsn)).alias("floor"))
+        tasks = {
+            "orders": lambda: order_events.agg(*order_aggs).first(),
+            "lines": lambda: line_events.agg(*line_aggs).first(),
+            "txs": lambda: tx_events.agg(*tx_aggs).first(),
+        }
+        pool = [
+            c.select("key", F.col("event_lsn").cast("long").alias("lsn"))
+            for c in (carry_orders, carry_lines)
+            if c is not None
+        ]
+        if gc_horizon is not None and carry_txs is not None:
+            pool.append(
+                carry_txs.where(is_end).select(
+                    F.lit(None).cast("long").alias("key"), end_lsn.alias("lsn")
+                )
+            )
+        if pool:
+            carried_aggs = [buckets(F.col("key")).alias("b")]
+            if gc_horizon is not None:
+                carried_aggs.append(F.min("lsn").alias("floor"))
+            tasks["carried"] = lambda: (
+                functools.reduce(DataFrame.unionByName, pool).agg(*carried_aggs).first()
+            )
+        got = {k: r.asDict() for k, r in self._run_concurrently(tasks).items()}
+        rows = got.values()
+        return {
+            "orders": got["orders"]["n"],
+            "lines": got["lines"]["n"],
+            "max_ts": got["orders"]["max_ts"],
+            "offenders": got["txs"].get("offenders", 0),
+            "floor": min(
+                (r["floor"] for r in rows if r.get("floor") is not None), default=None
+            ),
+            "buckets": sorted(
+                {b for r in rows for k in ("b", "b_from") for b in r.get(k) or ()}
+            ),
+        }
+
+    def _fits_one_partition(
+        self, pinned: tuple[DataFrame, ...], loaded: tuple[DataFrame | None, ...]
+    ) -> bool:
+        """Whether the batch fits ONE advisory partition
+        (``spark.sql.adaptive.advisoryPartitionSizeInBytes``, the size
+        AQE itself coalesces shuffle partitions toward): the pinned
+        inputs' cached bytes, built by the intake round, plus the plan
+        statistics of the loaded frames. A size that cannot be read
+        counts as too large, which keeps the wide plan."""
+        jvm = self.spark.sparkContext._jvm
+        limit = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            self.spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        )
+        # a fresh projection reads the cache's realized size: a frame
+        # optimized before its cache was built keeps the earlier estimate
+        frames = [df.select("*") for df in pinned]
+        frames += [df for df in loaded if df is not None]
+        total = 0
+        for df in frames:
+            size = plan_bytes(df)
+            if size is None:
+                return False
+            total += size
+        return total <= limit
+
     def process(
         self,
         order_events: DataFrame,
@@ -678,26 +801,37 @@ class TxDenormBatchProcessor:
                 line_events["source.txId"] == applied["tx_id"],
                 "left_anti",
             )
-        # pin the inputs once: the intake check, the touched pass, every
-        # tx_denormalize branch, the metric aggregates and the carry
-        # writes all read them, and without the cache each re-executes
-        # the caller's source lineage (Python-side scans included)
+        # pin the inputs once: the intake round, every tx_denormalize
+        # branch and the carry writes all read them, and without the
+        # cache each re-executes the caller's source lineage
+        # (Python-side scans included)
         order_events, line_events, tx_events = (
             df.persist() for df in (order_events, line_events, tx_events)
         )
         self._pinned.extend((order_events, line_events, tx_events))
         carry_txs = self._load("carry_txs")
-        tx_all = (
-            tx_events.unionByName(carry_txs) if carry_txs is not None else tx_events
-        ).dropDuplicates(["status", "id"])
+        carry_orders = self._load("carry_orders")
+        carry_lines = self._load("carry_lines")
+        prev_hwm = self._read_tx_hwm()
+        gc_horizon = (
+            self.order_delete_gc_horizon_lsn()
+            if callable(self.order_delete_gc_horizon_lsn)
+            else self.order_delete_gc_horizon_lsn
+        )
+        intake = self._intake_round(
+            order_events,
+            line_events,
+            tx_events,
+            (carry_orders, carry_lines, carry_txs),
+            prev_hwm=prev_hwm,
+            gc_horizon=gc_horizon,
+            initial_load=initial_load,
+        )
 
         # -- tx-metadata delivery-order intake check (the contract in
         # start_tx_denorm_stream's docstring, enforced): an END at or
         # below the emitted high-watermark can no longer emit in commit
-        # order. Checked on THIS batch's arrivals only (the pinned
-        # tx_events — tiny and almost always empty, so the one bounded
-        # job stays cheap; the earlier tx_all variant dragged the
-        # carry-union + dedup lineage into every batch for nothing):
+        # order. Checked on THIS batch's arrivals only:
         #   * carried ENDs cannot be offenders — the barrier guarantees
         #     every emitted LSN is below every carried tx's LSN, so any
         #     offender is a fresh arrival;
@@ -707,8 +841,9 @@ class TxDenormBatchProcessor:
         #     indistinguishable from a reordering source and trips the
         #     check — size the retention to the source's redelivery
         #     horizon.
-        prev_hwm = self._read_tx_hwm()
-        if prev_hwm is not None:
+        # The offender count rides the intake round; the sample for the
+        # message is pulled only when it is non-zero.
+        if intake["offenders"]:
             _parts = F.split(F.col("id"), ":")
             fresh = tx_events.dropDuplicates(["status", "id"]).filter(
                 (F.col("status") == "END")
@@ -730,62 +865,24 @@ class TxDenormBatchProcessor:
                 n_offenders = len(offenders)
             else:
                 n_offenders = offender_frame.count()
-            if offenders:
-                more = (
-                    f" (+{n_offenders - 1} more this batch)"
-                    if n_offenders > 1
-                    else ""
-                )
-                raise RuntimeError(
-                    f"tx-metadata delivery-order violation in batch "
-                    f"{batch_id}: END of tx {offenders[0]['tx_id']} arrived "
-                    f"with commit_lsn {offenders[0]['commit_lsn']} ≤ the "
-                    f"already-emitted high-watermark {prev_hwm}{more}. "
-                    "The transaction stream must arrive in commit order "
-                    "(the reference consumes a single-partition topic); "
-                    "either the source reorders tx metadata across "
-                    "micro-batches, or an at-least-once redelivery "
-                    "outlived applied_retention_batches="
-                    f"{self.applied_retention_batches}."
-                )
-
-        carry_orders = self._load("carry_orders")
-        carry_lines = self._load("carry_lines")
-
-        # -- touched buckets: the batch's order keys (orders keyed by
-        # id, lines by parent order_id) plus carried-over events — only
-        # these hash buckets of the state tables are read and rewritten
-        # BOTH sides of a line re-point touch state: before.order_id's
-        # bucket holds the stale row that must be loaded (so the as-of
-        # "re-pointed line drops out" filter sees it) and rewritten.
-        # A fresh store has no buckets to load, prune or carry, so the
-        # pass (a Spark job) is skipped and the first commit writes
-        # every bucket its rows hash into.
-        touched_buckets: list[int] = []
-        if not initial_load:
-            keys = (
-                order_events.select(
-                    F.coalesce(F.col("after.id"), F.col("before.id")).alias("key")
-                )
-                .unionByName(line_events.select(F.col("after.order_id").alias("key")))
-                .unionByName(line_events.select(F.col("before.order_id").alias("key")))
+            more = (
+                f" (+{n_offenders - 1} more this batch)"
+                if n_offenders > 1
+                else ""
             )
-            for carry in (carry_orders, carry_lines):
-                if carry is not None:
-                    keys = keys.unionByName(carry.select("key"))
-            touched_buckets = sorted(
-                r["b"]
-                for r in keys.where(F.col("key").isNotNull())
-                .select(self._bucket_of(F.col("key")).alias("b"))
-                .distinct()
-                .collect()  # bounded: ≤ n_buckets ints
+            raise RuntimeError(
+                f"tx-metadata delivery-order violation in batch "
+                f"{batch_id}: END of tx {offenders[0]['tx_id']} arrived "
+                f"with commit_lsn {offenders[0]['commit_lsn']} ≤ the "
+                f"already-emitted high-watermark {prev_hwm}{more}. "
+                "The transaction stream must arrive in commit order "
+                "(the reference consumes a single-partition topic); "
+                "either the source reorders tx metadata across "
+                "micro-batches, or an at-least-once redelivery "
+                "outlived applied_retention_batches="
+                f"{self.applied_retention_batches}."
             )
 
-        gc_horizon = (
-            self.order_delete_gc_horizon_lsn()
-            if callable(self.order_delete_gc_horizon_lsn)
-            else self.order_delete_gc_horizon_lsn
-        )
         if gc_horizon is not None:
             # Safety guard on the GC dial: the provably-safe horizon is
             # the source's oldest-in-flight-transaction LSN
@@ -795,34 +892,9 @@ class TxDenormBatchProcessor:
             # delete marker those very events need (the tombstone
             # re-emission contract), so it is REFUSED, not clamped —
             # a wrong feed is an operator bug worth a halted stream.
-            # Cost: one min-agg over micro-batch-sized frames, only on
-            # the opt-in GC path (gc_horizon unset skips it entirely).
-            lsn_pool = (
-                order_events.select(
-                    F.col("source.lsn").cast("long").alias("lsn")
-                )
-                .unionByName(
-                    line_events.select(
-                        F.col("source.lsn").cast("long").alias("lsn")
-                    )
-                )
-                .unionByName(
-                    tx_all.filter(F.col("status") == "END").select(
-                        F.split(F.col("id"), ":")
-                        .getItem(1)
-                        .cast("long")
-                        .alias("lsn")
-                    )
-                )
-            )
-            for carry in (carry_orders, carry_lines):
-                if carry is not None:
-                    lsn_pool = lsn_pool.unionByName(
-                        carry.select(
-                            F.col("event_lsn").cast("long").alias("lsn")
-                        )
-                    )
-            inflight_floor = lsn_pool.agg(F.min("lsn")).first()[0]
+            # The floor rides the intake round's aggregates, only on the
+            # opt-in GC path.
+            inflight_floor = intake["floor"]
             if inflight_floor is not None and gc_horizon > inflight_floor:
                 raise ValueError(
                     f"order_delete_gc_horizon_lsn={gc_horizon} is ahead of "
@@ -834,13 +906,49 @@ class TxDenormBatchProcessor:
                     "(pg_replication_slots.restart_lsn) instead — it is "
                     "≤ every in-flight LSN by definition."
                 )
+
+        # -- touched buckets: the batch's order keys (orders keyed by
+        # id, lines by parent order_id) plus carried-over events — only
+        # these hash buckets of the state tables are read and rewritten
+        # (collected by the intake round). BOTH sides of a line re-point
+        # touch state: before.order_id's bucket holds the stale row that
+        # must be loaded (so the as-of "re-pointed line drops out"
+        # filter sees it) and rewritten. A fresh store has no buckets to
+        # load, prune or carry, so the first commit writes every bucket
+        # its rows hash into.
+        touched_buckets = intake["buckets"]
+        order_state = self._load_buckets("order_state", touched_buckets)
+        line_state = self._load_buckets("line_state", touched_buckets)
+
+        # -- one-partition plan: a batch whose inputs and state fit one
+        # advisory partition runs every leaf coalesced to one partition.
+        # Each child then reports SinglePartition, so Spark plans the
+        # whole batch with no hash exchange, one task per stage and one
+        # file per written bucket. A larger batch keeps the wide plan.
+        if self._fits_one_partition(
+            (order_events, line_events, tx_events),
+            (applied, carry_txs, carry_orders, carry_lines, order_state, line_state),
+        ):
+            (
+                order_events, line_events, tx_events, applied,
+                carry_txs, carry_orders, carry_lines, order_state, line_state,
+            ) = (
+                None if df is None else df.coalesce(1)
+                for df in (
+                    order_events, line_events, tx_events, applied,
+                    carry_txs, carry_orders, carry_lines, order_state, line_state,
+                )
+            )
+        tx_all = (
+            tx_events.unionByName(carry_txs) if carry_txs is not None else tx_events
+        ).dropDuplicates(["status", "id"])
         lap("intake")
         res: TxDenormResult = tx_denormalize(
             order_events,
             line_events,
             tx_all,
-            order_state=self._load_buckets("order_state", touched_buckets),
-            line_state=self._load_buckets("line_state", touched_buckets),
+            order_state=order_state,
+            line_state=line_state,
             carryover_orders=carry_orders,
             carryover_lines=carry_lines,
             # the stream's delivery contract is at-least-once (sink
@@ -864,15 +972,12 @@ class TxDenormBatchProcessor:
             F.split(tx_all["id"], ":").getItem(0) == emitted["_emitted_tx"],
             "left_anti",
         )
-        # commit-order contract without a single-partition global sort:
-        # range-partition on commit_lsn + in-partition sort — rows read
-        # back in partition order ARE globally ordered, and the sort
+        # commit-order contract: a global sort, read back in partition
+        # order. A one-partition plan sorts its one partition in place
+        # (no exchange, no sampling job); a wide plan range-partitions
+        # on commit_lsn and sorts each partition, so the sort
         # parallelizes across reducers instead of one task
-        emissions = (
-            res.emissions.repartitionByRange("commit_lsn")
-            .sortWithinPartitions("commit_lsn")
-            .cache()
-        )
+        emissions = res.emissions.orderBy("commit_lsn").cache()
         # track the cache the moment it exists: a failure anywhere below
         # leaves it registered, and the retry's start-of-batch unpersist
         # is the only hook that can reclaim it (the caller contract —
@@ -880,11 +985,12 @@ class TxDenormBatchProcessor:
         # unaffected, since unpersist still happens only at that start)
         self._prev_emissions = emissions
         lap("plan")
-        # THE one Spark action before the sink: materialize the
-        # emissions before any state dir changes. The emitted-LSN
+        # the one Spark action between the intake round and the sink:
+        # materialize the emissions before any state dir changes. The emitted-LSN
         # high-watermark rides it as an observation over the cached
-        # rows (above the range partitioner, whose sample pass re-runs
-        # the plan below it; max would be idempotent there anyway).
+        # rows (above a wide plan's range partitioner, whose sample pass
+        # re-runs the plan below it; max would be idempotent there
+        # anyway).
         hwm_seen = Observation("tx_emitted_hwm")
         emissions.observe(hwm_seen, F.max("commit_lsn").alias("hwm")).count()
         batch_max_lsn = hwm_seen.get["hwm"]
@@ -928,10 +1034,12 @@ class TxDenormBatchProcessor:
             backlog[name] = Observation(f"tx_{name}_rows")
             carries[name] = df.observe(backlog[name], F.count(F.lit(1)).alias("n"))
 
-        def observe_intake(got: dict) -> None:
+        n_events = intake["orders"] + intake["lines"]
+
+        def observe_intake(_: dict) -> None:
             # monitoring (§6 metric catalog): events seen, source lag,
-            # snapshot rows — landed before the pointer flip
-            n_events = got["orders"]["n"] + got["lines"]
+            # snapshot rows — counted by the intake round, landed once
+            # every state write succeeded, before the pointer flip
             if initial_load:
                 # snapshot-phase RowsScanned (per table): the first
                 # batch over a fresh state dir is this engine's initial
@@ -940,14 +1048,12 @@ class TxDenormBatchProcessor:
                 # (jmx_exporter_config.yml:12-18). batch_id dedupes an
                 # at-least-once RETRY of this batch (crash after the
                 # counts, before the version commit).
-                self.metrics.observe_initial_load(
-                    "orders", got["orders"]["n"], batch_id=batch_id
-                )
-                self.metrics.observe_initial_load(
-                    "lines", got["lines"], batch_id=batch_id
-                )
+                for table in ("orders", "lines"):
+                    self.metrics.observe_initial_load(
+                        table, intake[table], batch_id=batch_id
+                    )
             self.metrics.total_events_seen += n_events
-            self.metrics.observe_event_time(got["orders"]["max_ts"])
+            self.metrics.observe_event_time(intake["max_ts"])
 
         got = self._store_all(
             {**carries, "carry_txs": tx_keep, "applied_txs": new_applied},
@@ -960,25 +1066,17 @@ class TxDenormBatchProcessor:
                     {"hwm": new_hwm, "batch_id": batch_id}
                 ).encode()
             },
-            # the metric-only actions run alongside the state writes;
+            # the committed-tx count runs alongside the state writes;
             # emitted_txs' lineage reads the PRE-swap state files, so
-            # its count must finish before the flip — which it does
-            alongside={
-                "orders": lambda: order_events.agg(
-                    F.count(F.lit(1)).alias("n"), F.max("ts_ms").alias("max_ts")
-                ).first(),
-                "lines": line_events.count,
-                "committed": emitted_txs.count,
-            },
+            # it must finish before the flip — which it does
+            alongside={"committed": emitted_txs.count},
             before_commit=observe_intake,
         )
         self.metrics.observe_backlog(sum(o.get["n"] for o in backlog.values()))
         # committed txs = txs that cleared the emission barrier this
         # batch (NumberOfCommittedTransactions analog)
         self.metrics.observe_batch(
-            got["orders"]["n"] + got["lines"],
-            _time.time() - _batch_t0,
-            got["committed"],
+            n_events, _time.time() - _batch_t0, got["committed"]
         )
         # every write is done and nothing reads the pinned frames now
         self._unpin()

@@ -182,6 +182,187 @@ def test_two_batch_metrics_and_job_group(spark, tmp_path):
     }
 
 
+_STATE_FRAMES = (
+    "order_state", "line_state", "carry_orders", "carry_lines", "carry_txs", "applied_txs",
+)
+
+
+def _hash_exchanges(df) -> list[str]:
+    """The hash-partitioned shuffles of the physical plan that runs
+    ``df``: an adaptive plan contributes its current plan (the final one
+    once it ran), a query stage its plan and a cached scan the plan that
+    built its cache."""
+    found, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStageExec"):
+            todo.append(node.plan())
+            continue
+        if name == "InMemoryTableScanExec":
+            todo.append(node.relation().cachedPlan())
+        if name == "ShuffleExchangeExec":
+            part = node.outputPartitioning().toString()
+            if part.startswith("hashpartitioning"):
+                found.append(part)
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
+@pytest.fixture(scope="module")
+def narrow_and_wide_runs(spark, tmp_path_factory):
+    """One two-batch log through two processors: one sized as today's
+    tiny batches are (the one-partition plan), one with the advisory
+    partition size at 1 byte (the wide plan). Batch 0 holds tx B (its
+    line arrives in batch 1), so C is held and carried; batch 1 also
+    re-points line 11 from order 1 to order 2 and deletes order 3.
+    Each run records per batch its docs, metrics and the hash shuffles
+    of the emission and state-write plans (walked at commit time,
+    while the batch's caches are live), and the state after the run."""
+    log = TxLog()
+    log.tx(
+        lambda t: t.insert_order(1),
+        lambda t: t.insert_order(3),
+        lambda t: t.insert_line(10, 1, price="1.00"),
+        lambda t: t.insert_line(11, 1, price="2.00"),
+    )
+    log.tx(lambda t: t.insert_order(2), lambda t: t.insert_line(20, 2, price="3.00"))
+    cut = log.tx(lambda t: t.update_order(1, shipping_address="9 Elm St"))
+    log.tx(lambda t: t.update_line(11, order_id=2))
+    log.tx(lambda t: t.delete_order(3))
+    orders, lines, txs = (
+        log.order_events_df(spark),
+        log.line_events_df(spark),
+        log.tx_events_df(spark),
+    )
+    early = F.col("source.lsn") <= cut
+    late_line = F.col("after.id") == 20
+    batches = [
+        (orders.filter(early), lines.filter(early & ~late_line), txs),
+        (orders.filter(~early), lines.filter(~early | late_line), txs.limit(0)),
+    ]
+    advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+    def run(name, conf):
+        proc = TxDenormBatchProcessor(
+            spark, str(tmp_path_factory.mktemp(name) / "state"), n_buckets=4
+        )
+        shuffles: dict[str, list[str]] = {}
+        store_all = proc._store_all
+
+        def recording_store_all(frames, bucketed=None, *args, **kwargs):
+            writes = {**frames, **{k: df for k, (df, _) in (bucketed or {}).items()}}
+            writes["emissions"] = proc._prev_emissions
+            shuffles.update({k: _hash_exchanges(df) for k, df in writes.items()})
+            return store_all(frames, bucketed, *args, **kwargs)
+
+        proc._store_all = recording_store_all
+        out = []
+        old = spark.conf.get(advisory)
+        for key, value in conf.items():
+            spark.conf.set(key, value)
+        try:
+            for batch_id, batch in enumerate(batches):
+                docs = proc.process(*batch, batch_id=batch_id).collect()
+                snap = proc.metrics.snapshot()
+                metrics = {
+                    k: snap[k]
+                    for k in (
+                        "total_events_seen",
+                        "snapshot_rows_scanned",
+                        "committed_transactions",
+                        "backlog_rows",
+                    )
+                }
+                out.append({"docs": docs, "metrics": metrics, "shuffles": dict(shuffles)})
+        finally:
+            spark.conf.set(advisory, old)
+        state = {}
+        for frame in _STATE_FRAMES:
+            df = proc.read_state(frame)
+            state[frame] = None if df is None else sorted(map(repr, df.collect()))
+        return {"batches": out, "state": state, "dir": proc.state_dir}
+
+    return run("narrow", {}), run("wide", {advisory: "1"})
+
+
+def test_small_batch_runs_without_hash_shuffles(narrow_and_wide_runs):
+    """A small batch on a fresh store fits one advisory partition: its
+    emission and state-write plans contain no hash exchange, and every
+    touched bucket is written as one file. The same batch forced wide
+    shuffles — so the plan walk does see exchanges where they run."""
+    narrow, wide = narrow_and_wide_runs
+    first = narrow["batches"][0]["shuffles"]
+    assert set(first) == {*_STATE_FRAMES, "emissions"}
+    assert first == {name: [] for name in first}
+    assert any(wide["batches"][0]["shuffles"].values())
+    bucket_dirs = [
+        os.path.join(root, d)
+        for name in ("order_state", "line_state")
+        for root in [os.path.join(narrow["dir"], "v2", name)]
+        for d in os.listdir(root)
+        if d.startswith("_bucket=")
+    ]
+    assert bucket_dirs
+    for d in bucket_dirs:
+        assert len([f for f in os.listdir(d) if f.endswith(".parquet")]) == 1, d
+
+
+def test_one_partition_plan_matches_wide_plan(narrow_and_wide_runs):
+    """The one-partition plan and the wide plan give the same docs in
+    the same commit order (the contract orders by commit LSN only; rows
+    of one commit are compared as a set), the same committed state in
+    all six frames and the same metrics after each batch."""
+    narrow, wide = narrow_and_wide_runs
+    for n, w in zip(narrow["batches"], wide["batches"]):
+        assert [r["commit_lsn"] for r in n["docs"]] == [r["commit_lsn"] for r in w["docs"]]
+        assert sorted(map(repr, n["docs"])) == sorted(map(repr, w["docs"]))
+        assert n["metrics"] == w["metrics"]
+    assert narrow["state"] == wide["state"]
+    batch0, batch1 = narrow["batches"]
+    # A touches orders 1 and 3 in one commit; C is held behind B
+    assert sorted(r["order_key"] for r in batch0["docs"]) == [1, 3]
+    assert batch0["metrics"]["backlog_rows"] == 2  # B's order event, C's update
+    # B, C, the re-point (a doc of line 11's new order) and the delete
+    assert [r["order_key"] for r in batch1["docs"]] == [2, 1, 2, 3]
+    assert [[l["id"] for l in r["lines"]] for r in batch1["docs"][:3]] == [
+        [20], [10, 11], [11, 20]
+    ]
+    assert batch1["docs"][3]["deleted"]
+    assert batch1["metrics"]["backlog_rows"] == 0
+    assert narrow["state"]["carry_txs"] == []
+
+
+def test_unreadable_size_estimate_takes_the_wide_plan(spark, tmp_path, monkeypatch):
+    """The one-partition gate reads plan statistics through a private
+    JVM API. If that read raises, the size is unknown and the batch
+    keeps the wide plan; a readable small size fits."""
+    from py4j.protocol import Py4JError
+
+    from streaming_examples_spark.plans.inspect import plan_bytes
+
+    class StatsRaise:
+        def queryExecution(self):
+            raise Py4JError("plan statistics unavailable")
+
+    class Unsized:
+        _jdf = StatsRaise()
+
+    proc = TxDenormBatchProcessor(spark, str(tmp_path / "state"))
+    small = spark.range(1)  # an exact 8-byte estimate
+    assert proc._fits_one_partition((small,), (None,))
+    assert plan_bytes(Unsized()) is None
+    monkeypatch.setattr(
+        "streaming_examples_spark.streaming.cdc_stream.plan_bytes",
+        lambda df: plan_bytes(Unsized()),
+    )
+    assert not proc._fits_one_partition((small,), (None,))
+
+
 @pytest.mark.slow
 def test_failed_state_write_leaves_pointer_and_replays(spark, tmp_path, monkeypatch):
     """One state frame's write raising on its worker thread: process
