@@ -40,7 +40,8 @@ Durability order per batch:
      lineage) and built in one concurrent round of aggregates that
      also yields the event counts, the delivery-order offender count,
      the GC horizon's in-flight floor and the touched buckets. A batch
-     whose cached inputs and loaded state fit one advisory partition
+     whose cached inputs and loaded state (counted at its cached size)
+     fit one advisory partition
      (``spark.sql.adaptive.advisoryPartitionSizeInBytes``) is planned
      on one partition: no hash exchange, one task per stage, one file
      per written bucket; a larger batch keeps the wide plan;
@@ -98,6 +99,14 @@ from streaming_examples_spark.streaming.state_backend import (
 )
 
 _VERSION_DIR_RE = re.compile(r"v\d+")
+
+#: how many cached bytes one parquet byte of loaded state becomes: the
+#: one-partition gate counts the inputs by their cache and the state
+#: by its files, and adds them in cached bytes. Measured 2.9-3.1x on both
+#: state tables (SCALE_NOTES, "One-partition micro-batch: where the
+#: plans cross").
+_PARQUET_TO_CACHED = 3
+
 
 class TxDenormBatchProcessor:
     """The ``foreachBatch`` body, also usable standalone for replaying
@@ -651,24 +660,25 @@ class TxDenormBatchProcessor:
     ) -> bool:
         """Whether the batch fits ONE advisory partition
         (``spark.sql.adaptive.advisoryPartitionSizeInBytes``, the size
-        AQE itself coalesces shuffle partitions toward): the pinned
-        inputs' cached bytes, built by the intake round, plus the plan
-        statistics of the loaded frames. A size that cannot be read
-        counts as too large, which keeps the wide plan."""
+        AQE itself coalesces shuffle partitions toward), counted in
+        cached bytes: the pinned inputs' cache, built by the intake
+        round, plus the loaded frames' parquet bytes times
+        ``_PARQUET_TO_CACHED``. A size that cannot be read counts as
+        too large, which keeps the wide plan."""
         jvm = self.spark.sparkContext._jvm
         limit = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
             self.spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
         )
         # a fresh projection reads the cache's realized size: a frame
         # optimized before its cache was built keeps the earlier estimate
-        frames = [df.select("*") for df in pinned]
-        frames += [df for df in loaded if df is not None]
+        sized = [(df.select("*"), 1) for df in pinned]
+        sized += [(df, _PARQUET_TO_CACHED) for df in loaded if df is not None]
         total = 0
-        for df in frames:
+        for df, scale in sized:
             size = plan_bytes(df)
             if size is None:
                 return False
-            total += size
+            total += size * scale
         return total <= limit
 
     def process(
@@ -924,7 +934,12 @@ class TxDenormBatchProcessor:
         # advisory partition runs every leaf coalesced to one partition.
         # Each child then reports SinglePartition, so Spark plans the
         # whole batch with no hash exchange, one task per stage and one
-        # file per written bucket. A larger batch keeps the wide plan.
+        # file per written bucket. That holds on a non-fresh batch too:
+        # a union of one-partition children reports SinglePartition, so
+        # the carried and state unions here and in tx_denormalize need
+        # no exchange (a fast test pins both batch shapes under the
+        # session's 64 MiB broadcast threshold, see get_spark). A larger
+        # batch keeps the wide plan.
         if self._fits_one_partition(
             (order_events, line_events, tx_events),
             (applied, carry_txs, carry_orders, carry_lines, order_state, line_state),

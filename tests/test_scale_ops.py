@@ -42,6 +42,7 @@ def test_salted_join_matches_plain_join(spark, tables):
         F.col("c_custkey").alias("custkey"), "c_mktsegment"
     )
     # force the shuffle path so the salt actually spreads reducers
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         salted = salted_join(orders, customer, "custkey", n_salts=4)
@@ -54,7 +55,7 @@ def test_salted_join_matches_plain_join(spark, tables):
         explained = salted._jdf.queryExecution().executedPlan().toString()
         assert "__salt" in explained
     finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_salted_join_rejects_right_preserving_modes(spark, tables):

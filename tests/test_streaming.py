@@ -291,15 +291,20 @@ def narrow_and_wide_runs(spark, tmp_path_factory):
 
 
 def test_small_batch_runs_without_hash_shuffles(narrow_and_wide_runs):
-    """A small batch on a fresh store fits one advisory partition: its
-    emission and state-write plans contain no hash exchange, and every
-    touched bucket is written as one file. The same batch forced wide
-    shuffles — so the plan walk does see exchanges where they run."""
+    """A small batch fits one advisory partition: its emission and
+    state-write plans contain no hash exchange, and every touched
+    bucket is written as one file. Batch 0 runs on a fresh store;
+    batch 1 unions carried events, carried tx metadata and loaded state
+    buckets with its inputs, and stays on one partition too. The same
+    batches forced wide shuffle — so the plan walk does see exchanges
+    where they run. Runs under the session's joins (``get_spark``: a
+    64 MiB broadcast threshold); at Spark's 10 MiB default, batch 1's
+    emission plan keeps one hash exchange."""
     narrow, wide = narrow_and_wide_runs
-    first = narrow["batches"][0]["shuffles"]
-    assert set(first) == {*_STATE_FRAMES, "emissions"}
-    assert first == {name: [] for name in first}
-    assert any(wide["batches"][0]["shuffles"].values())
+    for n, w in zip(narrow["batches"], wide["batches"]):
+        assert set(n["shuffles"]) == {*_STATE_FRAMES, "emissions"}
+        assert n["shuffles"] == {name: [] for name in n["shuffles"]}
+        assert any(w["shuffles"].values())
     bucket_dirs = [
         os.path.join(root, d)
         for name in ("order_state", "line_state")
@@ -337,13 +342,33 @@ def test_one_partition_plan_matches_wide_plan(narrow_and_wide_runs):
     assert narrow["state"]["carry_txs"] == []
 
 
-def test_unreadable_size_estimate_takes_the_wide_plan(spark, tmp_path, monkeypatch):
-    """The one-partition gate reads plan statistics through a private
-    JVM API. If that read raises, the size is unknown and the batch
-    keeps the wide plan; a readable small size fits."""
+def test_one_partition_gate_sizing(spark, tmp_path, monkeypatch):
+    """The gate adds the inputs' cached bytes and the loaded state's
+    parquet bytes in one unit, a state file counting at
+    ``_PARQUET_TO_CACHED`` times its size. It reads plan statistics
+    through a private JVM API: if that read raises, the size is unknown
+    and the batch keeps the wide plan."""
     from py4j.protocol import Py4JError
 
     from streaming_examples_spark.plans.inspect import plan_bytes
+    from streaming_examples_spark.streaming.cdc_stream import _PARQUET_TO_CACHED
+
+    proc = TxDenormBatchProcessor(spark, str(tmp_path / "state"))
+    small = spark.range(1)  # an exact 8-byte estimate
+    assert proc._fits_one_partition((small,), (None,))
+
+    spark.range(1000).write.parquet(str(tmp_path / "state_files"))
+    state = spark.read.parquet(str(tmp_path / "state_files"))
+    disk = plan_bytes(state)
+    advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(advisory)
+    try:
+        spark.conf.set(advisory, str(_PARQUET_TO_CACHED * disk))
+        assert proc._fits_one_partition((), (state,))
+        spark.conf.set(advisory, str(_PARQUET_TO_CACHED * disk - 1))
+        assert not proc._fits_one_partition((), (state,))
+    finally:
+        spark.conf.set(advisory, old)
 
     class StatsRaise:
         def queryExecution(self):
@@ -352,9 +377,6 @@ def test_unreadable_size_estimate_takes_the_wide_plan(spark, tmp_path, monkeypat
     class Unsized:
         _jdf = StatsRaise()
 
-    proc = TxDenormBatchProcessor(spark, str(tmp_path / "state"))
-    small = spark.range(1)  # an exact 8-byte estimate
-    assert proc._fits_one_partition((small,), (None,))
     assert plan_bytes(Unsized()) is None
     monkeypatch.setattr(
         "streaming_examples_spark.streaming.cdc_stream.plan_bytes",
