@@ -107,9 +107,7 @@ def tx_denormalize(
     line_state: DataFrame | None = None,
     carryover_orders: DataFrame | None = None,
     carryover_lines: DataFrame | None = None,
-    schema: str = "public",
     dedup_events: bool | None = None,
-    persist_ends: bool = True,
     order_delete_gc_horizon_lsn: int | None = None,
 ) -> TxDenormResult:
     """Run the flagship pipeline over one batch of envelope events.
@@ -193,22 +191,12 @@ def tx_denormalize(
     # narrow MB, bounded by |txs in batch|) instead of paying it 4×
     # (measured: the whole pipeline drops from 2.26 s to 1.6 s warm).
     # Pinned below; cdc_stream / catalog.release() unpersist it.
-    #
-    # persist_ends=False is the GIANT-batch escape hatch (measured at
-    # 20 M txs / 70 M events, SCALE_NOTES.md "Flagship tx pipeline",
-    # round 7): a 20 M-row
-    # END cache evicts the heap the 20 M-key gate broadcasts need —
-    # the broadcast build OOMs at the default 16 g driver, and even at
-    # 48 g the cached run is 3× slower than recomputing the agg per
-    # consumer (379 s vs 122.8 s at 16 g uncached, which matches the
-    # r5 record). Micro-batches — the streaming operating point — keep
-    # the default True; backfill-scale callers (≥ ~10 M txs in ONE
-    # batch) pass False, or better, split the batch.
+    # Batch-sized: at ≥ ~10 M txs in ONE batch the END cache evicts the
+    # heap the gate broadcasts need (SCALE_NOTES.md "Flagship tx
+    # pipeline", round 7) — split such a batch.
     from streaming_examples_spark.operators.txgroup import tx_end_events
 
-    ends_full = tx_end_events(tx_events)
-    if persist_ends:
-        ends_full = ends_full.persist()
+    ends_full = tx_end_events(tx_events).persist()
     norm_o = stamp_commit_lsn(norm_o, ends=ends_full)
     norm_l = stamp_commit_lsn(norm_l, ends=ends_full)
 
@@ -267,12 +255,9 @@ def tx_denormalize(
     # flagship warm run 2.3 s → 1.5 s and the state-roll consumer
     # 2.5 s → 1.3 s at sf0.1 (r12). Size is O(batch events + carried
     # state) — the same order the state store itself materializes per
-    # batch; MEMORY_AND_DISK spills rather than OOMs. Gated on
-    # ``persist_ends`` so the giant-batch escape hatch (≥ ~10 M txs in
-    # one batch, see above) also skips this cache.
-    if persist_ends:
-        o_versions = o_versions.persist()
-        l_versions = l_versions.persist()
+    # batch; MEMORY_AND_DISK spills rather than OOMs.
+    o_versions = o_versions.persist()
+    l_versions = l_versions.persist()
 
     # -- 2. touched (order, tx) pairs: the emission contract ------------
     # gate the union once (one semi join) instead of reusing the
@@ -494,6 +479,5 @@ def tx_denormalize(
         carryover_orders=o_carry,
         carryover_lines=l_carry,
         emitted_txs=emit_txs,
-        pinned=(emit_txs, touched)
-        + ((ends_full, o_versions, l_versions) if persist_ends else ()),
+        pinned=(emit_txs, touched, ends_full, o_versions, l_versions),
     )

@@ -55,7 +55,8 @@ Durability order per batch:
      backlog is observed on the carry writes themselves);
   4. sidecars: the untouched buckets are carried and ``_parts.json``
      enumerates the version;
-  5. flip: one atomic pointer replace commits the version.
+  5. flip: one atomic pointer replace commits the version (3-5 run in
+     ``state_backend.commit_version``, the detector's commit too).
 Every state-backend call is made from the calling thread, in this
 order. A crash anywhere before the flip replays the batch against the
 old state and re-emits the same docs — duplicate output, never lost
@@ -93,12 +94,12 @@ from streaming_examples_spark.streaming.state_backend import (
     REBUILD_HINT,
     LocalPosixBackend,
     StateStorageBackend,
-    acquire_build,
     check_layout,
+    commit_version,
+    committed_version,
+    gc_versions,
     write_layout,
 )
-
-_VERSION_DIR_RE = re.compile(r"v\d+")
 
 #: how many cached bytes one parquet byte of loaded state becomes: the
 #: one-partition gate counts the inputs by their cache and the state
@@ -226,40 +227,6 @@ class TxDenormBatchProcessor:
     def _frame_path(self, name: str, version: int | None = None) -> str:
         return os.path.join(self._root(version), name)
 
-    def _gc_state_versions(self) -> None:
-        """Drop every version dir except CURRENT's, plus stray pointer
-        temps — the only garbage a crash can leave: a half-written
-        NEXT version (crash before the pointer flip; the batch replays
-        against the intact old version) or a fully-superseded OLD
-        version (crash after the flip, before cleanup). Runs at batch
-        start under the writer lock."""
-        cur_n = self._current_version()
-        cur = f"v{cur_n}"
-        for entry in os.listdir(self.state_dir):
-            full = os.path.join(self.state_dir, entry)
-            m = _VERSION_DIR_RE.fullmatch(entry)
-            if entry != cur and m and os.path.isdir(full):
-                if int(entry[1:]) > cur_n:
-                    # a version ABOVE the pointer is under construction
-                    # or crashed garbage: CLAIM it before touching it —
-                    # acquire_build raises on a live foreign builder's
-                    # claim (a second HOST mid-batch, invisible to the
-                    # advisory lock) and atomically takes over an
-                    # abandoned same-host one, so the GC can never race
-                    # a fresh claimer between a probe and the delete
-                    acquire_build(self.backend, full, self._writer_token)
-                    self.backend.remove_tree(full)
-                    self.backend.release_build(full)
-                else:
-                    # BELOW the pointer: a committed, superseded dir —
-                    # no live build possible; release-then-remove so a
-                    # crash between the two cannot strand a marker on
-                    # a dir no listing will ever surface again
-                    self.backend.release_build(full)
-                    self.backend.remove_tree(full)
-            elif entry.startswith("CURRENT."):
-                self.backend.remove_file(full)
-
     def _load(self, name: str) -> DataFrame | None:
         path = self._frame_path(name)
         if not os.path.exists(path):
@@ -343,10 +310,10 @@ class TxDenormBatchProcessor:
         silently miss it). Returns None for an absent/empty frame;
         raises on a dir that is not in this processor's sealed format."""
         self._check_layout()
-        path = self._frame_path(name)
-        cur = self._current_version()
+        cur = committed_version(self.backend, self.state_dir)
         if cur == 0:
-            return self._load(name)
+            return None
+        path = self._frame_path(name, cur)
         # bucketed frames enumerate from the committed sidecar (a GET)
         # — same lag-immunity as _load_buckets. A name outside the
         # enumeration is a PLAIN frame (Spark-written whole every
@@ -380,7 +347,9 @@ class TxDenormBatchProcessor:
         before_commit: Callable[[dict[str, object]], None] | None = None,
     ) -> dict[str, object]:
         """Write every new state frame under the NEXT version dir, then
-        commit the batch with ONE atomic pointer replace.
+        commit the batch with ONE atomic pointer replace, through the
+        stores' shared versioned commit (``state_backend.commit_version``:
+        claim, clear, prepare, write, validate, flip, release, retire).
 
         Order, after the caller's materialization and sink:
           1. seal a fresh dir, claim the version dir, publish the
@@ -395,7 +364,8 @@ class TxDenormBatchProcessor:
              raised and the pointer is never flipped;
           3. on the calling thread: ``before_commit(results)``, the
              untouched-bucket carry, ``_parts.json``, the build-claim
-             re-validation, the pointer flip and the cleanup.
+             re-validation, the pointer flip and the retirement of the
+             superseded version.
         Every backend call is made from the calling thread, in this
         order. Returns the ``alongside`` results by name.
 
@@ -425,92 +395,72 @@ class TxDenormBatchProcessor:
         bucketed = bucketed or {}
         alongside = alongside or {}
         cur = self._current_version()
-        new_root = self._root(cur + 1)
         # seal a fresh dir BEFORE its first write: every crash window
         # after this leaves a sealed dir whose garbage the next batch's
         # GC reclaims (an unsealed non-empty dir is refused)
         if not self._sealed:
             write_layout(self.backend, self.state_dir, {"n_buckets": self.n_buckets})
             self._sealed = True
-        # claim FIRST (conditional put; raises on a live foreign
-        # builder — two hosts can hold the per-filesystem advisory
-        # lock), THEN clear any crashed prior attempt's leftovers:
-        # probing before claiming would let a fresh foreign claim land
-        # in the gap and be blindly released (acquire_build docstring)
-        acquire_build(self.backend, new_root, self._writer_token)
-        self.backend.remove_tree(new_root)
-        self.backend.prepare_dir(new_root)
-        # scalar sidecars ride the same single commit point as the
-        # frames: written under the new version BEFORE the pointer
-        # flip, visible only once it lands
-        for name, data in (scalars or {}).items():
-            self.backend.publish_file(os.path.join(new_root, name), data)
-        tasks: dict[str, Callable[[], object]] = {}
-        for name, df in frames.items():
-            path = os.path.join(new_root, name)
-            self.backend.note_spark_write(path)
-            tasks[name] = functools.partial(
-                df.write.mode("overwrite").parquet, path
+
+        def build(new_root: str) -> dict[str, object]:
+            # scalar sidecars ride the same single commit point as the
+            # frames: written under the new version BEFORE the pointer
+            # flip, visible only once it lands
+            for name, data in (scalars or {}).items():
+                self.backend.publish_file(os.path.join(new_root, name), data)
+            tasks: dict[str, Callable[[], object]] = {}
+            for name, df in frames.items():
+                path = os.path.join(new_root, name)
+                self.backend.note_spark_write(path)
+                tasks[name] = functools.partial(
+                    df.write.mode("overwrite").parquet, path
+                )
+            for name, (df, _) in bucketed.items():
+                path = os.path.join(new_root, name)
+                self.backend.note_spark_write(path)
+                tasks[name] = functools.partial(self._write_bucketed, df, path)
+            results = self._run_concurrently({**tasks, **alongside})
+            got = {name: results[name] for name in alongside}
+            if before_commit is not None:
+                before_commit(got)
+            prev_frames = self._parts(cur)
+            new_parts: dict[str, list[str]] = {}
+            for name, (_, buckets) in bucketed.items():
+                new_path = os.path.join(new_root, name)
+                old_path = self._frame_path(name, cur)
+                touched = {f"_bucket={b}" for b in buckets}
+                # Carry enumeration source: the previous version's
+                # _parts.json sidecar (a GET, immune to list-after-write
+                # lag), never a bare backend listing. Per-part FILE
+                # listings remain backend listings: carried files are
+                # manifest-tracked (a GET — fresh); physical files were
+                # Spark-written one full batch ago, the scan-time-
+                # enumeration contract the SCOPE note documents.
+                carried = []
+                for part in prev_frames.get(name, []):
+                    if not part.startswith("_bucket=") or part in touched:
+                        continue
+                    src_dir = os.path.join(old_path, part)
+                    self.backend.prepare_dir(os.path.join(new_path, part))
+                    for f in self.backend.list_dir(src_dir):
+                        self.backend.carry_file(
+                            os.path.join(src_dir, f),
+                            os.path.join(new_path, part, f),
+                        )
+                    carried.append(part)
+                new_parts[name] = sorted(set(results[name]) | set(carried))
+            # published UNCONDITIONALLY: a version committed without
+            # bucketed frames still carries a sidecar — its truthful
+            # enumeration is empty — or the next reader would refuse it
+            self.backend.publish_file(
+                os.path.join(new_root, "_parts.json"),
+                json.dumps({"format": 2, "frames": new_parts}).encode(),
             )
-        for name, (df, _) in bucketed.items():
-            path = os.path.join(new_root, name)
-            self.backend.note_spark_write(path)
-            tasks[name] = functools.partial(self._write_bucketed, df, path)
-        results = self._run_concurrently({**tasks, **alongside})
-        got = {name: results[name] for name in alongside}
-        if before_commit is not None:
-            before_commit(got)
-        prev_frames = self._parts(cur)
-        new_parts: dict[str, list[str]] = {}
-        for name, (_, buckets) in bucketed.items():
-            new_path = os.path.join(new_root, name)
-            old_path = self._frame_path(name, cur)
-            touched = {f"_bucket={b}" for b in buckets}
-            # Carry enumeration source: the previous version's exact
-            # part enumeration — the _parts.json sidecar (a GET, immune
-            # to list-after-write lag), never a bare backend listing.
-            # Per-part FILE listings remain backend listings: carried
-            # files are manifest-tracked (the manifest half of list_dir
-            # is a GET — fresh); physical files were Spark-written one
-            # full batch ago, the scan-time-enumeration contract the
-            # SCOPE note documents (a production deployment puts this
-            # layout behind a Delta/Iceberg commit log instead).
-            carried = []
-            for part in prev_frames.get(name, []):
-                if not part.startswith("_bucket=") or part in touched:
-                    continue
-                src_dir = os.path.join(old_path, part)
-                self.backend.prepare_dir(os.path.join(new_path, part))
-                for f in self.backend.list_dir(src_dir):
-                    self.backend.carry_file(
-                        os.path.join(src_dir, f), os.path.join(new_path, part, f)
-                    )
-                carried.append(part)
-            new_parts[name] = sorted(set(results[name]) | set(carried))
-        # published UNCONDITIONALLY: a version committed without
-        # bucketed frames still carries a sidecar — its truthful
-        # enumeration is empty — or the next reader would refuse it
-        self.backend.publish_file(
-            os.path.join(new_root, "_parts.json"),
-            json.dumps({"format": 2, "frames": new_parts}).encode(),
+            return got
+
+        return commit_version(
+            self.backend, self.state_dir, cur + 1, self._writer_token, build
         )
-        # fencing re-validation: the build claim must still be ours —
-        # a missing/foreign marker means another writer GC'd and
-        # re-claimed this dir while we wrote; committing would publish
-        # interleaved (mixed-batch) state
-        self.backend.validate_build(new_root, self._writer_token)
-        # THE commit point: atomic + durable pointer flip (backend
-        # contract; locally a fsync'd temp + os.replace + dir fsync)
-        self.backend.commit_pointer(self.state_dir, cur + 1)
-        # the claim only fences construction; the committed dir is live
-        self.backend.release_build(new_root)
-        # post-commit cleanup; a crash here leaves garbage, GC'd next
-        # batch. Release the superseded dir's marker first — it can
-        # carry one leaked by a crash between ITS commit and release,
-        # and once the dir is gone no listing resurfaces it
-        self.backend.release_build(self._root(cur))
-        self.backend.remove_tree(self._root(cur))
-        return got
 
     def _write_bucketed(self, df: DataFrame, path: str) -> list[str]:
         """Write a bucketed state frame's rows under ``path``, partitioned
@@ -744,9 +694,10 @@ class TxDenormBatchProcessor:
         self._unpin()
         # validate the bucket layout, then drop any crash garbage
         # (half-written next version / superseded old version) BEFORE
-        # reading state, under the same writer lock
+        # reading state, under the same writer lock; a lost pointer
+        # raises here, before anything is reclaimed
         self._check_layout()
-        self._gc_state_versions()
+        gc_versions(self.backend, self.state_dir, self._writer_token)
         # -- idle micro-batch fast path: no new events AND no new tx
         # metadata means nothing can change — carried txs cannot
         # complete without events, the barrier cannot move, nothing

@@ -13,16 +13,17 @@ Design (all equi-joins, no pair space, state ∝ unique corpus):
     Only CANONICAL (non-duplicate) docs are stored, so state grows
     with unique content, not with stream length — re-crawled copies
     never inflate it.
-  * Every store commits through the same ``StateStorageBackend`` seam
-    as the tx state store (``state_backend.py``): each store's live
-    files sit under ``<store>/v<E>/`` and a per-store generation
-    pointer (``commit_pointer`` — POSIX rename flip or object-store
-    conditional put) names the committed epoch. Appends land in the
-    CURRENT epoch dir (Spark's write commit makes the files appear
-    whole); only COMPACTION bumps the epoch: the rewritten store is
-    fully written under ``v<E+1>`` before one pointer flip makes it
-    live, and the superseded epoch is removed through the backend
-    (deferred, reference-aware under a manifest backend). No
+  * Every store commits through the same versioned commit as the tx
+    state store (``state_backend.commit_version``/``gc_versions``):
+    each store's live files sit under ``<store>/v<E>/`` and a
+    per-store generation pointer (``commit_pointer`` — POSIX rename
+    flip or object-store conditional put) names the committed epoch.
+    Appends land in the CURRENT epoch dir (Spark's write commit makes
+    the files appear whole); only COMPACTION bumps the epoch: the
+    rewritten store is fully written under ``v<E+1>`` before one
+    pointer flip makes it live, and the superseded epoch is retired
+    through the backend (deferred, reference-aware under a manifest
+    backend) after the straggler fold. No
     ``os.rename`` directory swaps anywhere — this store is the one a
     100 TB deployment must host on object storage, so the commit
     protocol carries no POSIX assumption (proven by running the crash
@@ -87,6 +88,7 @@ dedup: TxAware...Operator.java:357-430) to the training-data domain.
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import re
@@ -111,6 +113,9 @@ from streaming_examples_spark.streaming.state_backend import (
     LocalPosixBackend,
     StateStorageBackend,
     check_layout,
+    commit_version,
+    committed_version,
+    gc_versions,
     write_layout,
 )
 
@@ -285,86 +290,20 @@ class IncrementalNearDup:
         return e, os.path.join(self._path(name), f"v{e}")
 
     def _gc_epochs(self) -> None:
-        """Remove epoch dirs the pointer no longer names: crash garbage
-        from a compaction that died before its cleanup (superseded
-        epoch) or after writing but before committing (orphan next
-        epoch). Runs under the writer lock; idempotent — the manifest
-        backend's remove_tree is deferred/reference-aware by design.
-
-        Refuses when the pointer reads 0 but epoch dirs ≥ v2 exist:
-        that state is only reachable by LOSING the pointer (a partial
-        restore, a deleted CURRENT/_pointer, a foreign backend reading
-        a flat pre-layout dir) — epochs ≥ 2 are created exclusively by
-        compaction, which requires a committed pointer first. Treating
-        them as orphans would GC the live store and silently re-admit
-        every known doc; a v1 with no pointer is the first-append
-        crash window (nothing was appended into it) and is reclaimed."""
+        """Reclaim every store's crash garbage under the writer lock
+        (``state_backend.gc_versions``), retiring a superseded epoch
+        with the straggler fold its compaction runs; a lost pointer
+        raises instead of silently re-admitting every known doc."""
         for name in (*_STORES, "band_hot"):
-            root = self._path(name)
-            if not self.backend.dir_exists(root):
-                continue
-            cur = self.backend.read_pointer(root)
-            epochs = [
-                int(m.group(1))
-                for entry in self.backend.list_dir(root)
-                if (m := re.fullmatch(r"v(\d+)", entry))
-            ]
-            if cur == 0 and any(e >= 2 for e in epochs):
-                raise ValueError(
-                    f"incremental-dedup store {root} holds epoch dirs "
-                    f"{sorted(epochs)} but no committed pointer — the "
-                    "pointer was lost (partial restore? wrong backend?). "
-                    "Refusing to GC: reclaiming these dirs would silently "
-                    "reset the dedup state. Restore the pointer to the "
-                    "store's true epoch, or rebuild the store."
-                )
-            for e in epochs:
-                if e != cur:
-                    stray = os.path.join(root, f"v{e}")
-                    if e > cur:
-                        # an epoch ABOVE the pointer is a compaction in
-                        # flight or its crash garbage: CLAIM it before
-                        # touching it — _acquire_build raises on a live
-                        # foreign builder (dual-host schedule) and
-                        # atomically takes over an abandoned same-host
-                        # claim, so this GC can never race a fresh
-                        # claimer between a probe and the delete
-                        self._acquire_build(stray)
-                        self.backend.remove_tree(stray)
-                        self.backend.release_build(stray)
-                    else:
-                        # BELOW the pointer: committed, superseded — no
-                        # live build possible. A compaction crash between
-                        # its pointer flip and its remove_tree lands the
-                        # dir HERE; re-run the straggler fold from the
-                        # persisted consumed manifest before reclaiming,
-                        # so concurrently-appended files are not lost
-                        # (band_hot holds summaries, never appends —
-                        # nothing to fold)
-                        if name != "band_hot":
-                            # best-effort: a torn/corrupt straggler file
-                            # (crash garbage is exactly what lands here)
-                            # must not wedge every subsequent locked op —
-                            # r10 reclaimed blind and made progress; warn
-                            # LOUDLY and degrade to that rather than
-                            # raising out of every future _gc_epochs
-                            try:
-                                self._fold_stragglers_from_manifest(name, e)
-                            except Exception as exc:  # noqa: BLE001
-                                import warnings
-
-                                warnings.warn(
-                                    f"GC-time straggler fold of {stray} "
-                                    f"failed ({exc!r}); reclaiming the "
-                                    "superseded epoch WITHOUT the fold — "
-                                    "unconsumed concurrent appends in it "
-                                    "(if any) are lost, the r10 behavior"
-                                )
-                        # release-then-remove so a crash between the two
-                        # cannot strand a marker on a dir no listing
-                        # will surface again
-                        self.backend.release_build(stray)
-                        self.backend.remove_tree(stray)
+            gc_versions(
+                self.backend,
+                self._path(name),
+                self._writer_token,
+                # band_hot holds summaries, never appends: nothing to fold
+                None if name == "band_hot" else functools.partial(
+                    self._gc_fold, name
+                ),
+            )
         # A crash between a compaction's pointer flip and its DROP TABLE
         # leaves the SUPERSEDED epoch's table registered in any session
         # that survives the crash (fresh sessions never see it — table
@@ -382,16 +321,23 @@ class IncrementalNearDup:
                     if m and int(m.group(1)) != cur:
                         self.spark.sql(f"DROP TABLE IF EXISTS {row.tableName}")
 
-    def _acquire_build(self, path: str) -> None:
-        """Claim-first acquisition of a build dir: raises on a live
-        remote-host claim; atomically takes over an abandoned
-        same-host one (state_backend.acquire_build — the claim CAS
-        runs BEFORE any probe, closing the probe-then-claim window)."""
-        from streaming_examples_spark.streaming.state_backend import (
-            acquire_build,
-        )
+    def _gc_fold(self, name: str, epoch: int) -> None:
+        """The GC's retirement hook for a superseded epoch: the
+        straggler fold, best-effort. A torn/corrupt straggler file
+        (crash garbage is exactly what lands here) must not wedge every
+        subsequent locked op — warn LOUDLY and reclaim without the fold
+        rather than raising out of every future ``_gc_epochs``."""
+        try:
+            self._fold_stragglers_from_manifest(name, epoch)
+        except Exception as exc:  # noqa: BLE001
+            import warnings
 
-        acquire_build(self.backend, path, self._writer_token)
+            warnings.warn(
+                f"GC-time straggler fold of {self._path(name)}/v{epoch} "
+                f"failed ({exc!r}); reclaiming the superseded epoch WITHOUT "
+                "the fold — unconsumed concurrent appends in it (if any) "
+                "are lost"
+            )
 
     def _buckets(self, name: str) -> int | None:
         # only the two corpus stores are bucketable; routing any other
@@ -557,7 +503,10 @@ class IncrementalNearDup:
         ``process_batch()`` can flip the epoch pointer and GC the
         directory it reads (``LocalPosixBackend`` removes immediately),
         failing the action. Run it to completion (or
-        ``localCheckpoint``) before letting a writer proceed."""
+        ``localCheckpoint``) before letting a writer proceed. Raises on
+        a lost pointer (``state_backend.committed_version``) instead of
+        reading the store as empty."""
+        committed_version(self.backend, self._path(name))
         return self._load_store(name)
 
     def _count_files(self, path: str) -> int:
@@ -1051,9 +1000,10 @@ class IncrementalNearDup:
         leaves the committed epoch untouched (pre-flip garbage and the
         superseded epoch are GC'd by ``_gc_epochs`` at the next locked
         operation). At 100 TB this is the compaction pass of any
-        LSM-ish table format, and the pointer flip is the same
-        conditional-put commit the tx store uses — no directory
-        renames, so the store hosts on object storage unchanged.
+        LSM-ish table format, and the build, flip and retirement are
+        the tx store's own (``state_backend.commit_version``) — no
+        directory renames, so the store hosts on object storage
+        unchanged.
 
         ``hot_bucket_threshold`` (bucketed stores only) is the 100 TB
         refinement: rewrite ONLY buckets holding more than that many
@@ -1105,82 +1055,55 @@ class IncrementalNearDup:
             cur = self._epoch(name)
             if cur == 0:
                 continue  # store never written
-            root = self._path(name)
-            cur_path = os.path.join(root, f"v{cur}")
-            nxt = cur + 1
-            nxt_path = os.path.join(root, f"v{nxt}")
-            if self._buckets(name):
-                if hot_bucket_threshold is not None:
-                    self._compact_hot_buckets(name, schema, hot_bucket_threshold)
-                    continue
-                # full rewrite, crash-atomic: the re-bucketed copy is
-                # durably complete under the NEXT epoch (its own table
-                # name) before the pointer flips; _gc_epochs cleared
-                # any garbage a previously crashed attempt left there
-                nxt_table = self._table(name, nxt)
-                # exclusive build claim FIRST (a second host compacting
-                # the same store loses the conditional put and raises
-                # instead of interleaving writes into this epoch dir),
-                # THEN clear crash garbage: claiming before deleting
-                # means a live remote builder's dir is never gutted
-                # while its claim survives, and a crashed claim whose
-                # dir never materialized (_gc_epochs only walks LISTED
-                # epoch dirs) is taken over atomically
-                self._acquire_build(nxt_path)
-                self.spark.sql(f"DROP TABLE IF EXISTS {nxt_table}")
-                self.backend.remove_tree(nxt_path)
+            buckets = self._buckets(name)
+            if buckets and hot_bucket_threshold is not None:
+                self._compact_hot_buckets(name, schema, hot_bucket_threshold)
+                continue
+
+            def write(path: str) -> None:
                 # the rewrite source is the store's own read path —
-                # Spark's file enumeration, fresh on every backend
-                # (a backend LIST here would run stale-SHORT under
+                # Spark's file enumeration, fresh on every backend (a
+                # backend LIST here would run stale-SHORT under
                 # list-after-write lag and silently drop just-appended
-                # rows from the rewrite). The consumed set is pinned
-                # from the frame's OWN inputFiles() snapshot (the
-                # _rebuild_hot pattern): that is exactly what the
-                # write consumes, and the straggler fold below diffs
-                # the post-flip listing against it
+                # rows from the rewrite). The consumed set is the
+                # frame's OWN inputFiles() snapshot: exactly what the
+                # write consumes, which the straggler fold diffs the
+                # superseded dir against
                 src = self._load_store(name)
                 consumed = _data_file_names(src.inputFiles())
-                self.backend.note_spark_write(nxt_path)  # lag-double hook
-                (
-                    src
-                    .dropDuplicates()  # heal any append-retry duplicates
-                    .write.mode("overwrite")
-                    .bucketBy(self._buckets(name), *cols)
-                    .sortBy(*cols)
-                    .option("path", nxt_path)
-                    .saveAsTable(nxt_table)
-                )
-                # the claim must still be ours right before the flip
-                self.backend.validate_build(nxt_path, self._writer_token)
-                self._write_consumed_manifest(nxt_path, cur, consumed)
-                self.backend.commit_pointer(root, nxt)
-                self.backend.release_build(nxt_path)
-                # metadata-only drop: the external table keeps its
-                # files; the epoch removal below reclaims them
-                self.spark.sql(f"DROP TABLE IF EXISTS {self._table(name, cur)}")
-                self._fold_stragglers(name, cur_path, consumed)
-                # release-then-remove: the superseded dir can carry a
-                # marker leaked by a crash between ITS commit and
-                # release; once the dir is gone no listing surfaces it
-                self.backend.release_build(cur_path)
-                self.backend.remove_tree(cur_path)
-                continue
-            # claim-then-clear, same reasoning as the bucketed branch
-            self._acquire_build(nxt_path)
-            self.backend.remove_tree(nxt_path)
-            frame = self._load_store(name)
-            consumed = _data_file_names(frame.inputFiles())
-            self.backend.note_spark_write(nxt_path)  # lag-double hook
-            frame.dropDuplicates().repartition(target_partitions).write.mode(
-                "overwrite"
-            ).parquet(nxt_path)
-            self.backend.validate_build(nxt_path, self._writer_token)
-            self._write_consumed_manifest(nxt_path, cur, consumed)
-            self.backend.commit_pointer(root, nxt)
-            self.backend.release_build(nxt_path)
-            self._fold_stragglers(name, cur_path, consumed)
-            self.backend.release_build(cur_path)
-            self.backend.remove_tree(cur_path)
+                self.backend.note_spark_write(path)  # lag-double hook
+                rows = src.dropDuplicates()  # heal append-retry duplicates
+                if buckets:
+                    # re-bucketed under the NEXT epoch's own table name;
+                    # a crashed attempt may have left it registered
+                    nxt_table = self._table(name, cur + 1)
+                    self.spark.sql(f"DROP TABLE IF EXISTS {nxt_table}")
+                    (
+                        rows.write.mode("overwrite")
+                        .bucketBy(buckets, *cols)
+                        .sortBy(*cols)
+                        .option("path", path)
+                        .saveAsTable(nxt_table)
+                    )
+                else:
+                    rows.repartition(target_partitions).write.mode(
+                        "overwrite"
+                    ).parquet(path)
+                self._write_consumed_manifest(path, cur, consumed)
+
+            def retire(old: int) -> None:
+                if buckets:
+                    # metadata-only drop: the external table keeps its
+                    # files; the epoch removal reclaims them
+                    self.spark.sql(
+                        f"DROP TABLE IF EXISTS {self._table(name, old)}"
+                    )
+                self._fold_stragglers_from_manifest(name, old)
+
+            commit_version(
+                self.backend, self._path(name), cur + 1, self._writer_token,
+                write, retire,
+            )
         self._rebuild_hot()
 
     def _store_data_files(self, name: str, epoch_path: str) -> list[str]:
@@ -1229,8 +1152,9 @@ class IncrementalNearDup:
         )
 
     def _fold_stragglers_from_manifest(self, name: str, stray_epoch: int) -> None:
-        """GC-time re-run of the straggler fold for a below-pointer
-        epoch dir (crash-recovery path). Reads the consumed manifest
+        """The straggler fold of a superseded epoch dir, run at its
+        retirement: by the compaction right after its flip, or by the
+        GC when a crash came in between. Reads the consumed manifest
         the compaction persisted in the CURRENT epoch dir; folds only
         when the manifest names exactly this superseded epoch —
         otherwise (pre-manifest store, or a stray older than cur-1,
@@ -1333,35 +1257,29 @@ class IncrementalNearDup:
         # summary — double-counted members, spurious virality,
         # permanently skipped probes (the unsafe direction).
         files = _data_file_names(store.inputFiles())
-        nxt = hot_cur + 1
-        nxt_path = os.path.join(hot_root, f"v{nxt}")
-        # claim-then-clear, same reasoning as _compact_locked
-        self._acquire_build(nxt_path)
-        self.backend.remove_tree(nxt_path)
-        self.backend.note_spark_write(nxt_path)  # lag-double hook
-        (
-            store
-            .groupBy("band_id", "band_key")
-            .agg(F.countDistinct("doc_id").cast("long").alias("n"))
-            .filter(F.col("n") >= 2)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(nxt_path)
+
+        def write(path: str) -> None:
+            self.backend.note_spark_write(path)  # lag-double hook
+            (
+                store
+                .groupBy("band_id", "band_key")
+                .agg(F.countDistinct("doc_id").cast("long").alias("n"))
+                .filter(F.col("n") >= 2)
+                .coalesce(1)
+                .write.mode("overwrite")
+                .parquet(path)
+            )
+            # Spark/pyarrow readers skip underscore-prefixed files: the
+            # manifest rides inside the epoch dir so one flip publishes
+            # both. publish_file/read_file keep the write/read seam
+            # symmetric across backends (r11 ADVICE).
+            self.backend.publish_file(
+                os.path.join(path, "_files.json"), json.dumps(files).encode()
+            )
+
+        commit_version(
+            self.backend, hot_root, hot_cur + 1, self._writer_token, write
         )
-        # Spark/pyarrow readers skip underscore-prefixed files: the
-        # manifest rides inside the epoch dir so one flip publishes
-        # both. publish_file/read_file keep the write/read seam
-        # symmetric across backends (r11 ADVICE).
-        self.backend.publish_file(
-            os.path.join(nxt_path, "_files.json"), json.dumps(files).encode()
-        )
-        self.backend.validate_build(nxt_path, self._writer_token)
-        self.backend.commit_pointer(hot_root, nxt)
-        self.backend.release_build(nxt_path)
-        if hot_cur:
-            old_hot = os.path.join(hot_root, f"v{hot_cur}")
-            self.backend.release_build(old_hot)
-            self.backend.remove_tree(old_hot)
 
     def _compact_hot_buckets(self, name: str, schema: str, threshold: int) -> None:
         """Merge every over-fragmented bucket's files, touching

@@ -1,8 +1,13 @@
-"""Storage seam and on-disk seal for the two state stores.
+"""Storage seam, versioned commit and on-disk seal for the two state
+stores.
 
-The pointer-commit protocol in ``cdc_stream._store_all`` (write all
-frames under the NEXT version dir, carry untouched bucket files over,
-flip one pointer atomically, GC superseded versions) is storage-
+Both stores (the tx store in ``cdc_stream.py``, the near-dup detector
+in ``incremental_dedup.py``) commit through one versioned protocol
+defined here: :func:`commit_version` builds the NEXT version dir under
+a pointer root (claim, clear, prepare, the caller's writes, validate
+the claim, flip one pointer atomically, release, retire the superseded
+version) and :func:`gc_versions` reclaims every version the pointer
+does not name, refusing a lost pointer. The protocol is storage-
 agnostic, but its primitives are not: the shipped implementation is
 POSIX (hardlink carry, ``os.replace`` flip, directory fsync). This
 module isolates those primitives behind ``StateStorageBackend``
@@ -32,16 +37,16 @@ manifest entry referencing the original physical file, commit is a
 conditional-put emulation (exclusive create of a monotonically
 numbered generation object), and remove_tree is a DEFERRED prefix
 delete that retains any file still referenced from the committed
-version's manifests. The crash-injection suite runs parameterized
-over both (tests/test_state_backend.py), which is what proves the
-protocol itself — reads resolve through ``read_locations`` and carry
+version's manifests. The crash-injection suites of both stores run
+parameterized over both (tests/test_state_backend.py,
+tests/test_incremental_dedup.py), which is what proves the protocol
+itself — reads resolve through ``read_locations`` and carry
 listings through ``list_dir``, never by assuming the physical tree is
 the logical content.
 
-One on-disk format per store: both stores (the tx store in
-``cdc_stream.py``, the near-dup store in ``incremental_dedup.py``)
-seal their state dir with ``_layout.json`` =
-``{"format": 1, "backend": <layout_id>, <bucket fields>}`` through
+One on-disk format per store: both stores seal their state dir with
+``_layout.json`` = ``{"format": 1, "backend": <layout_id>, <bucket
+fields>}`` through
 :func:`write_layout` before their first write, and validate it with
 :func:`check_layout` on every open. A dir that is absent or holds only
 the writer lock is fresh; anything else without a readable format-1
@@ -61,8 +66,13 @@ from __future__ import annotations
 import errno
 import json
 import os
+import re
 import shutil
 import time
+from collections.abc import Callable
+from typing import TypeVar
+
+T = TypeVar("T")
 
 # errnos meaning "this filesystem cannot hardlink src→dst" (cross-
 # device bind mounts, some network/container filesystems); anything
@@ -541,6 +551,138 @@ def acquire_build(
     # CAS and the read) — one more conditional put, losable only to a
     # genuinely concurrent claimer, which must stay loud
     backend.claim_build(path, own_token)
+
+
+# -- the versioned commit, shared by both stores ----------------------------
+# A pointer root (the tx state dir; each detector store root) holds
+# version dirs ``v<N>`` and one committed pointer naming the live N:
+# :func:`commit_version` builds and commits the next N, and every
+# version the pointer does not name is garbage for :func:`gc_versions`.
+
+_VERSION_DIR = re.compile(r"v(\d+)")
+
+
+def _versions(root: str, entries: list[str], cur: int) -> list[int]:
+    """The version numbers among ``entries`` (a listing of ``root``).
+    Raises ``ValueError`` on a LOST pointer: pointer 0 beside a ``v≥2``
+    (a partial restore, a deleted CURRENT/_pointer) — ``v2`` is built
+    only once ``v1`` has committed, and reading such a root as fresh or
+    reclaiming its dirs would silently reset the store. A ``v1`` beside
+    pointer 0 is the first build's crash window."""
+    versions = sorted(
+        int(m.group(1)) for e in entries if (m := _VERSION_DIR.fullmatch(e))
+    )
+    lost = [f"v{v}" for v in versions if v >= 2] if cur == 0 else []
+    if lost:
+        raise ValueError(
+            f"state store {root} holds committed version dirs {lost} but no "
+            "committed pointer: the pointer was lost (a partial restore or a "
+            "deleted CURRENT/_pointer), and reading or reclaiming the dirs "
+            "would silently reset the store. Restore the pointer to the "
+            f"store's true version, or {REBUILD_HINT}"
+        )
+    return versions
+
+
+def committed_version(backend: "StateStorageBackend", root: str) -> int:
+    """The version ``root``'s pointer commits, 0 before the first
+    commit; raises on a lost pointer (:func:`_versions`), the readers'
+    half of the check :func:`gc_versions` makes before it reclaims."""
+    cur = backend.read_pointer(root)
+    if cur == 0 and backend.dir_exists(root):
+        _versions(root, backend.list_dir(root), cur)
+    return cur
+
+
+def _retire_version(
+    backend: "StateStorageBackend",
+    root: str,
+    version: int,
+    retire: Callable[[int], None] | None = None,
+) -> None:
+    """Remove the superseded ``v<version>``: the caller's
+    ``retire(version)`` hook (work that must see the dir before it
+    goes), then release-then-remove — the dir can carry a marker
+    leaked by a crash between its own commit and release, and once the
+    dir is gone no listing surfaces it again."""
+    if retire is not None:
+        retire(version)
+    path = os.path.join(root, f"v{version}")
+    backend.release_build(path)
+    backend.remove_tree(path)
+
+
+def commit_version(
+    backend: "StateStorageBackend",
+    root: str,
+    version: int,
+    owner: str,
+    write: Callable[[str], T],
+    retire: Callable[[int], None] | None = None,
+) -> T:
+    """Build ``v<version>`` (the committed version + 1) under ``root``
+    and commit it with one pointer flip; returns ``write(path)``.
+    Callers hold the writer lock.
+
+      1. claim the dir FIRST (:func:`acquire_build`), THEN clear a
+         crashed attempt's leftovers — probing before claiming would
+         let a fresh foreign claim land in the gap and be blindly
+         released — and prepare the dir;
+      2. ``write(path)``: the caller's frames and sidecars;
+      3. re-validate the claim (a missing or foreign marker means
+         another writer GC'd and re-claimed the dir mid-build:
+         committing would publish interleaved writes), flip the
+         pointer — THE commit point — and release the claim, which
+         only fences construction;
+      4. retire ``v<version-1>`` (:func:`_retire_version`; a no-op
+         removal of the absent ``v0`` after a store's first build).
+
+    A crash before the flip leaves the old version committed and the
+    half-built dir to :func:`gc_versions`; a crash after it leaves the
+    superseded dir, which the GC retires with the same hook."""
+    path = os.path.join(root, f"v{version}")
+    acquire_build(backend, path, owner)
+    backend.remove_tree(path)
+    backend.prepare_dir(path)
+    result = write(path)
+    backend.validate_build(path, owner)
+    backend.commit_pointer(root, version)
+    backend.release_build(path)
+    _retire_version(backend, root, version - 1, retire)
+    return result
+
+
+def gc_versions(
+    backend: "StateStorageBackend",
+    root: str,
+    owner: str,
+    retire: Callable[[int], None] | None = None,
+) -> None:
+    """One GC sweep of the pointer root ``root``, under the writer
+    lock; refuses a lost pointer before touching anything. A version
+    ABOVE the pointer (a build that died before its flip) is CLAIMED
+    before it is removed — :func:`acquire_build` raises on a live
+    foreign builder and takes over an abandoned same-host claim, so
+    the sweep never races a fresh claimer between a probe and the
+    delete. A version BELOW it (a build that died before its
+    retirement) is retired with the caller's ``retire`` hook. POSIX
+    ``CURRENT.<n>`` pointer temps are removed. A lagging listing only
+    defers a removal to a later sweep."""
+    if not backend.dir_exists(root):
+        return
+    cur = backend.read_pointer(root)
+    entries = backend.list_dir(root)
+    for v in _versions(root, entries, cur):
+        if v > cur:
+            path = os.path.join(root, f"v{v}")
+            acquire_build(backend, path, owner)
+            backend.remove_tree(path)
+            backend.release_build(path)
+        elif v < cur:
+            _retire_version(backend, root, v, retire)
+    for e in entries:
+        if e.startswith("CURRENT."):
+            backend.remove_file(os.path.join(root, e))
 
 
 class LocalPosixBackend(_ExclusiveCreateBuildMarkers, StateStorageBackend):

@@ -382,7 +382,8 @@ def test_compact_crash_after_commit_gcs_stray_epoch(spark, tmp_path, backend_cls
     """Dying AFTER the pointer flip but before the superseded epoch's
     removal leaves a stray epoch dir: the new state is live (verdicts
     from the compacted store), and the next locked operation's GC
-    reclaims the stray."""
+    reclaims the stray — and a POSIX pointer temp (``CURRENT.<n>``, a
+    crash inside the pointer flip) in any store root."""
     import os
 
     from streaming_examples_spark.streaming.incremental_dedup import IncrementalNearDup
@@ -411,6 +412,9 @@ def test_compact_crash_after_commit_gcs_stray_epoch(spark, tmp_path, backend_cls
         )
         with pytest.raises(RuntimeError, match="injected crash"):
             det.compact()
+        temp = os.path.join(str(tmp_path / "state"), "bands", "CURRENT.9")
+        with open(temp, "w") as fh:
+            fh.write("9")
 
         fresh = IncrementalNearDup(
             spark, str(tmp_path / "state"), threshold=0.5, bands_buckets=4,
@@ -418,6 +422,7 @@ def test_compact_crash_after_commit_gcs_stray_epoch(spark, tmp_path, backend_cls
         )
         r = {x["doc_id"]: x for x in fresh.process_batch(_docs(spark, [(3, NEAR)]), 1).collect()}
         assert r[3]["is_dup"] and r[3]["dup_of"] == 1
+        assert not os.path.exists(temp)
         # the batch's GC pass reclaimed every non-current epoch dir
         for n in ("sigs", "bands", "band_hot"):
             root = os.path.join(str(tmp_path / "state"), n)
@@ -453,6 +458,9 @@ def test_lost_pointer_refused_not_gcd(spark, tmp_path):
     fresh = IncrementalNearDup(spark, state, threshold=0.5)
     with pytest.raises(ValueError, match="no committed pointer"):
         fresh.process_batch(_docs(spark, [(3, NEAR)]), 1)
+    # the public reader refuses too, instead of an empty store
+    with pytest.raises(ValueError, match="no committed pointer"):
+        fresh.read_store("sigs")
     # the refusal destroyed nothing: restore the pointer and resume
     with open(os.path.join(state, "sigs", "CURRENT"), "w") as fh:
         fh.write("2")

@@ -1239,6 +1239,12 @@ def _write_json(state, stem, data):
         json.dump(data, fh)
 
 
+def _lose_pointer(state):
+    """A committed v2 with no pointer: what a partial restore leaves."""
+    os.rename(os.path.join(state, "v1"), os.path.join(state, "v2"))
+    os.remove(os.path.join(state, "CURRENT"))
+
+
 # every on-disk shape an earlier layout left behind, besides the
 # per-frame root dirs of test_legacy_per_frame_state_dir_refused_not_reset:
 # (fresh dir?, reshape)
@@ -1258,6 +1264,7 @@ _RETIRED_TX_SHAPES = {
     "no-parts-sidecar": (False, lambda st: os.remove(
         os.path.join(st, "v1", "_parts.json")
     )),
+    "lost-pointer": (False, _lose_pointer),
 }
 
 

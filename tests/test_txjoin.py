@@ -597,32 +597,3 @@ def test_dedup_gating_auto_on_with_carryover(spark):
     for res in (res1, res2):
         for frame in res.pinned:
             frame.unpersist()
-
-
-def test_persist_ends_off_is_result_identical(spark):
-    """persist_ends=False (the giant-batch escape hatch: a huge END
-    cache evicts the heap the gate broadcasts need) must change ONLY
-    the caching strategy — emissions and carry frames identical."""
-    log = TxLog()
-    log.tx(
-        lambda t: t.insert_order(10001),
-        lambda t: t.insert_line(100001, 10001, price="19.99"),
-    )
-    log.tx(lambda t: t.update_order(10001, shipping_address="2 Oak Ave"))
-    o, l, x = (
-        log.order_events_df(spark),
-        log.line_events_df(spark),
-        log.tx_events_df(spark),
-    )
-    res_on = tx_denormalize(o, l, x)
-    res_off = tx_denormalize(o, l, x, persist_ends=False)
-    rows_on = sorted(tuple(r) for r in res_on.emissions.collect())
-    rows_off = sorted(tuple(r) for r in res_off.emissions.collect())
-    assert rows_on == rows_off and len(rows_on) == 2
-    # the unpinned variant must not leave the END frame in storage
-    # r12: persist_ends also gates the version-pool persists, so the
-    # pinned tuple is (emit, touched) off vs (+ends, o/l versions) on
-    assert len(res_off.pinned) == 2 and len(res_on.pinned) == 5
-    for res in (res_on, res_off):
-        for f in res.pinned:
-            f.unpersist()
