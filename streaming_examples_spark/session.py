@@ -81,15 +81,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # -- scan sizing -----------------------------------------------------
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # -- bucketed scans --------------------------------------------------
-        # let a SORTED BY bucketed table report its ordering so the
-        # sort-merge probe into a compacted state store (one file per
-        # bucket) skips the store-side sort. Despite the "legacy" name
-        # the modern implementation is correctness-guarded: ordering is
-        # only claimed when every selected bucket has at most one file
-        # (SPARK-28595), so multi-file (pre-compaction) buckets still
-        # sort. Plan-asserted in tests/test_plans.py.
-        .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         # -- testdata parquet has shipped TIMESTAMP(NANOS) (read as long,
         #    decoded in tables.load_table) and TIMESTAMP(MICROS) without
         #    isAdjustedToUTC (would infer as TIMESTAMP_NTZ; forced to

@@ -1,7 +1,7 @@
 """SQL entry point — parity with the reference's Flink SQL surface.
 
-The reference's ingest jobs are SQL DDL + queries (`CREATE TABLE …
-WITH ('connector'…)` then `SELECT …` — SURVEY.md §3.1). The Spark
+The reference's ingest jobs are SQL DDL + queries (a table DDL
+`… WITH ('connector'…)`, then `SELECT …` — SURVEY.md §3.1). The Spark
 analog: register a CDC envelope frame once and get the three
 changelog-mode views plus the stateful UDTF, all queryable with
 ``spark.sql``:

@@ -49,30 +49,21 @@ Design (all equi-joins, no pair space, state ∝ unique corpus):
     per-batch store scan (see the viral-cap section below, ~4-5 %
     measured premium).
 
-At 100 TB pass ``bands_buckets=N``: BOTH stores become EXTERNAL
-BUCKETED tables — ``bands`` on (band_id, band_key), ``sigs`` on
-doc_id — so every per-batch store join (replay anti-join, band probe,
-signature verify) shuffles only the (small) batch side to the bucket
-count; the corpus-sized stores are read in place, never shuffled
-(plan-asserted in tests/test_plans.py). The append-only layout is
-bucket-compatible (each batch appends one file set per bucket;
-``compact`` restores one file per bucket), and a restart re-registers
-the tables over the existing files — bucket ids live in the file
-names, so a fresh session's catalog recovers full bucket-awareness
-from DDL alone. The default (None) keeps plain append-only parquet
-for warehouse-free tests.
+One layout: both stores are plain parquet. Only two things write a
+store — appends into the current epoch, and ``commit_version`` builds
+(a full compaction, the ``band_hot`` summary).
 
 One on-disk format: the state dir is sealed with ``_layout.json`` =
-``{"format": 1, "backend": ..., "bands_buckets": ..., "sigs_buckets":
-...}`` before the first append and validated at init
-(``state_backend.check_layout``). Re-opening with a different bucket
-count would silently hash probes into the wrong buckets (permanent
-recall loss), a different backend would read no committed epoch and
-reclaim live files, and any other on-disk shape (a dir without the
-seal, an older seal) cannot be validated — all raise ``ValueError``
-instead of reading the store as empty. To recover, rebuild the state
-dir from the event log: move it aside and replay the source from its
-start into an empty dir.
+``{"format": 1, "backend": ..., "bands_buckets": null, "sigs_buckets":
+null}`` before the first append and validated at init
+(``state_backend.check_layout``). A different backend would read no
+committed epoch and reclaim live files, a dir sealed with a bucket
+count holds a bucketed-table layout this module no longer reads
+(SCALE_NOTES.md, "Bucketed layout retired"), and any other on-disk shape
+(a dir without the seal, an older seal) cannot be validated — all
+raise ``ValueError`` instead of reading the store as empty. To
+recover, rebuild the state dir from the event log: move it aside and
+replay the source from its start into an empty dir.
 
 Single-writer contract: ``process_batch`` and ``compact`` take an
 advisory writer lock on the state dir (``_writer.lock``) — running
@@ -91,7 +82,6 @@ import contextlib
 import functools
 import json
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -123,20 +113,15 @@ _SIG_SCHEMA = "doc_id long, sig array<long>"
 _BAND_SCHEMA = "band_id int, band_key string, doc_id long"
 
 
-_STORES = {
-    "sigs": (_SIG_SCHEMA, ("doc_id",), "(doc_id BIGINT, sig ARRAY<BIGINT>)"),
-    "bands": (
-        _BAND_SCHEMA,
-        ("band_id", "band_key"),
-        "(band_id INT, band_key STRING, doc_id BIGINT)",
-    ),
-}
+_STORES = {"sigs": _SIG_SCHEMA, "bands": _BAND_SCHEMA}
 
-#: Spark bucketed data files carry their bucket id in the name
-#: (``part-00007-<uuid>_00003.c000.snappy.parquet`` → bucket 3); the
-#: per-bucket compactor groups files by this, the same convention the
-#: scan uses to map files to buckets.
-_BUCKET_ID_RE = re.compile(r"_(\d+)\.c\d+")
+#: data files per store after a full compaction
+_COMPACT_PARTITIONS = 4
+
+#: the ``_layout.json`` seal fields: the detector writes plain stores
+#: only, so a dir sealed with a bucket count (the retired bucketed
+#: layout) fails ``check_layout``
+_LAYOUT = {"bands_buckets": None, "sigs_buckets": None}
 
 
 def _data_file_names(uris) -> list[str]:
@@ -184,8 +169,6 @@ class IncrementalNearDup:
         n_perms: int = LSH_BANDS * LSH_ROWS,
         text_col: str = "text",
         id_col: str = "doc_id",
-        bands_buckets: int | None = None,
-        sigs_buckets: int | None = None,
         max_bucket_size: int | None = 256,
         cap_cache_max_keys: int = 5_000_000,
         backend: StateStorageBackend | None = None,
@@ -202,16 +185,6 @@ class IncrementalNearDup:
         self.n_perms = n_perms
         self.text_col = text_col
         self.id_col = id_col
-        #: the 100 TB layout the module docstring promises: both stores
-        #: as EXTERNAL BUCKETED tables (bands on (band_id, band_key),
-        #: sigs on doc_id), so every per-batch store join shuffles only
-        #: the (small) batch side — the corpus-sized stores are read in
-        #: place, never shuffled (Exchange elided; plan-asserted in
-        #: tests/test_plans.py). None keeps plain append-only parquet
-        #: (the no-warehouse test default). ``sigs_buckets`` defaults to
-        #: ``bands_buckets`` — one dial covers both stores.
-        self.bands_buckets = bands_buckets
-        self.sigs_buckets = sigs_buckets if sigs_buckets is not None else bands_buckets
         #: viral-band guard, same measured default as the batch LSH
         #: family (``operators/dedup.py:_cap_buckets`` / SCALE_NOTES
         #: recall-vs-cap table): keys whose combined store+batch
@@ -242,18 +215,8 @@ class IncrementalNearDup:
 
         self._writer_token = owner_token()
         self._reset_cap_cache()
-        if self.bands_buckets or self.sigs_buckets:
-            import hashlib
-
-            tag = hashlib.md5(os.path.abspath(state_dir).encode()).hexdigest()[:12]
-            self._bands_table = "incdedup_bands_" + tag
-            self._sigs_table = "incdedup_sigs_" + tag
-        self._layout = {
-            "bands_buckets": self.bands_buckets,
-            "sigs_buckets": self.sigs_buckets,
-        }
         # a fresh dir is sealed by its first append (_append_store)
-        self._sealed = check_layout(self.backend, state_dir, self._layout)
+        self._sealed = check_layout(self.backend, state_dir, _LAYOUT)
 
     # -- state layout ---------------------------------------------------
     # Each store (bands, sigs, band_hot) is its own pointer-committed
@@ -304,22 +267,6 @@ class IncrementalNearDup:
                     self._gc_fold, name
                 ),
             )
-        # A crash between a compaction's pointer flip and its DROP TABLE
-        # leaves the SUPERSEDED epoch's table registered in any session
-        # that survives the crash (fresh sessions never see it — table
-        # names are epoch-versioned). The dirs those registrations point
-        # at were just reclaimed above, so re-drop every registered
-        # epoch-version that is not the committed one.
-        if self.bands_buckets or self.sigs_buckets:
-            for name in _STORES:
-                if not self._buckets(name):
-                    continue
-                base = self._bands_table if name == "bands" else self._sigs_table
-                cur = self._epoch(name)
-                for row in self.spark.sql(f"SHOW TABLES LIKE '{base}_v*'").collect():
-                    m = re.fullmatch(re.escape(base) + r"_v(\d+)", row.tableName)
-                    if m and int(m.group(1)) != cur:
-                        self.spark.sql(f"DROP TABLE IF EXISTS {row.tableName}")
 
     def _gc_fold(self, name: str, epoch: int) -> None:
         """The GC's retirement hook for a superseded epoch: the
@@ -338,58 +285,6 @@ class IncrementalNearDup:
                 "the fold — unconsumed concurrent appends in it (if any) "
                 "are lost"
             )
-
-    def _buckets(self, name: str) -> int | None:
-        # only the two corpus stores are bucketable; routing any other
-        # name (e.g. 'band_hot', a valid STORE name) to the sigs config
-        # would silently hand back the wrong store's table
-        if name not in _STORES:
-            raise ValueError(
-                f"store {name!r} has no bucket configuration; bucketed "
-                f"stores are {tuple(_STORES)}"
-            )
-        return self.bands_buckets if name == "bands" else self.sigs_buckets
-
-    def _table(self, name: str, epoch: int | None = None) -> str:
-        """External-table name for a store epoch. Epoch-versioned: a
-        compaction registers the NEW epoch under a new name and drops
-        the old one after the pointer flip, so no location check (or
-        mid-query table mutation) is ever needed."""
-        if name not in _STORES:
-            raise ValueError(
-                f"store {name!r} is not a bucketed store "
-                f"({tuple(_STORES)}); it has no registered table"
-            )
-        base = self._bands_table if name == "bands" else self._sigs_table
-        e = self._epoch(name) if epoch is None else epoch
-        return f"{base}_v{e}"
-
-    def store_table(self, name: str) -> str:
-        """Public: the registered table name of a bucketed store's
-        current epoch (plan tests / operational inspection); raises
-        (instead of returning a never-created ``_v0`` name) while the
-        store has no committed epoch.
-
-        UNLOCKED reader: the name (and the directory behind it) is only
-        stable while no ``compact()``/``process_batch()`` runs — a
-        concurrent compaction flips the pointer and GCs the epoch this
-        name resolves to, failing a query planned against it. Hold off
-        writers, or snapshot via ``read_store()`` + ``localCheckpoint``
-        when you need the content to outlive a compaction."""
-        if not self._buckets(name):
-            raise ValueError(
-                f"store {name!r} is plain parquet (no bucket count declared); "
-                "only bucketed stores register a table — read it with "
-                "read_store() instead"
-            )
-        e = self._epoch(name)
-        if e == 0:
-            raise ValueError(
-                f"store {name!r} has no committed epoch yet (nothing has "
-                "been appended); there is no table to read."
-            )
-        self._ensure_table(name, e)
-        return self._table(name, e)
 
     # -- single-writer mutual exclusion ---------------------------------
     def _lock_path(self) -> str:
@@ -434,64 +329,28 @@ class IncrementalNearDup:
             yield
 
     # -- state I/O ------------------------------------------------------
-    def _ensure_table(self, name: str, epoch: int | None = None) -> None:
-        """Re-register the external bucketed table after a restart: a
-        fresh session's catalog doesn't know it, but the bucket ids
-        live in the file names, so DDL over the existing epoch dir
-        restores a fully bucket-aware table."""
-        if not self._buckets(name):
-            return
-        e = self._epoch(name) if epoch is None else epoch
-        if self.spark.catalog.tableExists(self._table(name, e)):
-            return
-        path = self._data_path(name, e)
-        # pointer ≥ 1 (a GET) already witnesses the epoch dir: gating
-        # the DDL on a LIST-backed dir_exists would skip registration
-        # inside a list-after-write lag window and silently read the
-        # store as empty (same bug class as _load_store's direct read)
-        if path is not None:
-            _, cols, ddl_cols = _STORES[name]
-            key_list = ", ".join(cols)
-            self.spark.sql(
-                f"CREATE TABLE {self._table(name, e)} {ddl_cols} USING parquet "
-                f"CLUSTERED BY ({key_list}) SORTED BY ({key_list}) "
-                f"INTO {self._buckets(name)} BUCKETS "
-                f"LOCATION '{path}'"
-            )
-
     def _load_store(self, name: str) -> DataFrame:
         """Missing store -> empty frame (first batch). A store that
         EXISTS but fails to read must raise: swallowing a corrupted
         parquet would silently reset the dedup state (every known doc
-        re-admitted as canonical). The epoch is resolved ONCE per call
-        and threaded through — a per-helper pointer read would be
-        needlessly chatty on an object store, and an unlocked reader
-        could otherwise straddle a concurrent epoch flip (table name
-        from one epoch validated against another)."""
-        schema = _STORES[name][0]
-        e = self._epoch(name)
-        if not self._buckets(name):
-            path = self._data_path(name, e)
-            if path is None:
-                return self.spark.createDataFrame([], schema)
-            # The committed pointer (an object GET) is the existence
-            # witness: prepare_dir ran before the pointer committed, so
-            # the epoch dir is real. Do NOT gate this read on a
-            # LIST-backed probe or enumerate the files through the
-            # backend listing — list-after-write lag serves a stale
-            # view of a dir Spark just appended into, and an empty
-            # read here silently re-admits every known doc (found by
-            # running this suite under LaggedManifestBackend: batch
-            # N+1 read batch N's store as absent). Spark enumerates
-            # the data files itself; detector stores never receive
-            # carried (manifest-referenced) files — appends and
-            # rewrites both land physical files — so the dir IS the
-            # content on every backend.
-            return self.spark.read.schema(schema).parquet(path)
-        self._ensure_table(name, e)
-        if self.spark.catalog.tableExists(self._table(name, e)):
-            return self.spark.table(self._table(name, e))
-        return self.spark.createDataFrame([], schema)
+        re-admitted as canonical)."""
+        schema = _STORES[name]
+        path = self._data_path(name)
+        if path is None:
+            return self.spark.createDataFrame([], schema)
+        # The committed pointer (an object GET) is the existence
+        # witness: prepare_dir ran before the pointer committed, so the
+        # epoch dir is real. Do NOT gate this read on a LIST-backed
+        # probe or enumerate the files through the backend listing —
+        # list-after-write lag serves a stale view of a dir Spark just
+        # appended into, and an empty read here silently re-admits
+        # every known doc (found by running this suite under
+        # LaggedManifestBackend: batch N+1 read batch N's store as
+        # absent). Spark enumerates the data files itself; detector
+        # stores never receive carried (manifest-referenced) files —
+        # appends and rewrites both land physical files — so the dir IS
+        # the content on every backend.
+        return self.spark.read.schema(schema).parquet(path)
 
     def read_store(self, name: str) -> DataFrame:
         """Public, backend-aware snapshot of a store's committed
@@ -564,7 +423,7 @@ class IncrementalNearDup:
 
     def _append_store(self, name: str, rows: DataFrame) -> None:
         if not self._sealed:
-            write_layout(self.backend, self.state_dir, self._layout)
+            write_layout(self.backend, self.state_dir, _LAYOUT)
             self._sealed = True
         epoch, path = self._ensure_epoch(name)
         # one backend LIST per append, not two: the pre-append count is
@@ -580,21 +439,7 @@ class IncrementalNearDup:
         # list-after-write window for it — tell it first (no-op on
         # real backends; see StateStorageBackend.note_spark_write)
         self.backend.note_spark_write(path)
-        if not self._buckets(name):
-            rows.write.mode("append").parquet(path)
-        else:
-            _, cols, _ = _STORES[name]
-            self._ensure_table(name, epoch)
-            (
-                rows.write.mode("append")
-                .bucketBy(self._buckets(name), *cols)
-                # sorted buckets: after compact() leaves one file per
-                # bucket, the sort-merge probe reads the store pre-sorted
-                # and skips its per-batch O(store) sort entirely
-                .sortBy(*cols)
-                .option("path", path)
-                .saveAsTable(self._table(name, epoch))
-            )
+        rows.write.mode("append").parquet(path)
         # under the lag double, note_spark_write above froze this dir's
         # listing pre-append, so the post-count can read stale-LOW (the
         # gauge is advisory — its docstring tolerates lag). Clamp to
@@ -630,9 +475,9 @@ class IncrementalNearDup:
     #     since the last compact — O(appends since compact), never
     #     O(store));
     #   * a missing or stale summary (never compacted; crash between
-    #     the bands rewrite and the summary swap; hot-bucket merges)
-    #     falls back to counting ALL bands files — exact, slower,
-    #     self-heals at the next compact().
+    #     the bands rewrite and the summary swap) falls back to
+    #     counting ALL bands files — exact, slower, self-heals at the
+    #     next compact().
     #
     # The counts live DRIVER-SIDE (plain dicts fed by pyarrow, zero
     # Spark stages): in-lineage variants measured 20-30 %/batch — every
@@ -839,8 +684,6 @@ class IncrementalNearDup:
 
         # replay protection: a doc_id already folded into the store is
         # a re-delivery — reprocessing could only repeat the verdict.
-        # With sigs_buckets the store side satisfies the anti-join's
-        # distribution from its bucketing: only the batch side shuffles.
         fresh = docs.select(
             F.col(self.id_col).alias("doc_id"), F.col(self.text_col).alias("text")
         ).join(sigs_store.select("doc_id"), "doc_id", "left_anti")
@@ -986,10 +829,8 @@ class IncrementalNearDup:
         return report
 
     # -- maintenance ----------------------------------------------------
-    def compact(
-        self, target_partitions: int = 4, *, hot_bucket_threshold: int | None = None
-    ) -> None:
-        """Rewrite the stores into O(1) files each.
+    def compact(self) -> None:
+        """Rewrite each store into ``_COMPACT_PARTITIONS`` files.
 
         Append-only parquet accumulates one file-set per batch; after N
         micro-batches the probe join opens O(N) small files. Periodic
@@ -1003,16 +844,8 @@ class IncrementalNearDup:
         LSM-ish table format, and the build, flip and retirement are
         the tx store's own (``state_backend.commit_version``) — no
         directory renames, so the store hosts on object storage
-        unchanged.
-
-        ``hot_bucket_threshold`` (bucketed stores only) is the 100 TB
-        refinement: rewrite ONLY buckets holding more than that many
-        files, leaving cold buckets untouched — a full-store rewrite per
-        ~100 batches is itself a scale event. Per-bucket rewrites append
-        the merged file before deleting the inputs, so a crash mid-pass
-        leaves duplicate rows at worst (collapsed by the probe's
-        ``.distinct()`` and healed by the next full compact's
-        ``dropDuplicates``), never missing rows.
+        unchanged. The rewrite also drops duplicate rows a crashed
+        batch's retry or a straggler fold may have appended.
 
         Holds the state dir's writer lock for the whole pass — an
         append racing the full rewrite would land in the epoch being
@@ -1021,7 +854,7 @@ class IncrementalNearDup:
         """
         with self._writer_lock("compact"):
             try:
-                self._compact_locked(target_partitions, hot_bucket_threshold)
+                self._compact_locked()
                 self.metrics.compactions += 1
                 for name in (*_STORES, "band_hot"):
                     self.metrics.observe_epoch(
@@ -1040,25 +873,19 @@ class IncrementalNearDup:
                 self._reset_cap_cache()
                 raise
             finally:
-                # any compaction (full OR hot-bucket, success or crash)
-                # deletes/merges files in a live or fresh epoch: a
+                # any compaction (success or crash) moves the live
+                # files to a fresh epoch: a
                 # cached post-append file count would make the next
                 # observe_append delta run against a stale-HIGH
                 # baseline and undercount real appends
                 self._append_count_cache.clear()
 
-    def _compact_locked(
-        self, target_partitions: int, hot_bucket_threshold: int | None
-    ) -> None:
+    def _compact_locked(self) -> None:
         self._gc_epochs()
-        for name, (schema, cols, _) in _STORES.items():
+        for name in _STORES:
             cur = self._epoch(name)
             if cur == 0:
                 continue  # store never written
-            buckets = self._buckets(name)
-            if buckets and hot_bucket_threshold is not None:
-                self._compact_hot_buckets(name, schema, hot_bucket_threshold)
-                continue
 
             def write(path: str) -> None:
                 # the rewrite source is the store's own read path —
@@ -1072,37 +899,17 @@ class IncrementalNearDup:
                 src = self._load_store(name)
                 consumed = _data_file_names(src.inputFiles())
                 self.backend.note_spark_write(path)  # lag-double hook
-                rows = src.dropDuplicates()  # heal append-retry duplicates
-                if buckets:
-                    # re-bucketed under the NEXT epoch's own table name;
-                    # a crashed attempt may have left it registered
-                    nxt_table = self._table(name, cur + 1)
-                    self.spark.sql(f"DROP TABLE IF EXISTS {nxt_table}")
-                    (
-                        rows.write.mode("overwrite")
-                        .bucketBy(buckets, *cols)
-                        .sortBy(*cols)
-                        .option("path", path)
-                        .saveAsTable(nxt_table)
-                    )
-                else:
-                    rows.repartition(target_partitions).write.mode(
-                        "overwrite"
-                    ).parquet(path)
+                (
+                    src.dropDuplicates()  # heal append-retry duplicates
+                    .repartition(_COMPACT_PARTITIONS)
+                    .write.mode("overwrite")
+                    .parquet(path)
+                )
                 self._write_consumed_manifest(path, cur, consumed)
-
-            def retire(old: int) -> None:
-                if buckets:
-                    # metadata-only drop: the external table keeps its
-                    # files; the epoch removal reclaims them
-                    self.spark.sql(
-                        f"DROP TABLE IF EXISTS {self._table(name, old)}"
-                    )
-                self._fold_stragglers_from_manifest(name, old)
 
             commit_version(
                 self.backend, self._path(name), cur + 1, self._writer_token,
-                write, retire,
+                write, functools.partial(self._fold_stragglers_from_manifest, name),
             )
         self._rebuild_hot()
 
@@ -1118,10 +925,8 @@ class IncrementalNearDup:
 
     def _read_files(self, name: str, epoch_path: str, files: list[str]):
         """A store frame over EXACTLY the given data files (schema
-        pinned; empty-safe). Bucket metadata is irrelevant here — the
-        only caller rewrites through the bucketed writer, which
-        shuffles on the bucket columns regardless of input layout."""
-        schema = _STORES[name][0]
+        pinned; empty-safe)."""
+        schema = _STORES[name]
         if not files:
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(
@@ -1233,8 +1038,8 @@ class IncrementalNearDup:
         canonical members — tiny in a deduplicated store — plus the
         manifest of data files the summary covers, so the per-batch
         check reads only files appended later. countDistinct tolerates
-        the duplicate rows hot-bucket compaction's append-before-delete
-        may leave. Same epoch-pointer commit as the stores: summary +
+        the duplicate rows a straggler fold may append beside the
+        deduplicated rewrite. Same epoch-pointer commit as the stores: summary +
         manifest are fully written under the next epoch, then one
         pointer flip publishes both together; a crash BEFORE the flip
         leaves the previous summary whose manifest no longer matches —
@@ -1280,63 +1085,3 @@ class IncrementalNearDup:
         commit_version(
             self.backend, hot_root, hot_cur + 1, self._writer_token, write
         )
-
-    def _compact_hot_buckets(self, name: str, schema: str, threshold: int) -> None:
-        """Merge every over-fragmented bucket's files, touching
-        O(hot buckets) files and running ONE Spark job regardless of
-        how many buckets are hot: all hot buckets' files are read in a
-        single pass, repartitioned on the bucket-id expression (each
-        bucket's rows in exactly one of up-to-#hot parallel tasks), and
-        appended through the bucketed writer — one new file per hot
-        bucket. Cold buckets' files are never opened.
-        Append-before-delete makes the pass crash-safe at the cost of
-        transient duplicates (see :meth:`compact`). (A per-hot-bucket
-        job loop measured 2× slower at 14 hot buckets — job-launch
-        overhead dominates the maintenance pass.)"""
-        # epoch-gated, not LIST-gated (the pointer GET is the existence
-        # witness). The listing below may itself be stale under
-        # list-after-write lag: stale-SHORT skips a hot bucket this
-        # pass (merged by a later one — safe); a stale view naming a
-        # file a previous pass already deleted fails the merge read
-        # LOUDLY (compact raises, cap cache resets, retry after the
-        # window) — never silently.
-        if self._epoch(name) == 0:
-            return
-        data_path = self._data_path(name)
-        by_bucket: dict[int, list[str]] = {}
-        for n in self.backend.list_dir(data_path):
-            if not n.endswith(".parquet"):
-                continue
-            m = _BUCKET_ID_RE.search(n)
-            if m:
-                by_bucket.setdefault(int(m.group(1)), []).append(
-                    os.path.join(data_path, n)
-                )
-        hot = {b: files for b, files in by_bucket.items() if len(files) > threshold}
-        hot_files = [f for files in hot.values() for f in files]
-        if not hot_files:
-            return
-        _, cols, _ = _STORES[name]
-        # co-locate each bucket's rows in exactly one task WITHOUT a
-        # single-task bottleneck: repartition on the bucket-id
-        # expression (same murmur3+pmod the bucketed writer uses), so N
-        # hot buckets merge across up-to-N parallel tasks and the write
-        # still emits one file per hot bucket — a lone coalesce(1) here
-        # would sort and write every hot byte through one task (OOM /
-        # straggler at the store sizes this maintenance pass exists for)
-        bucket_id = F.pmod(
-            F.hash(*[F.col(c) for c in cols]), F.lit(self._buckets(name))
-        )
-        merged = (
-            self.spark.read.schema(schema)
-            .parquet(*hot_files)
-            .dropDuplicates()
-            .repartition(max(1, len(hot)), bucket_id)
-        )
-        self._append_store(name, merged)
-        for f in hot_files:
-            self.backend.remove_file(f)
-        # the bucketed scan lists files at plan time; invalidate any
-        # cached listing of the just-rewritten location
-        if self.spark.catalog.tableExists(self._table(name)):
-            self.spark.catalog.refreshTable(self._table(name))

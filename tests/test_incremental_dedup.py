@@ -134,115 +134,6 @@ def test_restart_fresh_detector_resumes_from_store(spark, detector, tmp_path):
     assert sorted(x["doc_id"] for x in sigs.select("doc_id").collect()) == [1, 2]
 
 
-def _drop_store_tables(spark, state_dir):
-    import hashlib
-    import os
-
-    tag = hashlib.md5(os.path.abspath(str(state_dir)).encode()).hexdigest()[:12]
-    # table names are epoch-versioned (compaction registers the new
-    # epoch under a new name): drop every epoch's registration
-    for row in spark.sql(f"SHOW TABLES LIKE 'incdedup_*{tag}*'").collect():
-        spark.sql(f"DROP TABLE IF EXISTS {row['tableName']}")
-
-
-def test_bucketed_band_store_same_verdicts_and_restart(spark, tmp_path, backend_cls):
-    """bands_buckets=N switches BOTH stores to external bucketed tables
-    (the 100 TB layout): verdicts must be identical to the plain
-    store, appends must accumulate across batches, a catalog-less
-    restart (fresh session ≈ dropped table) must re-register the table
-    over the existing files, and compaction must keep it queryable —
-    under BOTH storage backends."""
-    from streaming_examples_spark.streaming.incremental_dedup import IncrementalNearDup
-
-    det = IncrementalNearDup(
-        spark, str(tmp_path / "state"), threshold=0.5, bands_buckets=4,
-        backend=backend_cls(),
-    )
-    try:
-        r1 = {r["doc_id"]: r for r in det.process_batch(_docs(spark, [(1, BASE), (2, OTHER)]), 0).collect()}
-        assert not r1[1]["is_dup"] and not r1[2]["is_dup"]
-        r2 = {r["doc_id"]: r for r in det.process_batch(_docs(spark, [(3, NEAR)]), 1).collect()}
-        assert r2[3]["is_dup"] and r2[3]["dup_of"] == 1
-
-        # restart with a cold catalog: drop ONLY the table metadata
-        # (external files stay), build a fresh detector — it must
-        # re-register from DDL and still match docs stored pre-restart
-        spark.sql(f"DROP TABLE {det.store_table('bands')}")
-        spark.sql(f"DROP TABLE {det.store_table('sigs')}")
-        fresh = IncrementalNearDup(
-            spark, str(tmp_path / "state"), threshold=0.5, bands_buckets=4,
-            backend=backend_cls(),
-        )
-        NEAR2 = BASE.replace("warm fire", "cold fire")
-        r3 = {r["doc_id"]: r for r in fresh.process_batch(_docs(spark, [(4, NEAR2)]), 2).collect()}
-        assert r3[4]["is_dup"] and r3[4]["dup_of"] == 1
-
-        # compaction rewrites to one file set per bucket and the store
-        # keeps answering
-        fresh.compact(target_partitions=1)
-        r4 = {r["doc_id"]: r for r in fresh.process_batch(
-            _docs(spark, [(9, BASE.replace("green trees", "green woods"))]), 3).collect()}
-        assert r4[9]["is_dup"] and r4[9]["dup_of"] == 1
-        sigs = fresh.read_store("sigs")
-        assert sorted(x["doc_id"] for x in sigs.select("doc_id").collect()) == [1, 2]
-    finally:
-        _drop_store_tables(spark, tmp_path / "state")
-
-
-def test_layout_mismatch_raises_on_restart(spark, tmp_path):
-    """Re-opening a store with a different bucket count would hash
-    probes into the wrong buckets — silent recall loss. The persisted
-    layout makes it raise at init instead."""
-    from streaming_examples_spark.streaming.incremental_dedup import IncrementalNearDup
-
-    det = IncrementalNearDup(spark, str(tmp_path / "state"), threshold=0.5, bands_buckets=4)
-    try:
-        det.process_batch(_docs(spark, [(1, BASE)]), 0)
-        with pytest.raises(ValueError, match="bands_buckets=4"):
-            IncrementalNearDup(spark, str(tmp_path / "state"), threshold=0.5, bands_buckets=8)
-        with pytest.raises(ValueError, match="bands_buckets=4"):
-            IncrementalNearDup(spark, str(tmp_path / "state"), threshold=0.5)
-        # the declared layout still opens fine
-        again = IncrementalNearDup(
-            spark, str(tmp_path / "state"), threshold=0.5, bands_buckets=4
-        )
-        r = {x["doc_id"]: x for x in again.process_batch(_docs(spark, [(3, NEAR)]), 1).collect()}
-        assert r[3]["is_dup"] and r[3]["dup_of"] == 1
-    finally:
-        _drop_store_tables(spark, tmp_path / "state")
-
-
-def test_plain_layout_mismatch_raises_when_reopened_bucketed(spark, tmp_path):
-    from streaming_examples_spark.streaming.incremental_dedup import IncrementalNearDup
-
-    det = IncrementalNearDup(spark, str(tmp_path / "state"), threshold=0.5)
-    det.process_batch(_docs(spark, [(1, BASE)]), 0)
-    with pytest.raises(ValueError, match="bands_buckets=None"):
-        IncrementalNearDup(spark, str(tmp_path / "state"), threshold=0.5, bands_buckets=4)
-
-
-def test_legacy_bucketed_store_without_layout_refuses(spark, tmp_path):
-    """A pre-layout store + a bucketed layout (declared or detected in
-    the file names) cannot be validated — adopting a guessed count and
-    sealing it into _layout.json would be the silent recall loss the
-    guard exists to stop. Must refuse, even when the declared count
-    happens to be right (we cannot know that)."""
-    import os
-
-    from streaming_examples_spark.streaming.incremental_dedup import IncrementalNearDup
-
-    det = IncrementalNearDup(spark, str(tmp_path / "state"), threshold=0.5, bands_buckets=4)
-    try:
-        det.process_batch(_docs(spark, [(1, BASE)]), 0)
-        os.remove(os.path.join(str(tmp_path / "state"), "_layout.json"))
-        with pytest.raises(ValueError, match="cannot be validated"):
-            IncrementalNearDup(spark, str(tmp_path / "state"), threshold=0.5, bands_buckets=4)
-        with pytest.raises(ValueError, match="cannot be validated"):
-            IncrementalNearDup(spark, str(tmp_path / "state"), threshold=0.5)
-    finally:
-        _drop_store_tables(spark, tmp_path / "state")
-
-
 def test_viral_bucket_cap_gates_probe_and_peer(spark, tmp_path):
     """The cap counts the UNION of store+batch members per band key and
     gates both the store probe and the within-batch self-join: with
@@ -291,7 +182,7 @@ def _crash_once(obj, method, should, exc_msg="injected crash"):
 def test_compact_crash_before_pointer_commit_loses_nothing(
     spark, tmp_path, backend_cls, monkeypatch
 ):
-    """Crash-atomicity of the bucketed compact under BOTH backends: the
+    """Crash-atomicity of the compact under every backend: the
     rewritten epoch is fully written BEFORE the pointer flips, so dying
     at the flip leaves the committed store intact — a fresh detector
     still matches every pre-compact canonical, and a later compact
@@ -299,29 +190,24 @@ def test_compact_crash_before_pointer_commit_loses_nothing(
     from streaming_examples_spark.streaming.incremental_dedup import IncrementalNearDup
 
     det = IncrementalNearDup(
-        spark, str(tmp_path / "state"), threshold=0.5, bands_buckets=4,
-        backend=backend_cls(),
+        spark, str(tmp_path / "state"), threshold=0.5, backend=backend_cls()
     )
-    try:
-        det.process_batch(_docs(spark, [(1, BASE), (2, OTHER)]), 0)
+    det.process_batch(_docs(spark, [(1, BASE), (2, OTHER)]), 0)
 
-        _crash_once(det.backend, "commit_pointer", lambda *_a, **_k: True)
-        with pytest.raises(RuntimeError, match="injected crash"):
-            det.compact()
+    _crash_once(det.backend, "commit_pointer", lambda *_a, **_k: True)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        det.compact()
 
-        fresh = IncrementalNearDup(
-            spark, str(tmp_path / "state"), threshold=0.5, bands_buckets=4,
-            backend=backend_cls(),
-        )
-        r = {x["doc_id"]: x for x in fresh.process_batch(_docs(spark, [(3, NEAR)]), 1).collect()}
-        assert r[3]["is_dup"] and r[3]["dup_of"] == 1
-        # and a later compact (no crash) completes and stays queryable
-        fresh.compact()
-        r2 = {x["doc_id"]: x for x in fresh.process_batch(
-            _docs(spark, [(4, BASE.replace("green trees", "green woods"))]), 2).collect()}
-        assert r2[4]["is_dup"] and r2[4]["dup_of"] == 1
-    finally:
-        _drop_store_tables(spark, tmp_path / "state")
+    fresh = IncrementalNearDup(
+        spark, str(tmp_path / "state"), threshold=0.5, backend=backend_cls()
+    )
+    r = {x["doc_id"]: x for x in fresh.process_batch(_docs(spark, [(3, NEAR)]), 1).collect()}
+    assert r[3]["is_dup"] and r[3]["dup_of"] == 1
+    # and a later compact (no crash) completes and stays queryable
+    fresh.compact()
+    r2 = {x["doc_id"]: x for x in fresh.process_batch(
+        _docs(spark, [(4, BASE.replace("green trees", "green woods"))]), 2).collect()}
+    assert r2[4]["is_dup"] and r2[4]["dup_of"] == 1
 
 
 def test_compact_crash_mid_commit_keeps_one_store_epoch_behind(
@@ -336,46 +222,41 @@ def test_compact_crash_mid_commit_keeps_one_store_epoch_behind(
     from streaming_examples_spark.streaming.incremental_dedup import IncrementalNearDup
 
     det = IncrementalNearDup(
-        spark, str(tmp_path / "state"), threshold=0.5, bands_buckets=4,
-        backend=backend_cls(),
+        spark, str(tmp_path / "state"), threshold=0.5, backend=backend_cls()
     )
-    try:
-        det.process_batch(_docs(spark, [(1, BASE), (2, OTHER)]), 0)
-        calls = {"n": 0}
+    det.process_batch(_docs(spark, [(1, BASE), (2, OTHER)]), 0)
+    calls = {"n": 0}
 
-        def second_call(*_a, **_k):
-            calls["n"] += 1
-            return calls["n"] == 2
+    def second_call(*_a, **_k):
+        calls["n"] += 1
+        return calls["n"] == 2
 
-        _crash_once(det.backend, "commit_pointer", second_call)
-        with pytest.raises(RuntimeError, match="injected crash"):
-            det.compact()
-        # one store advanced, the other did not
-        epochs = {n: det._epoch(n) for n in ("sigs", "bands")}
-        assert sorted(epochs.values()) == [1, 2], epochs
+    _crash_once(det.backend, "commit_pointer", second_call)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        det.compact()
+    # one store advanced, the other did not
+    epochs = {n: det._epoch(n) for n in ("sigs", "bands")}
+    assert sorted(epochs.values()) == [1, 2], epochs
 
-        fresh = IncrementalNearDup(
-            spark, str(tmp_path / "state"), threshold=0.5, bands_buckets=4,
-            backend=backend_cls(),
-        )
-        r = {x["doc_id"]: x for x in fresh.process_batch(_docs(spark, [(3, NEAR)]), 1).collect()}
-        assert r[3]["is_dup"] and r[3]["dup_of"] == 1
-        before = {n: fresh._epoch(n) for n in ("sigs", "bands")}
-        fresh.compact()
-        # each store advanced exactly one epoch from wherever it was
-        assert {n: fresh._epoch(n) for n in ("sigs", "bands")} == {
-            n: e + 1 for n, e in before.items()
-        }
-        # the GC reclaimed every superseded epoch dir
-        for n in ("sigs", "bands"):
-            stray = [
-                e
-                for e in os.listdir(os.path.join(str(tmp_path / "state"), n))
-                if e.startswith("v") and e != f"v{fresh._epoch(n)}"
-            ]
-            assert not stray, (n, stray)
-    finally:
-        _drop_store_tables(spark, tmp_path / "state")
+    fresh = IncrementalNearDup(
+        spark, str(tmp_path / "state"), threshold=0.5, backend=backend_cls()
+    )
+    r = {x["doc_id"]: x for x in fresh.process_batch(_docs(spark, [(3, NEAR)]), 1).collect()}
+    assert r[3]["is_dup"] and r[3]["dup_of"] == 1
+    before = {n: fresh._epoch(n) for n in ("sigs", "bands")}
+    fresh.compact()
+    # each store advanced exactly one epoch from wherever it was
+    assert {n: fresh._epoch(n) for n in ("sigs", "bands")} == {
+        n: e + 1 for n, e in before.items()
+    }
+    # the GC reclaimed every superseded epoch dir
+    for n in ("sigs", "bands"):
+        stray = [
+            e
+            for e in os.listdir(os.path.join(str(tmp_path / "state"), n))
+            if e.startswith("v") and e != f"v{fresh._epoch(n)}"
+        ]
+        assert not stray, (n, stray)
 
 
 def test_compact_crash_after_commit_gcs_stray_epoch(spark, tmp_path, backend_cls):
@@ -389,53 +270,48 @@ def test_compact_crash_after_commit_gcs_stray_epoch(spark, tmp_path, backend_cls
     from streaming_examples_spark.streaming.incremental_dedup import IncrementalNearDup
 
     det = IncrementalNearDup(
-        spark, str(tmp_path / "state"), threshold=0.5, bands_buckets=4,
-        backend=backend_cls(),
+        spark, str(tmp_path / "state"), threshold=0.5, backend=backend_cls()
     )
-    try:
-        det.process_batch(_docs(spark, [(1, BASE), (2, OTHER)]), 0)
-        # the first remove_tree AFTER a commit is the superseded-epoch
-        # cleanup (pre-commit remove_tree calls clear empty garbage
-        # paths; gate on the path actually existing)
-        committed = {"yes": False}
-        real_commit = det.backend.commit_pointer
+    det.process_batch(_docs(spark, [(1, BASE), (2, OTHER)]), 0)
+    # the first remove_tree AFTER a commit is the superseded-epoch
+    # cleanup (pre-commit remove_tree calls clear empty garbage
+    # paths; gate on the path actually existing)
+    committed = {"yes": False}
+    real_commit = det.backend.commit_pointer
 
-        def tracking_commit(root, version):
-            committed["yes"] = True
-            return real_commit(root, version)
+    def tracking_commit(root, version):
+        committed["yes"] = True
+        return real_commit(root, version)
 
-        det.backend.commit_pointer = tracking_commit
-        _crash_once(
-            det.backend,
-            "remove_tree",
-            lambda path: committed["yes"] and os.path.isdir(path),
-        )
-        with pytest.raises(RuntimeError, match="injected crash"):
-            det.compact()
-        temp = os.path.join(str(tmp_path / "state"), "bands", "CURRENT.9")
-        with open(temp, "w") as fh:
-            fh.write("9")
+    det.backend.commit_pointer = tracking_commit
+    _crash_once(
+        det.backend,
+        "remove_tree",
+        lambda path: committed["yes"] and os.path.isdir(path),
+    )
+    with pytest.raises(RuntimeError, match="injected crash"):
+        det.compact()
+    temp = os.path.join(str(tmp_path / "state"), "bands", "CURRENT.9")
+    with open(temp, "w") as fh:
+        fh.write("9")
 
-        fresh = IncrementalNearDup(
-            spark, str(tmp_path / "state"), threshold=0.5, bands_buckets=4,
-            backend=backend_cls(),
-        )
-        r = {x["doc_id"]: x for x in fresh.process_batch(_docs(spark, [(3, NEAR)]), 1).collect()}
-        assert r[3]["is_dup"] and r[3]["dup_of"] == 1
-        assert not os.path.exists(temp)
-        # the batch's GC pass reclaimed every non-current epoch dir
-        for n in ("sigs", "bands", "band_hot"):
-            root = os.path.join(str(tmp_path / "state"), n)
-            if not os.path.isdir(root):
-                continue
-            cur = fresh.backend.read_pointer(root)
-            stray = [
-                e for e in os.listdir(root)
-                if e.startswith("v") and e != f"v{cur}"
-            ]
-            assert not stray, (n, stray)
-    finally:
-        _drop_store_tables(spark, tmp_path / "state")
+    fresh = IncrementalNearDup(
+        spark, str(tmp_path / "state"), threshold=0.5, backend=backend_cls()
+    )
+    r = {x["doc_id"]: x for x in fresh.process_batch(_docs(spark, [(3, NEAR)]), 1).collect()}
+    assert r[3]["is_dup"] and r[3]["dup_of"] == 1
+    assert not os.path.exists(temp)
+    # the batch's GC pass reclaimed every non-current epoch dir
+    for n in ("sigs", "bands", "band_hot"):
+        root = os.path.join(str(tmp_path / "state"), n)
+        if not os.path.isdir(root):
+            continue
+        cur = fresh.backend.read_pointer(root)
+        stray = [
+            e for e in os.listdir(root)
+            if e.startswith("v") and e != f"v{cur}"
+        ]
+        assert not stray, (n, stray)
 
 
 def test_lost_pointer_refused_not_gcd(spark, tmp_path):
@@ -547,6 +423,11 @@ _RETIRED_DETECTOR_SHAPES = {
     "committed-without-layout": lambda st: os.unlink(
         os.path.join(st, "_layout.json")
     ),
+    # the retired bucketed-table layout: its seal carries bucket counts
+    "bucketed-seal": lambda st: _write_layout_json(
+        st,
+        {"format": 1, "backend": "local-posix", "bands_buckets": 4, "sigs_buckets": 4},
+    ),
 }
 
 
@@ -569,153 +450,6 @@ def test_retired_detector_state_shapes_refused(
     with pytest.raises(ValueError, match="rebuild the state dir from the event log"):
         IncrementalNearDup(spark, state, threshold=0.5)
     assert sorted(os.walk(state)) == before
-
-
-def test_per_bucket_compaction_touches_only_hot_buckets(spark, tmp_path):
-    """hot_bucket_threshold compaction must rewrite ONLY buckets whose
-    file count exceeds the threshold (at 100 TB a full-store rewrite is
-    itself a scale event), leave cold buckets' files byte-identical,
-    and keep verdicts intact."""
-    import glob
-    import os
-
-    from pyspark.sql import functions as F
-
-    from streaming_examples_spark.streaming.incremental_dedup import IncrementalNearDup
-
-    det = IncrementalNearDup(spark, str(tmp_path / "state"), threshold=0.5, bands_buckets=4)
-    try:
-        def synth(ids):
-            return _docs(spark, [
-                (i, f"document number {i} talks about subject s{i} using "
-                    f"unique words w{i}a w{i}b w{i}c w{i}d w{i}e w{i}f w{i}g")
-                for i in ids
-            ])
-
-        det.process_batch(synth(range(1, 9)), 0)
-        det.process_batch(synth(range(9, 17)), 1)
-
-        # heat up ONE sigs bucket: ids hashing to bucket 0 (the bucketed
-        # writer's id = pmod(murmur3(doc_id), n_buckets), same as F.hash)
-        cand = spark.range(100, 200).select(
-            F.col("id").alias("doc_id"),
-            F.pmod(F.hash(F.col("id").cast("long")), F.lit(4)).alias("b"),
-        )
-        hot_ids = [r["doc_id"] for r in cand.filter("b = 0").limit(12).collect()]
-        det.process_batch(synth(hot_ids[:6]), 2)
-        det.process_batch(synth(hot_ids[6:]), 3)
-
-        from streaming_examples_spark.streaming.incremental_dedup import _BUCKET_ID_RE
-
-        def files_per_bucket(store):
-            out = {}
-            for f in glob.glob(os.path.join(det._data_path(store), "*.parquet")):
-                m = _BUCKET_ID_RE.search(os.path.basename(f))
-                out.setdefault(int(m.group(1)), set()).add(os.path.basename(f))
-            return out
-
-        before = files_per_bucket("sigs")
-        counts = {b: len(fs) for b, fs in before.items()}
-        thr = min(counts.values())
-        assert max(counts.values()) > thr, f"need a hot bucket, got {counts}"
-
-        det.compact(hot_bucket_threshold=thr)
-
-        after = files_per_bucket("sigs")
-        for b, fs in before.items():
-            if len(fs) <= thr:
-                assert after[b] == fs, f"cold bucket {b} was touched"
-            else:
-                assert len(after[b]) == 1, f"hot bucket {b} not merged: {after[b]}"
-
-        # store still answers: canonical set unchanged, probe works
-        sigs = det.read_store("sigs")
-        assert sigs.count() == sigs.select("doc_id").distinct().count()
-        dup_of_one = synth([1]).collect()[0]["text"]
-        r = {x["doc_id"]: x for x in det.process_batch(
-            _docs(spark, [(5000, dup_of_one)]), 4).collect()}
-        assert r[5000]["is_dup"] and r[5000]["dup_of"] == 1
-    finally:
-        _drop_store_tables(spark, tmp_path / "state")
-
-
-def test_hot_bucket_compaction_crash_leaves_duplicates_not_holes(
-    spark, tmp_path, monkeypatch
-):
-    """The per-bucket pass appends the merged file BEFORE deleting its
-    inputs, so a crash between the two leaves duplicate rows at worst —
-    never missing rows. After the crash: every pre-compact canonical is
-    still matched (the probe's distinct collapses the dupes), and a
-    later full compact heals the store back to one row per canonical."""
-    import glob
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    from streaming_examples_spark.streaming.incremental_dedup import IncrementalNearDup
-
-    det = IncrementalNearDup(spark, str(tmp_path / "state"), threshold=0.5, bands_buckets=4)
-    try:
-        def synth(ids):
-            return _docs(spark, [
-                (i, f"document number {i} talks about subject s{i} using "
-                    f"unique words w{i}a w{i}b w{i}c w{i}d w{i}e w{i}f w{i}g")
-                for i in ids
-            ])
-
-        # plant a hot sigs bucket: ids hashing to bucket 0 across two
-        # batches (bucket id = pmod(murmur3(doc_id), n), same as F.hash)
-        cand = spark.range(100, 200).select(
-            F.col("id").alias("doc_id"),
-            F.pmod(F.hash(F.col("id").cast("long")), F.lit(4)).alias("b"),
-        )
-        hot_ids = [r["doc_id"] for r in cand.filter("b = 0").limit(8).collect()]
-        det.process_batch(synth(hot_ids[:4]), 0)
-        det.process_batch(synth(hot_ids[4:]), 1)
-
-        def sigs_state():
-            sigs = det.read_store("sigs")
-            ids = {r["doc_id"] for r in sigs.select("doc_id").distinct().collect()}
-            return ids, sigs.count()
-
-        ids_before, rows_before = sigs_state()
-        n_files = len(glob.glob(_os.path.join(det._data_path("sigs"), "*.parquet")))
-        assert n_files >= 2, "need a fragmented hot bucket"
-
-        # inject at the seam: the first input deletion after the merged
-        # append dies (works for any backend, unlike an os.remove patch)
-        real_remove = det.backend.remove_file
-
-        def crash_on_first_delete(path):
-            raise RuntimeError("injected crash before input deletion")
-
-        det.backend.remove_file = crash_on_first_delete
-        with pytest.raises(RuntimeError, match="injected crash"):
-            det.compact(hot_bucket_threshold=1)
-        det.backend.remove_file = real_remove
-
-        # duplicates, not holes: same canonical id set, MORE rows
-        ids_after, rows_after = sigs_state()
-        assert ids_after == ids_before
-        assert rows_after > rows_before
-
-        # the probe still matches a near-dup of a pre-crash canonical
-        dup_of_first = synth([hot_ids[0]]).collect()[0]["text"]
-        r = {x["doc_id"]: x for x in det.process_batch(
-            _docs(spark, [(5000, dup_of_first)]), 2).collect()}
-        assert r[5000]["is_dup"] and r[5000]["dup_of"] == hot_ids[0]
-
-        # a later FULL compact heals: one row per canonical, verdicts keep
-        # (5000 was a dup — dups are never folded into the store)
-        det.compact()
-        ids_healed, rows_healed = sigs_state()
-        assert ids_healed == ids_before
-        assert rows_healed == len(ids_healed)
-        r2 = {x["doc_id"]: x for x in det.process_batch(
-            _docs(spark, [(6000, dup_of_first)]), 3).collect()}
-        assert r2[6000]["is_dup"] and r2[6000]["dup_of"] == hot_ids[0]
-    finally:
-        _drop_store_tables(spark, tmp_path / "state")
 
 
 @pytest.mark.slow
@@ -853,16 +587,19 @@ def test_streaming_foreachbatch_e2e(spark, tmp_path):
     assert not reports[4]["is_dup"]
 
 
-def test_compaction_preserves_state_and_verdicts(spark, detector):
+def test_compaction_preserves_state_and_verdicts(spark, detector, monkeypatch):
     import glob
     import os
 
+    from streaming_examples_spark.streaming import incremental_dedup as incdedup_mod
+
+    monkeypatch.setattr(incdedup_mod, "_COMPACT_PARTITIONS", 1)
     detector.process_batch(_docs(spark, [(1, BASE)]), 0)
     detector.process_batch(_docs(spark, [(2, OTHER)]), 1)
     detector.process_batch(_docs(spark, [(5, "fresh unseen text about databases and storage engines")]), 2)
 
     n_before = len(glob.glob(os.path.join(detector._data_path("sigs"), "*.parquet")))
-    detector.compact(target_partitions=1)
+    detector.compact()
     n_after = len(glob.glob(os.path.join(detector._data_path("sigs"), "*.parquet")))
     assert n_after < n_before and n_after == 1
 
@@ -1054,43 +791,6 @@ def test_cap_uses_compacted_summary_and_survives_restart(spark, tmp_path):
     assert ro["is_dup"]
 
 
-def test_gc_drops_stale_epoch_table_registrations(spark, tmp_path):
-    """A compaction crash after the pointer flip but before its DROP
-    TABLE leaves the SUPERSEDED epoch's table registered in any
-    session that survives the crash, pointing at a directory the GC
-    then deletes. The next locked op must re-drop every registered
-    epoch-version that is not the committed one (fresh sessions never
-    see the problem — table names are epoch-versioned)."""
-    from streaming_examples_spark.streaming.incremental_dedup import (
-        IncrementalNearDup,
-    )
-
-    det = IncrementalNearDup(
-        spark, str(tmp_path / "state"), threshold=0.5, bands_buckets=4
-    )
-    try:
-        det.process_batch(_docs(spark, [(1, BASE), (2, OTHER)]), 0)
-        cur_table = det.store_table("bands")  # ..._v1
-        # simulate the crash window: the NEXT epoch's name left
-        # registered by a compaction that died post-flip (here: a stale
-        # registration over the CURRENT dir — content irrelevant, the
-        # registration itself is the hazard)
-        stale = f"{det._bands_table}_v9"
-        spark.sql(
-            f"CREATE TABLE {stale} (band_id INT, band_key STRING, doc_id BIGINT) "
-            f"USING parquet LOCATION '{det._data_path('bands')}'"
-        )
-        det.process_batch(_docs(spark, [(3, NEAR)]), 1)  # locked op runs GC
-        names = {
-            r.tableName
-            for r in spark.sql(f"SHOW TABLES LIKE '{det._bands_table}*'").collect()
-        }
-        assert stale.split(".")[-1] not in names
-        assert cur_table.split(".")[-1] in names  # the live epoch stays
-    finally:
-        _drop_store_tables(spark, tmp_path / "state")
-
-
 @pytest.mark.slow
 def test_dual_writer_build_fencing_detector(spark, tmp_path, monkeypatch):
     """Two-host schedule over one manifest-backed detector store (the
@@ -1139,12 +839,12 @@ def test_dual_writer_build_fencing_detector(spark, tmp_path, monkeypatch):
     sentinel = os.path.join(bands_v2, "part-hostB-0000.parquet")
     b.publish_file(sentinel, b"hostB-in-flight")
     with pytest.raises(RuntimeError, match="dual-writer detected"):
-        detA.compact(target_partitions=1)
+        detA.compact()
     assert b.read_pointer(os.path.join(state, "bands")) == 1  # intact
     assert os.path.exists(sentinel)  # hostB's build untouched
     b.release_build(bands_v2)  # operator: hostB is dead
     b.remove_tree(bands_v2)  # operator clears the dead build too
-    detA.compact(target_partitions=1)
+    detA.compact()
     assert b.read_pointer(os.path.join(state, "bands")) == 2
 
     # (2) mid-build reclaim: B compacts fully between A's claim and
@@ -1155,12 +855,12 @@ def test_dual_writer_build_fencing_detector(spark, tmp_path, monkeypatch):
     def hijack(path, owner):
         if not fired["done"]:
             fired["done"] = True
-            detB.compact(target_partitions=1)
+            detB.compact()
         return real_validate(path, owner)
 
     monkeypatch.setattr(detA.backend, "validate_build", hijack)
     with pytest.raises(RuntimeError, match="build fencing violation"):
-        detA.compact(target_partitions=1)
+        detA.compact()
     # B's compaction committed; the store still answers correctly
     detC = IncrementalNearDup(
         spark, state, threshold=0.5, backend=ManifestBackend()
@@ -1223,7 +923,7 @@ def test_compact_folds_concurrent_remote_append(spark, tmp_path, monkeypatch):
         return real_commit(root, version)
 
     monkeypatch.setattr(detA.backend, "commit_pointer", inject_remote_append)
-    detA.compact(target_partitions=1)
+    detA.compact()
     folded = detA.metrics.snapshot()["folded_straggler_files"]
     assert sum(folded.values()) >= 1, folded
 
@@ -1289,7 +989,7 @@ def test_gc_refolds_stragglers_after_crash_between_flip_and_removal(
 
     monkeypatch.setattr(detA, "_fold_stragglers", crash)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        detA.compact(target_partitions=1)
+        detA.compact()
 
     # recovery: a fresh detector's first locked op runs _gc_epochs,
     # which folds the straggler from the manifest before reclaiming
@@ -1318,7 +1018,7 @@ def test_gc_refolds_stragglers_after_crash_between_flip_and_removal(
         assert all(e == cur for e in epochs), (store, cur, epochs)
 
 
-def test_detector_backlog_metrics_track_appends_and_epochs(spark, tmp_path):
+def test_detector_backlog_metrics_track_appends_and_epochs(spark, tmp_path, monkeypatch):
     """Backlog/lag monitoring (the replication-slot dashboard analog):
     a two-batch run must report per-batch appended-file counts, a
     monotone total, per-store epochs, and store_stats() sizes that
@@ -1353,8 +1053,12 @@ def test_detector_backlog_metrics_track_appends_and_epochs(spark, tmp_path):
     )
 
     # compaction bumps epochs and the compaction counter; the rewritten
-    # store reads back with FEWER-OR-EQUAL files than the append pile
-    det.compact(target_partitions=1)
+    # store (one file here) reads back with FEWER-OR-EQUAL files than
+    # the append pile
+    from streaming_examples_spark.streaming import incremental_dedup as incdedup_mod
+
+    monkeypatch.setattr(incdedup_mod, "_COMPACT_PARTITIONS", 1)
+    det.compact()
     m3 = det.metrics.snapshot()
     assert m3["compactions"] == 1
     assert m3["store_epoch"]["sigs"] == 2 and m3["store_epoch"]["bands"] == 2
@@ -1505,10 +1209,9 @@ def test_compact_crash_before_summary_swap_resets_cap_cache(spark, tmp_path):
 def test_random_lifecycle_compactions_crashes_restarts(spark, tmp_path, seed, backend_cls):
     """Durability soak over the epoch-pointer layout: a random
     duplicate-family stream interleaved with random MAINTENANCE events
-    — full compactions, hot-bucket compactions, crash injections at
-    random backend primitives mid-compact, and kill-and-restart with a
-    fresh detector + fresh backend instance — under BOTH storage
-    backends. Invariants at the end, regardless of the schedule:
+    — full compactions, crash injections at random backend primitives
+    mid-compact, and kill-and-restart with a fresh detector + fresh
+    backend instance — under every storage backend. Invariants at the end, regardless of the schedule:
 
       * exactly ONE canonical per family (smallest id of its earliest
         batch); every other member reported is_dup with an in-family
@@ -1537,72 +1240,65 @@ def test_random_lifecycle_compactions_crashes_restarts(spark, tmp_path, seed, ba
 
     def fresh_detector():
         return IncrementalNearDup(
-            spark, state, threshold=0.5, bands_buckets=4, backend=backend_cls()
+            spark, state, threshold=0.5, backend=backend_cls()
         )
 
     det = fresh_detector()
     reports = []
-    try:
-        for b, members in enumerate(batches):
-            rows = [(i, fam_text[f]) for i, f in members]
-            for earlier in batches[:b]:
-                for i, f in earlier:
-                    if rng.random() < 0.3:
-                        rows.append((i, fam_text[f]))  # redelivery
-            reports.extend(det.process_batch(_docs(spark, rows), b).collect())
+    for b, members in enumerate(batches):
+        rows = [(i, fam_text[f]) for i, f in members]
+        for earlier in batches[:b]:
+            for i, f in earlier:
+                if rng.random() < 0.3:
+                    rows.append((i, fam_text[f]))  # redelivery
+        reports.extend(det.process_batch(_docs(spark, rows), b).collect())
 
-            event = rng.choice(["none", "compact", "hot", "crash", "restart"])
-            if event == "compact":
+        event = rng.choice(["none", "compact", "crash", "restart"])
+        if event == "compact":
+            det.compact()
+        elif event == "crash":
+            # die once at a random primitive inside the compaction,
+            # then RESTART over whatever the crash left behind
+            method = rng.choice(["commit_pointer", "remove_tree", "publish_file"])
+            calls = {"n": 0, "at": rng.randint(1, 3)}
+
+            def should(*_a, **_k):
+                calls["n"] += 1
+                return calls["n"] == calls["at"]
+
+            _crash_once(det.backend, method, should)
+            try:
                 det.compact()
-            elif event == "hot":
-                det.compact(hot_bucket_threshold=rng.choice([1, 2]))
-            elif event == "crash":
-                # die once at a random primitive inside the compaction,
-                # then RESTART over whatever the crash left behind
-                method = rng.choice(["commit_pointer", "remove_tree", "remove_file"])
-                calls = {"n": 0, "at": rng.randint(1, 3)}
+            except RuntimeError:
+                pass  # the injected crash (may also not fire: short passes)
+            det = fresh_detector()
+        elif event == "restart":
+            det = fresh_detector()
 
-                def should(*_a, **_k):
-                    calls["n"] += 1
-                    return calls["n"] == calls["at"]
+    # expected canonical per family: smallest id in its earliest batch
+    expected_canon = {}
+    for members in batches:
+        for i, f in sorted(members, key=lambda x: x[0]):
+            if f not in expected_canon:
+                expected_canon[f] = i
+    family_of = dict(docs)
 
-                _crash_once(det.backend, method, should)
-                try:
-                    det.compact(
-                        hot_bucket_threshold=rng.choice([None, 1])
-                    )
-                except RuntimeError:
-                    pass  # the injected crash (may also not fire: short passes)
-                det = fresh_detector()
-            elif event == "restart":
-                det = fresh_detector()
+    by_id = {}
+    for r in reports:
+        by_id.setdefault(r["doc_id"], []).append(r)
+    assert set(by_id) == {i for i, _ in docs}
+    for i, f in docs:
+        rows = by_id[i]
+        if i == expected_canon[f]:
+            assert len(rows) == 1 and not rows[0]["is_dup"], (i, rows)
+        else:
+            for r in rows:
+                assert r["is_dup"] and family_of[r["dup_of"]] == f and r["dup_of"] != i
 
-        # expected canonical per family: smallest id in its earliest batch
-        expected_canon = {}
-        for members in batches:
-            for i, f in sorted(members, key=lambda x: x[0]):
-                if f not in expected_canon:
-                    expected_canon[f] = i
-        family_of = dict(docs)
-
-        by_id = {}
-        for r in reports:
-            by_id.setdefault(r["doc_id"], []).append(r)
-        assert set(by_id) == {i for i, _ in docs}
-        for i, f in docs:
-            rows = by_id[i]
-            if i == expected_canon[f]:
-                assert len(rows) == 1 and not rows[0]["is_dup"], (i, rows)
-            else:
-                for r in rows:
-                    assert r["is_dup"] and family_of[r["dup_of"]] == f and r["dup_of"] != i
-
-        det.compact()  # heal any crash-window duplicate rows
-        sigs = det.read_store("sigs")
-        got = sorted(x["doc_id"] for x in sigs.collect())
-        assert got == sorted(expected_canon.values())
-    finally:
-        _drop_store_tables(spark, tmp_path / "state")
+    det.compact()  # heal any crash-window duplicate rows
+    sigs = det.read_store("sigs")
+    got = sorted(x["doc_id"] for x in sigs.collect())
+    assert got == sorted(expected_canon.values())
 
 
 @pytest.mark.slow
@@ -1613,8 +1309,8 @@ def test_random_dual_host_schedules_fail_loud_or_heal(
     """Dual-HOST soak over one manifest-backed detector store: two
     instances carrying DIFFERENT host identities (the advisory lock is
     defeated — the object-store scenario it cannot order) run a random
-    interleaved schedule of batches, full compactions, hot-bucket
-    compactions, and mid-compact remote appends (the straggler-fold
+    interleaved schedule of batches, full compactions, and mid-compact
+    remote appends (the straggler-fold
     window, injected at the victim's commit_pointer with the remote
     batch's epoch GC lag-stubbed as in the focused fold test).
 
@@ -1686,9 +1382,9 @@ def test_random_dual_host_schedules_fail_loud_or_heal(
             if not r["is_dup"]:
                 canonical[r["doc_id"]] = f
 
-    def run_compact(det, hot):
+    def run_compact(det):
         try:
-            det.compact(hot_bucket_threshold=rng.choice([1, 2]) if hot else None)
+            det.compact()
         except RuntimeError as e:
             assert _ALLOWED.search(str(e)), f"NOT a loud fencing error: {e}"
 
@@ -1716,7 +1412,7 @@ def test_random_dual_host_schedules_fail_loud_or_heal(
 
         victim.backend.commit_pointer = inject
         try:
-            run_compact(victim, hot=False)
+            run_compact(victim)
         finally:
             victim.backend.commit_pointer = real_commit
 
@@ -1727,13 +1423,11 @@ def test_random_dual_host_schedules_fail_loud_or_heal(
     run_batch(dets["hostB"])
     for _ in range(10):
         host = rng.choice(["hostA", "hostB"])
-        op = rng.choice(["batch", "batch", "batch", "compact", "hot", "race"])
+        op = rng.choice(["batch", "batch", "batch", "compact", "race"])
         if op == "batch":
             run_batch(dets[host])
         elif op == "compact":
-            run_compact(dets[host], hot=False)
-        elif op == "hot":
-            run_compact(dets[host], hot=True)
+            run_compact(dets[host])
         else:
             run_racing_compact(host)
 
@@ -1746,7 +1440,7 @@ def test_random_dual_host_schedules_fail_loud_or_heal(
     final = IncrementalNearDup(
         spark, state, threshold=0.5, backend=ManifestBackend()
     )
-    final.compact(target_partitions=1)
+    final.compact()
     probe_id = 90000
     for doc_id, f in sorted(canonical.items()):
         near = fam_text[f].replace(f"dw{seed}fam{f}tok11", "variantword")
@@ -1864,9 +1558,9 @@ def test_composed_dual_host_lag_crash_detector_soak(
                 (raced_canonical if tainted else canonical)[r["doc_id"]] = f
         return True
 
-    def run_compact(det, hot):
+    def run_compact(det):
         try:
-            det.compact(hot_bucket_threshold=rng.choice([1, 2]) if hot else None)
+            det.compact()
             return True
         except RuntimeError as e:
             assert _ALLOWED.search(str(e)), f"NOT a loud error: {e}"
@@ -1887,7 +1581,7 @@ def test_composed_dual_host_lag_crash_detector_soak(
             return real(*a, **kw)
 
         setattr(shared_backend, prim, wrapper)
-        op = rng.choice([lambda d: run_batch(d), lambda d: run_compact(d, False)])
+        op = rng.choice([lambda d: run_batch(d), lambda d: run_compact(d)])
         try:
             op(dets[host])
         finally:
@@ -1918,7 +1612,7 @@ def test_composed_dual_host_lag_crash_detector_soak(
 
         monkeypatch.setattr(shared_backend, "commit_pointer", inject)
         try:
-            run_compact(victim, hot=False)
+            run_compact(victim)
         finally:
             monkeypatch.setattr(shared_backend, "commit_pointer", real_commit)
 
@@ -1926,13 +1620,11 @@ def test_composed_dual_host_lag_crash_detector_soak(
     run_batch(dets["hostB"])
     for _ in range(8):
         host = rng.choice(["hostA", "hostB"])
-        op = rng.choice(["batch", "batch", "compact", "hot", "race", "crash"])
+        op = rng.choice(["batch", "batch", "compact", "race", "crash"])
         if op == "batch":
             run_batch(dets[host])
         elif op == "compact":
-            run_compact(dets[host], hot=False)
-        elif op == "hot":
-            run_compact(dets[host], hot=True)
+            run_compact(dets[host])
         elif op == "race":
             run_racing_compact(host)
         else:
@@ -1948,7 +1640,7 @@ def test_composed_dual_host_lag_crash_detector_soak(
     final = IncrementalNearDup(
         spark, state, threshold=0.5, backend=shared_backend
     )
-    final.compact(target_partitions=1)
+    final.compact()
     probe_id = 90000
     for doc_id, f in sorted(canonical.items()):
         # strict: a clean canonical must still catch near-variants —

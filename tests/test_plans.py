@@ -85,168 +85,6 @@ def test_projection_prunes_unused_columns(tables):
     assert schemas and len(schemas[0].split(",")) == 2
 
 
-def test_partitioned_write_prunes(spark, tables, tmp_path):
-    from streaming_examples_spark.sources.writer import write_date_partitioned
-
-    path = str(tmp_path / "events_by_date")
-    write_date_partitioned(tables["events"].limit(500), path, ts_col="ts")
-    reread = spark.read.parquet(path).filter(F.col("event_date") == "2024-01-05")
-    plan = formatted_plan(reread)
-    # the date filter must land in PartitionFilters (directory pruning),
-    # not a post-scan Filter
-    assert "PartitionFilters" in plan
-    assert "event_date" in plan.split("PartitionFilters")[1][:200]
-
-
-def test_bucketed_join_elides_shuffle(spark, tables, tmp_path):
-    from streaming_examples_spark.sources.writer import write_bucketed_table
-
-    write_bucketed_table(
-        tables["orders"].limit(1000), "orders_b", bucket_col="o_orderkey", n_buckets=4
-    )
-    write_bucketed_table(
-        tables["lineitem"].limit(4000), "lineitem_b", bucket_col="l_orderkey", n_buckets=4
-    )
-    a = spark.table("orders_b")
-    b = spark.table("lineitem_b")
-    joined = a.join(b, a["o_orderkey"] == b["l_orderkey"]).hint("merge")
-    # both sides bucketed on the join key with equal bucket counts:
-    # the sort-merge join needs NO shuffle exchange
-    assert exchange_count(joined) == 0
-    spark.sql("DROP TABLE IF EXISTS orders_b")
-    spark.sql("DROP TABLE IF EXISTS lineitem_b")
-
-
-def test_incremental_dedup_bucketed_probe_shuffles_batch_side_only(
-    spark, tables, tmp_path
-):
-    """The bucketed band store's whole point at 100 TB: the probe join
-    reads the corpus-sized store IN PLACE (its bucketing satisfies the
-    join's distribution) and shuffles only the small batch side — so
-    the plan must contain exactly one exchange, on the batch side."""
-    from streaming_examples_spark.streaming.incremental_dedup import IncrementalNearDup
-
-    det = IncrementalNearDup(
-        spark, str(tmp_path / "state"), threshold=0.5, bands_buckets=4
-    )
-    try:
-        det.process_batch(
-            spark.createDataFrame(
-                [(1, "the quick brown fox jumps over the lazy dog today")],
-                "doc_id long, text string",
-            ),
-            0,
-        )
-        store = spark.table(det.store_table("bands"))
-        batch = spark.createDataFrame(
-            [(2, 0, "k")], "doc_id long, band_id int, band_key string"
-        )
-        probe = batch.hint("merge").join(store, ["band_id", "band_key"])
-        plan = formatted_plan(probe)
-        assert "Bucketed: true" in plan  # the store scan uses its buckets
-        assert exchange_count(probe) == 1  # batch side only; store elided
-    finally:
-        for row in spark.sql(f"SHOW TABLES LIKE '{det._bands_table}*'").collect():
-            spark.sql(f"DROP TABLE IF EXISTS {row['tableName']}")
-        for row in spark.sql(f"SHOW TABLES LIKE '{det._sigs_table}*'").collect():
-            spark.sql(f"DROP TABLE IF EXISTS {row['tableName']}")
-
-
-def test_incremental_dedup_bucketed_sigs_joins_shuffle_batch_side_only(
-    spark, tables, tmp_path
-):
-    """The sigs store mirrors the bands store's 100 TB layout: the
-    per-batch replay-protection anti-join and the signature-verify join
-    both read the corpus-sized store IN PLACE (its doc_id bucketing
-    satisfies the join distribution) and shuffle only the batch side —
-    exactly one exchange each, on the batch side."""
-    from streaming_examples_spark.streaming.incremental_dedup import IncrementalNearDup
-
-    det = IncrementalNearDup(
-        spark, str(tmp_path / "state"), threshold=0.5, bands_buckets=4
-    )
-    try:
-        det.process_batch(
-            spark.createDataFrame(
-                [(1, "the quick brown fox jumps over the lazy dog today")],
-                "doc_id long, text string",
-            ),
-            0,
-        )
-        store = spark.table(det.store_table("sigs"))
-
-        # replay-protection shape: batch LEFT ANTI store on doc_id
-        batch = spark.createDataFrame([(2, "t")], "doc_id long, text string")
-        anti = batch.hint("merge").join(store.select("doc_id"), "doc_id", "left_anti")
-        plan = formatted_plan(anti)
-        assert "Bucketed: true" in plan
-        assert exchange_count(anti) == 1  # batch side only; store elided
-
-        # signature-verify shape: candidates JOIN store on old_id — the
-        # store side keeps its bucketing through the rename (alias-aware
-        # output partitioning), so again one exchange, batch side only
-        cands = spark.createDataFrame([(2, 1)], "doc_id long, old_id long")
-        verify = cands.hint("merge").join(
-            store.select(
-                F.col("doc_id").alias("old_id"), F.col("sig").alias("old_sig")
-            ),
-            "old_id",
-        )
-        plan_v = formatted_plan(verify)
-        assert "Bucketed: true" in plan_v
-        assert exchange_count(verify) == 1
-    finally:
-        for row in spark.sql(f"SHOW TABLES LIKE '{det._bands_table}*'").collect():
-            spark.sql(f"DROP TABLE IF EXISTS {row['tableName']}")
-        for row in spark.sql(f"SHOW TABLES LIKE '{det._sigs_table}*'").collect():
-            spark.sql(f"DROP TABLE IF EXISTS {row['tableName']}")
-
-
-def test_incremental_dedup_compacted_store_elides_probe_sort(spark, tables, tmp_path):
-    """The SORTED BY clause's payoff: after compact() leaves one file
-    per bucket, the sort-merge probe reads the store pre-sorted and
-    skips its O(store) per-batch sort — the plan has exactly one Sort,
-    on the batch side. (Pre-compact, multi-file buckets lose the sorted
-    property and the store side sorts too — asserted as the contrast.)"""
-    from streaming_examples_spark.streaming.incremental_dedup import IncrementalNearDup
-
-    det = IncrementalNearDup(
-        spark, str(tmp_path / "state"), threshold=0.5, bands_buckets=4
-    )
-    try:
-        for i, text in enumerate(
-            [
-                "the quick brown fox jumps over the lazy dog right now",
-                "a completely different sentence about catalyst plans and shuffles",
-            ]
-        ):
-            det.process_batch(
-                spark.createDataFrame([(i + 1, text)], "doc_id long, text string"), i
-            )
-        store = spark.table(det.store_table("bands"))
-        batch = spark.createDataFrame(
-            [(9, 0, "k")], "doc_id long, band_id int, band_key string"
-        )
-        probe = batch.hint("merge").join(store, ["band_id", "band_key"])
-        # two appends → several files per bucket → sortedness lost:
-        # both sides sort (formatted plans list each node twice:
-        # tree + details section)
-        assert count_occurrences(probe, r"\bSort\b") == 4
-
-        det.compact()
-        store = spark.table(det.store_table("bands"))
-        probe = batch.hint("merge").join(store, ["band_id", "band_key"])
-        assert exchange_count(probe) == 1
-        # one file per bucket → store side reads pre-sorted; only the
-        # batch side sorts (×2 plan mentions)
-        assert count_occurrences(probe, r"\bSort\b") == 2
-    finally:
-        for row in spark.sql(f"SHOW TABLES LIKE '{det._bands_table}*'").collect():
-            spark.sql(f"DROP TABLE IF EXISTS {row['tableName']}")
-        for row in spark.sql(f"SHOW TABLES LIKE '{det._sigs_table}*'").collect():
-            spark.sql(f"DROP TABLE IF EXISTS {row['tableName']}")
-
-
 def test_multimodal_meta_union_plan_shape(spark):
     """The multimodal entry runs the whole quartet as ONE fused Arrow
     stage (r13; the r12 branch union ran five MapInPandas stages over

@@ -4,26 +4,27 @@ micro-batches and reports per-batch wall time, dup yield, and state
 size — the evidence that per-batch cost tracks BATCH size (probe is an
 equi-join into the band store), not accumulated corpus size.
 
-Usage: python tools/stress_incremental_dedup.py [--bucketed N] [--seed M]
+Usage: python tools/stress_incremental_dedup.py [--seed M]
        [--cap K|none] [--backend posix|manifest] [sf_dir] [n_batches]
+
+Every run ends with the store maintenance cycle: ``compact()``, a
+redelivery of batch 0, and a second ``compact()``. The tool exits
+non-zero unless both corpus stores reach epoch 2 or later, the
+redelivered batch reports no canonical (its canonicals fold away as
+known ids; its duplicates, never stored, are reported as duplicates
+again), and the canonical count is the same before, between and after
+the compactions.
 
 ``--cap`` sets the viral-band guard (default 256, the measured batch-family
 value; ``none`` disables) — A/B the per-batch cost of the cap's extra
 store scan.
 
-``--bucketed N`` runs the external-bucketed-band-store layout
-(bands_buckets=N): the probe join reads the store in place instead of
-shuffling it each batch — the flat-wall claim measured under both
-layouts.
-
 ``--backend manifest`` commits the stores through the object-store
-double (no hardlinks/renames, deferred deletes) — the same batches,
-plan checks, and compaction passes must hold under both backends.
+double (no hardlinks/renames, deferred deletes) — the same batches and
+compaction passes must hold under both backends.
 
 ``--seed M`` pre-folds M synthetic docs (``synth_docs``) into the
-store before streaming the sf batches — the big-store regime where the
-bucketed layout's elided store-side shuffle should beat the plain
-layout's per-batch store shuffle.
+store before streaming the sf batches — the big-store regime.
 """
 
 from __future__ import annotations
@@ -90,12 +91,7 @@ def synth_docs(spark: SparkSession, n_docs: int) -> DataFrame:
 
 def main() -> int:
     argv = list(sys.argv[1:])
-    buckets = None
     seed = 0
-    if "--bucketed" in argv:
-        i = argv.index("--bucketed")
-        buckets = int(argv[i + 1])
-        del argv[i : i + 2]
     if "--seed" in argv:
         i = argv.index("--seed")
         seed = int(argv[i + 1])
@@ -131,7 +127,6 @@ def main() -> int:
         spark,
         os.path.join(state, "state"),
         threshold=0.7,
-        bands_buckets=buckets,
         max_bucket_size=cap,
         backend=backend,
     )
@@ -146,12 +141,14 @@ def main() -> int:
         det.compact()  # one file set, the steady-state layout
         print(f"seeded {seed} docs into the store in {time.time() - t0:.1f}s", flush=True)
 
+    def batch_of(b: int) -> DataFrame:
+        return docs.filter(F.pmod(F.col("doc_id"), n_batches) == b)
+
     total_dups = 0
     t_all = time.time()
     for b in range(n_batches):
-        batch = docs.filter(F.pmod(F.col("doc_id"), n_batches) == b)
         t0 = time.time()
-        rep = det.process_batch(batch, b)
+        rep = det.process_batch(batch_of(b), b)
         n = rep.count()
         dups = rep.filter("is_dup").count()
         total_dups += dups
@@ -161,109 +158,41 @@ def main() -> int:
             flush=True,
         )
     wall = time.time() - t_all
-    sigs = det.read_store("sigs")
+    canonicals = [det.read_store("sigs").count()]
     print(
         f"total: {n_docs} docs in {wall:.1f}s ({n_docs / wall:.0f} docs/s), "
-        f"{total_dups} dups, store={sigs.count()} canonicals"
+        f"{total_dups} dups, store={canonicals[0]} canonicals"
     )
-    print(f"store_stats: {det.store_stats()}", flush=True)
-    if buckets:
-        # the 100 TB contract, checked against the LIVE (big) store:
-        # every store join — band probe, replay anti-join, signature
-        # verify — must read the store in place with exactly ONE
-        # exchange, on the batch side (store-side Exchange elided)
-        from streaming_examples_spark.plans.inspect import exchange_count
 
-        bands_t = spark.table(det.store_table("bands"))
-        sigs_t = spark.table(det.store_table("sigs"))
-        b_batch = spark.createDataFrame(
-            [(0, 0, "k")], "doc_id long, band_id int, band_key string"
-        )
-        s_batch = spark.createDataFrame([(0, "t")], "doc_id long, text string")
-        c_batch = spark.createDataFrame([(0, 1)], "doc_id long, old_id long")
-        probes = {
-            "bands probe": b_batch.hint("merge").join(bands_t, ["band_id", "band_key"]),
-            "sigs anti (replay)": s_batch.hint("merge").join(
-                sigs_t.select("doc_id"), "doc_id", "left_anti"
-            ),
-            "sigs verify": c_batch.hint("merge").join(
-                sigs_t.select(
-                    F.col("doc_id").alias("old_id"), F.col("sig").alias("old_sig")
-                ),
-                "old_id",
-            ),
-        }
-        for label, join in probes.items():
-            n = exchange_count(join)
-            assert n == 1, f"{label}: {n} exchanges (store side must be elided)"
-            print(f"plan check: {label} -> 1 exchange (batch side only)", flush=True)
-
-        # compaction report: per-bucket (hot-only) pass vs full rewrite
-        import glob
-
-        from streaming_examples_spark.streaming.incremental_dedup import (
-            _BUCKET_ID_RE,
-        )
-
-        def histogram(store):
-            h = {}
-            for f in glob.glob(os.path.join(det._data_path(store), "*.parquet")):
-                m = _BUCKET_ID_RE.search(os.path.basename(f))
-                if m:
-                    h[int(m.group(1))] = h.get(int(m.group(1)), 0) + 1
-            return h
-        h0 = histogram("bands")
-        n0 = sum(h0.values())
-        thr = max(1, min(h0.values()))
-        hot = sum(1 for v in h0.values() if v > thr)
-        t0 = time.time()
-        det.compact(hot_bucket_threshold=thr)
-        t_hot = time.time() - t0
-        h1 = histogram("bands")
-        print(
-            f"per-bucket compact (thr={thr}): {hot}/{len(h0)} hot buckets, "
-            f"bands files {n0} -> {sum(h1.values())}, {t_hot:.1f}s",
-            flush=True,
-        )
-        t0 = time.time()
-        det.compact()
-        t_full = time.time() - t0
-        h2 = histogram("bands")
-        print(
-            f"full compact: bands files -> {sum(h2.values())} "
-            f"(1/bucket), {t_full:.1f}s",
-            flush=True,
-        )
-        # the skewed-delta scenario per-bucket compaction exists for:
-        # a few small late batches fragment a FEW buckets on top of the
-        # compacted base; the hot-only pass must leave the cold
-        # majority's base files untouched
-        for i in range(3):
-            det.process_batch(
-                spark.createDataFrame(
-                    [(2 * 10**9 + i, f"late delta document {i} with its own "
-                      f"unique vocabulary x{i}a x{i}b x{i}c x{i}d x{i}e")],
-                    "doc_id long, text string",
-                ),
-                1000 + i,
-            )
-        h3 = histogram("bands")
-        hot3 = sum(1 for v in h3.values() if v > 1)
-        t0 = time.time()
-        det.compact(hot_bucket_threshold=1)
-        t_delta = time.time() - t0
-        h4 = histogram("bands")
-        print(
-            f"post-compact delta: 3 one-doc batches touched {hot3}/{len(h3)} "
-            f"buckets; hot-only pass rewrote them ({sum(h3.values())} -> "
-            f"{sum(h4.values())} files, {t_delta:.1f}s), cold buckets untouched "
-            f"vs full-rewrite {t_full:.1f}s",
-            flush=True,
-        )
-        for base in (det._bands_table, det._sigs_table):
-            for row in spark.sql(f"SHOW TABLES LIKE '{base}*'").collect():
-                spark.sql(f"DROP TABLE IF EXISTS {row['tableName']}")
+    # maintenance cycle: compact, redeliver batch 0 (nothing in it may
+    # come out canonical again), compact again
+    t0 = time.time()
+    det.compact()
+    canonicals.append(det.read_store("sigs").count())
+    replayed = det.process_batch(batch_of(0), n_batches).filter("NOT is_dup").count()
+    det.compact()
+    canonicals.append(det.read_store("sigs").count())
+    stats = det.store_stats()
+    epochs = {name: stats["stores"][name]["epoch"] for name in ("bands", "sigs")}
+    print(
+        f"maintenance: compact + replay + compact in {time.time() - t0:.1f}s, "
+        f"epochs={epochs}, replayed_canonicals={replayed}, canonicals={canonicals}",
+        flush=True,
+    )
+    print(f"store_stats: {stats}", flush=True)
     shutil.rmtree(state, ignore_errors=True)
+    failures = []
+    if min(epochs.values()) < 2:
+        failures.append(f"store epochs {epochs} < 2: compaction never committed")
+    if replayed:
+        failures.append(f"redelivered batch 0 reported {replayed} canonicals")
+    if len(set(canonicals)) != 1:
+        failures.append(f"canonical count changed across compactions: {canonicals}")
+    for f in failures:
+        print(f"FAIL: {f}", flush=True)
+    if failures:
+        return 1
+    print("PASS", flush=True)
     return 0
 
 
