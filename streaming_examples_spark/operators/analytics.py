@@ -189,7 +189,7 @@ def group_sets_revenue(orders: DataFrame) -> DataFrame:
     )
 
 
-def numeric_quantiles(lineitem: DataFrame, n_buckets: int | None = None) -> DataFrame:
+def numeric_quantiles(lineitem: DataFrame) -> DataFrame:
     """Per-group exact continuous quantiles (p25/p50/p75), built from a
     rank window + explicit linear interpolation ``lo + (hi-lo)*frac``
     rather than the built-in ``percentile``: the explicit expression
@@ -197,117 +197,26 @@ def numeric_quantiles(lineitem: DataFrame, n_buckets: int | None = None) -> Data
     matches bit-for-bit (builtin `percentile` vs DuckDB `quantile_cont`
     disagree in the last ulp at .005 rounding boundaries).
 
-    The rank strategy is size-adaptive (guide §2.5):
+    Ranks are defined over the NON-NULL values only (NULL prices are
+    dropped before ranking, so ``n_items`` counts non-null prices).
     ``Window.partitionBy(group)`` hashes ALL rows of a group into ONE
     task — at bench scale that is fine (the whole query sits at the
     stage-latency floor: an r13 probe measured every restructure
     SLOWER at sf0.1 — bucketed rank 0.85→1.03 s, broadcast-n
     0.85→1.08 s, filter-split 0.85→0.85 s), but at 100 TB a per-group
-    sort is a straggler by construction. When the plan-estimated input
-    exceeds ``SPARK_GRAFT_QUANTILE_BUCKET_MIN_BYTES`` (default 256 MiB;
-    the bench fixtures estimate ≈3 MB at sf0.1) the rank is instead
-    decomposed across deterministic value buckets:
-
-    1. per-group (min, max) — one columnar scan, map-side agg, 3 rows;
-    2. bucket = floor((v - min) / (max - min) * n_buckets), an affine
-       map that is monotonic in v (IEEE: subtraction of a common bound,
-       then division/multiplication by positive constants preserve
-       order), so global rank = local rank within (group, bucket) +
-       count of rows in lower buckets, exactly;
-    3. one shuffle by (group, bucket) — same bytes as the window form
-       but n_buckets× the parallelism; row_number within each bucket;
-    4. per-bucket counts (second columnar scan, map-side agg), a
-       cumulative-sum window over the ≤ groups×n_buckets count rows
-       builds the rank offsets, broadcast back.
-
-    Both strategies are defined over the NON-NULL values only (NULL
-    prices are dropped before ranking, so ``n_items`` counts non-null
-    prices): a NULL has no bucket — ``floor(null)`` under ``least()``
-    would land it in the top bucket while the window form ranks it
-    first. The interpolated value at each rank is identical under both
-    strategies: equal v always land in the same bucket, and any
-    v-consistent total order selects the same value at a given rank
-    (row-identity is pinned by a test at sf0.01). The size estimate
-    reads a private JVM API; if that call fails the window form runs. ``n_buckets``
-    defaults to 4× the cluster parallelism — derived from
-    defaultParallelism, so it scales with the deployment rather than
-    being tuned to local[32]; passing it explicitly forces the
-    bucketed strategy. At extreme scale `approx_percentile` (t-digest,
-    map-side combinable, bounded error) via
-    :func:`numeric_quantiles_approx` remains the sketch alternative."""
-    import os
-
+    sort is a straggler by construction; there `approx_percentile`
+    (t-digest, map-side combinable, bounded error) via
+    :func:`numeric_quantiles_approx` is the path."""
     from pyspark.sql import Window
 
     b0 = lineitem.where(F.col("l_extendedprice").isNotNull()).select(
         "l_returnflag", F.col("l_extendedprice").alias("v")
     )
-    force_bucketed = n_buckets is not None
-    if n_buckets is None:
-        n_buckets = max(16, b0.sparkSession.sparkContext.defaultParallelism * 4)
-    try:
-        min_bytes = int(
-            os.environ.get("SPARK_GRAFT_QUANTILE_BUCKET_MIN_BYTES", str(256 << 20))
-        )
-    except ValueError:
-        min_bytes = 256 << 20
-    from streaming_examples_spark.plans.inspect import plan_bytes
-
-    # no estimate (private JVM API unavailable): the window form is safe
-    est_bytes = plan_bytes(b0)
-
-    if force_bucketed or (est_bytes is not None and est_bytes > min_bytes):
-        stats = b0.groupBy("l_returnflag").agg(
-            F.min("v").alias("_vmin"), F.max("v").alias("_vmax")
-        )
-        span = F.col("_vmax") - F.col("_vmin")
-        bk = (
-            b0.join(F.broadcast(stats), "l_returnflag")
-            .withColumn(
-                "_bkt",
-                F.when(
-                    span > 0,
-                    F.least(
-                        F.lit(n_buckets - 1),
-                        F.floor((F.col("v") - F.col("_vmin")) / span * n_buckets),
-                    ),
-                )
-                .otherwise(F.lit(0))
-                .cast("int"),
-            )
-            .drop("_vmin", "_vmax")
-        )
-        wl = Window.partitionBy("l_returnflag", "_bkt").orderBy("v")
-        loc = bk.withColumn("_lrn", F.row_number().over(wl))
-        # bucket counts from the PRE-window frame: count() partially
-        # aggregates map-side, so this branch is a second columnar scan
-        # + a tiny exchange — deriving it from `loc` instead would
-        # duplicate the big exchange AND re-run the rank sort under the
-        # broadcast
-        cnt = bk.groupBy("l_returnflag", "_bkt").agg(
-            F.count(F.lit(1)).alias("_c")
-        )
-        wo = Window.partitionBy("l_returnflag").orderBy("_bkt")
-        off = cnt.select(
-            "l_returnflag",
-            "_bkt",
-            F.coalesce(
-                F.sum("_c").over(wo.rowsBetween(Window.unboundedPreceding, -1)),
-                F.lit(0),
-            ).alias("_off"),
-            F.sum("_c").over(Window.partitionBy("l_returnflag")).alias("n"),
-        )
-        b = (
-            loc.join(F.broadcast(off), ["l_returnflag", "_bkt"])
-            .withColumn("rn", F.col("_lrn") + F.col("_off"))
-            .drop("_bkt", "_lrn", "_off")
-        )
-    else:
-        w = Window.partitionBy("l_returnflag").orderBy("v")
-        wn = Window.partitionBy("l_returnflag")
-        b = b0.withColumn("rn", F.row_number().over(w)).withColumn(
-            "n", F.count(F.lit(1)).over(wn)
-        )
+    w = Window.partitionBy("l_returnflag").orderBy("v")
+    wn = Window.partitionBy("l_returnflag")
+    b = b0.withColumn("rn", F.row_number().over(w)).withColumn(
+        "n", F.count(F.lit(1)).over(wn)
+    )
 
     def quantile(p: float) -> Column:
         pos_row = F.lit(p) * (F.col("n") - 1)  # per-row; n is constant per group

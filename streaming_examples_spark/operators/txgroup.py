@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from streaming_examples_spark.model.decoders import parse_tx_id
 from streaming_examples_spark.operators.ingest import with_lsn
 
 
@@ -77,12 +78,12 @@ def tx_end_events(tx_events: DataFrame) -> DataFrame:
     once, persist, and pass it down via the ``ends=`` parameters
     (``tx_denormalize`` pins it alongside its gates).
     """
-    parts = F.split(F.col("id"), ":")
+    tx_id, commit_lsn = parse_tx_id("id")
     return (
         tx_events.filter(F.col("status") == "END")
         .select(
-            parts.getItem(0).cast("long").alias("tx_id"),
-            parts.getItem(1).cast("long").alias("tx_commit_lsn"),
+            tx_id.alias("tx_id"),
+            commit_lsn.alias("tx_commit_lsn"),
             "event_count",
             "data_collections",
         )

@@ -88,6 +88,7 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.util import inheritable_thread_target
 
+from streaming_examples_spark.model.decoders import parse_tx_id
 from streaming_examples_spark.operators.txjoin import TxDenormResult, tx_denormalize
 from streaming_examples_spark.plans.inspect import plan_bytes
 from streaming_examples_spark.streaming.state_backend import (
@@ -542,7 +543,7 @@ class TxDenormBatchProcessor:
             the inputs' order keys, both order keys of a line event and
             the carried keys (empty on a fresh store)."""
         carry_orders, carry_lines, carry_txs = carried
-        end_lsn = F.split(F.col("id"), ":").getItem(1).cast("long")
+        end_lsn = parse_tx_id("id")[1]
         is_end = F.col("status") == "END"
         event_lsn = F.col("source.lsn").cast("long")
 
@@ -748,8 +749,7 @@ class TxDenormBatchProcessor:
             applied_b = F.broadcast(applied)
             tx_events = tx_events.join(
                 applied_b,
-                F.split(tx_events["id"], ":").getItem(0).cast("long")
-                == applied["tx_id"],
+                parse_tx_id(tx_events["id"])[0] == applied["tx_id"],
                 "left_anti",
             )
             order_events = order_events.join(
@@ -805,10 +805,9 @@ class TxDenormBatchProcessor:
         # The offender count rides the intake round; the sample for the
         # message is pulled only when it is non-zero.
         if intake["offenders"]:
-            _parts = F.split(F.col("id"), ":")
+            tx_id, commit_lsn = parse_tx_id("id")
             fresh = tx_events.dropDuplicates(["status", "id"]).filter(
-                (F.col("status") == "END")
-                & (_parts.getItem(1).cast("long") <= prev_hwm)
+                (F.col("status") == "END") & (commit_lsn <= prev_hwm)
             )
             # bounded driver transfer (r10 ADVICE): a pathological batch
             # (e.g. a large tx-metadata replay after applied-retention
@@ -818,8 +817,7 @@ class TxDenormBatchProcessor:
             # never the source lineage)
             _OFFENDER_SAMPLE = 16
             offender_frame = fresh.select(
-                _parts.getItem(0).cast("long").alias("tx_id"),
-                _parts.getItem(1).cast("long").alias("commit_lsn"),
+                tx_id.alias("tx_id"), commit_lsn.alias("commit_lsn")
             )
             offenders = offender_frame.limit(_OFFENDER_SAMPLE).collect()
             if len(offenders) < _OFFENDER_SAMPLE:
@@ -930,12 +928,9 @@ class TxDenormBatchProcessor:
         # count and new_applied); freed with the inputs after the commit
         self._pinned.extend(res.pinned)
         emitted_txs = res.emitted_txs
-        emitted = emitted_txs.select(
-            F.col("tx_id").cast("string").alias("_emitted_tx")
-        )
         tx_keep = tx_all.join(
-            emitted,
-            F.split(tx_all["id"], ":").getItem(0) == emitted["_emitted_tx"],
+            emitted_txs,
+            parse_tx_id(tx_all["id"])[0] == emitted_txs["tx_id"],
             "left_anti",
         )
         # commit-order contract: a global sort, read back in partition

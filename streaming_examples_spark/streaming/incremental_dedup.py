@@ -13,22 +13,24 @@ Design (all equi-joins, no pair space, state ∝ unique corpus):
     Only CANONICAL (non-duplicate) docs are stored, so state grows
     with unique content, not with stream length — re-crawled copies
     never inflate it.
-  * Every store commits through the same versioned commit as the tx
-    state store (``state_backend.commit_version``/``gc_versions``):
-    each store's live files sit under ``<store>/v<E>/`` and a
-    per-store generation pointer (``commit_pointer`` — POSIX rename
-    flip or object-store conditional put) names the committed epoch.
-    Appends land in the CURRENT epoch dir (Spark's write commit makes
-    the files appear whole); only COMPACTION bumps the epoch: the
-    rewritten store is fully written under ``v<E+1>`` before one
-    pointer flip makes it live, and the superseded epoch is retired
-    through the backend (deferred, reference-aware under a manifest
-    backend) after the straggler fold. No
-    ``os.rename`` directory swaps anywhere — this store is the one a
-    100 TB deployment must host on object storage, so the commit
-    protocol carries no POSIX assumption (proven by running the crash
-    suite over ``LocalPosixBackend`` AND ``ManifestBackend``,
-    tests/test_incremental_dedup.py).
+  * The state dir is ONE pointer root, committed through the same
+    versioned commit as the tx state store
+    (``state_backend.commit_version``/``gc_versions``): each version
+    ``v<E>/`` holds every store — ``sigs/``, ``bands/`` and the
+    viral-cap summary ``band_hot/`` — and one generation pointer
+    (``commit_pointer`` — POSIX rename flip or object-store
+    conditional put) names the committed version, so a restore sees
+    ALL-old or ALL-new stores, never a mix. Appends land in the
+    current version's store dirs (Spark's write commit makes the files
+    appear whole); only COMPACTION builds a new version: every store is
+    fully rewritten under ``v<E+1>`` before one pointer flip makes
+    them live together, and the superseded version is retired through
+    the backend (deferred, reference-aware under a manifest backend)
+    after the straggler fold. No ``os.rename`` directory swaps
+    anywhere — this store is the one a 100 TB deployment must host on
+    object storage, so the commit protocol carries no POSIX assumption
+    (proven by running the crash suite over ``LocalPosixBackend`` AND
+    ``ManifestBackend``, tests/test_incremental_dedup.py).
   * Per batch: new docs are shingled once (`shingle_base_hashes`, one
     md5 per shingle); candidates come from an equi-join on
     (band_id, band_key) against the store AND a within-batch band
@@ -49,25 +51,28 @@ Design (all equi-joins, no pair space, state ∝ unique corpus):
     per-batch store scan (see the viral-cap section below, ~4-5 %
     measured premium).
 
-One layout: both stores are plain parquet. Only two things write a
-store — appends into the current epoch, and ``commit_version`` builds
-(a full compaction, the ``band_hot`` summary).
+One layout: every store is plain parquet inside the version dir. Only
+two things write a store — appends into the current version, and a
+compaction's ``commit_version`` build (``sigs``, ``bands``, their
+``band_hot`` summary and the ``_consumed.json`` straggler manifest,
+published by one flip).
 
 One on-disk format: the state dir is sealed with ``_layout.json`` =
-``{"format": 1, "backend": ..., "bands_buckets": null, "sigs_buckets":
-null}`` before the first append and validated at init
+``{"format": 1, "backend": ..., "stores": ["band_hot", "bands",
+"sigs"]}`` before the first append and validated at init
 (``state_backend.check_layout``). A different backend would read no
-committed epoch and reclaim live files, a dir sealed with a bucket
-count holds a bucketed-table layout this module no longer reads
-(SCALE_NOTES.md, "Bucketed layout retired"), and any other on-disk shape
-(a dir without the seal, an older seal) cannot be validated — all
-raise ``ValueError`` instead of reading the store as empty. To
-recover, rebuild the state dir from the event log: move it aside and
-replay the source from its start into an empty dir.
+committed version and reclaim live files, a dir sealed without the
+``stores`` field holds an older layout this module no longer reads
+(per-store pointer roots, or the bucketed tables: SCALE_NOTES.md,
+"Bucketed layout retired"), and any other on-disk shape (a dir without
+the seal, an older seal) cannot be validated — all raise
+``ValueError`` instead of reading the store as empty. To recover,
+rebuild the state dir from the event log: move it aside and replay the
+source from its start into an empty dir.
 
 Single-writer contract: ``process_batch`` and ``compact`` take an
 advisory writer lock on the state dir (``_writer.lock``) — running
-them concurrently could lose appends that land in the epoch compact is
+them concurrently could lose appends that land in the version compact is
 superseding, so the overlap raises loudly instead; a crashed local owner's lock is
 broken automatically (see ``_writer_lock``).
 
@@ -79,7 +84,6 @@ dedup: TxAware...Operator.java:357-430) to the training-data domain.
 from __future__ import annotations
 
 import contextlib
-import functools
 import json
 import os
 
@@ -113,15 +117,27 @@ _SIG_SCHEMA = "doc_id long, sig array<long>"
 _BAND_SCHEMA = "band_id int, band_key string, doc_id long"
 
 
-_STORES = {"sigs": _SIG_SCHEMA, "bands": _BAND_SCHEMA}
+#: the appended stores and their fixed read schemas, in append order:
+#: bands BEFORE sigs (see _process_batch_locked)
+_STORES = {"bands": _BAND_SCHEMA, "sigs": _SIG_SCHEMA}
+#: the viral-cap summary store, built by every capped compaction
+_HOT = "band_hot"
 
 #: data files per store after a full compaction
 _COMPACT_PARTITIONS = 4
 
-#: the ``_layout.json`` seal fields: the detector writes plain stores
-#: only, so a dir sealed with a bucket count (the retired bucketed
-#: layout) fails ``check_layout``
-_LAYOUT = {"bands_buckets": None, "sigs_buckets": None}
+#: memory bound for the driver-side since-compact count cache
+#: (_cap_delta): beyond this many keys, singleton entries are evicted
+#: (each eviction can understate that key by 1 — the cap fires late,
+#: the safe direction). The bound exists for deployments that outrun
+#: the documented compact cadence; a compaction's new version resets
+#: the cache against the exact rebuilt summary.
+_CAP_CACHE_MAX_KEYS = 5_000_000
+
+#: the ``_layout.json`` seal fields: one pointer root whose versions
+#: hold every store, so a dir written with per-store pointer roots (or
+#: the retired bucketed tables) fails ``check_layout``
+_LAYOUT = {"stores": sorted((*_STORES, _HOT))}
 
 
 def _data_file_names(uris) -> list[str]:
@@ -170,13 +186,12 @@ class IncrementalNearDup:
         text_col: str = "text",
         id_col: str = "doc_id",
         max_bucket_size: int | None = 256,
-        cap_cache_max_keys: int = 5_000_000,
         backend: StateStorageBackend | None = None,
     ):
         self.spark = spark
         self.state_dir = state_dir
-        #: storage primitives behind every store commit (epoch pointer
-        #: flips, epoch-dir removal, logical listings) — the same seam
+        #: storage primitives behind every store commit (version pointer
+        #: flips, version-dir removal, logical listings) — the same seam
         #: the tx state store runs on; identity sealed in _layout.json
         #: so a state dir is only reopened by the backend that wrote it
         self.backend = backend if backend is not None else LocalPosixBackend()
@@ -191,97 +206,81 @@ class IncrementalNearDup:
         #: membership exceeds this are skipped by probe AND self-join;
         #: near-dups still pair through their other, selective bands.
         self.max_bucket_size = max_bucket_size
-        #: memory bound for the driver-side since-compact count cache
-        #: (_cap_delta): beyond this many keys, singleton entries are
-        #: evicted (each eviction can understate that key by 1 — the
-        #: cap fires late, the safe direction). The bound exists for
-        #: deployments that outrun the documented compact cadence;
-        #: compact() resets the cache against the exact rebuilt summary.
-        self.cap_cache_max_keys = cap_cache_max_keys
         #: backlog/maintenance gauges (store growth, appended files per
-        #: batch, epoch per store) — the replication-slot-backlog
+        #: batch, committed version) — the replication-slot-backlog
         #: analog; see monitoring.DetectorMetrics and store_stats()
         from streaming_examples_spark.streaming.monitoring import DetectorMetrics
 
         self.metrics = DetectorMetrics()
-        # last post-append file count per (store, epoch) — saves one
+        # last post-append file count per (store, version) — saves one
         # backend LIST per append for the metrics gauge (advisory)
         self._append_count_cache: dict[tuple[str, int], int] = {}
         # build-marker fencing identity (state_backend.claim_build):
-        # compaction epoch builds are claimed exclusively so a second
-        # HOST (the advisory lock is per-filesystem) fails loudly
-        # instead of interleaving writes into the same epoch dir
+        # version builds are claimed exclusively so a second HOST (the
+        # advisory lock is per-filesystem) fails loudly instead of
+        # interleaving writes into the same version dir
         from streaming_examples_spark.streaming.locks import owner_token
 
         self._writer_token = owner_token()
         self._reset_cap_cache()
-        # a fresh dir is sealed by its first append (_append_store)
+        # a fresh dir is sealed by its first append (_first_version)
         self._sealed = check_layout(self.backend, state_dir, _LAYOUT)
 
     # -- state layout ---------------------------------------------------
-    # Each store (bands, sigs, band_hot) is its own pointer-committed
-    # unit: <state_dir>/<store>/v<E>/ holds the live files, and the
-    # backend's per-store pointer names E. Appends write into the
-    # current epoch (Spark's job commit makes files appear whole);
-    # only compaction creates a new epoch and flips the pointer — the
-    # single atomic commit point, with no directory rename anywhere.
-    def _path(self, name: str) -> str:
-        """Store ROOT (pointer + epoch dirs live under it)."""
-        return os.path.join(self.state_dir, name)
+    # One pointer root, the state dir: <state_dir>/v<E>/ holds every
+    # store (sigs/, bands/, band_hot/), and the backend's one pointer
+    # names E. Appends write into the current version (Spark's job
+    # commit makes files appear whole); only compaction builds a new
+    # version and flips the pointer — the single atomic commit point,
+    # with no directory rename anywhere.
+    def _version(self) -> int:
+        """Committed version; 0 = nothing appended yet."""
+        return self.backend.read_pointer(self.state_dir)
 
-    def _epoch(self, name: str) -> int:
-        """Committed epoch of a store; 0 = store not created yet."""
-        return self.backend.read_pointer(self._path(name))
+    def _store_path(self, name: str, version: int) -> str:
+        return os.path.join(self.state_dir, f"v{version}", name)
 
-    def _data_path(self, name: str, epoch: int | None = None) -> str | None:
-        """The epoch dir holding the store's live files (None before
-        the first append commits epoch 1)."""
-        e = self._epoch(name) if epoch is None else epoch
-        return os.path.join(self._path(name), f"v{e}") if e else None
+    def _prepare_stores(self, path: str) -> None:
+        """Create every store dir of the version dir ``path`` inside its
+        build, so a committed version always holds all of them (empty
+        ones read as empty through the fixed schema)."""
+        for name in (*_STORES, _HOT):
+            self.backend.prepare_dir(os.path.join(path, name))
 
-    def _ensure_epoch(self, name: str) -> tuple[int, str]:
-        """Create-and-commit epoch 1 on first use; return the current
-        (epoch, epoch dir). A crash between prepare and commit leaves
-        an empty v1 with no pointer, which the next locked op's
-        ``_gc_epochs`` reclaims before this recreates it."""
-        e = self._epoch(name)
-        if e == 0:
-            path = os.path.join(self._path(name), "v1")
-            self.backend.prepare_dir(path)
-            self.backend.commit_pointer(self._path(name), 1)
-            return 1, path
-        return e, os.path.join(self._path(name), f"v{e}")
+    def _first_version(self) -> int:
+        """Seal the dir and commit ``v1`` with empty store dirs — the
+        first append's build. A crash before its flip leaves a ``v1``
+        with no pointer, which the next locked op's GC reclaims."""
+        if not self._sealed:
+            write_layout(self.backend, self.state_dir, _LAYOUT)
+            self._sealed = True
+        commit_version(
+            self.backend, self.state_dir, 1, self._writer_token,
+            self._prepare_stores,
+        )
+        return 1
 
     def _gc_epochs(self) -> None:
-        """Reclaim every store's crash garbage under the writer lock
-        (``state_backend.gc_versions``), retiring a superseded epoch
+        """Reclaim crash garbage under the writer lock
+        (``state_backend.gc_versions``), retiring a superseded version
         with the straggler fold its compaction runs; a lost pointer
         raises instead of silently re-admitting every known doc."""
-        for name in (*_STORES, "band_hot"):
-            gc_versions(
-                self.backend,
-                self._path(name),
-                self._writer_token,
-                # band_hot holds summaries, never appends: nothing to fold
-                None if name == "band_hot" else functools.partial(
-                    self._gc_fold, name
-                ),
-            )
+        gc_versions(self.backend, self.state_dir, self._writer_token, self._gc_fold)
 
-    def _gc_fold(self, name: str, epoch: int) -> None:
-        """The GC's retirement hook for a superseded epoch: the
+    def _gc_fold(self, version: int) -> None:
+        """The GC's retirement hook for a superseded version: the
         straggler fold, best-effort. A torn/corrupt straggler file
         (crash garbage is exactly what lands here) must not wedge every
         subsequent locked op — warn LOUDLY and reclaim without the fold
         rather than raising out of every future ``_gc_epochs``."""
         try:
-            self._fold_stragglers_from_manifest(name, epoch)
+            self._fold_stragglers_from_manifest(version)
         except Exception as exc:  # noqa: BLE001
             import warnings
 
             warnings.warn(
-                f"GC-time straggler fold of {self._path(name)}/v{epoch} "
-                f"failed ({exc!r}); reclaiming the superseded epoch WITHOUT "
+                f"GC-time straggler fold of {self.state_dir}/v{version} "
+                f"failed ({exc!r}); reclaiming the superseded version WITHOUT "
                 "the fold — unconsumed concurrent appends in it (if any) "
                 "are lost"
             )
@@ -296,10 +295,10 @@ class IncrementalNearDup:
         :meth:`compact` mutually exclusive on one state dir.
 
         The race it closes: ``compact`` rewrites the store under the
-        NEXT epoch from a snapshot of the current one — an append that
-        lands in the CURRENT epoch between that snapshot and the
+        NEXT version from a snapshot of the current one — an append that
+        lands in the CURRENT version between that snapshot and the
         pointer flip is absent from the rewrite and reclaimed with the
-        superseded epoch, silently losing those canonical docs from
+        superseded version, silently losing those canonical docs from
         the store (and, for ``sigs``, their replay protection). The
         operational contract is therefore one writer at a time: the
         stream OR the maintenance job — and that contract SPANS HOSTS.
@@ -309,13 +308,13 @@ class IncrementalNearDup:
         flip) adds on top: two hosts COMPACTING concurrently now fail
         loudly — the second claimer loses the conditional put, a
         GC'd-and-reclaimed builder fails its commit-time validation,
-        and the epoch GC refuses to reclaim a remote host's live claim
+        and the version GC refuses to reclaim a remote host's live claim
         — so no dual-compact schedule can publish an interleaved
-        epoch. The append-vs-remote-compact race (appends never touch
+        version. The append-vs-remote-compact race (appends never touch
         the pointer or a marker) gets a best-effort HEAL, not a fence:
-        compact diffs the superseded epoch's post-flip listing against
+        compact diffs the superseded version's post-flip listing against
         the file set its rewrite consumed and folds stragglers into
-        the new epoch (:meth:`_fold_stragglers`) — but a straggler the
+        the new version (:meth:`_fold_stragglers`) — but a straggler the
         lagging listing hides is still lost, and a reclaimed builder's
         still-running Spark tasks can still write into a new owner's
         dir; closing those fully needs time-bound leases.
@@ -329,28 +328,27 @@ class IncrementalNearDup:
             yield
 
     # -- state I/O ------------------------------------------------------
-    def _load_store(self, name: str) -> DataFrame:
-        """Missing store -> empty frame (first batch). A store that
-        EXISTS but fails to read must raise: swallowing a corrupted
-        parquet would silently reset the dedup state (every known doc
+    def _load_store(self, name: str, version: int) -> DataFrame:
+        """Version 0 -> empty frame (first batch). A store that EXISTS
+        but fails to read must raise: swallowing a corrupted parquet
+        would silently reset the dedup state (every known doc
         re-admitted as canonical)."""
         schema = _STORES[name]
-        path = self._data_path(name)
-        if path is None:
+        if version == 0:
             return self.spark.createDataFrame([], schema)
         # The committed pointer (an object GET) is the existence
-        # witness: prepare_dir ran before the pointer committed, so the
-        # epoch dir is real. Do NOT gate this read on a LIST-backed
-        # probe or enumerate the files through the backend listing —
-        # list-after-write lag serves a stale view of a dir Spark just
-        # appended into, and an empty read here silently re-admits
-        # every known doc (found by running this suite under
-        # LaggedManifestBackend: batch N+1 read batch N's store as
-        # absent). Spark enumerates the data files itself; detector
-        # stores never receive carried (manifest-referenced) files —
-        # appends and rewrites both land physical files — so the dir IS
-        # the content on every backend.
-        return self.spark.read.schema(schema).parquet(path)
+        # witness: the build prepared every store dir before the
+        # pointer committed, so the dir is real. Do NOT gate this read
+        # on a LIST-backed probe or enumerate the files through the
+        # backend listing — list-after-write lag serves a stale view of
+        # a dir Spark just appended into, and an empty read here
+        # silently re-admits every known doc (found by running this
+        # suite under LaggedManifestBackend: batch N+1 read batch N's
+        # store as absent). Spark enumerates the data files itself;
+        # detector stores never receive carried (manifest-referenced)
+        # files — appends and rewrites both land physical files — so
+        # the dir IS the content on every backend.
+        return self.spark.read.schema(schema).parquet(self._store_path(name, version))
 
     def read_store(self, name: str) -> DataFrame:
         """Public, backend-aware snapshot of a store's committed
@@ -359,33 +357,36 @@ class IncrementalNearDup:
 
         UNLOCKED reader: the returned frame is LAZY and resolves its
         files at action time — a concurrent ``compact()``/
-        ``process_batch()`` can flip the epoch pointer and GC the
+        ``process_batch()`` can flip the version pointer and GC the
         directory it reads (``LocalPosixBackend`` removes immediately),
         failing the action. Run it to completion (or
         ``localCheckpoint``) before letting a writer proceed. Raises on
         a lost pointer (``state_backend.committed_version``) instead of
         reading the store as empty."""
-        committed_version(self.backend, self._path(name))
-        return self._load_store(name)
+        return self._load_store(
+            name, committed_version(self.backend, self.state_dir)
+        )
 
-    def _count_files(self, path: str) -> int:
-        """Advisory file count for the metrics gauges (backend listing;
-        can run momentarily stale-LOW under list-after-write lag —
-        never a correctness input)."""
+    def _data_files(self, path: str) -> list[str]:
+        """Sorted data-file basenames of a store dir (backend listing;
+        detector stores hold physical files on every backend — see
+        _load_store). Can run stale-SHORT under list-after-write lag;
+        every caller tolerates that (advisory gauges, fire-late cap
+        counts, the best-effort straggler fold)."""
         try:
-            return sum(
-                1 for n in self.backend.list_dir(path) if n.endswith(".parquet")
-            )
+            names = self.backend.list_dir(path)
         except OSError:
-            return 0
+            return []
+        return sorted(n for n in names if n.endswith(".parquet"))
 
     def store_stats(self) -> dict:
         """Operational snapshot of every store's backlog — the
         replication-slot-size analog of the reference's monitoring
         stack (postgres-replication-slots dashboard; BASELINE.md rows
-        5-6): committed epoch, live data-file count, and total bytes
-        per store, plus the accumulated per-batch append counters from
-        ``metrics``. Driver-side listings + stats, no Spark jobs.
+        5-6): the committed version, plus live data-file count and
+        total bytes per store, plus the accumulated per-batch append
+        counters from ``metrics``. Driver-side listings + stats, no
+        Spark jobs.
 
         Advisory gauges: taken WITHOUT the writer lock (safe to poll
         from a monitoring thread), so a concurrent compact can shift
@@ -393,47 +394,32 @@ class IncrementalNearDup:
         momentarily stale — growth TRENDS are the signal (a store
         whose files/bytes climb across polls is outrunning its
         compact() cadence, exactly like a swelling replication slot)."""
-        out: dict = {"stores": {}, **self.metrics.snapshot()}
-        for name in (*_STORES, "band_hot"):
-            root = self._path(name)
-            epoch = self.backend.read_pointer(root)
+        version = self._version()
+        out: dict = {"epoch": version, "stores": {}, **self.metrics.snapshot()}
+        for name in (*_STORES, _HOT):
             files = n_bytes = 0
-            if epoch:
-                path = os.path.join(root, f"v{epoch}")
-                try:
-                    names = self.backend.list_dir(path)
-                except OSError:
-                    names = []
-                for n in names:
-                    if not n.endswith(".parquet"):
-                        continue
+            if version:
+                path = self._store_path(name, version)
+                for n in self._data_files(path):
                     try:
-                        n_bytes += self.backend.file_size(
-                            os.path.join(path, n)
-                        )
+                        n_bytes += self.backend.file_size(os.path.join(path, n))
                         files += 1
                     except OSError:
                         continue  # compacted away mid-walk
-            out["stores"][name] = {
-                "epoch": epoch,
-                "files": files,
-                "bytes": n_bytes,
-            }
+            out["stores"][name] = {"files": files, "bytes": n_bytes}
         return out
 
-    def _append_store(self, name: str, rows: DataFrame) -> None:
-        if not self._sealed:
-            write_layout(self.backend, self.state_dir, _LAYOUT)
-            self._sealed = True
-        epoch, path = self._ensure_epoch(name)
+    def _append_store(self, name: str, rows: DataFrame, version: int) -> None:
+        """Append ``rows`` into the committed ``version``'s store dir."""
+        path = self._store_path(name, version)
         # one backend LIST per append, not two: the pre-append count is
         # the previous append's post-count when we have it (advisory
         # gauge only — a concurrent writer or a lagging listing skews
         # the delta, never a correctness input)
-        key = (name, epoch)
+        key = (name, version)
         before = self._append_count_cache.get(key)
         if before is None:
-            before = self._count_files(path)
+            before = len(self._data_files(path))
         # lag-double hook: a DIRECT Spark write is invisible to the
         # backend, so the eventual-consistency double cannot open its
         # list-after-write window for it — tell it first (no-op on
@@ -447,14 +433,14 @@ class IncrementalNearDup:
         # deltas then telescope correctly (a batch under-counted here
         # is picked up by the next batch's fresh pre-count) instead of
         # double-counting from a poisoned cache.
-        after = max(self._count_files(path), before)
-        # keep one entry per store (stale epochs pruned on the spot)
+        after = max(len(self._data_files(path)), before)
+        # keep one entry per store (superseded versions pruned on the spot)
         self._append_count_cache = {
             k: v for k, v in self._append_count_cache.items() if k[0] != name
         }
         self._append_count_cache[key] = after
         self.metrics.observe_append(name, max(0, after - before))
-        self.metrics.observe_epoch(name, epoch)
+        self.metrics.observe_epoch(version)
 
     # -- viral-cap membership counts -------------------------------------
     # The cap needs "how many canonical docs already share this band
@@ -474,18 +460,19 @@ class IncrementalNearDup:
     #     bands files (those not in ``_files.json``, i.e. appended
     #     since the last compact — O(appends since compact), never
     #     O(store));
-    #   * a missing or stale summary (never compacted; crash between
-    #     the bands rewrite and the summary swap) falls back to
-    #     counting ALL bands files — exact, slower, self-heals at the
-    #     next compact().
+    #   * a version without a summary (never compacted, or compacted
+    #     with the cap off) counts ALL its bands files — exact, slower,
+    #     summarized at the next capped compact(). The summary and the
+    #     bands files it covers sit in the same version and commit with
+    #     one flip, so a summary can never be stale against its store.
     #
     # The counts live DRIVER-SIDE (plain dicts fed by pyarrow, zero
     # Spark stages): in-lineage variants measured 20-30 %/batch — every
     # formulation adds shuffle/broadcast stages to the probe job, and
     # at micro-batch sizes stage overhead dwarfs the tiny data. The
     # driver instead keeps
-    #   _cap_hot   — band_hot's counts, reloaded when the manifest
-    #                changes (one small pyarrow read per compact epoch)
+    #   _cap_hot   — band_hot's counts, reloaded when the committed
+    #                version changes (one small pyarrow read per compact)
     #   _cap_delta — per-key counts of bands files appended since the
     #                summary (each file pyarrow-read ONCE per process;
     #                per batch that is just the previous batch's own
@@ -507,94 +494,62 @@ class IncrementalNearDup:
     # can count one doc in both the summary and the delta (+1, fires
     # one member early) — the cap is a fan-out heuristic, not an
     # exactness contract, and ±1 at threshold 256 is immaterial; the
-    # next compact() rebuild erases all drift. Within one compact
-    # epoch a retry's duplicate rows cannot double-count: a cold
+    # next compact() rebuild erases all drift. Within one version a
+    # retry's duplicate rows cannot double-count: a cold
     # refresh dedups (band, doc) across all delta files, and in-process
     # appends are replay-protected upstream (sigs anti-join).
-    def _bands_data_files(self) -> list[str]:
-        """Best-effort LIST of the bands epoch dir (delta enumeration
-        for the cap counts). Gated on the pointer, never on a
-        LIST-backed dir_exists. Under list-after-write lag this can run
-        stale-SHORT — a just-appended file missing means its docs are
-        counted at a LATER refresh (once the listing catches up), so
-        the cap fires late: the safe direction (firing late costs
-        bounded probe fan-out; a spurious fire would be a permanent
-        false admit). The one stale-HIGH path — a summary rebuild
-        claiming coverage of fewer files than it aggregated — is closed
-        by _rebuild_hot taking coverage from the frame's own
-        inputFiles(), not from this listing."""
-        if self._epoch("bands") == 0:
-            return []
-        path = self._data_path("bands")
-        return sorted(
-            n for n in self.backend.list_dir(path) if n.endswith(".parquet")
-        )
-
     def _reset_cap_cache(self) -> None:
-        self._cap_epoch: tuple | None = None
+        self._cap_version: int | None = None
         self._cap_hot: dict[tuple[int, str], int] = {}
         self._cap_delta: dict[tuple[int, str], int] = {}
         self._cap_seen: set[str] = set()
         self._cap_store_viral: set[tuple[int, str]] = set()
 
-    def _refresh_cap_counts(self) -> None:
+    def _refresh_cap_counts(self, version: int) -> None:
         """Bring the driver-side membership counts up to date with the
-        stores. Called under the writer lock, so the file set is stable
-        for the whole batch."""
+        committed ``version``. Called under the writer lock, so the file
+        set is stable for the whole batch. The bands listing is
+        best-effort: under list-after-write lag it can run stale-SHORT,
+        and a just-appended file missing from it is counted at a LATER
+        refresh — the cap fires late, the safe direction (a spurious
+        fire would be a permanent false admit)."""
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        hot_path = self._data_path("band_hot")
-        manifest_path = (
-            os.path.join(hot_path, "_files.json") if hot_path else None
-        )
-        all_files = self._bands_data_files()
-        covered: list[str] = []
-        usable = False
-        raw_manifest = (
-            self.backend.read_file(manifest_path) if manifest_path else None
-        )
-        if raw_manifest is not None:
-            covered = json.loads(raw_manifest)
-            # a summary referencing files that no longer exist (crash
-            # between the bands rewrite and the summary swap) is stale:
-            # fall back to counting ALL files — exact, self-heals at
-            # the next compact()
-            usable = set(covered) <= set(all_files)
-        epoch = tuple(sorted(covered)) if usable else ("<no-summary>",)
-        if self._cap_seen - set(all_files):
-            # a file we already counted VANISHED (e.g. a compact swapped
-            # the bands dir but died before the summary swap, leaving the
-            # epoch token unchanged at '<no-summary>'): retained delta
-            # counts reference deleted files while the rewritten files
-            # would be counted on top — stale-HIGH, spurious virality,
-            # permanent false admits. Start cold: re-read all live files
-            # with the global (key, doc) dedup.
+        cold = version != self._cap_version
+        if cold:
+            # a compaction committed a new version (or first refresh):
+            # reload its summary, restart the delta from the files it
+            # covers
             self._reset_cap_cache()
-        if epoch != self._cap_epoch:
-            # new compact epoch (or first refresh): reload the summary,
-            # restart the delta from the files it covers
-            self._reset_cap_cache()
-            self._cap_epoch = epoch
-            self._cap_seen = set(covered) if usable else set()
-            if usable and os.path.isdir(hot_path):
-                t = pq.read_table(hot_path, columns=["band_id", "band_key", "n"])
+            self._cap_version = version
+            hot = self._store_path(_HOT, version)
+            raw = (
+                self.backend.read_file(os.path.join(hot, "_files.json"))
+                if version
+                else None
+            )
+            if raw is not None:
+                self._cap_seen = set(json.loads(raw))
+                t = pq.read_table(hot, columns=["band_id", "band_key", "n"])
                 for b, k, n in zip(*(c.to_pylist() for c in t.columns)):
                     self._cap_hot[(b, k)] = n
-            cold = True
-        else:
-            cold = False
-        new_files = [f for f in all_files if f not in self._cap_seen]
+        bands = self._store_path("bands", version)
+        new_files = [
+            f
+            for f in (self._data_files(bands) if version else [])
+            if f not in self._cap_seen
+        ]
         if new_files:
-            tables = [
-                pq.read_table(
-                    os.path.join(self._data_path("bands"), f),
-                    columns=["band_id", "band_key", "doc_id"],
-                )
-                for f in new_files
-            ]
-            import pyarrow as pa
-
-            rows = pa.concat_tables(tables)
+            rows = pa.concat_tables(
+                [
+                    pq.read_table(
+                        os.path.join(bands, f),
+                        columns=["band_id", "band_key", "doc_id"],
+                    )
+                    for f in new_files
+                ]
+            )
             if cold:
                 # restart path: a pre-crash retry may have appended the
                 # same doc's bands twice across files — dedup exactly,
@@ -614,7 +569,7 @@ class IncrementalNearDup:
                 if self._cap_hot.get(key, 0) + total >= self.max_bucket_size:
                     self._cap_store_viral.add(key)
             self._cap_seen.update(new_files)
-            if len(self._cap_delta) > self.cap_cache_max_keys:
+            if len(self._cap_delta) > _CAP_CACHE_MAX_KEYS:
                 # bound driver memory between compacts: drop singleton
                 # counts first (understate ≤1 each — the cap fires one
                 # member late, the safe direction; a key that matters
@@ -625,21 +580,21 @@ class IncrementalNearDup:
                 self._cap_delta = {
                     k: n for k, n in self._cap_delta.items() if n >= 2
                 }
-                if len(self._cap_delta) > self.cap_cache_max_keys:
+                if len(self._cap_delta) > _CAP_CACHE_MAX_KEYS:
                     import warnings
 
                     warnings.warn(
                         "incremental-dedup viral-cap cache exceeds "
-                        f"cap_cache_max_keys={self.cap_cache_max_keys} even "
-                        "after singleton eviction — the store is overdue "
-                        "for compact(); shedding the smallest counts (the "
-                        "cap may fire late until the next compact)",
+                        f"{_CAP_CACHE_MAX_KEYS} keys even after singleton "
+                        "eviction — the store is overdue for compact(); "
+                        "shedding the smallest counts (the cap may fire "
+                        "late until the next compact)",
                         RuntimeWarning,
                         stacklevel=2,
                     )
                     keep = sorted(
                         self._cap_delta.items(), key=lambda kv: -kv[1]
-                    )[: self.cap_cache_max_keys]
+                    )[:_CAP_CACHE_MAX_KEYS]
                     self._cap_delta = dict(keep)
         if cold and self._cap_hot:
             cap = self.max_bucket_size
@@ -679,8 +634,9 @@ class IncrementalNearDup:
     def _process_batch_locked(self, docs: DataFrame, batch_id: int) -> DataFrame:
         self._gc_epochs()
         self.metrics.observe_batch_start()
-        sigs_store = self._load_store("sigs")
-        bands_store = self._load_store("bands")
+        version = self._version()
+        sigs_store = self._load_store("sigs", version)
+        bands_store = self._load_store("bands", version)
 
         # replay protection: a doc_id already folded into the store is
         # a re-delivery — reprocessing could only repeat the verdict.
@@ -728,7 +684,7 @@ class IncrementalNearDup:
             # pair via their other, selective bands (recall measured at
             # the batch family's cap: SCALE_NOTES.md, "Dedup/curation
             # capstones").
-            self._refresh_cap_counts()
+            self._refresh_cap_counts(version)
             cap = self.max_bucket_size
             base = lambda key: self._cap_hot.get(key, 0) + self._cap_delta.get(key, 0)  # noqa: E731
             viral = {
@@ -822,72 +778,57 @@ class IncrementalNearDup:
         # collapse in the probe's .distinct()). The reverse order would
         # leave a canonical in sigs but invisible to the probe index —
         # permanent recall loss for all its future duplicates.
-        self._append_store("bands", new_bands)
-        self._append_store("sigs", new_sigs)
+        version = version or self._first_version()
+        self._append_store("bands", new_bands, version)
+        self._append_store("sigs", new_sigs, version)
         self.metrics.batches += 1
         # enriched is a checkpointed RDD; blocks free when the ref drops
         return report
 
     # -- maintenance ----------------------------------------------------
     def compact(self) -> None:
-        """Rewrite each store into ``_COMPACT_PARTITIONS`` files.
+        """Rewrite ``sigs`` and ``bands`` into ``_COMPACT_PARTITIONS``
+        files each, summarize ``bands`` into ``band_hot`` (when the cap
+        is on) and commit all three as the next version.
 
         Append-only parquet accumulates one file-set per batch; after N
         micro-batches the probe join opens O(N) small files. Periodic
         compaction (call it every ~100 batches, or from a maintenance
-        job) restores O(1) file count. The rewrite is atomic per store:
-        the new copy is FULLY written under the NEXT epoch dir before
-        one backend pointer flip makes it live — a crash at any point
-        leaves the committed epoch untouched (pre-flip garbage and the
-        superseded epoch are GC'd by ``_gc_epochs`` at the next locked
-        operation). At 100 TB this is the compaction pass of any
-        LSM-ish table format, and the build, flip and retirement are
-        the tx store's own (``state_backend.commit_version``) — no
+        job) restores O(1) file count. The rewrite is ONE
+        ``state_backend.commit_version`` build — the tx store's own
+        claim, build, flip and retirement: every store is FULLY written
+        under the next version dir, together with ``_consumed.json``
+        (each store's consumed file list), before one backend pointer
+        flip makes them live together. A crash before the flip leaves
+        the committed version untouched; a crash after it leaves every
+        store at the new version (pre-flip garbage and the superseded
+        version are GC'd by ``_gc_epochs`` at the next locked
+        operation, the latter after its straggler fold). At 100 TB this
+        is the compaction pass of any LSM-ish table format — no
         directory renames, so the store hosts on object storage
         unchanged. The rewrite also drops duplicate rows a crashed
         batch's retry or a straggler fold may have appended.
 
         Holds the state dir's writer lock for the whole pass — an
-        append racing the full rewrite would land in the epoch being
+        append racing the full rewrite would land in the version being
         superseded and be lost at the pointer flip (see
         :meth:`_writer_lock`), so the overlap raises instead.
         """
         with self._writer_lock("compact"):
-            try:
-                self._compact_locked()
-                self.metrics.compactions += 1
-                for name in (*_STORES, "band_hot"):
-                    self.metrics.observe_epoch(
-                        name, self.backend.read_pointer(self._path(name))
-                    )
-            except BaseException:
-                # a partial compact may have swapped a store dir without
-                # reaching the summary swap — in the '<no-summary>' epoch
-                # the token would NOT change, so a same-process refresh
-                # would keep delta counts for deleted files AND re-count
-                # their rewritten replacements (stale-HIGH, the unsafe
-                # direction). Drop the cache; the next refresh goes cold
-                # (mirrors process_batch's failure path; the vanished-
-                # file check in _refresh_cap_counts is the cross-process
-                # backstop for the same window).
-                self._reset_cap_cache()
-                raise
-            finally:
-                # any compaction (success or crash) moves the live
-                # files to a fresh epoch: a
-                # cached post-append file count would make the next
-                # observe_append delta run against a stale-HIGH
-                # baseline and undercount real appends
-                self._append_count_cache.clear()
+            self._compact_locked()
+            self.metrics.compactions += 1
+            self.metrics.observe_epoch(self._version())
 
     def _compact_locked(self) -> None:
         self._gc_epochs()
-        for name in _STORES:
-            cur = self._epoch(name)
-            if cur == 0:
-                continue  # store never written
+        cur = self._version()
+        if cur == 0:
+            return  # nothing appended yet
 
-            def write(path: str) -> None:
+        def write(path: str) -> None:
+            self._prepare_stores(path)
+            consumed = {}
+            for name in _STORES:
                 # the rewrite source is the store's own read path —
                 # Spark's file enumeration, fresh on every backend (a
                 # backend LIST here would run stale-SHORT under
@@ -896,90 +837,93 @@ class IncrementalNearDup:
                 # frame's OWN inputFiles() snapshot: exactly what the
                 # write consumes, which the straggler fold diffs the
                 # superseded dir against
-                src = self._load_store(name)
-                consumed = _data_file_names(src.inputFiles())
-                self.backend.note_spark_write(path)  # lag-double hook
+                src = self._load_store(name, cur)
+                consumed[name] = _data_file_names(src.inputFiles())
+                out = os.path.join(path, name)
+                self.backend.note_spark_write(out)  # lag-double hook
                 (
                     src.dropDuplicates()  # heal append-retry duplicates
                     .repartition(_COMPACT_PARTITIONS)
                     .write.mode("overwrite")
-                    .parquet(path)
+                    .parquet(out)
                 )
-                self._write_consumed_manifest(path, cur, consumed)
-
-            commit_version(
-                self.backend, self._path(name), cur + 1, self._writer_token,
-                write, functools.partial(self._fold_stragglers_from_manifest, name),
+            if self.max_bucket_size is not None:
+                self._write_hot(path)
+            # underscore-prefixed, so invisible to parquet readers; a
+            # crash between the flip and the superseded version's
+            # removal hands that dir to the next _gc_epochs, which re-runs
+            # the straggler fold from this manifest instead of deleting
+            # unconsumed appends blind. publish_file/read_file keep the
+            # write/read seam symmetric across backends.
+            self.backend.publish_file(
+                os.path.join(path, "_consumed.json"),
+                json.dumps(
+                    {"superseded_epoch": cur, "consumed": consumed}
+                ).encode(),
             )
-        self._rebuild_hot()
 
-    def _store_data_files(self, name: str, epoch_path: str) -> list[str]:
-        """Sorted data-file basenames of a store epoch dir (backend
-        listing; detector stores hold physical files on every backend
-        — see _load_store)."""
-        try:
-            names = self.backend.list_dir(epoch_path)
-        except OSError:
-            return []
-        return sorted(n for n in names if n.endswith(".parquet"))
-
-    def _read_files(self, name: str, epoch_path: str, files: list[str]):
-        """A store frame over EXACTLY the given data files (schema
-        pinned; empty-safe)."""
-        schema = _STORES[name]
-        if not files:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(
-            *(os.path.join(epoch_path, n) for n in files)
+        commit_version(
+            self.backend, self.state_dir, cur + 1, self._writer_token,
+            write, self._fold_stragglers_from_manifest,
         )
 
-    def _write_consumed_manifest(
-        self, nxt_path: str, superseded_epoch: int, consumed: list[str]
-    ) -> None:
-        """Persist the rewrite's consumed file-set INSIDE the new epoch
-        dir, before the pointer flip publishes it (underscore-prefixed:
-        invisible to parquet readers, same pattern as band_hot's
-        ``_files.json``). This closes the crash window the r10 fold
-        left open: a death between ``commit_pointer`` and
-        ``remove_tree`` hands the superseded dir to the NEXT
-        ``_gc_epochs``, which can now re-run the straggler fold from
-        this manifest instead of deleting unconsumed appends blind.
-        Routed through ``backend.publish_file`` — the seam primitive
-        for small single objects (atomic temp+replace locally; a real
-        object-store backend PUTs it) — so the write is visible to the
-        lag double's op accounting and lands wherever the backend's
-        physical storage is, unlike a bare ``open()``."""
+    def _write_hot(self, path: str) -> None:
+        """Build the viral-cap summary of the version dir ``path`` from
+        its just-rewritten bands files: the member count of every key
+        with ≥2 canonical members — tiny in a deduplicated store — plus
+        ``_files.json``, the bands files the summary covers, so the
+        per-batch check reads only files appended later."""
+        bands = self.spark.read.schema(_BAND_SCHEMA).parquet(
+            os.path.join(path, "bands")
+        )
+        # Coverage = the files the aggregation below actually reads,
+        # taken from the frame's OWN file enumeration. The backend
+        # listing would be wrong here: under list-after-write lag it
+        # runs stale-SHORT right after the rewrite, and a summary
+        # covering FEWER files than it aggregated makes the per-batch
+        # refresh delta-count those files on top of the summary —
+        # double-counted members, spurious virality, permanently
+        # skipped probes (the unsafe direction).
+        files = _data_file_names(bands.inputFiles())
+        out = os.path.join(path, _HOT)
+        self.backend.note_spark_write(out)  # lag-double hook
+        (
+            bands.groupBy("band_id", "band_key")
+            # the rewrite dropped duplicate rows: one row per member
+            .agg(F.count(F.lit(1)).alias("n"))
+            .filter(F.col("n") >= 2)
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(out)
+        )
         self.backend.publish_file(
-            os.path.join(nxt_path, "_consumed.json"),
-            json.dumps(
-                {"superseded_epoch": superseded_epoch, "consumed": consumed}
-            ).encode(),
+            os.path.join(out, "_files.json"), json.dumps(files).encode()
         )
 
-    def _fold_stragglers_from_manifest(self, name: str, stray_epoch: int) -> None:
-        """The straggler fold of a superseded epoch dir, run at its
+    def _fold_stragglers_from_manifest(self, stray_epoch: int) -> None:
+        """The straggler fold of a superseded version dir, run at its
         retirement: by the compaction right after its flip, or by the
         GC when a crash came in between. Reads the consumed manifest
-        the compaction persisted in the CURRENT epoch dir; folds only
-        when the manifest names exactly this superseded epoch —
-        otherwise (pre-manifest store, or a stray older than cur-1,
-        unreachable by the normal protocol) it degrades to the r10
-        behavior and the docstring's listing-lag caveat applies.
-        Idempotent-with-duplicates: a crash between this fold and the
-        dir removal re-folds the same files next GC; the duplicate
-        rows are the store protocol's tolerated kind (collapsed by
-        countDistinct / the next compact's dropDuplicates)."""
-        root = self._path(name)
-        cur = self.backend.read_pointer(root)
+        the compaction persisted in the CURRENT version dir; folds only
+        when the manifest names exactly this superseded version —
+        otherwise (the first version, or a stray older than cur-1,
+        unreachable by the normal protocol) the dir is removed without
+        a fold and the listing-lag caveat of :meth:`_fold_stragglers`
+        applies. Idempotent-with-duplicates: a crash between this fold
+        and the dir removal re-folds the same files next GC; the
+        duplicate rows are the store protocol's tolerated kind
+        (collapsed by the probe's distinct / the next compact's
+        dropDuplicates)."""
+        cur = self._version()
         # read through the backend's read_file seam — the symmetric
         # half of the publish_file that wrote it (r11 ADVICE: a raw
         # open() against a backend whose publish_file lands bytes
         # elsewhere silently degrades to blind removal)
         raw = self.backend.read_file(
-            os.path.join(root, f"v{cur}", "_consumed.json")
+            os.path.join(self.state_dir, f"v{cur}", "_consumed.json")
         )
         if raw is None:
-            return  # pre-manifest store: the documented r10 degrade
+            return  # v1, the first append's build, consumed nothing
         try:
             manifest = json.loads(raw)
         except ValueError:
@@ -992,96 +936,41 @@ class IncrementalNearDup:
         # could delete a remote host's unconsumed appends.
         if manifest.get("superseded_epoch") != stray_epoch:
             return
-        self._fold_stragglers(
-            name, os.path.join(root, f"v{stray_epoch}"), manifest["consumed"]
-        )
+        for name in _STORES:  # bands before sigs, as the appends
+            self._fold_stragglers(
+                name, stray_epoch, manifest["consumed"][name], cur
+            )
 
     def _fold_stragglers(
-        self, name: str, old_path: str, consumed: list[str]
+        self, name: str, stray_epoch: int, consumed: list[str], cur: int
     ) -> None:
         """Detect-and-fold the append-vs-remote-compact race (the gap
         the r10 build markers deliberately left open — markers fence
         COMPACTS, but appends never touch the pointer or a marker):
-        any data file present in the superseded epoch dir that the
-        just-committed rewrite did not consume was appended
+        any data file present in the superseded version's store dir
+        that the just-committed rewrite did not consume was appended
         concurrently by a second writer the advisory lock could not
         see (a remote host). Deleting the dir would silently lose
         those rows — permanent recall loss for every future duplicate
         of the affected docs. Instead, re-append their rows to the
-        NEW epoch through the standard append path (the pointer
-        already names it) and count the fold in
-        ``metrics.folded_straggler_files`` — any nonzero value means
-        the single-writer contract is being violated and the operator
-        must intervene.
+        committed version ``cur`` through the standard append path and
+        count the fold in ``metrics.folded_straggler_files`` — any
+        nonzero value means the single-writer contract is being
+        violated and the operator must intervene.
 
         Best-effort, not a guarantee: under list-after-write lag the
         post-flip listing can miss a just-landed straggler (closing
         that needs time-bound leases — documented in _writer_lock).
         Duplicate rows a fold could introduce are the store protocol's
-        tolerated kind (band dups collapse in the cap's
-        countDistinct / the probe's semantics; the next full compact's
-        dropDuplicates heals both stores)."""
+        tolerated kind (band dups collapse in the probe's distinct;
+        the next full compact's dropDuplicates heals both stores)."""
+        old_path = self._store_path(name, stray_epoch)
         consumed_set = set(consumed)
-        extra = [
-            n
-            for n in self._store_data_files(name, old_path)
-            if n not in consumed_set
-        ]
+        extra = [n for n in self._data_files(old_path) if n not in consumed_set]
         if not extra:
             return
-        self._append_store(name, self._read_files(name, old_path, extra))
-        self.metrics.observe_fold(name, len(extra))
-
-    def _rebuild_hot(self) -> None:
-        """Recompute the viral-cap summary exactly from the (just
-        healed) bands store: the member count of every key with ≥2
-        canonical members — tiny in a deduplicated store — plus the
-        manifest of data files the summary covers, so the per-batch
-        check reads only files appended later. countDistinct tolerates
-        the duplicate rows a straggler fold may append beside the
-        deduplicated rewrite. Same epoch-pointer commit as the stores: summary +
-        manifest are fully written under the next epoch, then one
-        pointer flip publishes both together; a crash BEFORE the flip
-        leaves the previous summary whose manifest no longer matches —
-        the per-batch check detects that and falls back to a full
-        recount (exact, self-healing)."""
-        hot_root = self._path("band_hot")
-        hot_cur = self.backend.read_pointer(hot_root)
-        if self.max_bucket_size is None and hot_cur == 0:
-            return  # cap never used on this store: skip the summary pass
-        if self._epoch("bands") == 0:
-            return
-        store = self._load_store("bands")
-        # Coverage = the files the aggregation below actually reads,
-        # taken from the frame's OWN file enumeration (the writer lock
-        # bars concurrent appends, so the two resolutions agree). The
-        # backend listing would be wrong here: under list-after-write
-        # lag it runs stale-SHORT right after a compaction rewrite, and
-        # a summary covering FEWER files than it aggregated makes the
-        # per-batch refresh delta-count those files on top of the
-        # summary — double-counted members, spurious virality,
-        # permanently skipped probes (the unsafe direction).
-        files = _data_file_names(store.inputFiles())
-
-        def write(path: str) -> None:
-            self.backend.note_spark_write(path)  # lag-double hook
-            (
-                store
-                .groupBy("band_id", "band_key")
-                .agg(F.countDistinct("doc_id").cast("long").alias("n"))
-                .filter(F.col("n") >= 2)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(path)
-            )
-            # Spark/pyarrow readers skip underscore-prefixed files: the
-            # manifest rides inside the epoch dir so one flip publishes
-            # both. publish_file/read_file keep the write/read seam
-            # symmetric across backends (r11 ADVICE).
-            self.backend.publish_file(
-                os.path.join(path, "_files.json"), json.dumps(files).encode()
-            )
-
-        commit_version(
-            self.backend, hot_root, hot_cur + 1, self._writer_token, write
+        rows = self.spark.read.schema(_STORES[name]).parquet(
+            *(os.path.join(old_path, n) for n in extra)
         )
+        self._append_store(name, rows, cur)
+        self.metrics.observe_fold(name, len(extra))

@@ -151,8 +151,9 @@ class DetectorMetrics:
     Counter semantics: ``appended_files_last_batch`` resets at each
     ``process_batch`` start (a batch that appends nothing reads 0);
     ``appended_files_total`` is monotone per store; ``store_epoch``
-    tracks the committed pointer after each locked op (epoch bumps =
-    compactions applied). File counts come from backend listings taken
+    is the state dir's committed version after each locked op that
+    wrote (one version holds every store; bumps = compactions
+    applied). File counts come from backend listings taken
     inside the writer lock — under list-after-write lag they can run
     momentarily stale-LOW; they are operational gauges, never
     correctness inputs."""
@@ -161,7 +162,7 @@ class DetectorMetrics:
     compactions: int = 0
     appended_files_last_batch: dict[str, int] = field(default_factory=dict)
     appended_files_total: dict[str, int] = field(default_factory=dict)
-    store_epoch: dict[str, int] = field(default_factory=dict)
+    store_epoch: int = 0
     #: files found in a superseded epoch dir at compact-GC time that
     #: the rewrite did NOT consume — i.e. appends that landed
     #: concurrently (a remote host defeating the advisory lock) and
@@ -181,8 +182,8 @@ class DetectorMetrics:
             self.appended_files_total.get(store, 0) + n_files
         )
 
-    def observe_epoch(self, store: str, epoch: int) -> None:
-        self.store_epoch[store] = epoch
+    def observe_epoch(self, epoch: int) -> None:
+        self.store_epoch = epoch
 
     def snapshot(self) -> dict:
         return {
@@ -190,7 +191,7 @@ class DetectorMetrics:
             "compactions": self.compactions,
             "appended_files_last_batch": dict(self.appended_files_last_batch),
             "appended_files_total": dict(self.appended_files_total),
-            "store_epoch": dict(self.store_epoch),
+            "store_epoch": self.store_epoch,
             "folded_straggler_files": dict(self.folded_straggler_files),
         }
 

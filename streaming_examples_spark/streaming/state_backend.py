@@ -45,13 +45,13 @@ listings through ``list_dir``, never by assuming the physical tree is
 the logical content.
 
 One on-disk format per store: both stores seal their state dir with
-``_layout.json`` = ``{"format": 1, "backend": <layout_id>, <bucket
-fields>}`` through
-:func:`write_layout` before their first write, and validate it with
-:func:`check_layout` on every open. A dir that is absent or holds only
-the writer lock is fresh; anything else without a readable format-1
-seal, or sealed by another backend or bucket count, is refused with a
-``ValueError`` — an unreadable store is never read as empty. There is
+``_layout.json`` = ``{"format": 1, "backend": <layout_id>, <store
+fields>}`` (the tx store's bucket count, the detector's store list)
+through :func:`write_layout` before their first write, and validate it
+with :func:`check_layout` on every open. A dir that is absent or holds
+only the writer lock is fresh; anything else without a readable
+format-1 seal, or sealed by another backend or with other store
+fields, is refused with a ``ValueError`` — an unreadable store is never read as empty. There is
 no migration path: rebuild the state dir from the event log (move it
 aside, then replay the source from its start into an empty dir).
 
@@ -131,18 +131,19 @@ REBUILD_HINT = (
 
 
 def check_layout(
-    backend: "StateStorageBackend", state_dir: str, buckets: dict
+    backend: "StateStorageBackend", state_dir: str, fields: dict
 ) -> bool:
     """Validate ``state_dir``'s seal against the opener's backend and
-    bucket fields. Returns False for a fresh dir — absent, or holding
+    store fields. Returns False for a fresh dir — absent, or holding
     only the advisory writer lock (``_writer.lock*``) and dot-prefixed
     publish temps — and True for a matching format-1 seal. Raises
     ``ValueError`` for everything else: entries without a seal, an
     unreadable seal, any other format, a backend mismatch (the two
     backends encode the commit pointer differently, so a foreign
     reopen would read no committed version and GC live state), or a
-    bucket mismatch (probes hash into the wrong buckets: silently
-    empty state)."""
+    store-field mismatch (a bucket count: probes hash into the wrong
+    buckets; a store list: the dir holds another layout — either way
+    silently empty state)."""
     raw = backend.read_file(os.path.join(state_dir, _LAYOUT))
     if raw is None:
         try:
@@ -179,18 +180,18 @@ def check_layout(
             f"{backend.layout_id!r}: reopen with the sealed backend, or "
             f"{REBUILD_HINT}"
         )
-    for key, want in buckets.items():
+    for key, want in fields.items():
         if layout.get(key) != want:
             raise ValueError(
                 f"state dir {state_dir} was sealed with {key}={layout.get(key)} "
-                f"but is opened with {key}={want}: pass the sealed value, or "
-                f"{REBUILD_HINT}"
+                f"but is opened with {key}={want}: if {key} is a constructor "
+                f"argument, pass the sealed value; otherwise {REBUILD_HINT}"
             )
     return True
 
 
 def write_layout(
-    backend: "StateStorageBackend", state_dir: str, buckets: dict
+    backend: "StateStorageBackend", state_dir: str, fields: dict
 ) -> None:
     """Seal a fresh ``state_dir`` (see :func:`check_layout`). Stores
     call this before their first write into the dir, so every crash
@@ -199,7 +200,7 @@ def write_layout(
     backend.publish_file(
         os.path.join(state_dir, _LAYOUT),
         json.dumps(
-            {"format": LAYOUT_FORMAT, "backend": backend.layout_id, **buckets}
+            {"format": LAYOUT_FORMAT, "backend": backend.layout_id, **fields}
         ).encode(),
     )
 
@@ -554,8 +555,8 @@ def acquire_build(
 
 
 # -- the versioned commit, shared by both stores ----------------------------
-# A pointer root (the tx state dir; each detector store root) holds
-# version dirs ``v<N>`` and one committed pointer naming the live N:
+# A pointer root (either store's state dir) holds version dirs ``v<N>``
+# and one committed pointer naming the live N:
 # :func:`commit_version` builds and commits the next N, and every
 # version the pointer does not name is garbage for :func:`gc_versions`.
 

@@ -694,14 +694,9 @@ def test_fused_multimodal_matches_branch_union_on_edge_docs(spark):
     }
 
 
-def test_bucketed_quantiles_row_identical_to_window_form(spark, tables):
-    """numeric_quantiles picks its rank strategy by estimated input
-    size (window form at bench scale, bucket-decomposed rank at 100 TB
-    scale). Passing n_buckets forces the bucketed strategy; both must
-    produce bit-identical rows — the rank decomposition proof in the
-    docstring, pinned on real data including a degenerate n_buckets
-    that leaves some buckets empty, and NULL prices (which both
-    strategies drop before ranking)."""
+def test_quantiles_ignore_null_prices(spark, tables):
+    """numeric_quantiles ranks the non-NULL prices only: NULL prices
+    added to the input leave every output row unchanged."""
     from pyspark.sql import functions as F
 
     from streaming_examples_spark.operators.analytics import numeric_quantiles
@@ -710,54 +705,7 @@ def test_bucketed_quantiles_row_identical_to_window_form(spark, tables):
     nulls = li.limit(30).withColumn(
         "l_extendedprice", F.lit(None).cast(li.schema["l_extendedprice"].dataType)
     )
-    li = li.unionByName(nulls)
-    base = sorted(map(tuple, numeric_quantiles(li).collect()))
-    for nb in (3, 64):
-        forced = sorted(map(tuple, numeric_quantiles(li, n_buckets=nb).collect()))
-        assert forced == base, f"n_buckets={nb} diverged"
-    # NULL prices are outside the operator: same rows as without them
-    assert base == sorted(map(tuple, numeric_quantiles(tables["lineitem"]).collect()))
-
-
-def test_quantiles_fall_back_to_window_form_when_size_estimate_fails(
-    spark, tables, monkeypatch
-):
-    """The strategy choice reads a private JVM API (the optimized
-    plan's sizeInBytes). If that call raises, numeric_quantiles must
-    still answer — with the window form — even when the size threshold
-    would otherwise pick the bucketed strategy."""
-    from py4j.protocol import Py4JError
-
-    from streaming_examples_spark.operators.analytics import numeric_quantiles
-
-    class StatsRaise:
-        def __init__(self, jdf):
-            self._real = jdf
-
-        def queryExecution(self):
-            raise Py4JError("plan statistics unavailable")
-
-        def __getattr__(self, name):
-            return getattr(self._real, name)
-
-    class Lineitem:
-        def __init__(self, df):
-            self._df = df
-
-        def where(self, cond):
-            return Lineitem(self._df.where(cond))
-
-        def select(self, *cols):
-            out = self._df.select(*cols)
-            out._jdf = StatsRaise(out._jdf)
-            return out
-
-    li = tables["lineitem"]
-    monkeypatch.setenv("SPARK_GRAFT_QUANTILE_BUCKET_MIN_BYTES", "0")
-    out = numeric_quantiles(Lineitem(li))
-    assert "_bkt" not in out._jdf.queryExecution().logical().toString()
-    monkeypatch.delenv("SPARK_GRAFT_QUANTILE_BUCKET_MIN_BYTES")
-    assert sorted(map(tuple, out.collect())) == sorted(
+    assert sorted(map(tuple, numeric_quantiles(li.unionByName(nulls)).collect())) == sorted(
         map(tuple, numeric_quantiles(li).collect())
     )
 

@@ -66,6 +66,11 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _live(det, name):
+    """The store dir of ``det``'s committed version."""
+    return os.path.join(det.state_dir, f"v{det._version()}", name)
+
+
 def test_cross_batch_near_dup_detected(spark, detector):
     r1 = {r["doc_id"]: r for r in detector.process_batch(_docs(spark, [(1, BASE), (2, OTHER)]), 0).collect()}
     assert not r1[1]["is_dup"] and not r1[2]["is_dup"]
@@ -210,53 +215,67 @@ def test_compact_crash_before_pointer_commit_loses_nothing(
     assert r2[4]["is_dup"] and r2[4]["dup_of"] == 1
 
 
-def test_compact_crash_mid_commit_keeps_one_store_epoch_behind(
-    spark, tmp_path, backend_cls
+@pytest.mark.parametrize("window", ["at-flip", "after-flip"])
+def test_compact_crash_keeps_every_store_in_one_version(
+    spark, tmp_path, backend_cls, window
 ):
-    """Dying at the SECOND store's pointer flip leaves the stores at
-    different compaction epochs — legal, because compaction preserves
-    content and each store commits independently. Verdicts must be
-    unchanged, and the next compact converges both stores."""
-    import os
-
+    """One compaction is one commit: dying AT its pointer flip leaves
+    every store (sigs, bands, band_hot) at the old version, dying AFTER
+    it (while retiring the superseded version) leaves every store at
+    the new one — never a mix. Either way the crashed process's cap
+    counts refresh to a fresh detector's exact counts, verdicts are
+    unchanged, and the next compact advances exactly one version over
+    the GC'd crash garbage."""
     from streaming_examples_spark.streaming.incremental_dedup import IncrementalNearDup
 
+    state = str(tmp_path / "state")
     det = IncrementalNearDup(
-        spark, str(tmp_path / "state"), threshold=0.5, backend=backend_cls()
+        spark, state, threshold=0.5, max_bucket_size=100, backend=backend_cls()
     )
-    det.process_batch(_docs(spark, [(1, BASE), (2, OTHER)]), 0)
-    calls = {"n": 0}
+    det.process_batch(_docs(spark, [(1, BASE), (2, OTHER)]), 0).count()
+    # batch 1's refresh folds batch 0's append files into the delta
+    det.process_batch(
+        _docs(spark, [(3, "fresh unseen text about databases and storage engines")]), 1
+    ).count()
 
-    def second_call(*_a, **_k):
-        calls["n"] += 1
-        return calls["n"] == 2
-
-    _crash_once(det.backend, "commit_pointer", second_call)
+    if window == "at-flip":
+        _crash_once(det.backend, "commit_pointer", lambda *_a, **_k: True)
+        want = 1
+    else:
+        retiring = os.path.join(state, "v1")
+        _crash_once(
+            det.backend,
+            "remove_tree",
+            lambda path: path == retiring and os.path.isdir(path),
+        )
+        want = 2
     with pytest.raises(RuntimeError, match="injected crash"):
         det.compact()
-    # one store advanced, the other did not
-    epochs = {n: det._epoch(n) for n in ("sigs", "bands")}
-    assert sorted(epochs.values()) == [1, 2], epochs
+    assert det._version() == want
+    for name in ("sigs", "bands", "band_hot"):
+        assert os.path.isdir(_live(det, name)), name
+    # the summary is in the committed version iff the compaction is
+    assert os.path.exists(os.path.join(_live(det, "band_hot"), "_files.json")) == (
+        want == 2
+    )
 
     fresh = IncrementalNearDup(
-        spark, str(tmp_path / "state"), threshold=0.5, backend=backend_cls()
+        spark, state, threshold=0.5, max_bucket_size=100, backend=backend_cls()
     )
-    r = {x["doc_id"]: x for x in fresh.process_batch(_docs(spark, [(3, NEAR)]), 1).collect()}
-    assert r[3]["is_dup"] and r[3]["dup_of"] == 1
-    before = {n: fresh._epoch(n) for n in ("sigs", "bands")}
+    det._refresh_cap_counts(want)
+    fresh._refresh_cap_counts(want)  # exact cold rebuild from the live store
+    assert det._cap_hot == fresh._cap_hot
+    if backend_cls.__name__ == "LaggedManifestBackend":
+        # a lagging bands listing can only defer files: never stale-HIGH
+        assert det._cap_seen <= fresh._cap_seen
+        assert all(n <= fresh._cap_delta[k] for k, n in det._cap_delta.items())
+    else:
+        assert (det._cap_delta, det._cap_seen) == (fresh._cap_delta, fresh._cap_seen)
+    r = {x["doc_id"]: x for x in fresh.process_batch(_docs(spark, [(4, NEAR)]), 2).collect()}
+    assert r[4]["is_dup"] and r[4]["dup_of"] == 1
     fresh.compact()
-    # each store advanced exactly one epoch from wherever it was
-    assert {n: fresh._epoch(n) for n in ("sigs", "bands")} == {
-        n: e + 1 for n, e in before.items()
-    }
-    # the GC reclaimed every superseded epoch dir
-    for n in ("sigs", "bands"):
-        stray = [
-            e
-            for e in os.listdir(os.path.join(str(tmp_path / "state"), n))
-            if e.startswith("v") and e != f"v{fresh._epoch(n)}"
-        ]
-        assert not stray, (n, stray)
+    assert fresh._version() == want + 1
+    assert [e for e in os.listdir(state) if e.startswith("v")] == [f"v{want + 1}"]
 
 
 def test_compact_crash_after_commit_gcs_stray_epoch(spark, tmp_path, backend_cls):
@@ -264,7 +283,7 @@ def test_compact_crash_after_commit_gcs_stray_epoch(spark, tmp_path, backend_cls
     removal leaves a stray epoch dir: the new state is live (verdicts
     from the compacted store), and the next locked operation's GC
     reclaims the stray — and a POSIX pointer temp (``CURRENT.<n>``, a
-    crash inside the pointer flip) in any store root."""
+    crash inside the pointer flip)."""
     import os
 
     from streaming_examples_spark.streaming.incremental_dedup import IncrementalNearDup
@@ -291,7 +310,7 @@ def test_compact_crash_after_commit_gcs_stray_epoch(spark, tmp_path, backend_cls
     )
     with pytest.raises(RuntimeError, match="injected crash"):
         det.compact()
-    temp = os.path.join(str(tmp_path / "state"), "bands", "CURRENT.9")
+    temp = os.path.join(str(tmp_path / "state"), "CURRENT.9")
     with open(temp, "w") as fh:
         fh.write("9")
 
@@ -301,17 +320,11 @@ def test_compact_crash_after_commit_gcs_stray_epoch(spark, tmp_path, backend_cls
     r = {x["doc_id"]: x for x in fresh.process_batch(_docs(spark, [(3, NEAR)]), 1).collect()}
     assert r[3]["is_dup"] and r[3]["dup_of"] == 1
     assert not os.path.exists(temp)
-    # the batch's GC pass reclaimed every non-current epoch dir
-    for n in ("sigs", "bands", "band_hot"):
-        root = os.path.join(str(tmp_path / "state"), n)
-        if not os.path.isdir(root):
-            continue
-        cur = fresh.backend.read_pointer(root)
-        stray = [
-            e for e in os.listdir(root)
-            if e.startswith("v") and e != f"v{cur}"
-        ]
-        assert not stray, (n, stray)
+    # the batch's GC pass reclaimed every non-current version dir
+    state = str(tmp_path / "state")
+    assert [e for e in os.listdir(state) if e.startswith("v")] == [
+        f"v{fresh._version()}"
+    ]
 
 
 def test_lost_pointer_refused_not_gcd(spark, tmp_path):
@@ -327,9 +340,9 @@ def test_lost_pointer_refused_not_gcd(spark, tmp_path):
     state = str(tmp_path / "state")
     det = IncrementalNearDup(spark, state, threshold=0.5)
     det.process_batch(_docs(spark, [(1, BASE), (2, OTHER)]), 0)
-    det.compact()  # stores now at epoch 2
-    assert det._epoch("sigs") == 2
-    os.unlink(os.path.join(state, "sigs", "CURRENT"))
+    det.compact()  # stores now at version 2
+    assert det._version() == 2
+    os.unlink(os.path.join(state, "CURRENT"))
 
     fresh = IncrementalNearDup(spark, state, threshold=0.5)
     with pytest.raises(ValueError, match="no committed pointer"):
@@ -338,7 +351,7 @@ def test_lost_pointer_refused_not_gcd(spark, tmp_path):
     with pytest.raises(ValueError, match="no committed pointer"):
         fresh.read_store("sigs")
     # the refusal destroyed nothing: restore the pointer and resume
-    with open(os.path.join(state, "sigs", "CURRENT"), "w") as fh:
+    with open(os.path.join(state, "CURRENT"), "w") as fh:
         fh.write("2")
     r = {x["doc_id"]: x for x in fresh.process_batch(_docs(spark, [(3, NEAR)]), 1).collect()}
     assert r[3]["is_dup"] and r[3]["dup_of"] == 1
@@ -391,11 +404,9 @@ def _demote_to_root_level(state):
     import shutil
 
     for name in ("sigs", "bands"):
-        root = os.path.join(state, name)
-        for n in os.listdir(os.path.join(root, "v1")):
-            os.rename(os.path.join(root, "v1", n), os.path.join(root, n))
-        shutil.rmtree(os.path.join(root, "v1"))
-        os.unlink(os.path.join(root, "CURRENT"))
+        os.rename(os.path.join(state, "v1", name), os.path.join(state, name))
+    shutil.rmtree(os.path.join(state, "v1"))
+    os.unlink(os.path.join(state, "CURRENT"))
     os.unlink(os.path.join(state, "_layout.json"))
 
 
@@ -409,15 +420,35 @@ def _write_layout_json(state, data):
 def _swapped_to_old(state):
     """A crashed directory-swap compaction: the live store renamed to
     ``<store>.old``, under a seal without a format."""
-    os.rename(os.path.join(state, "sigs"), os.path.join(state, "sigs.old"))
+    os.rename(os.path.join(state, "v1", "sigs"), os.path.join(state, "sigs.old"))
     _write_layout_json(state, {"bands_buckets": None, "sigs_buckets": None})
+
+
+def _per_store_roots(state):
+    """The per-store pointer roots the one-root layout replaced: each
+    store's versions and ``CURRENT`` under its own root, with that
+    layout's seal."""
+    import shutil
+
+    for name in ("sigs", "bands"):
+        os.makedirs(os.path.join(state, name))
+        os.rename(os.path.join(state, "v1", name), os.path.join(state, name, "v1"))
+        with open(os.path.join(state, name, "CURRENT"), "w") as fh:
+            fh.write("1")
+    shutil.rmtree(os.path.join(state, "v1"))
+    os.unlink(os.path.join(state, "CURRENT"))
+    _write_layout_json(
+        state,
+        {"format": 1, "backend": "local-posix", "bands_buckets": None, "sigs_buckets": None},
+    )
 
 
 _RETIRED_DETECTOR_SHAPES = {
     "root-level-parquet": _demote_to_root_level,
     "old-swap-dir": _swapped_to_old,
+    "per-store-roots": _per_store_roots,
     "layout-without-format": lambda st: _write_layout_json(
-        st, {"bands_buckets": None, "sigs_buckets": None, "backend": "local-posix"}
+        st, {"stores": ["band_hot", "bands", "sigs"], "backend": "local-posix"}
     ),
     "unreadable-layout": lambda st: _write_layout_json(st, ["format", 1]),
     "committed-without-layout": lambda st: os.unlink(
@@ -588,6 +619,8 @@ def test_streaming_foreachbatch_e2e(spark, tmp_path):
 
 
 def test_compaction_preserves_state_and_verdicts(spark, detector, monkeypatch):
+    """One compact() rewrites every store and commits them with exactly
+    one pointer flip."""
     import glob
     import os
 
@@ -598,9 +631,17 @@ def test_compaction_preserves_state_and_verdicts(spark, detector, monkeypatch):
     detector.process_batch(_docs(spark, [(2, OTHER)]), 1)
     detector.process_batch(_docs(spark, [(5, "fresh unseen text about databases and storage engines")]), 2)
 
-    n_before = len(glob.glob(os.path.join(detector._data_path("sigs"), "*.parquet")))
+    n_before = len(glob.glob(os.path.join(_live(detector, "sigs"), "*.parquet")))
+    flips = []
+    real_commit = detector.backend.commit_pointer
+    monkeypatch.setattr(
+        detector.backend,
+        "commit_pointer",
+        lambda root, v: flips.append((root, v)) or real_commit(root, v),
+    )
     detector.compact()
-    n_after = len(glob.glob(os.path.join(detector._data_path("sigs"), "*.parquet")))
+    assert flips == [(detector.state_dir, 2)]
+    n_after = len(glob.glob(os.path.join(_live(detector, "sigs"), "*.parquet")))
     assert n_after < n_before and n_after == 1
 
     sigs = detector.read_store("sigs")
@@ -772,7 +813,7 @@ def test_cap_uses_compacted_summary_and_survives_restart(spark, tmp_path):
         _docs(spark, [(1, BASE), (2, BASE), (3, BASE)]), 0).collect()}
     assert not any(r0[i]["is_dup"] for i in (1, 2, 3))
     det.compact()
-    assert os.path.exists(os.path.join(det._data_path("band_hot"), "_files.json"))
+    assert os.path.exists(os.path.join(_live(det, "band_hot"), "_files.json"))
     # batch 1, same detector: the duplicate's keys hit store count 3 ≥
     # cap via the summary → hist path gated, no candidates
     r1 = det.process_batch(_docs(spark, [(4, BASE)]), 1).collect()[0]
@@ -827,25 +868,25 @@ def test_dual_writer_build_fencing_detector(spark, tmp_path, monkeypatch):
     r = {x["doc_id"]: x for x in detA.process_batch(_docs(spark, [(3, NEAR)]), 2).collect()}
     assert r[3]["is_dup"] and r[3]["dup_of"] == 1
 
-    # (1) a REMOTE host's claim on the bands next-epoch blocks compact
+    # (1) a REMOTE host's claim on the next version blocks compact
     # — and blocks it BEFORE touching the dir: hostB's in-flight
     # writes must survive the refusal (a delete-then-refuse order
     # would gut the dir while hostB's intact marker still lets it
     # validate and commit the half-deleted epoch)
     b = ManifestBackend()
-    bands_v2 = os.path.join(state, "bands", "v2")
-    b.claim_build(bands_v2, "hostB:1:feedface")
-    b.prepare_dir(bands_v2)
-    sentinel = os.path.join(bands_v2, "part-hostB-0000.parquet")
+    v2 = os.path.join(state, "v2")
+    b.claim_build(v2, "hostB:1:feedface")
+    b.prepare_dir(v2)
+    sentinel = os.path.join(v2, "part-hostB-0000.parquet")
     b.publish_file(sentinel, b"hostB-in-flight")
     with pytest.raises(RuntimeError, match="dual-writer detected"):
         detA.compact()
-    assert b.read_pointer(os.path.join(state, "bands")) == 1  # intact
+    assert b.read_pointer(state) == 1  # intact
     assert os.path.exists(sentinel)  # hostB's build untouched
-    b.release_build(bands_v2)  # operator: hostB is dead
-    b.remove_tree(bands_v2)  # operator clears the dead build too
+    b.release_build(v2)  # operator: hostB is dead
+    b.remove_tree(v2)  # operator clears the dead build too
     detA.compact()
-    assert b.read_pointer(os.path.join(state, "bands")) == 2
+    assert b.read_pointer(state) == 2
 
     # (2) mid-build reclaim: B compacts fully between A's claim and
     # A's commit-time validation — A must refuse to commit
@@ -1004,24 +1045,16 @@ def test_gc_refolds_stragglers_after_crash_between_flip_and_removal(
     sigs = {x["doc_id"] for x in detC.read_store("sigs").select("doc_id").collect()}
     assert 5 in sigs, sigs
     assert r[6]["is_dup"] and r[6]["dup_of"] == 5
-    # and no below-pointer epoch dirs survive the healed GC
-    for store in ("sigs", "bands"):
-        root = detC._path(store)
-        cur = detC.backend.read_pointer(root)
-        import re as _re
-
-        epochs = [
-            int(m.group(1))
-            for entry in detC.backend.list_dir(root)
-            if (m := _re.fullmatch(r"v(\d+)", entry))
-        ]
-        assert all(e == cur for e in epochs), (store, cur, epochs)
+    # and no below-pointer version dirs survive the healed GC
+    assert [e for e in os.listdir(state) if e.startswith("v")] == [
+        f"v{detC._version()}"
+    ]
 
 
 def test_detector_backlog_metrics_track_appends_and_epochs(spark, tmp_path, monkeypatch):
     """Backlog/lag monitoring (the replication-slot dashboard analog):
     a two-batch run must report per-batch appended-file counts, a
-    monotone total, per-store epochs, and store_stats() sizes that
+    monotone total, the committed version, and store_stats() sizes that
     grow with content and reflect a compaction's epoch bump."""
     from streaming_examples_spark.streaming.incremental_dedup import (
         IncrementalNearDup,
@@ -1033,12 +1066,12 @@ def test_detector_backlog_metrics_track_appends_and_epochs(spark, tmp_path, monk
     assert m1["batches"] == 1 and m1["compactions"] == 0
     assert m1["appended_files_last_batch"]["sigs"] >= 1
     assert m1["appended_files_last_batch"]["bands"] >= 1
-    assert m1["store_epoch"] == {"sigs": 1, "bands": 1}
+    assert m1["store_epoch"] == 1
 
     s1 = det.store_stats()
     assert s1["stores"]["sigs"]["files"] >= 1 and s1["stores"]["sigs"]["bytes"] > 0
-    assert s1["stores"]["bands"]["epoch"] == 1
-    assert s1["stores"]["band_hot"] == {"epoch": 0, "files": 0, "bytes": 0}
+    assert s1["epoch"] == 1
+    assert s1["stores"]["band_hot"] == {"files": 0, "bytes": 0}
 
     # batch 2: one new canonical + one dup (dup appends nothing extra
     # beyond the canonical's rows); totals are monotone
@@ -1052,7 +1085,7 @@ def test_detector_backlog_metrics_track_appends_and_epochs(spark, tmp_path, monk
         s2["stores"]["sigs"]["files"] > s1["stores"]["sigs"]["files"]
     )
 
-    # compaction bumps epochs and the compaction counter; the rewritten
+    # compaction bumps the version and the compaction counter; the rewritten
     # store (one file here) reads back with FEWER-OR-EQUAL files than
     # the append pile
     from streaming_examples_spark.streaming import incremental_dedup as incdedup_mod
@@ -1061,9 +1094,9 @@ def test_detector_backlog_metrics_track_appends_and_epochs(spark, tmp_path, monk
     det.compact()
     m3 = det.metrics.snapshot()
     assert m3["compactions"] == 1
-    assert m3["store_epoch"]["sigs"] == 2 and m3["store_epoch"]["bands"] == 2
+    assert m3["store_epoch"] == 2
     s3 = det.store_stats()
-    assert s3["stores"]["sigs"]["epoch"] == 2
+    assert s3["epoch"] == 2
     assert s3["stores"]["sigs"]["files"] <= s2["stores"]["sigs"]["files"]
     # an empty batch appends nothing: the last-batch gauge resets
     det.process_batch(_docs(spark, [(1, BASE)]), 2)  # replayed id only
@@ -1088,8 +1121,8 @@ def test_rebuild_hot_coverage_exact_under_list_lag(spark, tmp_path):
     rewrite; a summary covering fewer files than it aggregated makes
     the per-batch refresh delta-count those files ON TOP of the
     summary — double-counted membership, spurious virality, probes
-    permanently skipped (the unsafe direction). _rebuild_hot therefore
-    takes coverage from the frame's own inputFiles(); this pins both
+    permanently skipped (the unsafe direction). The summary build
+    therefore takes coverage from the frame's own inputFiles(); this pins both
     the invariant and the behavioral consequence."""
     import json
     import os
@@ -1109,13 +1142,11 @@ def test_rebuild_hot_coverage_exact_under_list_lag(spark, tmp_path):
     # 3 identical docs, within-batch count 3 > cap 2: peer path gated,
     # all three stored canonical — every shared band key has n=3
     det.process_batch(_docs(spark, [(1, BASE), (2, BASE), (3, BASE)]), 0)
-    det.compact()  # rewrites bands, rebuilds band_hot INSIDE lag windows
-    with open(os.path.join(det._data_path("band_hot"), "_files.json")) as fh:
+    det.compact()  # rewrites bands, builds band_hot INSIDE lag windows
+    with open(os.path.join(_live(det, "band_hot"), "_files.json")) as fh:
         covered = fh.read()
     physical = sorted(
-        n
-        for n in os.listdir(det._data_path("bands"))
-        if n.endswith(".parquet")
+        n for n in os.listdir(_live(det, "bands")) if n.endswith(".parquet")
     )
     assert physical and json.loads(covered) == physical
     # behavioral pin: a FRESH instance with cap 5 sees true membership
@@ -1130,78 +1161,27 @@ def test_rebuild_hot_coverage_exact_under_list_lag(spark, tmp_path):
     assert r["is_dup"] and r["dup_of"] == 1
 
 
-def test_cap_cache_singleton_eviction_bounds_driver_memory(spark, tmp_path):
-    """cap_cache_max_keys bounds the driver-side since-compact count
+def test_cap_cache_singleton_eviction_bounds_driver_memory(
+    spark, tmp_path, monkeypatch
+):
+    """_CAP_CACHE_MAX_KEYS bounds the driver-side since-compact count
     cache: overflow evicts singleton entries (understate ≤1 — the cap
     fires late, never early). With a tiny bound, a refresh that reads
     prior appends must leave the cache within the bound."""
+    from streaming_examples_spark.streaming import incremental_dedup as incdedup_mod
     from streaming_examples_spark.streaming.incremental_dedup import (
         IncrementalNearDup,
     )
 
+    monkeypatch.setattr(incdedup_mod, "_CAP_CACHE_MAX_KEYS", 3)
     det = IncrementalNearDup(
-        spark,
-        str(tmp_path / "state"),
-        threshold=0.5,
-        max_bucket_size=100,
-        cap_cache_max_keys=3,
+        spark, str(tmp_path / "state"), threshold=0.5, max_bucket_size=100
     )
     det.process_batch(_docs(spark, [(1, BASE), (2, OTHER)]), 0).count()
     # batch 1's refresh reads batch 0's appended band files (~18
     # singleton keys > bound 3) and must evict down to the bound
     det.process_batch(_docs(spark, [(3, NEAR)]), 1).count()
     assert len(det._cap_delta) <= 3
-
-
-def test_compact_crash_before_summary_swap_resets_cap_cache(spark, tmp_path):
-    """A compact() that rewrites the bands store but dies BEFORE the
-    band_hot summary swap leaves the epoch token unchanged (still
-    '<no-summary>'): a cache that survived would keep delta counts for
-    the DELETED files while re-counting their rewritten replacements —
-    counts double (stale-HIGH), keys turn spuriously viral, probes get
-    skipped forever. Both guards must hold: the same-process compact
-    failure drops the cache outright, and a DIFFERENT process whose
-    cache references the vanished files goes cold at its next refresh."""
-    from streaming_examples_spark.streaming.incremental_dedup import (
-        IncrementalNearDup,
-    )
-
-    state = str(tmp_path / "state")
-    det = IncrementalNearDup(spark, state, threshold=0.5, max_bucket_size=100)
-    det.process_batch(_docs(spark, [(1, BASE), (2, OTHER)]), 0).count()
-    # batch 1's refresh folds batch 0's append files into the delta
-    det.process_batch(_docs(spark, [(3, NEAR)]), 1).count()
-    assert det._cap_seen and det._cap_delta
-
-    # a second process's cache also warmed from the same files
-    other = IncrementalNearDup(spark, state, threshold=0.5, max_bucket_size=100)
-    other._refresh_cap_counts()
-    assert det._cap_seen <= other._cap_seen  # det has not seen batch 1's own appends yet
-
-    def boom():
-        raise RuntimeError("crash before summary swap")
-
-    det._rebuild_hot = boom  # bands rewrite completes, summary never lands
-    with pytest.raises(RuntimeError, match="summary swap"):
-        det.compact()
-    # guard 1: the failing process dropped its cache on the way out
-    assert det._cap_epoch is None and not det._cap_seen and not det._cap_delta
-    # the rewrite replaced every pre-crash file name
-    assert not (other._cap_seen & set(det._bands_data_files()))
-
-    # guard 2: the OTHER process's next refresh sees its counted files
-    # vanished and restarts cold instead of double-counting
-    other._refresh_cap_counts()
-    fresh = IncrementalNearDup(spark, state, threshold=0.5, max_bucket_size=100)
-    fresh._refresh_cap_counts()  # exact cold rebuild from the live store
-    assert other._cap_delta == fresh._cap_delta
-    assert other._cap_seen == fresh._cap_seen
-
-    # and the failing process's own next batch rebuilds exact counts too
-    det.process_batch(_docs(spark, [(4, BASE + " extra tail words")]), 2).count()
-    for key, n in fresh._cap_delta.items():
-        assert det._cap_delta.get(key, 0) >= n  # includes batch 2's appends
-        assert det._cap_delta[key] <= n + 1  # never doubled
 
 
 @pytest.mark.slow
@@ -1494,7 +1474,6 @@ def test_composed_dual_host_lag_crash_detector_soak(
     from streaming_examples_spark.streaming import incremental_dedup as incdedup_mod
     from streaming_examples_spark.streaming.incremental_dedup import (
         IncrementalNearDup,
-        _STORES,
     )
     from streaming_examples_spark.streaming.state_backend import (
         LaggedManifestBackend,
@@ -1523,13 +1502,11 @@ def test_composed_dual_host_lag_crash_detector_soak(
 
     def heal_all():
         # the documented operator action for a dead foreign builder:
-        # age out its claims, store by store (markers sit at each
-        # store root). TTL is safe here — the schedule is sequential,
-        # so no build can be in flight during the heal.
+        # age out its claims (markers sit at the state dir root). TTL
+        # is safe here — the schedule is sequential, so no build can
+        # be in flight during the heal.
         _time.sleep(0.05)
-        det = dets["hostA"]
-        for name in (*_STORES, "band_hot"):
-            heal_stale_builds(shared_backend, det._path(name), 0.01)
+        heal_stale_builds(shared_backend, state, 0.01)
 
     fam_text = {
         f: " ".join(f"cx{seed}fam{f}tok{j}" for j in range(12)) for f in range(3)

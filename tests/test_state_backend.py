@@ -1070,9 +1070,9 @@ def test_heal_stale_builds_ages_out_dead_hosts_claims(tmp_path, backend_key):
 
 
 def test_heal_stale_builds_tool_covers_both_layouts(tmp_path):
-    """tools/heal_stale_builds.py walks the tx version root AND nested
-    detector store roots, honors dry-run-by-default, and releases only
-    with --apply."""
+    """tools/heal_stale_builds.py heals a tx state dir and a detector
+    state dir alike (both keep their version claims at the root),
+    honors dry-run-by-default, and releases only with --apply."""
     import json as _json
     import subprocess
     import sys as _sys
@@ -1083,12 +1083,12 @@ def test_heal_stale_builds_tool_covers_both_layouts(tmp_path):
     )
 
     b = LocalPosixBackend()
-    state = tmp_path / "state"
-    tx_dir, bands = str(state / "v9"), str(state / "bands" / "v2")
+    tx_dir = str(tmp_path / "tx" / "v9")
+    nd_dir = str(tmp_path / "neardup" / "v2")
     b.claim_build(tx_dir, "deadhost:1:aaaa")
-    b.claim_build(bands, "deadhost:1:bbbb")
+    b.claim_build(nd_dir, "deadhost:1:bbbb")
     stale_t = _time.time() - 7200
-    for p in (tx_dir, bands):
+    for p in (tx_dir, nd_dir):
         os.utime(b._build_marker(p), (stale_t, stale_t))
 
     tool = os.path.join(
@@ -1097,24 +1097,23 @@ def test_heal_stale_builds_tool_covers_both_layouts(tmp_path):
         "heal_stale_builds.py",
     )
 
-    def run(*extra):
+    def run(path, *extra):
         proc = subprocess.run(
-            [_sys.executable, tool, str(state), "--older-than", "3600", *extra],
+            [_sys.executable, tool, os.path.dirname(path), "--older-than", "3600", *extra],
             capture_output=True,
             text=True,
             check=True,
         )
         return _json.loads(proc.stdout)
 
-    out = run()  # dry-run by default
-    healed = [e["dir"] for r in out["reports"] for e in r["healed"]]
-    assert sorted(healed) == sorted([tx_dir, bands])
-    assert b.read_build_owner(tx_dir) == "deadhost:1:aaaa"  # untouched
+    for path in (tx_dir, nd_dir):
+        out = run(path)  # dry-run by default
+        assert [e["dir"] for e in out["report"]["healed"]] == [path]
+        assert b.read_build_owner(path) is not None  # untouched
 
-    out = run("--apply")
-    assert out["apply"] is True
-    assert b.read_build_owner(tx_dir) is None
-    assert b.read_build_owner(bands) is None
+        out = run(path, "--apply")
+        assert out["apply"] is True
+        assert b.read_build_owner(path) is None
 
 
 # -- randomized dual-host soak over the TX store (VERDICT r10 #5) ---------

@@ -11,9 +11,9 @@ clears claims older than a threshold the OPERATOR chooses — pick one
 longer than the longest possible batch/compaction plus cross-host
 clock skew. Dry-run by default; pass --apply to release.
 
-Works on both state layouts:
-  - tx processor state dir   (v<N> version dirs at the root)
-  - incremental-dedup state  (bands/ sigs/ band_hot/ store roots)
+Works on both stores' state dirs: each keeps its v<N> version dirs,
+and so their claims, at the root (the tx processor's state, and the
+incremental-dedup state whose versions hold sigs/, bands/, band_hot/).
 
 Runs under the state dir's advisory writer lock (role "heal") so no
 same-filesystem writer is mid-build during the walk. See
@@ -42,20 +42,6 @@ from streaming_examples_spark.streaming.state_backend import (  # noqa: E402
     heal_stale_builds,
 )
 
-_DETECTOR_STORES = ("bands", "sigs", "band_hot")
-
-
-def marker_roots(state_dir: str) -> list[str]:
-    """The dirs whose direct children can carry build claims: the
-    state dir itself (tx version layout) plus any detector store
-    roots nested under it."""
-    roots = [state_dir]
-    for name in _DETECTOR_STORES:
-        sub = os.path.join(state_dir, name)
-        if os.path.isdir(sub):
-            roots.append(sub)
-    return roots
-
 
 def main() -> int:
     ap = argparse.ArgumentParser()
@@ -81,17 +67,12 @@ def main() -> int:
     backend = (
         ManifestBackend() if args.backend == "manifest" else LocalPosixBackend()
     )
-    reports = []
     with writer_lock(args.state_dir, "heal"):
-        for root in marker_roots(args.state_dir):
-            reports.append(
-                heal_stale_builds(
-                    backend, root, args.older_than, dry_run=not args.apply
-                )
-            )
-    print(json.dumps({"apply": args.apply, "reports": reports}, indent=2))
-    healed = sum(len(r["healed"]) for r in reports)
-    kept = sum(len(r["kept"]) for r in reports)
+        report = heal_stale_builds(
+            backend, args.state_dir, args.older_than, dry_run=not args.apply
+        )
+    print(json.dumps({"apply": args.apply, "report": report}, indent=2))
+    healed, kept = len(report["healed"]), len(report["kept"])
     print(
         f"{'released' if args.apply else 'WOULD release'} {healed} claim(s), "
         f"kept {kept}",

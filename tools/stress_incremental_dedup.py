@@ -9,8 +9,8 @@ Usage: python tools/stress_incremental_dedup.py [--seed M]
 
 Every run ends with the store maintenance cycle: ``compact()``, a
 redelivery of batch 0, and a second ``compact()``. The tool exits
-non-zero unless both corpus stores reach epoch 2 or later, the
-redelivered batch reports no canonical (its canonicals fold away as
+non-zero unless each ``compact()`` advances the state dir's committed
+version by exactly one, the redelivered batch reports no canonical (its canonicals fold away as
 known ids; its duplicates, never stored, are reported as duplicates
 again), and the canonical count is the same before, between and after
 the compactions.
@@ -167,13 +167,16 @@ def main() -> int:
     # maintenance cycle: compact, redeliver batch 0 (nothing in it may
     # come out canonical again), compact again
     t0 = time.time()
+    epochs = [det.store_stats()["epoch"]]
     det.compact()
+    epochs.append(det.store_stats()["epoch"])
     canonicals.append(det.read_store("sigs").count())
     replayed = det.process_batch(batch_of(0), n_batches).filter("NOT is_dup").count()
+    epochs.append(det.store_stats()["epoch"])
     det.compact()
     canonicals.append(det.read_store("sigs").count())
     stats = det.store_stats()
-    epochs = {name: stats["stores"][name]["epoch"] for name in ("bands", "sigs")}
+    epochs.append(stats["epoch"])
     print(
         f"maintenance: compact + replay + compact in {time.time() - t0:.1f}s, "
         f"epochs={epochs}, replayed_canonicals={replayed}, canonicals={canonicals}",
@@ -182,8 +185,10 @@ def main() -> int:
     print(f"store_stats: {stats}", flush=True)
     shutil.rmtree(state, ignore_errors=True)
     failures = []
-    if min(epochs.values()) < 2:
-        failures.append(f"store epochs {epochs} < 2: compaction never committed")
+    if epochs[1] != epochs[0] + 1 or epochs[3] != epochs[2] + 1:
+        failures.append(
+            f"versions {epochs}: a compact() did not commit exactly one version"
+        )
     if replayed:
         failures.append(f"redelivered batch 0 reported {replayed} canonicals")
     if len(set(canonicals)) != 1:
