@@ -30,6 +30,26 @@ def plan_bytes(df: DataFrame) -> int | None:
         return None
 
 
+def advisory_partitions(spark, sized: list[tuple[DataFrame, int]]) -> int | None:
+    """How many advisory partitions
+    (``spark.sql.adaptive.advisoryPartitionSizeInBytes``, the size AQE
+    itself coalesces shuffle partitions toward) the frames fill: the
+    sum of ``plan_bytes(df) * scale`` over the ``(df, scale)`` pairs,
+    divided by the advisory size and rounded up, at least 1. None when
+    a size cannot be read."""
+    jvm = spark.sparkContext._jvm
+    limit = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    total = 0
+    for df, scale in sized:
+        size = plan_bytes(df)
+        if size is None:
+            return None
+        total += size * scale
+    return max(1, -(-total // limit))
+
+
 def formatted_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().explainString(
         df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")

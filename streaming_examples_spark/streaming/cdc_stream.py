@@ -19,8 +19,10 @@ the backend's commit pointer — a ``CURRENT`` file or ``_pointer/``):
     <state_dir>/v<V>/carry_orders/, carry_lines/, carry_txs/
                                incomplete-tx events and tx metadata
     <state_dir>/v<V>/applied_txs/  recently applied txs (replay dedup)
-    <state_dir>/v<V>/_parts.json   {"format": 2, "frames": {...}}: the
-                                   exact bucket-part set of the version
+    <state_dir>/v<V>/_parts.json   {"format": 3, "frames": {frame:
+                                   {"_bucket=K": owner}}}: every bucket
+                                   part of the version and the version
+                                   dir that holds it
 
 The two big state tables are hash-bucketed on the order key and
 maintained *incrementally*: a batch loads and rewrites only the
@@ -29,7 +31,13 @@ buckets), never O(total key space). ``line_state`` buckets by the
 parent order key (not the line id) so that every existing line of a
 touched order is colocated with the order's bucket — the as-of
 reconstruction needs those lines even when the batch only updates the
-order row. Carry tables are O(incomplete txs) and rewritten whole.
+order row. A batch writes its touched buckets under its own version
+and carries every other bucket BY REFERENCE: its ``_parts.json`` copies
+the bucket's entry from the previous version's, so the part stays in
+the older version dir that wrote it (no file is linked, copied or
+listed), and a version dir is retired except for the parts the
+committed map still names (``state_backend``'s keep rule). Carry tables
+are O(incomplete txs) and rewritten whole.
 In production the same layout is a Delta/Iceberg MERGE target; the
 bucket swap here is the plain-parquet equivalent of MERGE touching
 only affected files.
@@ -53,8 +61,8 @@ Durability order per batch:
      high-watermark sidecar published, then all six state frames are
      written on a thread pool, next to the committed-tx count (the
      backlog is observed on the carry writes themselves);
-  4. sidecars: the untouched buckets are carried and ``_parts.json``
-     enumerates the version;
+  4. sidecar: ``_parts.json`` names the written buckets and carries
+     the untouched ones by reference;
   5. flip: one atomic pointer replace commits the version (3-5 run in
      ``state_backend.commit_version``, the detector's commit too).
 Every state-backend call is made from the calling thread, in this
@@ -70,7 +78,7 @@ idempotent per commit_lsn.
 One on-disk format: the processor reads and writes exactly the layout
 above. A state dir without a readable format-1 seal (unless it is
 fresh), sealed by another backend or bucket count, or whose committed
-version lacks a format-2 ``_parts.json`` is refused with a
+version lacks a format-3 ``_parts.json`` is refused with a
 ``ValueError`` (``state_backend.check_layout``) — never read as empty.
 To recover, rebuild the state dir from the event log: move it aside
 and replay the source from its start into an empty dir.
@@ -90,7 +98,7 @@ from pyspark.util import inheritable_thread_target
 
 from streaming_examples_spark.model.decoders import parse_tx_id
 from streaming_examples_spark.operators.txjoin import TxDenormResult, tx_denormalize
-from streaming_examples_spark.plans.inspect import plan_bytes
+from streaming_examples_spark.plans.inspect import advisory_partitions
 from streaming_examples_spark.streaming.state_backend import (
     REBUILD_HINT,
     LocalPosixBackend,
@@ -108,6 +116,8 @@ from streaming_examples_spark.streaming.state_backend import (
 #: state tables (SCALE_NOTES, "One-partition micro-batch: where the
 #: plans cross").
 _PARQUET_TO_CACHED = 3
+#: the only ``_parts.json`` format the tx store reads or writes
+_PARTS_FORMAT = 3
 
 
 class TxDenormBatchProcessor:
@@ -133,8 +143,8 @@ class TxDenormBatchProcessor:
         self.output_dir = output_dir
         self.n_buckets = n_buckets
         self.applied_retention_batches = applied_retention_batches
-        # storage seam: every commit-protocol primitive (carry, pointer
-        # flip, version GC) routes through here — see state_backend.py
+        # storage seam: every commit-protocol primitive (pointer flip,
+        # version GC, sidecars) routes through here — see state_backend.py
         # for the object-store translation of each
         self.backend = backend if backend is not None else LocalPosixBackend()
         #: optional per-batch emission consumer ``(emissions_df,
@@ -246,42 +256,54 @@ class TxDenormBatchProcessor:
             return None
         return json.loads(raw).get("hwm")
 
-    def _parts(self, version: int) -> dict[str, list[str]]:
-        """The committed version's bucket-part enumeration: frame name
-        → sorted part names, from its ``_parts.json`` sidecar
-        ``{"format": 2, "frames": {...}}``, read through the backend's
-        ``read_file`` seam — a GET, fresh under list-after-write lag,
-        which is the point: every enumeration reads THIS instead of a
-        lag-prone listing. EXACT: every listed part exists
-        (Spark-written parts enumerated from the writer's own
-        scan-time file index, carried parts from the carry loop
-        itself), so readers and the next carry need no existence
+    def _parts(self, version: int) -> dict[str, dict[str, int]]:
+        """The committed version's part map: frame name → ``_bucket=K``
+        part → the version dir that holds it, from its ``_parts.json``
+        sidecar ``{"format": 3, "frames": {...}}``, read through the
+        backend's ``read_file`` seam — a GET, fresh under
+        list-after-write lag, which is the point: every read and the
+        next carry use THIS instead of a lag-prone listing. EXACT:
+        every named part exists (Spark-written parts enumerated from
+        the writer's own scan-time file index, carried parts kept by
+        the retirement's keep rule), so readers need no existence
         probe. Version 0 (no committed state) is empty; a committed
-        version without a format-2 sidecar is refused, never read as
-        empty."""
+        version without a format-3 sidecar is refused, never read as
+        empty — and the GC, which keeps the parts this names, aborts
+        before removing anything."""
         if version <= 0:
             return {}
         path = os.path.join(self._root(version), "_parts.json")
         raw = self.backend.read_file(path)
         data = json.loads(raw) if raw is not None else None
-        if not isinstance(data, dict) or data.get("format") != 2:
+        if not isinstance(data, dict) or data.get("format") != _PARTS_FORMAT:
             raise ValueError(
                 f"tx state at {self.state_dir}: committed version {version} "
-                f"has no format-2 {path} (found {raw!r}), so its bucket parts "
-                "cannot be enumerated and reading it would silently load "
-                f"empty state: {REBUILD_HINT}"
+                f"has no format-{_PARTS_FORMAT} {path} (found {raw!r}), so its "
+                "bucket parts cannot be located and reading it would silently "
+                f"load empty state: {REBUILD_HINT}"
             )
         return data["frames"]
 
-    def _load_buckets(self, name: str, buckets: list[int]) -> DataFrame | None:
-        """Read only the listed hash buckets of a bucketed state table.
+    def _read_parts(
+        self, name: str, parts: dict[str, int], buckets: list[int] | None = None
+    ) -> DataFrame | None:
+        """Read the bucketed frame ``name`` from its part map entry
+        ``parts`` (part → owning version): every part, or only those of
+        ``buckets``. Each part is read straight from
+        ``v<owner>/<name>/_bucket=K``, selected by path: untouched
+        buckets are never listed, and no dir probe runs, since the map
+        is exact. None when no selected part exists."""
+        want = None if buckets is None else {f"_bucket={b}" for b in buckets}
+        paths = [
+            os.path.join(self._frame_path(name, owner), part)
+            for part, owner in sorted(parts.items())
+            if want is None or part in want
+        ]
+        return self.spark.read.parquet(*paths) if paths else None
 
-        Pruning is driver-side path selection (≤ n_buckets dirs
-        resolved through ``backend.read_locations``), strictly stronger
-        than a ``_bucket``-partition filter: untouched buckets are
-        never even listed, and carried buckets with no local bytes
-        (manifest backends) still resolve to their physical files."""
-        path = self._frame_path(name)
+    def _load_buckets(self, name: str, buckets: list[int]) -> DataFrame | None:
+        """Read only the listed hash buckets of a bucketed state table
+        (strictly stronger than a ``_bucket``-partition filter)."""
         cur = self._current_version()
         if not buckets or cur == 0:
             return None
@@ -293,50 +315,30 @@ class TxDenormBatchProcessor:
         parts = self._parts(cur).get(name)
         if parts is None:
             return None  # frame absent from the committed enumeration
-        known = set(parts)
-        want = [p for p in (f"_bucket={b}" for b in buckets) if p in known]
-        locs: list[str] = []
-        for part in want:
-            locs.extend(self.backend.read_locations(os.path.join(path, part)))
-        if not locs:
-            return None  # none of the touched buckets holds state
-        return self.spark.read.parquet(*locs)
+        return self._read_parts(name, parts, buckets)
 
     def read_state(self, name: str) -> DataFrame | None:
         """Committed view of one state frame (e.g. ``order_state``,
-        ``applied_txs``), resolved through the storage backend — the
-        only correct way to inspect state under a manifest backend,
-        where a carried bucket has no local bytes at its logical path
-        (a direct ``spark.read.parquet`` on the version dir would
-        silently miss it). Returns None for an absent/empty frame;
-        raises on a dir that is not in this processor's sealed format."""
+        ``applied_txs``) — the only correct way to inspect a bucketed
+        frame, whose carried parts live in older version dirs (a
+        direct ``spark.read.parquet`` on the version dir would miss
+        them). Returns None for an absent/empty frame; raises on a dir
+        that is not in this processor's sealed format."""
         self._check_layout()
         cur = committed_version(self.backend, self.state_dir)
         if cur == 0:
             return None
-        path = self._frame_path(name, cur)
-        # bucketed frames enumerate from the committed sidecar (a GET)
-        # — same lag-immunity as _load_buckets. A name outside the
-        # enumeration is a PLAIN frame (Spark-written whole every
-        # batch, physical tree == logical content): _load resolves it
-        # with a GET (os.path.exists) + Spark's own scan — no backend
-        # listing on any branch.
+        # bucketed frames read from the committed part map (a GET) —
+        # same lag-immunity as _load_buckets; a zero-part frame is
+        # known-empty (a partitioned write of zero rows creates no part
+        # dirs, so its dir is not Spark-readable). A name outside the
+        # map is a PLAIN frame (Spark-written whole every batch):
+        # _load resolves it with a GET (os.path.exists) + Spark's own
+        # scan — no backend listing on any branch.
         frames = self._parts(cur)
         if name not in frames:
             return self._load(name)
-        # a bucketed frame enumerated with ZERO parts is known-empty
-        # (a partitioned write of zero rows creates no part dirs —
-        # only _SUCCESS — so the dir is not Spark-readable): None, not
-        # a _load that would trip schema inference on the empty dir
-        parts = list(frames[name])
-        if not parts:
-            return None
-        locs: list[str] = []
-        for part in parts:
-            locs.extend(self.backend.read_locations(os.path.join(path, part)))
-        if not locs:
-            return None
-        return self.spark.read.parquet(*locs)
+        return self._read_parts(name, frames[name])
 
     def _store_all(
         self,
@@ -363,10 +365,10 @@ class TxDenormBatchProcessor:
              and local properties. If any task fails, every task is
              waited for, the first error (in submission order) is
              raised and the pointer is never flipped;
-          3. on the calling thread: ``before_commit(results)``, the
-             untouched-bucket carry, ``_parts.json``, the build-claim
-             re-validation, the pointer flip and the retirement of the
-             superseded version.
+          3. on the calling thread: ``before_commit(results)``,
+             ``_parts.json`` (which carries the untouched buckets), the
+             build-claim re-validation, the pointer flip and the
+             retirement of the superseded version by the keep rule.
         Every backend call is made from the calling thread, in this
         order. Returns the ``alongside`` results by name.
 
@@ -384,15 +386,13 @@ class TxDenormBatchProcessor:
         between the concurrent writes either.
 
         Bucketed frames write only their touched buckets' rows (a
-        touched bucket whose every key was deleted simply has no dir in
-        the new version); untouched bucket dirs are carried over via
-        ``backend.carry_file`` — hardlinks locally (O(#files) metadata
-        ops, zero data copy; copy fallback where links are refused), so
+        touched bucket whose every key was deleted simply has no part
+        in the new version); untouched buckets are carried by
+        reference in ``_parts.json``, with no backend call, so
         per-batch write volume stays O(touched keys), not O(state).
         Every storage primitive of the protocol routes through
         ``self.backend`` (state_backend.py), whose docstrings carry the
-        object-store translation: carry → manifest entry, pointer flip
-        → conditional put — same single-commit design."""
+        object-store translation."""
         bucketed = bucketed or {}
         alongside = alongside or {}
         cur = self._current_version()
@@ -424,52 +424,42 @@ class TxDenormBatchProcessor:
             got = {name: results[name] for name in alongside}
             if before_commit is not None:
                 before_commit(got)
+            # the carry: every untouched bucket keeps its previous
+            # owner; a touched one is owned by this version if written
             prev_frames = self._parts(cur)
-            new_parts: dict[str, list[str]] = {}
+            new_parts: dict[str, dict[str, int]] = {}
             for name, (_, buckets) in bucketed.items():
-                new_path = os.path.join(new_root, name)
-                old_path = self._frame_path(name, cur)
                 touched = {f"_bucket={b}" for b in buckets}
-                # Carry enumeration source: the previous version's
-                # _parts.json sidecar (a GET, immune to list-after-write
-                # lag), never a bare backend listing. Per-part FILE
-                # listings remain backend listings: carried files are
-                # manifest-tracked (a GET — fresh); physical files were
-                # Spark-written one full batch ago, the scan-time-
-                # enumeration contract the SCOPE note documents.
-                carried = []
-                for part in prev_frames.get(name, []):
-                    if not part.startswith("_bucket=") or part in touched:
-                        continue
-                    src_dir = os.path.join(old_path, part)
-                    self.backend.prepare_dir(os.path.join(new_path, part))
-                    for f in self.backend.list_dir(src_dir):
-                        self.backend.carry_file(
-                            os.path.join(src_dir, f),
-                            os.path.join(new_path, part, f),
-                        )
-                    carried.append(part)
-                new_parts[name] = sorted(set(results[name]) | set(carried))
+                new_parts[name] = {
+                    **{
+                        part: owner
+                        for part, owner in prev_frames.get(name, {}).items()
+                        if part not in touched
+                    },
+                    **{part: cur + 1 for part in results[name]},
+                }
             # published UNCONDITIONALLY: a version committed without
             # bucketed frames still carries a sidecar — its truthful
             # enumeration is empty — or the next reader would refuse it
             self.backend.publish_file(
                 os.path.join(new_root, "_parts.json"),
-                json.dumps({"format": 2, "frames": new_parts}).encode(),
+                json.dumps(
+                    {"format": _PARTS_FORMAT, "frames": new_parts}, sort_keys=True
+                ).encode(),
             )
             return got
 
         return commit_version(
-            self.backend, self.state_dir, cur + 1, self._writer_token, build
+            self.backend, self.state_dir, cur + 1, self._writer_token, build,
+            parts=self._parts,
         )
 
     def _write_bucketed(self, df: DataFrame, path: str) -> list[str]:
         """Write a bucketed state frame's rows under ``path``, partitioned
         by ``_bucket``, and return the EXACT ``_bucket=K`` part set the
         write created — a touched bucket whose every key was deleted
-        wrote no dir and is recorded as such, so the next batch's carry
-        needs no existence probe at all. Spark-only: runs on a pool
-        thread.
+        wrote no dir and is recorded as such, so the part map names
+        only parts that exist. Spark-only: runs on a pool thread.
 
         The parts are enumerated through Spark's scan-time file index
         (``DataFrame.inputFiles``), never a backend LIST. This is the
@@ -478,13 +468,11 @@ class TxDenormBatchProcessor:
         itself, which every parquet-on-object-store deployment already
         requires (and S3/GCS/Azure give today); the eventual-consistency
         double accordingly does not lag it. The dir is the writer's
-        pre-commit private output — no carried (manifest-only) entries
-        can exist in it yet. It is read with the written frame's
+        pre-commit private output. It is read with the written frame's
         schema, so nothing is inferred: a write of zero rows (only
         ``_SUCCESS``) enumerates as empty, and every read error raises
         — mapping one to [] would silently drop this frame's written
-        parts from the committed enumeration (state loss at the next
-        carry)."""
+        parts from the committed part map (state loss)."""
         (
             df.withColumn("_bucket", self._bucket_of(F.col("order_key")))
             .write.mode("overwrite")
@@ -614,23 +602,14 @@ class TxDenormBatchProcessor:
         AQE itself coalesces shuffle partitions toward), counted in
         cached bytes: the pinned inputs' cache, built by the intake
         round, plus the loaded frames' parquet bytes times
-        ``_PARQUET_TO_CACHED``. A size that cannot be read counts as
-        too large, which keeps the wide plan."""
-        jvm = self.spark.sparkContext._jvm
-        limit = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-            self.spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-        )
+        ``_PARQUET_TO_CACHED`` (``plans.inspect.advisory_partitions``).
+        A size that cannot be read counts as too large, which keeps the
+        wide plan."""
         # a fresh projection reads the cache's realized size: a frame
         # optimized before its cache was built keeps the earlier estimate
         sized = [(df.select("*"), 1) for df in pinned]
         sized += [(df, _PARQUET_TO_CACHED) for df in loaded if df is not None]
-        total = 0
-        for df, scale in sized:
-            size = plan_bytes(df)
-            if size is None:
-                return False
-            total += size * scale
-        return total <= limit
+        return advisory_partitions(self.spark, sized) == 1
 
     def process(
         self,
@@ -698,7 +677,9 @@ class TxDenormBatchProcessor:
         # reading state, under the same writer lock; a lost pointer
         # raises here, before anything is reclaimed
         self._check_layout()
-        gc_versions(self.backend, self.state_dir, self._writer_token)
+        gc_versions(
+            self.backend, self.state_dir, self._writer_token, parts=self._parts
+        )
         # -- idle micro-batch fast path: no new events AND no new tx
         # metadata means nothing can change — carried txs cannot
         # complete without events, the barrier cannot move, nothing

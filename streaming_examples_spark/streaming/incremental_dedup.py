@@ -24,11 +24,12 @@ Design (all equi-joins, no pair space, state ∝ unique corpus):
     current version's store dirs (Spark's write commit makes the files
     appear whole); only COMPACTION builds a new version: every store is
     fully rewritten under ``v<E+1>`` before one pointer flip makes
-    them live together, and the superseded version is retired through
-    the backend (deferred, reference-aware under a manifest backend)
-    after the straggler fold. No ``os.rename`` directory swaps
-    anywhere — this store is the one a 100 TB deployment must host on
-    object storage, so the commit protocol carries no POSIX assumption
+    them live together, and the superseded version is removed whole
+    after the straggler fold (the new version reads nothing from it,
+    so ``state_backend``'s keep rule keeps nothing of it). No
+    ``os.rename`` directory swaps anywhere — this store is the one a
+    100 TB deployment must host on object storage, so the commit
+    protocol carries no POSIX assumption
     (proven by running the crash suite over ``LocalPosixBackend`` AND
     ``ManifestBackend``, tests/test_incremental_dedup.py).
   * Per batch: new docs are shingled once (`shingle_base_hashes`, one
@@ -99,6 +100,7 @@ from streaming_examples_spark.functions.hashing import (
     word_shingles,
 )
 
+from streaming_examples_spark.plans.inspect import advisory_partitions
 from streaming_examples_spark.streaming.locks import (  # noqa: F401
     _pid_alive,  # re-exported: tests exercise the pid-liveness gate
     writer_lock,
@@ -122,9 +124,6 @@ _BAND_SCHEMA = "band_id int, band_key string, doc_id long"
 _STORES = {"bands": _BAND_SCHEMA, "sigs": _SIG_SCHEMA}
 #: the viral-cap summary store, built by every capped compaction
 _HOT = "band_hot"
-
-#: data files per store after a full compaction
-_COMPACT_PARTITIONS = 4
 
 #: memory bound for the driver-side since-compact count cache
 #: (_cap_delta): beyond this many keys, singleton entries are evicted
@@ -344,10 +343,10 @@ class IncrementalNearDup:
         # a dir Spark just appended into, and an empty read here
         # silently re-admits every known doc (found by running this
         # suite under LaggedManifestBackend: batch N+1 read batch N's
-        # store as absent). Spark enumerates the data files itself;
-        # detector stores never receive carried (manifest-referenced)
-        # files — appends and rewrites both land physical files — so
-        # the dir IS the content on every backend.
+        # store as absent). Spark enumerates the data files itself:
+        # appends and rewrites both land every file of a store in the
+        # version's own store dir, so the dir IS the content on every
+        # backend.
         return self.spark.read.schema(schema).parquet(self._store_path(name, version))
 
     def read_store(self, name: str) -> DataFrame:
@@ -787,9 +786,11 @@ class IncrementalNearDup:
 
     # -- maintenance ----------------------------------------------------
     def compact(self) -> None:
-        """Rewrite ``sigs`` and ``bands`` into ``_COMPACT_PARTITIONS``
-        files each, summarize ``bands`` into ``band_hot`` (when the cap
-        is on) and commit all three as the next version.
+        """Rewrite ``sigs`` and ``bands`` into files of about one
+        advisory partition each (``plans.inspect.advisory_partitions``
+        over the store's bytes: one file for a small store), summarize
+        ``bands`` into ``band_hot`` (when the cap is on) and commit all
+        three as the next version.
 
         Append-only parquet accumulates one file-set per batch; after N
         micro-batches the probe join opens O(N) small files. Periodic
@@ -841,12 +842,12 @@ class IncrementalNearDup:
                 consumed[name] = _data_file_names(src.inputFiles())
                 out = os.path.join(path, name)
                 self.backend.note_spark_write(out)  # lag-double hook
-                (
-                    src.dropDuplicates()  # heal append-retry duplicates
-                    .repartition(_COMPACT_PARTITIONS)
-                    .write.mode("overwrite")
-                    .parquet(out)
-                )
+                rows = src.dropDuplicates()  # heal append-retry duplicates
+                # an unknown size keeps the shuffle's own partitioning
+                n_files = advisory_partitions(self.spark, [(src, 1)])
+                if n_files is not None:
+                    rows = rows.repartition(n_files)
+                rows.write.mode("overwrite").parquet(out)
             if self.max_bucket_size is not None:
                 self._write_hot(path)
             # underscore-prefixed, so invisible to parquet readers; a

@@ -6,19 +6,20 @@ in ``incremental_dedup.py``) commit through one versioned protocol
 defined here: :func:`commit_version` builds the NEXT version dir under
 a pointer root (claim, clear, prepare, the caller's writes, validate
 the claim, flip one pointer atomically, release, retire the superseded
-version) and :func:`gc_versions` reclaims every version the pointer
-does not name, refusing a lost pointer. The protocol is storage-
-agnostic, but its primitives are not: the shipped implementation is
-POSIX (hardlink carry, ``os.replace`` flip, directory fsync). This
-module isolates those primitives behind ``StateStorageBackend``
-so a deployer can swap in an object-store backend without touching the
-protocol. The stores call a backend from one thread only (the tx
-store's concurrent frame writes are Spark writes, announced through
-``note_spark_write`` beforehand), so a backend needs no locking. The translation each method documents is the one LSM engines
-and table formats ship on S3/GCS:
+version) and :func:`gc_versions` reclaims what the pointer does not
+name, refusing a lost pointer. A store that reads parts of older
+versions (the tx store carries every bucket a batch did not touch by
+reference: its committed ``_parts.json`` names each part's owning
+version) hands both a ``parts`` hook, and retirement keeps exactly the
+parts the committed version still names (:func:`_retire_version`, the
+keep rule). The protocol is storage-agnostic: its primitives sit
+behind ``StateStorageBackend``, so a deployer can swap in an
+object-store backend without touching the protocol. The stores call a
+backend from one thread only (the tx store's concurrent frame writes
+are Spark writes, announced through ``note_spark_write`` beforehand),
+so a backend needs no locking. The translation each method documents
+is the one LSM engines and table formats ship on S3/GCS:
 
-  carry_file      → a manifest entry referencing the old object (no
-                    byte copy; the "directory" becomes a manifest)
   commit_pointer  → a conditional put of the pointer object
                     (if-match on the previous generation/etag — the
                     atomicity primitive object stores actually offer)
@@ -26,23 +27,20 @@ and table formats ship on S3/GCS:
                     through the pointer, never by listing)
   prepare_dir     → a no-op (object stores have no directories)
   remove_file     → a single-object delete
-  dir_exists/list_dir/read_locations → prefix listing + manifest
-                    resolution (the logical namespace; see below)
+  dir_exists/list_dir → prefix listing (the LIST-backed reads)
 
-Two implementations ship: ``LocalPosixBackend`` (hardlinks + rename
-flip — the production local backend) and ``ManifestBackend``, a
-test-double that enforces object-store constraints over a local
-directory — NO hardlinks, NO directory renames: carry is a JSON
-manifest entry referencing the original physical file, commit is a
+Two backends ship, and they differ only in how the commit pointer is
+encoded; every other primitive is the shared local-file one
+(``_LocalFiles``). ``LocalPosixBackend`` flips a ``CURRENT`` file by
+``os.replace``; ``ManifestBackend`` never renames and commits by a
 conditional-put emulation (exclusive create of a monotonically
-numbered generation object), and remove_tree is a DEFERRED prefix
-delete that retains any file still referenced from the committed
-version's manifests. The crash-injection suites of both stores run
-parameterized over both (tests/test_state_backend.py,
+numbered generation object). ``LaggedManifestBackend`` adds
+list-after-write lag to the latter. The crash-injection suites of both
+stores run parameterized over all three (tests/test_state_backend.py,
 tests/test_incremental_dedup.py), which is what proves the protocol
-itself — reads resolve through ``read_locations`` and carry
-listings through ``list_dir``, never by assuming the physical tree is
-the logical content.
+itself: no state file is hardlinked or copied between versions, and no
+correctness-bearing read depends on a listing reflecting a
+just-issued write.
 
 One on-disk format per store: both stores seal their state dir with
 ``_layout.json`` = ``{"format": 1, "backend": <layout_id>, <store
@@ -63,7 +61,6 @@ owns its state files, so it owns the commit protocol too.
 
 from __future__ import annotations
 
-import errno
 import json
 import os
 import re
@@ -74,25 +71,12 @@ from typing import TypeVar
 
 T = TypeVar("T")
 
-# errnos meaning "this filesystem cannot hardlink src→dst" (cross-
-# device bind mounts, some network/container filesystems); anything
-# else (ENOENT, EIO, injected test errors) must propagate
-_LINK_UNSUPPORTED = {
-    errno.EXDEV,
-    errno.EPERM,
-    errno.ENOTSUP,
-    getattr(errno, "EOPNOTSUPP", errno.ENOTSUP),
-    errno.EMLINK,
-}
-
 
 def _internal_name(name: str) -> bool:
-    """Writer-internal sidecar files that must never enter the logical
-    namespace: Hadoop checksum files (``.part-*.crc``), ``_SUCCESS``
-    markers, temp dirs. Carrying them records dead weight in manifests
-    (and the deferred delete then retains stale ``.crc`` bytes via the
-    live-reference set indefinitely). Partition dirs (``_bucket=K``)
-    ARE data-bearing despite the underscore — the ``=`` marks them."""
+    """Writer-internal files that ``list_dir`` leaves out: Hadoop
+    checksum files (``.part-*.crc``), ``_SUCCESS`` markers, sidecars,
+    publish temps. Partition dirs (``_bucket=K``) ARE data-bearing
+    despite the underscore — the ``=`` marks them."""
     if name.startswith("."):
         return True
     return name.startswith("_") and "=" not in name
@@ -100,8 +84,8 @@ def _internal_name(name: str) -> bool:
 
 def _atomic_publish(path: str, data: bytes) -> None:
     """Durable atomic single-object publish shared by both backends:
-    write a UNIQUE dot-prefixed temp (excluded from the logical
-    namespace by ``_internal_name``), fsync, then file-level
+    write a UNIQUE dot-prefixed temp (left out of ``list_dir`` by
+    ``_internal_name``), fsync, then file-level
     ``os.replace`` — a concurrent reader sees old bytes, new bytes, or
     absence, never a truncation. The temp name carries pid AND a
     random component: pid alone collides when two writer hosts are
@@ -223,11 +207,6 @@ class StateStorageBackend:
     def prepare_dir(self, path: str) -> None:
         raise NotImplementedError
 
-    def carry_file(self, src: str, dst: str) -> None:
-        """Make ``dst`` readable with ``src``'s bytes without copying
-        them if the storage allows; copying is a legal fallback."""
-        raise NotImplementedError
-
     def commit_pointer(self, state_dir: str, version: int) -> None:
         """Atomically and durably set ``state_dir``'s CURRENT pointer
         to ``version``. THE commit point of a batch."""
@@ -238,9 +217,8 @@ class StateStorageBackend:
         raise NotImplementedError
 
     def remove_tree(self, path: str) -> None:
-        """Logically delete the prefix ``path``. May defer physical
-        deletion of bytes still referenced elsewhere (manifest carry);
-        must be idempotent — the GC re-issues it every batch."""
+        """Delete the prefix ``path`` and everything under it; an
+        absent prefix is a no-op, so the GC may re-issue it."""
         raise NotImplementedError
 
     def remove_file(self, path: str) -> None:
@@ -262,7 +240,7 @@ class StateStorageBackend:
 
     def publish_file(self, path: str, data: bytes) -> None:
         """Atomically publish a small single object (layout seals,
-        manifests): a reader sees the old content, the new content, or
+        sidecars): a reader sees the old content, the new content, or
         absence — never a torn write. Object stores give this for free
         (PUT is atomic per object); POSIX needs temp+rename."""
         raise NotImplementedError
@@ -286,26 +264,18 @@ class StateStorageBackend:
         except FileNotFoundError:
             return None
 
-    # -- logical namespace (reads + carry listings) ----------------------
-    # The physical tree is NOT necessarily the logical content: under a
-    # manifest backend a carried file has no local bytes at its logical
-    # path. Everything in the commit protocol that enumerates or reads
-    # state must come through these three, never through os.listdir /
-    # spark.read on the logical dir.
+    # -- LIST-backed reads -------------------------------------------------
+    # The reads an object store may serve stale (list-after-write lag).
+    # The protocol uses them only where a stale answer is safe: the GC
+    # and the keep rule defer a removal to a later sweep, and the
+    # detector's advisory gauges and cap counts fire late.
 
     def dir_exists(self, path: str) -> bool:
         raise NotImplementedError
 
     def list_dir(self, path: str) -> list[str]:
-        """Logical entries of ``path``: physical names plus
-        manifest-carried names, minus backend-internal files."""
-        raise NotImplementedError
-
-    def read_locations(self, path: str) -> list[str]:
-        """Concrete locations a Spark reader can scan for the logical
-        dir ``path`` — ``[path]`` when the physical tree IS the
-        logical content; the dereferenced file list otherwise. Empty
-        when the logical dir is absent or holds no data files."""
+        """Entries of ``path``, minus writer-internal files
+        (``_internal_name``)."""
         raise NotImplementedError
 
     # -- multi-writer build fencing ---------------------------------------
@@ -323,7 +293,7 @@ class StateStorageBackend:
     # local-disk emulation would leave the dual-writer fence inert on
     # exactly the deployment it targets (each host reading its own
     # local marker). The shipped backends share the O_EXCL emulation
-    # via _ExclusiveCreateBuildMarkers. The marker name
+    # via _LocalFiles. The marker name
     # (``<dir>.builder``, a SIBLING of the build dir so the claim
     # survives the overwrite of the very dir it fences) is part of
     # the cross-backend layout.
@@ -384,12 +354,48 @@ class StateStorageBackend:
         raise NotImplementedError
 
 
-class _ExclusiveCreateBuildMarkers:
-    """The shipped O_EXCL emulation of the build-marker conditional
-    put, shared by the local backend and the manifest double (for
-    which exclusive-create IS the faithful model of the object
-    store's `if-none-match`). Mixed into concrete backends only —
-    see the fencing contract on StateStorageBackend."""
+class _LocalFiles(StateStorageBackend):
+    """Every primitive but the commit pointer, over a local directory,
+    shared by the shipped backends. The build markers are the O_EXCL
+    emulation of the conditional put (for the manifest double,
+    exclusive-create IS the faithful model of the object store's
+    `if-none-match`); a real object-store backend implements them
+    with its own (see the fencing contract on StateStorageBackend)."""
+
+    def prepare_dir(self, path: str) -> None:
+        os.makedirs(path, exist_ok=True)
+
+    def remove_tree(self, path: str) -> None:
+        shutil.rmtree(path, ignore_errors=True)
+
+    def remove_file(self, path: str) -> None:
+        try:
+            os.unlink(path)
+        except OSError:
+            pass
+
+    def publish_file(self, path: str, data: bytes) -> None:
+        # an object-store PUT is atomic per object; a local open(path,
+        # "wb") is not (its truncate-then-write window shows a torn
+        # intermediate to a concurrent reader), so both backends
+        # emulate the PUT with a unique temp and a FILE-level
+        # os.replace — no directory is ever renamed
+        _atomic_publish(path, data)
+
+    def dir_exists(self, path: str) -> bool:
+        return os.path.isdir(path)
+
+    def list_dir(self, path: str) -> list[str]:
+        return sorted(
+            n for n in self._physical_listing(path) if not _internal_name(n)
+        )
+
+    def _physical_listing(self, path: str) -> list[str]:
+        """The LIST operation — the one primitive real object stores
+        have historically served stale (list-after-write lag). Isolated
+        so the eventual-consistency double can lag it without touching
+        direct object GETs, which stores do serve read-your-writes."""
+        return os.listdir(path)
 
     def claim_build(self, path: str, owner: str) -> None:
         # the marker is a sibling of the build dir: ensure the parent
@@ -595,22 +601,59 @@ def committed_version(backend: "StateStorageBackend", root: str) -> int:
     return cur
 
 
+def _owned(
+    parts: Callable[[int], dict[str, dict[str, int]]] | None, cur: int
+) -> dict[int, dict[str, set[str]]]:
+    """Version → frame → the part names the committed version ``cur``
+    reads from that version, from ``parts(cur)`` (frame → part →
+    owning version). Empty for a store without a ``parts`` hook, or
+    before the first commit. A hook that cannot read the committed map
+    raises, so no sweep ever derives an empty keep set from it."""
+    owned: dict[int, dict[str, set[str]]] = {}
+    if parts is None or cur == 0:
+        return owned
+    for frame, entries in parts(cur).items():
+        for part, version in entries.items():
+            owned.setdefault(version, {}).setdefault(frame, set()).add(part)
+    return owned
+
+
 def _retire_version(
     backend: "StateStorageBackend",
     root: str,
     version: int,
+    keep: dict[str, set[str]] | None,
     retire: Callable[[int], None] | None = None,
 ) -> None:
-    """Remove the superseded ``v<version>``: the caller's
+    """Retire the superseded ``v<version>``: the caller's
     ``retire(version)`` hook (work that must see the dir before it
     goes), then release-then-remove — the dir can carry a marker
-    leaked by a crash between its own commit and release, and once the
-    dir is gone no listing surfaces it again."""
+    leaked by a crash between its own commit and release.
+
+    THE KEEP RULE, the one place either store reclaims a superseded
+    version: everything under the dir goes except the parts ``keep``
+    names (frame → part names the committed version still reads from
+    this version). With nothing kept the dir goes in one prefix
+    delete; otherwise its listings pick every other frame and part.
+    They may run stale: the keep set comes from the committed map (a
+    GET), so a stale listing only leaves garbage for a later sweep,
+    never removes a kept part. Writer-internal files (sidecars,
+    ``_SUCCESS``) stay until the dir's last part is released."""
     if retire is not None:
         retire(version)
     path = os.path.join(root, f"v{version}")
     backend.release_build(path)
-    backend.remove_tree(path)
+    if not keep:
+        backend.remove_tree(path)
+        return
+    for frame in backend.list_dir(path):
+        frame_path = os.path.join(path, frame)
+        if frame not in keep:
+            backend.remove_tree(frame_path)
+            continue
+        for part in backend.list_dir(frame_path):
+            if part not in keep[frame]:
+                backend.remove_tree(os.path.join(frame_path, part))
 
 
 def commit_version(
@@ -620,6 +663,7 @@ def commit_version(
     owner: str,
     write: Callable[[str], T],
     retire: Callable[[int], None] | None = None,
+    parts: Callable[[int], dict[str, dict[str, int]]] | None = None,
 ) -> T:
     """Build ``v<version>`` (the committed version + 1) under ``root``
     and commit it with one pointer flip; returns ``write(path)``.
@@ -635,12 +679,15 @@ def commit_version(
          committing would publish interleaved writes), flip the
          pointer — THE commit point — and release the claim, which
          only fences construction;
-      4. retire ``v<version-1>`` (:func:`_retire_version`; a no-op
-         removal of the absent ``v0`` after a store's first build).
+      4. retire ``v<version-1>`` by the keep rule
+         (:func:`_retire_version`), keeping the parts the new
+         version's ``parts(version)`` map names with that owner; a
+         no-op removal of the absent ``v0`` after a store's first
+         build.
 
     A crash before the flip leaves the old version committed and the
     half-built dir to :func:`gc_versions`; a crash after it leaves the
-    superseded dir, which the GC retires with the same hook."""
+    superseded dir, which the GC retires by the same rule."""
     path = os.path.join(root, f"v{version}")
     acquire_build(backend, path, owner)
     backend.remove_tree(path)
@@ -649,7 +696,8 @@ def commit_version(
     backend.validate_build(path, owner)
     backend.commit_pointer(root, version)
     backend.release_build(path)
-    _retire_version(backend, root, version - 1, retire)
+    keep = _owned(parts, version).get(version - 1)
+    _retire_version(backend, root, version - 1, keep, retire)
     return result
 
 
@@ -658,53 +706,45 @@ def gc_versions(
     root: str,
     owner: str,
     retire: Callable[[int], None] | None = None,
+    parts: Callable[[int], dict[str, dict[str, int]]] | None = None,
 ) -> None:
     """One GC sweep of the pointer root ``root``, under the writer
-    lock; refuses a lost pointer before touching anything. A version
-    ABOVE the pointer (a build that died before its flip) is CLAIMED
-    before it is removed — :func:`acquire_build` raises on a live
-    foreign builder and takes over an abandoned same-host claim, so
-    the sweep never races a fresh claimer between a probe and the
-    delete. A version BELOW it (a build that died before its
-    retirement) is retired with the caller's ``retire`` hook. POSIX
-    ``CURRENT.<n>`` pointer temps are removed. A lagging listing only
-    defers a removal to a later sweep."""
+    lock; refuses a lost pointer and reads the committed part map
+    (``parts``, see :func:`commit_version`) before touching anything,
+    so a map that cannot be read aborts the sweep. A version ABOVE the
+    pointer (a build that died before its flip) is CLAIMED before it
+    is removed — :func:`acquire_build` raises on a live foreign
+    builder and takes over an abandoned same-host claim, so the sweep
+    never races a fresh claimer between a probe and the delete. A
+    version BELOW it (superseded, and possibly still owning parts the
+    committed version reads) is retired by the keep rule with the
+    caller's ``retire`` hook. POSIX ``CURRENT.<n>`` pointer temps are
+    removed. A lagging listing only defers a removal to a later
+    sweep."""
     if not backend.dir_exists(root):
         return
     cur = backend.read_pointer(root)
     entries = backend.list_dir(root)
-    for v in _versions(root, entries, cur):
+    versions = _versions(root, entries, cur)
+    owned = _owned(parts, cur)
+    for v in versions:
         if v > cur:
             path = os.path.join(root, f"v{v}")
             acquire_build(backend, path, owner)
             backend.remove_tree(path)
             backend.release_build(path)
         elif v < cur:
-            _retire_version(backend, root, v, retire)
+            _retire_version(backend, root, v, owned.get(v), retire)
     for e in entries:
         if e.startswith("CURRENT."):
             backend.remove_file(os.path.join(root, e))
 
 
-class LocalPosixBackend(_ExclusiveCreateBuildMarkers, StateStorageBackend):
-    """The shipped backend: hardlink carry (copy fallback for
-    filesystems that refuse links), fsync'd temp + ``os.replace``
-    pointer flip, directory fsync for rename durability."""
+class LocalPosixBackend(_LocalFiles):
+    """The shipped backend: fsync'd temp + ``os.replace`` pointer flip,
+    directory fsync for rename durability."""
 
     layout_id = "local-posix"
-
-    def prepare_dir(self, path: str) -> None:
-        os.makedirs(path, exist_ok=True)
-
-    def carry_file(self, src: str, dst: str) -> None:
-        try:
-            os.link(src, dst)
-        except OSError as exc:
-            if exc.errno not in _LINK_UNSUPPORTED:
-                raise
-            # correctness needs only that dst has src's bytes; the
-            # link is the zero-copy fast path, not a requirement
-            shutil.copy2(src, dst)
 
     def commit_pointer(self, state_dir: str, version: int) -> None:
         # durable temp first: fsync the CONTENT before the rename makes
@@ -731,104 +771,26 @@ class LocalPosixBackend(_ExclusiveCreateBuildMarkers, StateStorageBackend):
         except FileNotFoundError:
             return 0
 
-    def remove_tree(self, path: str) -> None:
-        shutil.rmtree(path, ignore_errors=True)
 
-    def remove_file(self, path: str) -> None:
-        try:
-            os.unlink(path)
-        except OSError:
-            pass
-
-    def publish_file(self, path: str, data: bytes) -> None:
-        _atomic_publish(path, data)
-
-    def dir_exists(self, path: str) -> bool:
-        return os.path.isdir(path)
-
-    def list_dir(self, path: str) -> list[str]:
-        return sorted(n for n in os.listdir(path) if not _internal_name(n))
-
-    def read_locations(self, path: str) -> list[str]:
-        return [path] if os.path.exists(path) else []
-
-
-class ManifestBackend(_ExclusiveCreateBuildMarkers, StateStorageBackend):
+class ManifestBackend(_LocalFiles):
     """Object-store semantics emulated over a local directory: the
-    test-double that proves the commit protocol holds WITHOUT POSIX's
-    two load-bearing conveniences. Forbidden here, by construction:
+    double that proves the commit protocol holds WITHOUT POSIX's
+    renames. ``commit_pointer`` emulates a conditional put: exclusive
+    create of ``_pointer/gen-<g+1>`` (if-match on the previous
+    generation; a concurrent committer loses with an error instead of
+    last-writer-wins). ``read_pointer`` resolves the latest generation
+    WITHOUT trusting the prefix listing: a ``_latest`` hint object (PUT
+    after every successful create, BEFORE superseded-generation
+    cleanup) plus forward exact-key GET probes recover the true latest
+    with no LIST at all — see ``_gen_candidates`` for the invariant.
+    Every other primitive is the shared local one: no file is ever
+    linked or copied, and ``remove_tree`` is a plain prefix delete."""
 
-    - **hardlinks** — ``carry_file`` never touches the bytes; it
-      appends ``{dst_name: physical_src}`` to the destination dir's
-      ``_carry.json`` (the manifest pattern of S3/GCS table formats:
-      the "directory" is a file list, a carried object is a reference
-      to the original). Chains stay depth-1: carrying an
-      already-carried file records the ORIGINAL physical path.
-    - **renames** — ``commit_pointer`` emulates a conditional put:
-      exclusive create of ``_pointer/gen-<g+1>`` (if-match on the
-      previous generation; a concurrent committer loses with an error
-      instead of last-writer-wins). ``read_pointer`` resolves the
-      latest generation WITHOUT trusting the prefix listing: a
-      ``_latest`` hint object (PUT after every successful create,
-      BEFORE superseded-generation cleanup) plus forward exact-key
-      GET probes recover the true latest with no LIST at all — see
-      ``_gen_candidates`` for the invariant.
-    - **synchronous prefix delete** — ``remove_tree`` is DEFERRED: a
-      file still referenced from the committed version's manifests
-      survives (deleting it would destroy carried state — the POSIX
-      backend never faces this because hardlinked bytes outlive their
-      directory). Unreferenced files and manifests go immediately;
-      retained files fall out on a later pass once the buckets
-      referencing them are rewritten. Idempotent, like the
-      orphan-file GC of any manifest table format.
-
-    Reads resolve through ``read_locations`` (physical data files plus
-    dereferenced manifest entries), which is exactly what forces the
-    protocol to stop assuming the physical tree is the logical
-    content."""
-
-    MANIFEST = "_carry.json"
     #: hint object inside ``_pointer/`` naming the highest generation a
     #: successful commit has published — the GET that frees generation
     #: resolution from the prefix listing (see ``_gen_candidates``)
     LATEST = "_latest"
     layout_id = "manifest"
-
-    # -- manifest helpers -------------------------------------------------
-    def _manifest(self, dirpath: str) -> dict[str, str]:
-        p = os.path.join(dirpath, self.MANIFEST)
-        if not os.path.exists(p):
-            return {}
-        import json
-
-        with open(p) as fh:
-            return json.load(fh)
-
-    def _write_manifest(self, dirpath: str, entries: dict[str, str]) -> None:
-        import json
-
-        p = os.path.join(dirpath, self.MANIFEST)
-        with open(p, "w") as fh:
-            json.dump(entries, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-
-    def prepare_dir(self, path: str) -> None:
-        os.makedirs(path, exist_ok=True)
-
-    def carry_file(self, src: str, dst: str) -> None:
-        # dereference so reference chains never deepen: the manifest
-        # entry always names a PHYSICAL file
-        src_dir, src_name = os.path.split(src)
-        physical = self._manifest(src_dir).get(src_name)
-        if physical is None:
-            if not os.path.exists(src):
-                raise FileNotFoundError(src)
-            physical = os.path.abspath(src)
-        dst_dir, dst_name = os.path.split(dst)
-        entries = self._manifest(dst_dir)
-        entries[dst_name] = physical
-        self._write_manifest(dst_dir, entries)
 
     def commit_pointer(self, state_dir: str, version: int) -> int:
         """Returns the generation number this commit won — exposed so
@@ -1051,159 +1013,43 @@ class ManifestBackend(_ExclusiveCreateBuildMarkers, StateStorageBackend):
             else:
                 return 0
 
-    def _live_refs(self, state_dir: str) -> set[str]:
-        """Physical paths referenced by the COMMITTED version's
-        manifests — the files a deferred delete must retain."""
-        cur = self.read_pointer(state_dir)
-        refs: set[str] = set()
-        if cur == 0:
-            return refs
-        root = os.path.join(state_dir, f"v{cur}")
-        for dirpath, _dirs, files in os.walk(root):
-            if self.MANIFEST in files:
-                refs.update(
-                    os.path.realpath(p) for p in self._manifest(dirpath).values()
-                )
-        return refs
-
-    def remove_tree(self, path: str) -> None:
-        if not os.path.isdir(path):
-            return
-        # version dirs live directly under the state root; the root is
-        # where the pointer (and thus the live-reference set) resolves
-        state_dir = os.path.dirname(os.path.abspath(path))
-        live = self._live_refs(state_dir)
-        for dirpath, _dirs, files in os.walk(path, topdown=False):
-            for f in files:
-                full = os.path.join(dirpath, f)
-                if os.path.realpath(full) in live:
-                    continue  # deferred: still carried by the live version
-                try:
-                    os.unlink(full)
-                except OSError:
-                    pass
-            try:
-                os.rmdir(dirpath)  # only succeeds once truly empty
-            except OSError:
-                pass
-
-    def remove_file(self, path: str) -> None:
-        try:
-            os.unlink(path)
-        except OSError:
-            pass
-
-    def publish_file(self, path: str, data: bytes) -> None:
-        # a real object-store PUT is atomic per object: a concurrent
-        # reader sees the old object, the new object, or absence —
-        # never truncated bytes. A direct local open(path, "wb")
-        # CANNOT emulate that (the truncate-then-write window shows a
-        # torn intermediate to a concurrent process — observable once
-        # the _latest pointer hint made published objects multi-
-        # writer-hot), so the double uses a unique temp + file-level
-        # os.replace, which is an EMULATION of the store's own PUT
-        # guarantee exactly like O_EXCL emulates its conditional put —
-        # not a protocol dependence on renames (directory renames stay
-        # forbidden and tripwired).
-        _atomic_publish(path, data)
-
-    def dir_exists(self, path: str) -> bool:
-        # Read-your-writes fencing: existence resolves through the
-        # dir's manifest object (a GET — the guarantee stores do give)
-        # before falling back to the LIST-backed probe. A bucket whose
-        # content was carried moments ago IS its manifest; relying on
-        # the prefix listing alone loses that bucket for every reader
-        # inside the list-after-write lag window (found by running the
-        # crash suite under LaggedManifestBackend: the next batch's
-        # _load_buckets saw stale-absent, silently dropping state).
-        if os.path.exists(os.path.join(path, self.MANIFEST)):
-            return True
-        return self._dir_probe(path)
-
-    def _dir_probe(self, path: str) -> bool:
-        """The LIST-backed existence probe (lagged by the
-        eventual-consistency double; the manifest GET above is not)."""
-        return os.path.isdir(path)
-
-    def list_dir(self, path: str) -> list[str]:
-        physical = [
-            n for n in self._physical_listing(path) if not _internal_name(n)
-        ]
-        carried = [n for n in self._manifest(path) if not _internal_name(n)]
-        return sorted(set(physical) | set(carried))
-
-    def read_locations(self, path: str) -> list[str]:
-        if not self.dir_exists(path):
-            return []
-        locs = [
-            os.path.join(path, n)
-            for n in self._physical_listing(path)
-            if not n.startswith(("_", "."))
-        ]
-        # filter by the CARRIED name, not the physical target's: a
-        # legacy manifest may reference a sidecar recorded before
-        # list_dir excluded them
-        locs.extend(
-            phys
-            for name, phys in self._manifest(path).items()
-            if not _internal_name(name)
-        )
-        return sorted(locs)
-
-    def _physical_listing(self, path: str) -> list[str]:
-        """The LIST operation — the one primitive real object stores
-        have historically served stale (list-after-write lag). Isolated
-        so the eventual-consistency double can lag it without touching
-        direct object GETs, which stores do serve read-your-writes."""
-        return os.listdir(path)
-
 
 class LaggedManifestBackend(ManifestBackend):
     """Eventual-consistency double: ``list_dir``/``dir_exists`` (the
-    LIST-backed namespace reads) serve STALE views for ``lag_ops``
-    subsequent backend operations after a mutation touches a prefix —
-    the classic object-store list-after-write hazard. Direct object
-    GETs (manifest reads, pointer generation/hint reads, file opens)
-    stay
-    fresh: that is the read-your-writes guarantee real stores do give,
-    and it is why the protocol's commit point is a pointer GET, never
-    a listing. The ``_pointer/`` prefix listing is lagged too
-    (``commit_pointer`` snaps it); generation resolution never reads
-    it — it rides the ``_latest`` hint object plus exact-key GET
-    probes (``_gen_candidates``), with the
-    dual-writer lost-commit scenario and stale-listing reads pinned
-    by tests. Running the full crash/lifecycle suite under this
-    double is what proves the GC's deferred-delete and carry
-    enumeration never depend on a listing reflecting a write that
+    LIST-backed reads) serve STALE views for ``lag_ops`` subsequent
+    backend operations after a mutation touches a prefix — the classic
+    object-store list-after-write hazard. Direct object GETs (sidecar
+    reads, pointer generation/hint reads, file opens) stay fresh: that
+    is the read-your-writes guarantee real stores do give, and it is
+    why the protocol's commit point is a pointer GET, never a listing.
+    The ``_pointer/`` prefix listing is lagged too (``commit_pointer``
+    snaps it); generation resolution never reads it — it rides the
+    ``_latest`` hint object plus exact-key GET probes
+    (``_gen_candidates``), with the dual-writer lost-commit scenario
+    and stale-listing reads pinned by tests. Running the full
+    crash/lifecycle suite under this double is what proves the GC and
+    its keep rule never depend on a listing reflecting a write that
     just happened.
 
     SCOPE — what this double does and does not lag: windows open on
     BACKEND-MEDIATED mutations (prepare_dir/publish_file/remove_*/
-    carry_file/commit_pointer) AND — since r11 — on direct Spark
-    writes, which BOTH stores announce through ``note_spark_write``
-    right before each parquet append / epoch rewrite / state-frame
-    write, so backend listings after a Spark write run stale-SHORT
-    like any other mutation. Stale views are served to BACKEND-
-    MEDIATED reads (dir_exists probes, list_dir, read_locations'
-    physical half). The one formerly correctness-bearing backend LIST
-    — the tx store's untouched-bucket carry enumeration — is sidecar-
-    driven since r11 (``_parts.json``, a publish_file'd GET), so no
-    protocol read left depends on a listing reflecting a just-issued
-    write. Spark's own scan-time file enumeration (Hadoop FS listing)
-    remains un-intercepted — that half of listing consistency is the
-    store's contract with Spark itself, which every parquet-on-object-
-    store deployment already requires (and which S3/GCS/Azure all
-    guarantee today). The protocol is therefore designed so that NO correctness-
-    bearing read depends on a backend LIST being fresh: store loads
-    resolve existence from the committed pointer (a GET) and hand the
-    epoch dir to Spark to enumerate; the remaining backend listings
-    (epoch GC, cap-count delta enumeration, hot-bucket grouping) all
+    claim_build/commit_pointer) AND on direct Spark writes, which BOTH
+    stores announce through ``note_spark_write`` right before each
+    parquet append / version rewrite / state-frame write, so backend
+    listings after a Spark write run stale-SHORT like any other
+    mutation. Stale views are served to every backend LIST. Spark's own
+    scan-time file enumeration (Hadoop FS listing) remains
+    un-intercepted — that half of listing consistency is the store's
+    contract with Spark itself, which every parquet-on-object-store
+    deployment already requires (and which S3/GCS/Azure all guarantee
+    today). NO correctness-bearing read depends on a backend LIST
+    being fresh: store loads resolve existence from the committed
+    pointer and, for the tx store, its ``_parts.json`` part map (both
+    GETs), and hand the named dirs to Spark to enumerate; the
+    remaining backend listings (version GC and its keep rule, the
+    detector's cap-count delta enumeration and straggler fold) all
     degrade stale-SAFE (skip-and-retry-later or fire-late), each
-    documented at its call site. First contact with this double found
-    two real stale-read bugs: the tx suite's dir_exists state loss
-    (fixed with the manifest-GET fence above) and the detector's
-    _load_store reading a just-written epoch as absent (fixed by the
-    pointer-witness direct read)."""
+    documented at its call site."""
 
     layout_id = ManifestBackend.layout_id  # same protocol, same seal
 
@@ -1258,10 +1104,6 @@ class LaggedManifestBackend(ManifestBackend):
         self._snap(path, os.path.dirname(os.path.abspath(path)))
         super().remove_tree(path)
 
-    def carry_file(self, src: str, dst: str) -> None:
-        self._snap(os.path.dirname(os.path.abspath(dst)))
-        super().carry_file(src, dst)
-
     def claim_build(self, path: str, owner: str) -> None:
         # a conditional put is a mutation: the claimed dir's listing
         # may lag, but the marker itself reads back by GET (fresh)
@@ -1286,17 +1128,16 @@ class LaggedManifestBackend(ManifestBackend):
         return super().commit_pointer(state_dir, version)
 
     # -- LIST-backed reads: serve the stale view while it lasts ----------
-    def _dir_probe(self, path: str) -> bool:
+    def dir_exists(self, path: str) -> bool:
         view = self._stale_view(path)
         if view is not None:
             return view[0]
-        return super()._dir_probe(path)
+        return super().dir_exists(path)
 
     def _physical_listing(self, path: str) -> list[str]:
-        # list_dir/read_locations flow through here; the manifest
-        # merge they add on top is a GET and stays fresh. A prefix the
-        # stale view believes absent LISTS as empty (that is what a
-        # real store returns), never as an error.
+        # list_dir flows through here. A prefix the stale view
+        # believes absent LISTS as empty (that is what a real store
+        # returns), never as an error.
         view = self._stale_view(path)
         if view is not None:
             existed, listing = view

@@ -23,3 +23,17 @@ def tables(spark):
     from streaming_examples_spark import load_tables
 
     return load_tables(spark, SF_DIR)
+
+
+def tree_digest(root: str) -> dict[str, str]:
+    """Every file under ``root`` by relative path -> sha256 of its
+    bytes: two equal digests mean a byte-identical tree."""
+    import hashlib
+
+    out = {}
+    for dirpath, _dirs, files in os.walk(root):
+        for f in files:
+            p = os.path.join(dirpath, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = hashlib.sha256(fh.read()).hexdigest()
+    return out

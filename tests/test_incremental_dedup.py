@@ -32,11 +32,11 @@ def _backends():
         "manifest": ManifestBackend,
         # list-after-write lag on every backend-mediated read (LISTs
         # stale for 5 ops after a mutation, GETs fresh) — the same
-        # third parameterization the tx suite runs. The detector does
-        # the same carry/list/dir_exists dance over the same seam
-        # (epoch GC, compaction pointer flips), so the exact
-        # bug class the lagged double caught there (stale-absent
-        # dir_exists = silent state loss) must be probed here too.
+        # third parameterization the tx suite runs. The detector lists
+        # and probes over the same seam (version GC, compaction pointer
+        # flips, cap counts), so the bug class the lagged double
+        # catches (a stale-absent listing = silent state loss) must be
+        # probed here too.
         "manifest-lagged": LaggedManifestBackend,
     }
 
@@ -50,8 +50,8 @@ def backend_cls(request):
 def detector(spark, tmp_path, request):
     """The plain detector, parameterized over BOTH storage backends:
     every lifecycle test in this module doubles as proof that the
-    store's commit protocol carries no POSIX assumption (hardlinks,
-    directory renames, synchronous prefix deletes)."""
+    store's commit protocol carries no POSIX assumption (directory
+    renames, a rename as the commit point, fresh listings)."""
     from streaming_examples_spark.streaming.incremental_dedup import IncrementalNearDup
 
     return IncrementalNearDup(
@@ -624,9 +624,6 @@ def test_compaction_preserves_state_and_verdicts(spark, detector, monkeypatch):
     import glob
     import os
 
-    from streaming_examples_spark.streaming import incremental_dedup as incdedup_mod
-
-    monkeypatch.setattr(incdedup_mod, "_COMPACT_PARTITIONS", 1)
     detector.process_batch(_docs(spark, [(1, BASE)]), 0)
     detector.process_batch(_docs(spark, [(2, OTHER)]), 1)
     detector.process_batch(_docs(spark, [(5, "fresh unseen text about databases and storage engines")]), 2)
@@ -649,6 +646,36 @@ def test_compaction_preserves_state_and_verdicts(spark, detector, monkeypatch):
     # probe still works against the compacted store
     r = {x["doc_id"]: x for x in detector.process_batch(_docs(spark, [(9, NEAR)]), 3).collect()}
     assert r[9]["is_dup"] and r[9]["dup_of"] == 1
+
+
+def test_small_store_compacts_to_one_file_per_store(spark, tmp_path):
+    """compact() sizes each store's file count from its bytes
+    (``plans.inspect.advisory_partitions``, the one-partition gate's
+    rule): a store far below one advisory partition compacts to ONE
+    file, and the same store measured against an advisory size a
+    fraction of its bytes compacts to several."""
+    from streaming_examples_spark.streaming.incremental_dedup import IncrementalNearDup
+
+    rows = [
+        (i, f"doc {i} " + " ".join(f"w{i}x{j}" for j in range(12))) for i in range(24)
+    ]
+    advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(advisory)
+    files = {}
+    for label, size in (("default", old), ("tiny", None)):
+        det = IncrementalNearDup(spark, str(tmp_path / label), threshold=0.5)
+        det.process_batch(_docs(spark, rows), 0)
+        sigs_bytes = det.store_stats()["stores"]["sigs"]["bytes"]
+        try:
+            spark.conf.set(advisory, size or str(sigs_bytes // 3))
+            det.compact()
+        finally:
+            spark.conf.set(advisory, old)
+        stores = det.store_stats()["stores"]
+        files[label] = {name: stores[name]["files"] for name in ("sigs", "bands")}
+        assert det.read_store("sigs").count() == len(rows)
+    assert files["default"] == {"sigs": 1, "bands": 1}
+    assert files["tiny"]["sigs"] > 1 and files["tiny"]["bands"] > 1
 
 
 def test_writer_lock_blocks_concurrent_writers(spark, detector, tmp_path):
@@ -1051,7 +1078,7 @@ def test_gc_refolds_stragglers_after_crash_between_flip_and_removal(
     ]
 
 
-def test_detector_backlog_metrics_track_appends_and_epochs(spark, tmp_path, monkeypatch):
+def test_detector_backlog_metrics_track_appends_and_epochs(spark, tmp_path):
     """Backlog/lag monitoring (the replication-slot dashboard analog):
     a two-batch run must report per-batch appended-file counts, a
     monotone total, the committed version, and store_stats() sizes that
@@ -1088,9 +1115,6 @@ def test_detector_backlog_metrics_track_appends_and_epochs(spark, tmp_path, monk
     # compaction bumps the version and the compaction counter; the rewritten
     # store (one file here) reads back with FEWER-OR-EQUAL files than
     # the append pile
-    from streaming_examples_spark.streaming import incremental_dedup as incdedup_mod
-
-    monkeypatch.setattr(incdedup_mod, "_COMPACT_PARTITIONS", 1)
     det.compact()
     m3 = det.metrics.snapshot()
     assert m3["compactions"] == 1
@@ -1547,7 +1571,9 @@ def test_composed_dual_host_lag_crash_detector_soak(
         """Arm a one-shot crash at a random backend primitive, run a
         random op; on the loud failure heal + retry on a fresh
         instance — the full operator recovery loop under lag."""
-        prim = rng.choice(["commit_pointer", "publish_file", "carry_file"])
+        prim = rng.choice(
+            ["commit_pointer", "publish_file", "prepare_dir", "remove_tree"]
+        )
         calls = {"n": 0, "at": rng.randint(1, 3)}
         real = getattr(shared_backend, prim)
 

@@ -344,7 +344,7 @@ def test_composed_e2e_manifest_state_restart_and_replay(spark, tmp_path):
     """The round-8 seams COMPOSED in one pipeline, which no other test
     does: the consumer double feeds the three-topic wire in, the tx
     state commits through ManifestBackend (object-store constraints —
-    no hardlinks, no renames, deferred deletes), and emissions leave
+    no renames, a conditional-put pointer), and emissions leave
     through the file-stub producer. The stream is KILLED mid-corpus,
     restarted with a fresh processor over the same manifest-backed
     state, and finally fully REPLAYED from offset zero with a wiped

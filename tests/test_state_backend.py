@@ -2,14 +2,15 @@
 
 `StateStorageBackend` (streaming/state_backend.py) documents an
 object-store translation of the versioned pointer-commit protocol;
-until round 8 only `LocalPosixBackend` existed, so a POSIX-shaped
-assumption could hide in the protocol itself (reads resolving by
-directory listing, carry targets assumed to have local bytes,
-remove_tree assumed synchronous-visible). `ManifestBackend` enforces
-the object-store constraints — no hardlinks, no directory renames,
-deferred reference-aware deletes — and this module drives the SAME
-lifecycle + crash-window suite through both backends, with the crash
-injected at the seam (the backend methods), not at POSIX primitives.
+with only `LocalPosixBackend`, a POSIX-shaped assumption could hide in
+the protocol itself (reads resolving by directory listing, a rename as
+the commit). `ManifestBackend` enforces the object-store constraints —
+no directory renames, a conditional-put pointer — and
+`LaggedManifestBackend` adds list-after-write lag; this module drives
+the SAME lifecycle + crash-window suite through all three, with the
+crash injected at the seam (the backend methods), not at POSIX
+primitives. The tx store carries untouched buckets by reference in
+its `_parts.json`, so no backend ever links or copies a state file.
 
 Reference parity: the reference delegates equivalent durability to
 Flink checkpoints + Kafka (transactional-cdc-processing
@@ -39,7 +40,7 @@ BACKENDS = {
     # LIST-backed read serves a stale view for 5 operations after a
     # mutation; GETs stay fresh. The same suite must hold — the
     # protocol may never depend on a listing reflecting a just-issued
-    # write (GC deferred deletes, carry enumeration, bucket loads).
+    # write (the GC and its keep rule, bucket loads).
     "manifest-lagged": LaggedManifestBackend,
 }
 
@@ -98,9 +99,10 @@ def _crash_once(obj, method, should, exc_msg="injected crash"):
 @pytest.mark.slow
 def test_lifecycle_carry_chain_and_restart(spark, tmp_path, backend_cls):
     """Three batches where most buckets go UNTOUCHED twice in a row
-    (the manifest backend then carries a reference to a reference —
-    must stay depth-1 and readable), then a fresh processor restarts
-    over the same state dir and both old and new keys resolve."""
+    (their ``_parts.json`` entries keep naming ``v1`` through v2 and
+    v3, so v1 must outlive two retirements), then a fresh processor
+    restarts over the same state dir and both old and new keys
+    resolve."""
     state = str(tmp_path / "state")
     proc = TxDenormBatchProcessor(spark, state, n_buckets=8, backend=backend_cls())
     assert proc.process(*_dfs(spark, _seed_log()), batch_id=0).count() == 8
@@ -124,9 +126,9 @@ def test_lifecycle_carry_chain_and_restart(spark, tmp_path, backend_cls):
     assert len(d3) == 1
     assert sorted(str(l["price"]) for l in d3[0]["lines"]) == ["3.00", "5.00"]
 
-    # backend-aware state inspection sees EVERY key — physical and
-    # carried buckets alike (a raw spark.read on the version dir would
-    # miss manifest-carried buckets)
+    # state inspection sees EVERY key — written and carried buckets
+    # alike (a raw spark.read on the version dir would miss the
+    # carried buckets, which live in v1)
     keys = {
         r["order_key"]
         for r in fresh.read_state("order_state").select("order_key").collect()
@@ -135,19 +137,21 @@ def test_lifecycle_carry_chain_and_restart(spark, tmp_path, backend_cls):
 
 
 @pytest.mark.slow
-def test_manifest_backend_never_links_or_renames_dirs(spark, tmp_path, monkeypatch):
-    """The constraint the double exists to enforce, enforced with
-    tripwires: run the carry-heavy lifecycle under ManifestBackend
-    while os.link on state files and any directory rename raise
-    unconditionally — the batches must still commit, so the backend
-    provably used neither."""
-    import shutil as _shutil
-
+def test_manifest_backend_never_links_or_renames_dirs(
+    spark, tmp_path, monkeypatch, backend_cls
+):
+    """The constraint the manifest double exists to enforce, now held by
+    every backend and enforced with tripwires: run the carry-heavy
+    lifecycle while os.link on state files, any directory rename and
+    shutil's copies and moves raise unconditionally — the batches must
+    still commit, so the store provably used none of them. Untouched
+    buckets are carried by reference: the committed ``_parts.json``
+    resolves them to the older version dir that wrote them."""
     state = str(tmp_path / "state")
     real_link, real_rename, real_replace = os.link, os.rename, os.replace
 
     def no_link(src, dst, **kw):
-        if "_bucket=" in str(dst):
+        if not os.path.basename(str(dst)).startswith("_writer.lock"):
             raise AssertionError(f"hardlink attempted on state file: {dst}")
         return real_link(src, dst, **kw)  # writer lock's claim stays legal
 
@@ -159,74 +163,144 @@ def test_manifest_backend_never_links_or_renames_dirs(spark, tmp_path, monkeypat
 
         return guard
 
+    def forbidden(name):
+        def trip(*a, **kw):
+            raise AssertionError(f"{name} attempted: {a}")
+
+        return trip
+
     monkeypatch.setattr("os.link", no_link)
     monkeypatch.setattr("os.rename", no_dir_rename(real_rename))
     monkeypatch.setattr("os.replace", no_dir_rename(real_replace))
-    monkeypatch.setattr(  # shutil.move falls back to copy? forbid too
-        "shutil.move",
-        lambda *a, **kw: (_ for _ in ()).throw(AssertionError("move attempted")),
-    )
+    for name in ("move", "copy", "copy2", "copyfile", "copytree"):
+        monkeypatch.setattr(f"shutil.{name}", forbidden(f"shutil.{name}"))
 
-    proc = TxDenormBatchProcessor(
-        spark, state, n_buckets=8, backend=ManifestBackend()
-    )
+    proc = TxDenormBatchProcessor(spark, state, n_buckets=8, backend=backend_cls())
     assert proc.process(*_dfs(spark, _seed_log()), batch_id=0).count() == 8
     docs = proc.process(
         *_dfs(spark, _one_line_tx(90000, 900, 300001, 30000, "9.00")), batch_id=1
     ).collect()
     assert sorted(str(l["price"]) for l in docs[0]["lines"]) == ["5.00", "9.00"]
-    # and the carried buckets really are manifests, not byte copies:
-    # the current version holds _carry.json entries pointing at v1
-    cur = ManifestBackend().read_pointer(state)
-    carried = []
-    for frame in ("order_state", "line_state"):
-        froot = os.path.join(state, f"v{cur}", frame)
-        for b in os.listdir(froot):
-            mp = os.path.join(froot, b, "_carry.json")
-            if b.startswith("_bucket=") and os.path.exists(mp):
-                import json
+    # the carried buckets are references, not copies: the committed
+    # part map names v1 for them, and the new version dir has no bytes
+    # of theirs
+    cur = proc._current_version()
+    carried = [
+        (frame, part, owner)
+        for frame, parts in proc._parts(cur).items()
+        for part, owner in parts.items()
+        if owner != cur
+    ]
+    assert carried and {owner for _, _, owner in carried} == {1}
+    for frame, part, owner in carried:
+        assert os.path.isdir(os.path.join(state, f"v{owner}", frame, part))
+        assert not os.path.exists(os.path.join(state, f"v{cur}", frame, part))
 
-                carried += list(json.load(open(mp)).values())
-    assert carried and all(f"{os.sep}v1{os.sep}" in p for p in carried)
-    _shutil  # keep import referenced
+
+def _retained(state, proc):
+    """(named, on_disk) for every superseded version dir: the
+    ``(frame, part)`` pairs the committed ``_parts.json`` names with
+    that owner, and the data-bearing entries of each frame dir the
+    version still holds on disk (writer-internal files left out, as
+    ``list_dir`` leaves them)."""
+    cur = proc._current_version()
+    named: dict[int, set] = {}
+    for frame, parts in proc._parts(cur).items():
+        for part, owner in parts.items():
+            if owner != cur:
+                named.setdefault(owner, set()).add((frame, part))
+    on_disk: dict[int, set] = {}
+    for e in os.listdir(state):
+        if e.startswith("v") and e[1:].isdigit() and int(e[1:]) != cur:
+            vdir = os.path.join(state, e)
+            on_disk[int(e[1:])] = {
+                (frame, entry)
+                for frame in os.listdir(vdir)
+                if os.path.isdir(os.path.join(vdir, frame))
+                for entry in os.listdir(os.path.join(vdir, frame))
+                if not entry.startswith(".")
+                and not (entry.startswith("_") and "=" not in entry)
+            }
+    return named, on_disk
 
 
 @pytest.mark.slow
-def test_manifest_deferred_delete_retains_referenced_bytes(spark, tmp_path):
-    """remove_tree on a superseded version is a DEFERRED delete: files
-    still referenced from the committed version's manifests survive it
-    (deleting them would destroy carried state); everything else in
-    the prefix goes. Once a later batch rewrites the referencing
-    bucket, a subsequent GC pass finally drops the orphans."""
-    state = str(tmp_path / "state")
-    proc = TxDenormBatchProcessor(
-        spark, state, n_buckets=4, backend=ManifestBackend()
-    )
-    # two orders in DIFFERENT buckets (4 buckets, 8 seeded keys ⇒ pick
-    # two that land apart is not guaranteed — derive from the layout)
-    assert proc.process(*_dfs(spark, _seed_log(n=8)), batch_id=0).count() == 8
+def test_retirement_keeps_exactly_the_parts_the_committed_sidecar_names(
+    spark, tmp_path, backend_cls
+):
+    """The keep rule, applied by commit_version's retirement and by the
+    GC alike: a superseded version loses everything but the parts the
+    committed ``_parts.json`` names with it as owner.
 
-    proc.process(
-        *_dfs(spark, _one_line_tx(90000, 900, 300001, 30000, "9.00")), batch_id=1
-    ).count()
-    # v1 survived the post-commit remove_tree exactly where referenced
+    * a crash between the flip and the retirement leaves the superseded
+      dir whole; the next batch's GC keeps exactly the named parts;
+    * a later batch that rewrites such a bucket releases its part, and
+      the next GC drops it;
+    * a committed sidecar that cannot be read aborts the GC before it
+      removes anything."""
+    from tests.conftest import tree_digest
+
+    from streaming_examples_spark.streaming.state_backend import gc_versions
+
+    def fresh():
+        return TxDenormBatchProcessor(spark, state, n_buckets=8, backend=backend_cls())
+
+    state, proc = _first_batch(spark, tmp_path, backend_cls())
     v1 = os.path.join(state, "v1")
-    assert os.path.isdir(v1)
-    remaining = [
-        os.path.join(dp, f) for dp, _, fs in os.walk(v1) for f in fs
-    ]
-    assert remaining, "deferred delete must retain referenced bytes"
-    live = ManifestBackend()._live_refs(state)
-    assert {os.path.realpath(p) for p in remaining} <= live
+    _crash_once(
+        proc.backend, "remove_tree", lambda path: str(path).startswith(v1 + os.sep)
+    )
+    with pytest.raises(RuntimeError, match="injected crash"):
+        proc.process(
+            *_dfs(spark, _one_line_tx(90000, 900, 300001, 30000, "9.00")), batch_id=1
+        )
+    assert backend_cls().read_pointer(state) == 2
+    assert os.path.isdir(os.path.join(v1, "applied_txs"))  # retirement never ran
 
-    # drive more batches touching the SAME key: v1's bytes stay exactly
-    # the carried ones; the moment every bucket has been rewritten the
-    # references drop and GC may clear it (not asserted — cadence is
-    # an implementation detail; what matters is no LIVE byte vanishes)
-    d = proc.process(
+    # the next batch's GC retires v1 by the keep rule
+    bucket = {
+        r["k"]: r["b"]
+        for r in spark.createDataFrame([(30000 + i,) for i in range(8)], "k long")
+        .select("k", proc._bucket_of(F.col("k")).alias("b"))
+        .collect()
+    }
+    other = next(k for k in sorted(bucket) if bucket[k] != bucket[30000])
+    assert fresh().process(
         *_dfs(spark, _one_line_tx(95000, 950, 300002, 30000, "2.00")), batch_id=2
+    ).count() == 1
+    named, on_disk = _retained(state, fresh())
+    assert named[1] and named == on_disk
+    assert not os.path.exists(os.path.join(v1, "applied_txs"))
+
+    # rewriting `other`'s bucket releases v1's part; the next GC drops it
+    gone = ("order_state", f"_bucket={bucket[other]}")
+    assert gone in named[1]
+    proc = fresh()
+    docs = proc.process(
+        *_dfs(spark, _one_line_tx(97000, 970, other * 10 + 1, other, "3.00")),
+        batch_id=3,
     ).collect()
-    assert sorted(str(l["price"]) for l in d[0]["lines"]) == ["2.00", "5.00", "9.00"]
+    assert sorted(str(l["price"]) for l in docs[0]["lines"]) == ["3.00", "5.00"]
+    proc = fresh()
+    gc_versions(proc.backend, state, proc._writer_token, parts=proc._parts)
+    named, on_disk = _retained(state, proc)
+    assert gone not in named.get(1, set()) and named == on_disk
+    assert not os.path.exists(os.path.join(v1, *gone))
+    keys = {r["order_key"] for r in proc.read_state("order_state").collect()}
+    assert keys == set(bucket)
+
+    # an unreadable committed sidecar: the sweep raises before it
+    # removes anything, crash garbage above the pointer included
+    cur = proc._current_version()
+    os.makedirs(os.path.join(state, f"v{cur + 1}", "carry_txs"))
+    with open(os.path.join(state, f"v{cur + 1}", "carry_txs", "part-0.parquet"), "wb") as fh:
+        fh.write(b"crash garbage")
+    os.remove(os.path.join(state, f"v{cur}", "_parts.json"))
+    before = tree_digest(state)
+    with pytest.raises(ValueError, match="rebuild the state dir"):
+        gc_versions(proc.backend, state, proc._writer_token, parts=proc._parts)
+    assert tree_digest(state) == before
+    assert os.path.isdir(os.path.join(state, f"v{cur + 1}", "carry_txs"))
 
 
 def test_manifest_commit_is_conditional_put(tmp_path):
@@ -575,11 +649,10 @@ def test_corrupt_pointer_hint_fails_loud_not_silent(tmp_path):
 
 
 def test_backends_exclude_writer_sidecars_from_logical_namespace(tmp_path):
-    """Hadoop checksum files (.part-*.crc) and _SUCCESS markers are
-    writer-internal: list_dir carrying them would record dead weight
-    in manifests (and the deferred delete would then retain stale
-    .crc bytes via the live-reference set forever). Partition dirs
-    (_bucket=K) are data-bearing despite the underscore and must
+    """Hadoop checksum files (.part-*.crc), _SUCCESS markers and
+    sidecars are writer-internal: list_dir leaves them out, so the
+    keep rule and the detector's file counts never see them. Partition
+    dirs (_bucket=K) are data-bearing despite the underscore and must
     survive the filter."""
     d = tmp_path / "bucket"
     d.mkdir()
@@ -589,22 +662,6 @@ def test_backends_exclude_writer_sidecars_from_logical_namespace(tmp_path):
     (d / "_bucket=3").mkdir()
     for be in (LocalPosixBackend(), ManifestBackend()):
         assert be.list_dir(str(d)) == ["_bucket=3", "part-0001.parquet"], type(be)
-
-    # a manifest-backed carry of the dir records only data entries,
-    # and read_locations never surfaces sidecars — even ones a legacy
-    # manifest recorded before the filter existed
-    mb = ManifestBackend()
-    dst = tmp_path / "carried"
-    dst.mkdir()
-    for name in mb.list_dir(str(d)) :
-        if name != "_bucket=3":
-            mb.carry_file(str(d / name), str(dst / name))
-    mb._write_manifest(
-        str(dst),
-        {**mb._manifest(str(dst)), ".legacy.crc": str(d / ".part-0001.parquet.crc")},
-    )
-    assert mb.list_dir(str(dst)) == ["part-0001.parquet"]
-    assert mb.read_locations(str(dst)) == [str(d / "part-0001.parquet")]
 
 
 # -- crash windows, injected at the seam ---------------------------------
@@ -621,12 +678,14 @@ def _first_batch(spark, tmp_path, backend):
 def test_crash_during_carry_replays_complete_old_state(
     spark, tmp_path, backend_cls
 ):
-    """Seam-level twin of the POSIX hardlink-crash test: carry_file
-    raises mid-carry, the pointer never flips, the replay sees
-    complete OLD state and converges — for BOTH backends."""
+    """The carry is the ``_parts.json`` publish: it raises, the
+    pointer never flips, the replay sees complete OLD state and
+    converges — for every backend."""
     state, proc = _first_batch(spark, tmp_path, backend_cls())
     _crash_once(
-        proc.backend, "carry_file", lambda src, dst: "_bucket=" in str(dst)
+        proc.backend,
+        "publish_file",
+        lambda path, data: os.path.basename(path) == "_parts.json",
     )
     batch = _dfs(spark, _one_line_tx(90000, 900, 300001, 30000, "9.00"))
     with pytest.raises(RuntimeError, match="injected crash"):
@@ -668,12 +727,14 @@ def test_crash_after_commit_filters_replay(spark, tmp_path, backend_cls):
     """remove_tree raises during post-commit cleanup: state is
     committed, so the replayed batch is dropped by the applied-txs
     filter (its output already reached the sink) and the leftover
-    superseded version is GC'd by the next batch."""
+    superseded version is GC'd by the next batch. v1 still owns the
+    untouched buckets, so its retirement removes entries under it."""
     state, proc = _first_batch(spark, tmp_path, backend_cls())
+    v1 = os.path.join(state, "v1")
     _crash_once(
         proc.backend,
         "remove_tree",
-        lambda path: str(path).rstrip(os.sep).endswith("v1")
+        lambda path: str(path).startswith(v1 + os.sep)
         and proc.backend.read_pointer(state) == 2,
     )
     batch = _dfs(spark, _one_line_tx(90000, 900, 300001, 30000, "9.00"))
@@ -846,13 +907,12 @@ def test_cross_backend_reopen_refused(spark, tmp_path):
 
 @pytest.mark.slow
 def test_manifest_orphans_reclaimed_and_versions_bounded(spark, tmp_path):
-    """Deferred deletes must CONVERGE, not accumulate: once later
-    batches rewrite the buckets whose manifests referenced an old
-    version's files, a subsequent GC pass reclaims that version dir
-    entirely, and across a long alternating run the number of version
-    dirs stays bounded (current + still-referenced + at most one
-    awaiting its next GC) — the orphan-file story of any manifest
-    table format."""
+    """Retained versions must CONVERGE, not accumulate: once later
+    batches rewrite the buckets whose parts an old version still
+    owned, a subsequent GC pass reclaims that version dir entirely,
+    and across a long alternating run the number of version dirs stays
+    bounded (current + still-owning + at most one awaiting its next
+    GC) — the orphan-file story of any manifest table format."""
     import re
 
     state = str(tmp_path / "state")
@@ -893,7 +953,7 @@ def test_manifest_orphans_reclaimed_and_versions_bounded(spark, tmp_path):
         vdirs = version_dirs()
         assert len(vdirs) <= 3, vdirs  # bounded, never accumulating
         lsn, tx, line = lsn + 5000, tx + 50, line + 1
-    # the seed version's bytes were dereferenced by the first rewrite of
+    # the seed version's parts were released by the first rewrite of
     # each bucket; GC has long since reclaimed the dir itself
     assert "v1" not in version_dirs()
     # and no live byte was lost along the way: every key still resolves
@@ -1206,7 +1266,7 @@ def test_random_dual_host_tx_schedules_exactly_once_or_loud(
         if event == "plain":
             good(hosts[h].process(*batch, batch_id=i))
         elif event == "crash":
-            prim = rng.choice(["commit_pointer", "carry_file", "remove_tree"])
+            prim = rng.choice(["commit_pointer", "publish_file", "remove_tree"])
             calls = {"n": 0, "at": rng.randint(1, 2)}
 
             def should(*_a, **_k):
@@ -1312,11 +1372,12 @@ def test_stream_gc_horizon_trims_delete_markers(spark, tmp_path):
 
 
 def test_carry_enumeration_reads_exact_parts_sidecar(spark, tmp_path):
-    """The untouched-bucket carry enumerates from the committed
-    version's ``_parts.json`` sidecar (a GET — immune to
-    list-after-write lag). It is format 2, an EXACT enumeration (every
-    listed part physically exists — a touched bucket whose every key
-    was deleted is NOT listed), so the carry needs no existence
+    """The carry is the committed version's ``_parts.json`` sidecar (a
+    GET — immune to list-after-write lag): format 3 maps every part to
+    the version dir that holds it. The touched bucket is owned by the
+    new version, every untouched one keeps its previous owner, and the
+    map is EXACT (every named part exists — a touched bucket whose
+    every key was deleted is NOT named), so readers need no existence
     probe."""
     import json as _json
 
@@ -1325,23 +1386,23 @@ def test_carry_enumeration_reads_exact_parts_sidecar(spark, tmp_path):
     assert proc.process(*batch, batch_id=1).count() == 1
 
     v = proc._current_version()
-    sidecar_path = os.path.join(state, f"v{v}", "_parts.json")
-    with open(sidecar_path) as fh:
+    with open(os.path.join(state, f"v{v}", "_parts.json")) as fh:
         sidecar = _json.load(fh)
-    assert sidecar["format"] == 2
+    assert sidecar["format"] == 3
     frames = sidecar["frames"]
     assert sorted(frames) == ["line_state", "order_state"]
-    # the seeded 8 orders span several of the 8 buckets; every part the
-    # version holds must be enumerated
-    assert all(p.startswith("_bucket=") for p in frames["order_state"])
-    assert len(frames["order_state"]) >= 2
-    # format 2 is EXACT: every enumerated part physically exists
     for name in ("order_state", "line_state"):
-        for part in frames[name]:
-            assert os.path.isdir(os.path.join(state, f"v{v}", name, part)), (
-                f"format-2 sidecar lists absent part {name}/{part}"
+        parts = frames[name]
+        # the seeded 8 orders span several of the 8 buckets; one of
+        # them (order 30000's) was rewritten by this batch
+        assert all(p.startswith("_bucket=") for p in parts)
+        assert sorted(set(parts.values())) == [1, v]
+        assert sum(1 for owner in parts.values() if owner == v) == 1
+        # EXACT: every named part physically exists in its owner's dir
+        for part, owner in parts.items():
+            assert os.path.isdir(os.path.join(state, f"v{owner}", name, part)), (
+                f"sidecar names absent part v{owner}/{name}/{part}"
             )
-
 
 
 def test_store_all_publishes_sidecar_without_bucketed_frames(
@@ -1360,7 +1421,7 @@ def test_store_all_publishes_sidecar_without_bucketed_frames(
     raw = backend.read_file(os.path.join(state, "v1", "_parts.json"))
     assert raw is not None
     data = _json.loads(raw)
-    assert data == {"format": 2, "frames": {}}
+    assert data == {"format": 3, "frames": {}}
 
 
 # -- deleted-order markers: advancing GC horizon + reader contract ----
@@ -1580,7 +1641,7 @@ def test_composed_dual_host_lag_crash_tx_soak(
             # a crash between the bucketed writes and the sidecar (or
             # between sidecar and pointer flip) must replay cleanly
             prim = rng.choice(
-                ["commit_pointer", "carry_file", "remove_tree", "publish_file"]
+                ["commit_pointer", "list_dir", "remove_tree", "publish_file"]
             )
             calls = {"n": 0, "at": rng.randint(1, 2)}
 
@@ -1645,10 +1706,10 @@ def test_composed_dual_host_lag_crash_tx_soak(
 
 def test_bucketed_frame_emptied_by_deletes_roundtrip(spark, tmp_path):
     """A touched bucket whose EVERY key is deleted writes no part dirs
-    (partitionBy of zero rows leaves only _SUCCESS): the format-2
-    sidecar records the frame with zero parts, reads return None
-    instead of tripping schema inference on the empty dir, and the next
-    batch carries nothing for it."""
+    (partitionBy of zero rows leaves only _SUCCESS): the sidecar
+    records the frame with zero parts, reads return None instead of
+    tripping schema inference on the empty dir, and the next batch
+    carries nothing for it."""
     import json as _json
 
     state = str(tmp_path / "state")
@@ -1674,7 +1735,7 @@ def test_bucketed_frame_emptied_by_deletes_roundtrip(spark, tmp_path):
     frames = _json.loads(raw)["frames"]
     # line_state emptied → exact sidecar records it with ZERO parts;
     # order_state keeps the delete marker → one part remains
-    assert frames["line_state"] == []
+    assert frames["line_state"] == {}
     assert len(frames["order_state"]) == 1
 
     assert proc.read_state("line_state") is None
@@ -1682,8 +1743,8 @@ def test_bucketed_frame_emptied_by_deletes_roundtrip(spark, tmp_path):
     # the marker is still readable through both paths
     assert proc.read_state("order_state").count() == 1
 
-    # the next batch commits cleanly over the empty frame (carry loop
-    # iterates zero parts) and the new sidecar is exact again
+    # the next batch commits cleanly over the empty frame (it carries
+    # zero parts) and the new sidecar is exact again
     d = proc.process(*batch(c2, c3), batch_id=2).collect()
     assert len(d) == 1 and d[0]["id"] == 30009
     raw2 = proc.backend.read_file(

@@ -379,7 +379,7 @@ def test_one_partition_gate_sizing(spark, tmp_path, monkeypatch):
 
     assert plan_bytes(Unsized()) is None
     monkeypatch.setattr(
-        "streaming_examples_spark.streaming.cdc_stream.plan_bytes",
+        "streaming_examples_spark.plans.inspect.plan_bytes",
         lambda df: plan_bytes(Unsized()),
     )
     assert not proc._fits_one_partition((small,), (None,))
@@ -620,24 +620,20 @@ def test_toast_backfill_udtf(spark):
 def test_state_writes_proportional_to_touched_buckets(spark, tmp_path):
     """Incremental state: a batch must rewrite only the hash buckets of
     the order keys it touches; every other bucket's files must carry
-    over without a data write — under the versioned state root they are
-    HARDLINKS of the previous version's files (same inode, size, mtime;
-    paths compared relative to the version dir)."""
+    over without a data write — the committed ``_parts.json`` keeps
+    naming the version dir that wrote them (same file: inode, size,
+    mtime; paths compared relative to the part's frame dir)."""
     import os
 
     def bucket_files(proc_, table):
-        root = proc_._frame_path(table)
         out = {}
-        for dirpath, _dirs, files in os.walk(root):
-            for f in files:
-                p = os.path.join(dirpath, f)
-                rel = os.path.relpath(p, root)
-                if "_bucket=" not in rel or f.startswith("."):
-                    # _SUCCESS & .crc sidecars: markers, not state data
-                    # (carry excludes them from the logical namespace)
-                    continue
-                st = os.stat(p)
-                out[rel] = (st.st_size, st.st_mtime_ns, st.st_ino)
+        for part, owner in proc_._parts(proc_._current_version())[table].items():
+            root = os.path.join(proc_._frame_path(table, owner), part)
+            for f in os.listdir(root):
+                if f.startswith("."):
+                    continue  # .crc checksums: not state data
+                st = os.stat(os.path.join(root, f))
+                out[f"{part}/{f}"] = (st.st_size, st.st_mtime_ns, st.st_ino)
         return out
 
     state_dir = str(tmp_path / "state")
@@ -883,69 +879,6 @@ def test_state_commit_is_one_atomic_pointer_flip(spark, tmp_path, monkeypatch):
     assert sum(1 for e in entries if e.startswith("v")) == 1, entries
 
 
-def test_crash_during_bucket_hardlink_carry_recovers(spark, tmp_path, monkeypatch):
-    """Crash while hardlinking untouched buckets into the next version:
-    the version dir is partial and the pointer never flipped, so the
-    next batch GCs the débris and replays against complete old state —
-    untouched keys' rows must all survive."""
-    import os as _os
-
-    log = TxLog()
-    for i in range(8):  # spread keys over several buckets
-        oid = 30000 + i
-        log.tx(lambda t, oid=oid: t.insert_order(oid),
-               lambda t, oid=oid: t.insert_line(oid * 10, oid, price="5.00"))
-    state = str(tmp_path / "state")
-    proc = TxDenormBatchProcessor(spark, state, n_buckets=8)
-    assert proc.process(
-        log.order_events_df(spark),
-        log.line_events_df(spark),
-        log.tx_events_df(spark),
-        batch_id=0,
-    ).count() == 8
-
-    real_link = _os.link
-
-    def crash_at_first_link(src, dst):
-        # os.link is also the writer lock's claim primitive — only the
-        # state-frame carry links simulate the crash
-        if "_bucket=" not in str(dst):
-            return real_link(src, dst)
-        raise RuntimeError("injected crash during hardlink carry")
-
-    # batch 1 touches ONE order → several untouched buckets to carry
-    log2 = TxLog()
-    log2._lsn, log2._next_tx = 90000, 900
-    log2.tx(lambda t: t.insert_line(30000 * 10 + 1, 30000, price="9.00"))
-    b1 = (
-        log2.order_events_df(spark),
-        log2.line_events_df(spark),
-        log2.tx_events_df(spark),
-    )
-    monkeypatch.setattr("os.link", crash_at_first_link)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        proc.process(*b1, batch_id=1)
-    monkeypatch.setattr("os.link", real_link)
-
-    # replay converges: the new line lands AND every untouched order's
-    # state survived — a doc for any other order still has its line
-    fresh = TxDenormBatchProcessor(spark, state, n_buckets=8)
-    docs = fresh.process(*b1, batch_id=1).collect()
-    assert len(docs) == 1
-    assert sorted(str(ln["price"]) for ln in docs[0]["lines"]) == ["5.00", "9.00"]
-    log3 = TxLog()
-    log3._lsn, log3._next_tx = 95000, 950
-    log3.tx(lambda t: t.insert_line(30007 * 10 + 1, 30007, price="3.00"))
-    docs3 = fresh.process(
-        log3.order_events_df(spark),
-        log3.line_events_df(spark),
-        log3.tx_events_df(spark),
-        batch_id=2,
-    ).collect()
-    assert len(docs3) == 1
-    assert sorted(str(ln["price"]) for ln in docs3[0]["lines"]) == ["3.00", "5.00"]
-
-
 def test_crash_after_pointer_flip_filters_replay(spark, tmp_path, monkeypatch):
     """Crash AFTER the pointer flip (during post-commit cleanup):
     state is completely NEW, so the replayed batch is dropped by the
@@ -1116,52 +1049,6 @@ def test_legacy_per_frame_state_dir_refused_not_reset(spark, tmp_path):
         proc.read_state("carry_orders")
 
 
-def test_hardlink_refused_falls_back_to_copy(spark, tmp_path, monkeypatch):
-    """Untouched-bucket carryover hardlinks old files into the new
-    version; on filesystems that refuse links (cross-device bind
-    mounts: EXDEV) the backend must fall back to a byte copy — the
-    batch still commits and untouched state survives byte-identical."""
-    import errno
-    import os as _os
-
-    log1 = TxLog()
-    log1.tx(lambda t: t.insert_order(10001), lambda t: t.insert_line(100001, 10001))
-    proc = TxDenormBatchProcessor(spark, str(tmp_path / "state"))
-    assert proc.process(
-        log1.order_events_df(spark),
-        log1.line_events_df(spark),
-        log1.tx_events_df(spark),
-        0,
-    ).count() == 1
-
-    real_link = _os.link
-
-    def refuse_link(src, dst, **kw):
-        if "_bucket=" not in dst:
-            return real_link(src, dst, **kw)  # writer lock etc. unaffected
-        raise OSError(errno.EXDEV, "Invalid cross-device link", src)
-
-    # batch 2 touches a DIFFERENT order → order 10001's bucket (almost
-    # surely untouched) carries over through the refused-link path
-    log2 = TxLog()
-    log2._lsn, log2._next_tx = log1._lsn, log1._next_tx
-    log2.tx(lambda t: t.insert_order(77001), lambda t: t.insert_line(770001, 77001))
-    monkeypatch.setattr("os.link", refuse_link)
-    try:
-        assert proc.process(
-            log2.order_events_df(spark),
-            log2.line_events_df(spark),
-            log2.tx_events_df(spark),
-            1,
-        ).count() == 1
-    finally:
-        monkeypatch.setattr("os.link", real_link)
-    # both orders' latest images live in the committed state
-    state = spark.read.parquet(proc._frame_path("order_state"))
-    keys = {r["order_key"] for r in state.select("order_key").collect()}
-    assert {10001, 77001} <= keys
-
-
 def test_failed_batch_emissions_cache_reclaimed_on_retry(spark, tmp_path):
     """A batch that fails AFTER caching its emissions (e.g. the sink
     raises) must not leak that cache entry forever: the cache is
@@ -1239,6 +1126,18 @@ def _write_json(state, stem, data):
         json.dump(data, fh)
 
 
+def _format_2_parts(state):
+    """The sidecar as format 2 wrote it: each frame's part names, with
+    no owning version (every part lived in the committed dir)."""
+    import json
+
+    with open(os.path.join(state, "v1", "_parts.json")) as fh:
+        frames = json.load(fh)["frames"]
+    _write_json(
+        state, "v1/_parts", {"format": 2, "frames": {f: sorted(p) for f, p in frames.items()}}
+    )
+
+
 def _lose_pointer(state):
     """A committed v2 with no pointer: what a partial restore leaves."""
     os.rename(os.path.join(state, "v1"), os.path.join(state, "v2"))
@@ -1261,6 +1160,7 @@ _RETIRED_TX_SHAPES = {
     "format-1-parts-sidecar": (False, lambda st: _write_json(
         st, "v1/_parts", {"order_state": ["_bucket=1"], "line_state": ["_bucket=1"]}
     )),
+    "format-2-parts-sidecar": (False, _format_2_parts),
     "no-parts-sidecar": (False, lambda st: os.remove(
         os.path.join(st, "v1", "_parts.json")
     )),
@@ -1274,8 +1174,10 @@ def test_retired_tx_state_shapes_refused(spark, tmp_path, committed_tx_state, sh
     shape raises a ValueError naming the rebuild recipe from both the
     writer (process) and the public reader (read_state) — never a
     silent fresh start or an empty read — and the refused open leaves
-    the dir untouched."""
+    the dir byte-identical."""
     import shutil
+
+    from tests.conftest import tree_digest
 
     fresh, reshape = _RETIRED_TX_SHAPES[shape]
     state = str(tmp_path / "state")
@@ -1284,7 +1186,7 @@ def test_retired_tx_state_shapes_refused(spark, tmp_path, committed_tx_state, sh
     else:
         shutil.copytree(committed_tx_state, state)
     reshape(state)
-    before = sorted(os.listdir(state))
+    before = tree_digest(state)
     log = TxLog()
     log._lsn, log._next_tx = 90000, 900
     log.tx(lambda t: t.insert_line(100002, 10001, price="3.00"))
@@ -1298,7 +1200,7 @@ def test_retired_tx_state_shapes_refused(spark, tmp_path, committed_tx_state, sh
         )
     with pytest.raises(ValueError, match="rebuild the state dir from the event log"):
         proc.read_state("order_state")
-    assert sorted(os.listdir(state)) == before
+    assert tree_digest(state) == before
 
 
 def test_idle_microbatch_fast_path(spark, tmp_path, monkeypatch):

@@ -20,7 +20,7 @@ value; ``none`` disables) — A/B the per-batch cost of the cap's extra
 store scan.
 
 ``--backend manifest`` commits the stores through the object-store
-double (no hardlinks/renames, deferred deletes) — the same batches and
+double (no renames, a conditional-put pointer) — the same batches and
 compaction passes must hold under both backends.
 
 ``--seed M`` pre-folds M synthetic docs (``synth_docs``) into the

@@ -9,17 +9,18 @@ each touch a disjoint ~1% slice of the orders with NEW transactions.
 
 Usage: python tools/stress_state_store.py [sf_dir] [n_batches] [n_buckets] [slice_modulus] [backend]
 
-``backend`` = posix (default) | manifest. Under the manifest backend
-the inode accounting degenerates gracefully: carried buckets have NO
-local bytes at their logical path (manifest entries), so
-``state_written`` counts exactly the new physical files — the same
-O(touched) claim, measured object-store-style.
+``backend`` = posix (default) | manifest.
 Prints one line per batch: wall time, emissions, bytes written to the
-two bucketed state tables, and the bucket count rewritten.
+two bucketed state tables, the bucket count rewritten, the bytes both
+tables hold on disk, and the backend calls the batch made (in total and
+for the busiest methods). Data files are walked under the whole state
+dir and identified by inode, so a carried bucket — whichever version
+dir holds it — counts as not written.
 """
 
 from __future__ import annotations
 
+import collections
 import os
 import sys
 import time
@@ -138,21 +139,41 @@ def envelopes(spark, sf_dir, *, lsn_offset: int, key_filter=None):
     return order_env, line_env, tx_env
 
 
-def dir_stats(path):
-    """(total bytes, {relpath: (inode, size)}) for a state frame dir.
-
-    Keys are RELATIVE to the frame root and identity is the inode:
-    under the versioned state layout every batch commits a new version
-    dir whose untouched buckets are HARDLINKS of the previous files —
-    same relpath + same inode = carried over, not written."""
-    total, files = 0, {}
-    for dirpath, _d, fs in os.walk(path):
+def bucket_files(state_dir):
+    """{inode: (frame, bucket, size)} of every bucketed-frame data file
+    under ``state_dir``, in any version dir."""
+    out = {}
+    for dirpath, _d, fs in os.walk(state_dir):
+        parts = dirpath.split(os.sep)
+        bucket = next((p for p in parts if p.startswith("_bucket=")), None)
+        if bucket is None:
+            continue
+        frame = parts[parts.index(bucket) - 1]
         for f in fs:
-            p = os.path.join(dirpath, f)
-            st = os.stat(p)
-            total += st.st_size
-            files[os.path.relpath(p, path)] = (st.st_ino, st.st_size)
-    return total, files
+            if f.endswith(".parquet"):
+                st = os.stat(os.path.join(dirpath, f))
+                out[st.st_ino] = (frame, bucket, st.st_size)
+    return out
+
+
+class CountingBackend:
+    """Forwards to a storage backend and counts its public calls by
+    method name."""
+
+    def __init__(self, backend):
+        self._backend = backend
+        self.calls = collections.Counter()
+
+    def __getattr__(self, name):
+        attr = getattr(self._backend, name)
+        if name.startswith("_") or not callable(attr):
+            return attr
+
+        def call(*a, **kw):
+            self.calls[name] += 1
+            return attr(*a, **kw)
+
+        return call
 
 
 def main():
@@ -171,44 +192,32 @@ def main():
         ManifestBackend,
     )
 
-    backend = {"posix": LocalPosixBackend, "manifest": ManifestBackend}[backend_name]()
+    backend = CountingBackend(
+        {"posix": LocalPosixBackend, "manifest": ManifestBackend}[backend_name]()
+    )
     state_dir = tempfile.mkdtemp(prefix="stress_state_")
     proc = TxDenormBatchProcessor(
         spark, state_dir, n_buckets=n_buckets, backend=backend
     )
 
     def run(batch_id, lsn_offset, key_filter, label):
-        before = {}
-        for tbl in ("order_state", "line_state"):
-            p = proc._frame_path(tbl)
-            before[tbl] = dir_stats(p)[1] if os.path.exists(p) else {}
+        before = bucket_files(state_dir)
+        backend.calls.clear()
         t0 = time.time()
         o, l, x = envelopes(spark, sf_dir, lsn_offset=lsn_offset, key_filter=key_filter)
         n = proc.process(o, l, x, batch_id).count()
         dt = time.time() - t0
-        written, buckets = 0, set()
-        for tbl in ("order_state", "line_state"):
-            p = proc._frame_path(tbl)
-            _, after = dir_stats(p) if os.path.exists(p) else (0, {})
-            for rel, (ino, size) in after.items():
-                prev = before[tbl].get(rel)
-                if prev is None or prev[0] != ino:  # new file, not a hardlink
-                    written += size
-                    # backend-internal files (_carry.json manifests,
-                    # _SUCCESS markers) don't make a bucket "rewritten"
-                    if os.path.basename(rel).startswith("_"):
-                        continue
-                    part = rel.split("_bucket=")
-                    if len(part) > 1:
-                        buckets.add((tbl, part[1].split("/")[0]))
-        total_state = sum(
-            dir_stats(proc._frame_path(t0_))[0]
-            if os.path.exists(proc._frame_path(t0_)) else 0
-            for t0_ in ("order_state", "line_state"))
+        after = bucket_files(state_dir)
+        new = [after[ino] for ino in after.keys() - before.keys()]
+        written = sum(size for _f, _b, size in new)
+        buckets = {(frame, bucket) for frame, bucket, _s in new}
+        total_state = sum(size for _f, _b, size in after.values())
+        busiest = " ".join(f"{m}={c}" for m, c in backend.calls.most_common(4))
         print(
             f"batch {batch_id:2d} [{label:>9}]  {dt:6.1f}s  emissions={n:7d}  "
             f"state_written={written/1e6:8.2f}MB  buckets_rewritten={len(buckets):3d}  "
-            f"total_state={total_state/1e6:8.2f}MB",
+            f"total_state={total_state/1e6:8.2f}MB  "
+            f"backend_calls={sum(backend.calls.values()):4d} ({busiest})",
             flush=True,
         )
 
