@@ -9,7 +9,7 @@ transactions — complete ones are applied in commit-LSN order through
 transaction, poc.md:343) carry over via a persisted state directory.
 
 State layout (parquet; one version dir per committed batch, named by
-the backend's commit pointer — a ``CURRENT`` file or ``_pointer/``):
+the backend's commit pointer, the ``CURRENT`` file):
     <state_dir>/_layout.json   the seal: {"format": 1, "backend": ...,
                                "n_buckets": N}
     <state_dir>/v<V>/order_state/_bucket=K/  latest order image per id,
@@ -1042,7 +1042,6 @@ def start_tx_denorm_stream(
     trigger_seconds: float = 1.0,
     emission_sink=None,
     n_buckets: int = 32,
-    backend=None,
     order_delete_gc_horizon_lsn=None,
 ):
     """Wire the three CDC streams (orders / order_lines / transaction
@@ -1084,7 +1083,6 @@ def start_tx_denorm_stream(
         state_dir,
         output_dir,
         n_buckets=n_buckets,
-        backend=backend,
         emission_sink=emission_sink,
         order_delete_gc_horizon_lsn=order_delete_gc_horizon_lsn,
     )

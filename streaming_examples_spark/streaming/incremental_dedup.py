@@ -17,9 +17,9 @@ Design (all equi-joins, no pair space, state ∝ unique corpus):
     versioned commit as the tx state store
     (``state_backend.commit_version``/``gc_versions``): each version
     ``v<E>/`` holds every store — ``sigs/``, ``bands/`` and the
-    viral-cap summary ``band_hot/`` — and one generation pointer
-    (``commit_pointer`` — POSIX rename flip or object-store
-    conditional put) names the committed version, so a restore sees
+    viral-cap summary ``band_hot/`` — and one pointer
+    (``commit_pointer`` — the ``CURRENT`` file flip, a conditional put
+    on an object store) names the committed version, so a restore sees
     ALL-old or ALL-new stores, never a mix. Appends land in the
     current version's store dirs (Spark's write commit makes the files
     appear whole); only COMPACTION builds a new version: every store is
@@ -29,9 +29,10 @@ Design (all equi-joins, no pair space, state ∝ unique corpus):
     so ``state_backend``'s keep rule keeps nothing of it). No
     ``os.rename`` directory swaps anywhere — this store is the one a
     100 TB deployment must host on object storage, so the commit
-    protocol carries no POSIX assumption
-    (proven by running the crash suite over ``LocalPosixBackend`` AND
-    ``ManifestBackend``, tests/test_incremental_dedup.py).
+    protocol carries no POSIX assumption beyond the pointer flip
+    (proven by running the crash suite over ``LocalPosixBackend`` and
+    its list-after-write lag double ``LaggedListingBackend``,
+    tests/test_incremental_dedup.py).
   * Per batch: new docs are shingled once (`shingle_base_hashes`, one
     md5 per shingle); candidates come from an equi-join on
     (band_id, band_key) against the store AND a within-batch band
@@ -75,7 +76,7 @@ Single-writer contract: ``process_batch`` and ``compact`` take an
 advisory writer lock on the state dir (``_writer.lock``) — running
 them concurrently could lose appends that land in the version compact is
 superseding, so the overlap raises loudly instead; a crashed local owner's lock is
-broken automatically (see ``_writer_lock``).
+broken automatically (see :meth:`compact` for the race it closes).
 
 Reference parity: the reference has no incremental near-dup operator —
 this extends its CDC-state patterns (bounded keyed state, replay
@@ -84,7 +85,6 @@ dedup: TxAware...Operator.java:357-430) to the training-data domain.
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
 
@@ -101,10 +101,7 @@ from streaming_examples_spark.functions.hashing import (
 )
 
 from streaming_examples_spark.plans.inspect import advisory_partitions
-from streaming_examples_spark.streaming.locks import (  # noqa: F401
-    _pid_alive,  # re-exported: tests exercise the pid-liveness gate
-    writer_lock,
-)
+from streaming_examples_spark.streaming.locks import writer_lock
 from streaming_examples_spark.streaming.state_backend import (
     LocalPosixBackend,
     StateStorageBackend,
@@ -284,48 +281,6 @@ class IncrementalNearDup:
                 "are lost"
             )
 
-    # -- single-writer mutual exclusion ---------------------------------
-    def _lock_path(self) -> str:
-        return os.path.join(self.state_dir, "_writer.lock")
-
-    @contextlib.contextmanager
-    def _writer_lock(self, role: str):
-        """Advisory single-writer lock making :meth:`process_batch` and
-        :meth:`compact` mutually exclusive on one state dir.
-
-        The race it closes: ``compact`` rewrites the store under the
-        NEXT version from a snapshot of the current one — an append that
-        lands in the CURRENT version between that snapshot and the
-        pointer flip is absent from the rewrite and reclaimed with the
-        superseded version, silently losing those canonical docs from
-        the store (and, for ``sigs``, their replay protection). The
-        operational contract is therefore one writer at a time: the
-        stream OR the maintenance job — and that contract SPANS HOSTS.
-        This advisory lock is per-filesystem and cannot order two
-        hosts on an object store. What the r10 build-marker fencing
-        (state_backend.claim_build, validated before every pointer
-        flip) adds on top: two hosts COMPACTING concurrently now fail
-        loudly — the second claimer loses the conditional put, a
-        GC'd-and-reclaimed builder fails its commit-time validation,
-        and the version GC refuses to reclaim a remote host's live claim
-        — so no dual-compact schedule can publish an interleaved
-        version. The append-vs-remote-compact race (appends never touch
-        the pointer or a marker) gets a best-effort HEAL, not a fence:
-        compact diffs the superseded version's post-flip listing against
-        the file set its rewrite consumed and folds stragglers into
-        the new version (:meth:`_fold_stragglers`) — but a straggler the
-        lagging listing hides is still lost, and a reclaimed builder's
-        still-running Spark tasks can still write into a new owner's
-        dir; closing those fully needs time-bound leases.
-        Multi-host deployments must still enforce single-writer
-        externally (one owner per state prefix — the same rule every
-        LSM table format imposes), with the markers as the
-        defense-in-depth that turns most violations into loud errors.
-        Acquisition and stale-break mechanics: :func:`writer_lock`.
-        """
-        with writer_lock(self.state_dir, role):
-            yield
-
     # -- state I/O ------------------------------------------------------
     def _load_store(self, name: str, version: int) -> DataFrame:
         """Version 0 -> empty frame (first batch). A store that EXISTS
@@ -342,11 +297,10 @@ class IncrementalNearDup:
         # backend listing — list-after-write lag serves a stale view of
         # a dir Spark just appended into, and an empty read here
         # silently re-admits every known doc (found by running this
-        # suite under LaggedManifestBackend: batch N+1 read batch N's
+        # suite under the list-lag double: batch N+1 read batch N's
         # store as absent). Spark enumerates the data files itself:
         # appends and rewrites both land every file of a store in the
-        # version's own store dir, so the dir IS the content on every
-        # backend.
+        # version's own store dir, so the dir IS the content.
         return self.spark.read.schema(schema).parquet(self._store_path(name, version))
 
     def read_store(self, name: str) -> DataFrame:
@@ -357,8 +311,8 @@ class IncrementalNearDup:
         UNLOCKED reader: the returned frame is LAZY and resolves its
         files at action time — a concurrent ``compact()``/
         ``process_batch()`` can flip the version pointer and GC the
-        directory it reads (``LocalPosixBackend`` removes immediately),
-        failing the action. Run it to completion (or
+        directory it reads (the removal is immediate), failing the
+        action. Run it to completion (or
         ``localCheckpoint``) before letting a writer proceed. Raises on
         a lost pointer (``state_backend.committed_version``) instead of
         reading the store as empty."""
@@ -368,7 +322,7 @@ class IncrementalNearDup:
 
     def _data_files(self, path: str) -> list[str]:
         """Sorted data-file basenames of a store dir (backend listing;
-        detector stores hold physical files on every backend — see
+        every file of a store sits in its own store dir — see
         _load_store). Can run stale-SHORT under list-after-write lag;
         every caller tolerates that (advisory gauges, fire-late cap
         counts, the best-effort straggler fold)."""
@@ -615,9 +569,9 @@ class IncrementalNearDup:
 
         Holds the state dir's writer lock for the whole batch: running
         concurrently with :meth:`compact` can silently lose store rows
-        (see :meth:`_writer_lock`), so the overlap raises instead.
+        (see :meth:`compact`), so the overlap raises instead.
         """
-        with self._writer_lock("process_batch"):
+        with writer_lock(self.state_dir, "process_batch"):
             try:
                 return self._process_batch_locked(docs, batch_id)
             except BaseException:
@@ -810,12 +764,40 @@ class IncrementalNearDup:
         unchanged. The rewrite also drops duplicate rows a crashed
         batch's retry or a straggler fold may have appended.
 
-        Holds the state dir's writer lock for the whole pass — an
-        append racing the full rewrite would land in the version being
-        superseded and be lost at the pointer flip (see
-        :meth:`_writer_lock`), so the overlap raises instead.
+        Holds the state dir's advisory writer lock
+        (``locks.writer_lock``, which also holds the acquisition and
+        stale-break mechanics) for the whole pass, making this and
+        :meth:`process_batch` mutually exclusive on one state dir. The
+        race it closes: the rewrite builds the NEXT version from a
+        snapshot of the current one — an append that lands in the
+        CURRENT version between that snapshot and the pointer flip is
+        absent from the rewrite and reclaimed with the superseded
+        version, silently losing those canonical docs from the store
+        (and, for ``sigs``, their replay protection). The operational
+        contract is therefore one writer at a time: the stream OR the
+        maintenance job — and that contract SPANS HOSTS. The lock is
+        per-filesystem and cannot order two hosts on an object store.
+        What the build-marker fencing (state_backend.claim_build,
+        validated before every pointer flip) adds on top: two hosts
+        COMPACTING concurrently fail loudly — the second claimer loses
+        the conditional put, a GC'd-and-reclaimed builder fails its
+        commit-time validation, and the version GC refuses to reclaim a
+        remote host's live claim — so no dual-compact schedule can
+        publish an interleaved version. The append-vs-remote-compact
+        race (appends never touch the pointer or a marker) gets a
+        best-effort HEAL, not a fence: compact diffs the superseded
+        version's post-flip listing against the file set its rewrite
+        consumed and folds stragglers into the new version
+        (:meth:`_fold_stragglers`) — but a straggler the lagging
+        listing hides is still lost, and a reclaimed builder's
+        still-running Spark tasks can still write into a new owner's
+        dir; closing those fully needs time-bound leases. Multi-host
+        deployments must still enforce single-writer externally (one
+        owner per state prefix — the same rule every LSM table format
+        imposes), with the markers as the defense-in-depth that turns
+        most violations into loud errors.
         """
-        with self._writer_lock("compact"):
+        with writer_lock(self.state_dir, "compact"):
             self._compact_locked()
             self.metrics.compactions += 1
             self.metrics.observe_epoch(self._version())
@@ -831,13 +813,12 @@ class IncrementalNearDup:
             consumed = {}
             for name in _STORES:
                 # the rewrite source is the store's own read path —
-                # Spark's file enumeration, fresh on every backend (a
-                # backend LIST here would run stale-SHORT under
-                # list-after-write lag and silently drop just-appended
-                # rows from the rewrite). The consumed set is the
-                # frame's OWN inputFiles() snapshot: exactly what the
-                # write consumes, which the straggler fold diffs the
-                # superseded dir against
+                # Spark's file enumeration, not a backend LIST (which
+                # would run stale-SHORT under list-after-write lag and
+                # silently drop just-appended rows from the rewrite).
+                # The consumed set is the frame's OWN inputFiles()
+                # snapshot: exactly what the write consumes, which the
+                # straggler fold diffs the superseded dir against
                 src = self._load_store(name, cur)
                 consumed[name] = _data_file_names(src.inputFiles())
                 out = os.path.join(path, name)
@@ -961,7 +942,7 @@ class IncrementalNearDup:
 
         Best-effort, not a guarantee: under list-after-write lag the
         post-flip listing can miss a just-landed straggler (closing
-        that needs time-bound leases — documented in _writer_lock).
+        that needs time-bound leases — documented in :meth:`compact`).
         Duplicate rows a fold could introduce are the store protocol's
         tolerated kind (band dups collapse in the probe's distinct;
         the next full compact's dropDuplicates heals both stores)."""

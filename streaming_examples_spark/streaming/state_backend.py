@@ -29,18 +29,14 @@ is the one LSM engines and table formats ship on S3/GCS:
   remove_file     → a single-object delete
   dir_exists/list_dir → prefix listing (the LIST-backed reads)
 
-Two backends ship, and they differ only in how the commit pointer is
-encoded; every other primitive is the shared local-file one
-(``_LocalFiles``). ``LocalPosixBackend`` flips a ``CURRENT`` file by
-``os.replace``; ``ManifestBackend`` never renames and commits by a
-conditional-put emulation (exclusive create of a monotonically
-numbered generation object). ``LaggedManifestBackend`` adds
-list-after-write lag to the latter. The crash-injection suites of both
-stores run parameterized over all three (tests/test_state_backend.py,
-tests/test_incremental_dedup.py), which is what proves the protocol
-itself: no state file is hardlinked or copied between versions, and no
-correctness-bearing read depends on a listing reflecting a
-just-issued write.
+One backend ships, ``LocalPosixBackend``: it flips a ``CURRENT`` file
+by ``os.replace`` and never renames a directory. Its test double
+``LaggedListingBackend`` adds list-after-write lag to every LIST-backed
+read. The crash-injection suites of both stores run parameterized over
+the two (tests/test_state_backend.py, tests/test_incremental_dedup.py),
+which is what proves the protocol itself: no state file is hardlinked
+or copied between versions, and no correctness-bearing read depends on
+a listing reflecting a just-issued write.
 
 One on-disk format per store: both stores seal their state dir with
 ``_layout.json`` = ``{"format": 1, "backend": <layout_id>, <store
@@ -48,10 +44,12 @@ fields>}`` (the tx store's bucket count, the detector's store list)
 through :func:`write_layout` before their first write, and validate it
 with :func:`check_layout` on every open. A dir that is absent or holds
 only the writer lock is fresh; anything else without a readable
-format-1 seal, or sealed by another backend or with other store
-fields, is refused with a ``ValueError`` — an unreadable store is never read as empty. There is
-no migration path: rebuild the state dir from the event log (move it
-aside, then replay the source from its start into an empty dir).
+format-1 seal, or sealed by another backend (such as the retired
+generation-pointer one, whose seal names ``manifest``) or with other
+store fields, is refused with a ``ValueError`` — an unreadable store is
+never read as empty. There is no migration path: rebuild the state dir
+from the event log (move it aside, then replay the source from its
+start into an empty dir).
 
 Reference parity: the reference delegates the equivalent durability to
 Kafka-backed Flink checkpoints (streaming-examples
@@ -82,27 +80,6 @@ def _internal_name(name: str) -> bool:
     return name.startswith("_") and "=" not in name
 
 
-def _atomic_publish(path: str, data: bytes) -> None:
-    """Durable atomic single-object publish shared by both backends:
-    write a UNIQUE dot-prefixed temp (left out of ``list_dir`` by
-    ``_internal_name``), fsync, then file-level
-    ``os.replace`` — a concurrent reader sees old bytes, new bytes, or
-    absence, never a truncation. The temp name carries pid AND a
-    random component: pid alone collides when two writer hosts are
-    containers that are each pid 1 (both would open the same temp, the
-    second truncating the first mid-write — exactly the torn
-    intermediate this helper exists to rule out)."""
-    import uuid
-
-    d, name = os.path.split(path)
-    tmp = os.path.join(d, f".{name}.put-{os.getpid()}-{uuid.uuid4().hex[:8]}")
-    with open(tmp, "wb") as fh:
-        fh.write(data)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, path)
-
-
 # -- the one sealed on-disk format ----------------------------------------
 #: the only ``_layout.json`` format either store reads or writes
 LAYOUT_FORMAT = 1
@@ -122,8 +99,9 @@ def check_layout(
     only the advisory writer lock (``_writer.lock*``) and dot-prefixed
     publish temps — and True for a matching format-1 seal. Raises
     ``ValueError`` for everything else: entries without a seal, an
-    unreadable seal, any other format, a backend mismatch (the two
-    backends encode the commit pointer differently, so a foreign
+    unreadable seal, any other format, a backend mismatch (a dir sealed
+    by another backend, such as the retired generation-pointer one,
+    keeps its commit pointer where this backend does not look, so a
     reopen would read no committed version and GC live state), or a
     store-field mismatch (a bucket count: probes hash into the wrong
     buckets; a store list: the dir holds another layout — either way
@@ -160,8 +138,8 @@ def check_layout(
     if layout.get("backend") != backend.layout_id:
         raise ValueError(
             f"state dir {state_dir} was committed by the "
-            f"{layout.get('backend')!r} storage backend but is opened with "
-            f"{backend.layout_id!r}: reopen with the sealed backend, or "
+            f"{layout.get('backend')!r} storage backend, which this engine "
+            f"no longer reads (it opens {backend.layout_id!r} dirs only): "
             f"{REBUILD_HINT}"
         )
     for key, want in fields.items():
@@ -199,9 +177,9 @@ class StateStorageBackend:
     tolerates partial completion (crash garbage is GC'd by version).
     """
 
-    #: identity sealed into the state dir's _layout.json — the two
-    #: backends encode the commit pointer differently, so a state dir
-    #: must be reopened by the backend that committed it (check_layout)
+    #: identity sealed into the state dir's _layout.json — it names the
+    #: commit-pointer encoding, so a state dir is only reopened by a
+    #: backend of the same identity (check_layout)
     layout_id: str = "abstract"
 
     def prepare_dir(self, path: str) -> None:
@@ -255,7 +233,7 @@ class StateStorageBackend:
         path overrides BOTH, keeping the seam symmetric (r11 ADVICE:
         asymmetric reads silently degrade to 'absent' on such a
         backend, e.g. a consumed-set manifest read as missing → blind
-        straggler removal). Both shipped backends store published
+        straggler removal). The shipped backend stores published
         objects at their literal local path, so the base
         implementation is concrete."""
         try:
@@ -292,11 +270,10 @@ class StateStorageBackend:
     # with the store's own conditional put; silently inheriting a
     # local-disk emulation would leave the dual-writer fence inert on
     # exactly the deployment it targets (each host reading its own
-    # local marker). The shipped backends share the O_EXCL emulation
-    # via _LocalFiles. The marker name
-    # (``<dir>.builder``, a SIBLING of the build dir so the claim
-    # survives the overwrite of the very dir it fences) is part of
-    # the cross-backend layout.
+    # local marker). LocalPosixBackend implements them with O_EXCL
+    # creates. The marker name (``<dir>.builder``, a SIBLING of the
+    # build dir so the claim survives the overwrite of the very dir it
+    # fences) is part of the on-disk layout.
 
     @staticmethod
     def _build_marker(path: str) -> str:
@@ -354,13 +331,40 @@ class StateStorageBackend:
         raise NotImplementedError
 
 
-class _LocalFiles(StateStorageBackend):
-    """Every primitive but the commit pointer, over a local directory,
-    shared by the shipped backends. The build markers are the O_EXCL
-    emulation of the conditional put (for the manifest double,
-    exclusive-create IS the faithful model of the object store's
-    `if-none-match`); a real object-store backend implements them
-    with its own (see the fencing contract on StateStorageBackend)."""
+class LocalPosixBackend(StateStorageBackend):
+    """The one shipped backend, over a local directory: an fsync'd temp
+    + ``os.replace`` flip of the ``CURRENT`` pointer file (with a
+    directory fsync for rename durability), and every other primitive
+    on local files. The build markers are the O_EXCL emulation of the
+    conditional put; a real object-store backend implements them with
+    its own (see the fencing contract on StateStorageBackend)."""
+
+    layout_id = "local-posix"
+
+    def commit_pointer(self, state_dir: str, version: int) -> None:
+        # durable temp first: fsync the CONTENT before the rename makes
+        # it visible, so a power loss can't expose a torn pointer
+        tmp = os.path.join(state_dir, f"CURRENT.{version}")
+        with open(tmp, "w") as fh:
+            fh.write(str(version))
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, os.path.join(state_dir, "CURRENT"))
+        # fsync the DIRECTORY so the rename itself is durable (some
+        # filesystems would otherwise revert the flip on power loss
+        # after process() already reported the batch committed)
+        dirfd = os.open(state_dir, os.O_RDONLY)
+        try:
+            os.fsync(dirfd)
+        finally:
+            os.close(dirfd)
+
+    def read_pointer(self, state_dir: str) -> int:
+        try:
+            with open(os.path.join(state_dir, "CURRENT")) as fh:
+                return int(fh.read().strip())
+        except FileNotFoundError:
+            return 0
 
     def prepare_dir(self, path: str) -> None:
         os.makedirs(path, exist_ok=True)
@@ -377,10 +381,23 @@ class _LocalFiles(StateStorageBackend):
     def publish_file(self, path: str, data: bytes) -> None:
         # an object-store PUT is atomic per object; a local open(path,
         # "wb") is not (its truncate-then-write window shows a torn
-        # intermediate to a concurrent reader), so both backends
-        # emulate the PUT with a unique temp and a FILE-level
-        # os.replace — no directory is ever renamed
-        _atomic_publish(path, data)
+        # intermediate to a concurrent reader). Emulate the PUT: write
+        # a UNIQUE dot-prefixed temp (left out of list_dir by
+        # _internal_name), fsync, then a FILE-level os.replace — no
+        # directory is ever renamed. The temp name carries pid AND a
+        # random component: pid alone collides when two writer hosts
+        # are containers that are each pid 1 (the second would
+        # truncate the first's temp mid-write — the very torn
+        # intermediate the temp exists to rule out).
+        import uuid
+
+        d, name = os.path.split(path)
+        tmp = os.path.join(d, f".{name}.put-{os.getpid()}-{uuid.uuid4().hex[:8]}")
+        with open(tmp, "wb") as fh:
+            fh.write(data)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, path)
 
     def dir_exists(self, path: str) -> bool:
         return os.path.isdir(path)
@@ -572,7 +589,7 @@ _VERSION_DIR = re.compile(r"v(\d+)")
 def _versions(root: str, entries: list[str], cur: int) -> list[int]:
     """The version numbers among ``entries`` (a listing of ``root``).
     Raises ``ValueError`` on a LOST pointer: pointer 0 beside a ``v≥2``
-    (a partial restore, a deleted CURRENT/_pointer) — ``v2`` is built
+    (a partial restore, a deleted CURRENT) — ``v2`` is built
     only once ``v1`` has committed, and reading such a root as fresh or
     reclaiming its dirs would silently reset the store. A ``v1`` beside
     pointer 0 is the first build's crash window."""
@@ -584,7 +601,7 @@ def _versions(root: str, entries: list[str], cur: int) -> list[int]:
         raise ValueError(
             f"state store {root} holds committed version dirs {lost} but no "
             "committed pointer: the pointer was lost (a partial restore or a "
-            "deleted CURRENT/_pointer), and reading or reclaiming the dirs "
+            "deleted CURRENT), and reading or reclaiming the dirs "
             "would silently reset the store. Restore the pointer to the "
             f"store's true version, or {REBUILD_HINT}"
         )
@@ -740,296 +757,21 @@ def gc_versions(
             backend.remove_file(os.path.join(root, e))
 
 
-class LocalPosixBackend(_LocalFiles):
-    """The shipped backend: fsync'd temp + ``os.replace`` pointer flip,
-    directory fsync for rename durability."""
-
-    layout_id = "local-posix"
-
-    def commit_pointer(self, state_dir: str, version: int) -> None:
-        # durable temp first: fsync the CONTENT before the rename makes
-        # it visible, so a power loss can't expose a torn pointer
-        tmp = os.path.join(state_dir, f"CURRENT.{version}")
-        with open(tmp, "w") as fh:
-            fh.write(str(version))
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, os.path.join(state_dir, "CURRENT"))
-        # fsync the DIRECTORY so the rename itself is durable (some
-        # filesystems would otherwise revert the flip on power loss
-        # after process() already reported the batch committed)
-        dirfd = os.open(state_dir, os.O_RDONLY)
-        try:
-            os.fsync(dirfd)
-        finally:
-            os.close(dirfd)
-
-    def read_pointer(self, state_dir: str) -> int:
-        try:
-            with open(os.path.join(state_dir, "CURRENT")) as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return 0
-
-
-class ManifestBackend(_LocalFiles):
-    """Object-store semantics emulated over a local directory: the
-    double that proves the commit protocol holds WITHOUT POSIX's
-    renames. ``commit_pointer`` emulates a conditional put: exclusive
-    create of ``_pointer/gen-<g+1>`` (if-match on the previous
-    generation; a concurrent committer loses with an error instead of
-    last-writer-wins). ``read_pointer`` resolves the latest generation
-    WITHOUT trusting the prefix listing: a ``_latest`` hint object (PUT
-    after every successful create, BEFORE superseded-generation
-    cleanup) plus forward exact-key GET probes recover the true latest
-    with no LIST at all — see ``_gen_candidates`` for the invariant.
-    Every other primitive is the shared local one: no file is ever
-    linked or copied, and ``remove_tree`` is a plain prefix delete."""
-
-    #: hint object inside ``_pointer/`` naming the highest generation a
-    #: successful commit has published — the GET that frees generation
-    #: resolution from the prefix listing (see ``_gen_candidates``)
-    LATEST = "_latest"
-    layout_id = "manifest"
-
-    def commit_pointer(self, state_dir: str, version: int) -> int:
-        """Returns the generation number this commit won — exposed so
-        the multi-writer contention tests can assert exactly one winner
-        per generation (callers may ignore it)."""
-        gen_dir = os.path.join(state_dir, "_pointer")
-        os.makedirs(gen_dir, exist_ok=True)
-        # resolve the next generation from the hint + forward GET
-        # probes, never a listing: under list-after-write lag a stale
-        # listing can miss recent generations, and if the colliding
-        # name was already reclaimed by a superseder's cleanup, a
-        # listing-derived nxt would EXCLUSIVE-CREATE an already-spent
-        # generation number — a silently lost commit (readers resolve
-        # a higher gen, this writer thinks it won)
-        prev = self._gen_candidates(gen_dir)
-        nxt = (prev[-1][0] + 1) if prev else 1
-        target = os.path.join(gen_dir, f"gen-{nxt:012d}")
-        try:
-            fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            raise RuntimeError(
-                f"pointer generation conflict at {target}: another writer "
-                "committed concurrently (conditional put failed)"
-            )
-        try:
-            os.write(fd, str(version).encode())
-            os.fsync(fd)
-        finally:
-            os.close(fd)
-        dirfd = os.open(gen_dir, os.O_RDONLY)
-        try:
-            os.fsync(dirfd)
-        finally:
-            os.close(dirfd)
-        # ORDER MATTERS: publish the hint BEFORE deleting superseded
-        # generations. The resolution invariant — "a deleted generation
-        # always has a visible hint ≥ its superseder" — is what lets a
-        # reader whose listing is stale recover via the hint GET; a
-        # crash in between leaves extra undeleted gens (harmless, the
-        # next commit's cleanup reclaims them), never a deleted gen
-        # with a stale hint. The exclusive create above was the COMMIT
-        # POINT: a failed hint PUT must not report a committed batch as
-        # failed (the caller would replay a batch whose state already
-        # landed) — the hint is advisory and the +1 probe heals it, so
-        # swallow the failure and skip ONLY the cleanup (deleting under
-        # a stale hint would break the invariant).
-        try:
-            self._publish_hint(gen_dir, nxt)
-        except Exception:
-            import warnings
-
-            warnings.warn(
-                f"pointer hint publish failed in {gen_dir} after commit of "
-                f"gen-{nxt}; superseded-generation cleanup deferred to the "
-                "next successful commit",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            return nxt
-        self._reclaim_pointer_garbage(gen_dir, nxt)
-        return nxt
-
-    @staticmethod
-    def _reclaim_pointer_garbage(
-        gen_dir: str, live_gen: int, min_age_s: float = 60.0
-    ) -> None:
-        """Best-effort object deletes after a commit published its
-        hint: every generation below ``live_gen`` (superseded, torn,
-        or left by a crash between an earlier hint PUT and its
-        cleanup — all safe to delete under a hint ≥ ``live_gen``), and
-        ``.<name>.put-*`` temps a crash stranded between write and
-        rename. ``_pointer/`` is never remove_tree'd, so without this
-        sweep both would accumulate forever. The listing only picks
-        garbage — resolution never reads it, so a stale one merely
-        defers a delete. The age floor keeps a concurrent writer's
-        in-flight temp (lifetime: microseconds) safe; deleting one
-        anyway only fails that writer's advisory hint PUT, which
-        commit_pointer tolerates."""
-        now = time.time()
-        try:
-            names = os.listdir(gen_dir)
-        except FileNotFoundError:
-            return
-        for name in names:
-            full = os.path.join(gen_dir, name)
-            try:
-                if name.startswith("gen-"):
-                    if int(name[4:]) < live_gen:
-                        os.unlink(full)
-                elif ".put-" in name and now - os.path.getmtime(full) > min_age_s:
-                    os.unlink(full)
-            except (OSError, ValueError):
-                pass
-
-    # -- generation resolution (LIST-free by design) ----------------------
-    def _read_hint(self, gen_dir: str) -> int:
-        raw = self.read_file(os.path.join(gen_dir, self.LATEST))
-        if raw is None:
-            return 0
-        try:
-            return int(raw.decode().strip())
-        except ValueError:
-            # publish_file is an atomic PUT on every store this
-            # protocol targets; unreadable bytes here mean the store
-            # broke that contract — resolving without it could return
-            # a stale or zero pointer, so fail loud instead
-            raise RuntimeError(
-                f"corrupt pointer hint {gen_dir}/{self.LATEST}: "
-                f"{raw!r} is not a generation number"
-            )
-
-    def _publish_hint(self, gen_dir: str, gen: int) -> None:
-        # monotonic: a delayed writer must never move the hint
-        # backwards — readers rely on "the generation object at the
-        # current hint value always exists", which only holds if every
-        # deletion happened under a visible hint ≥ its superseder. A
-        # bare read-check-write is NOT enough: a writer stalling
-        # between its check and its PUT regresses the hint past a
-        # superseder's cleanup, silently re-opening the reclaimed-
-        # generation reuse this whole mechanism exists to close (found
-        # by review with a live two-writer reproduction). Real stores
-        # give a conditional PUT (If-Match); the local emulation is an
-        # flock held across check+PUT — same standing as O_EXCL for
-        # the conditional create, auto-released on process death so a
-        # crash can never wedge later committers.
-        import fcntl
-
-        lock_path = os.path.join(gen_dir, ".hint.lock")
-        fd = os.open(lock_path, os.O_CREAT | os.O_RDWR)
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
-            if self._read_hint(gen_dir) >= gen:
-                return
-            self.publish_file(
-                os.path.join(gen_dir, self.LATEST), str(gen).encode()
-            )
-        finally:
-            os.close(fd)  # closing releases the flock
-
-    def _gen_candidates(self, gen_dir: str) -> list[tuple[int, str]]:
-        """The generations that MAY be latest: the ``_latest`` hint
-        plus forward exact-key GET probes from it (from 0 when there
-        is no hint — a store whose first hint PUT failed). No LIST:
-        cleanup only ever deletes a generation after a hint ≥ its
-        superseder is published (commit order: create → hint →
-        delete; the hint write is monotonic), so the generation at the
-        current hint value exists unless superseded, and every LIVE
-        generation above it is reachable by dense +1 probes (creates
-        are dense: nxt = max-observed + 1, collisions fail loud).
-        Exact-key GETs are read-your-writes fresh, so no listing
-        staleness can hide the latest."""
-        cands = {}
-        g = self._read_hint(gen_dir)
-        if g:
-            cands[g] = f"gen-{g:012d}"
-        while True:
-            name = f"gen-{g + 1:012d}"
-            if os.path.exists(os.path.join(gen_dir, name)):  # exact-key GET
-                g += 1
-                cands[g] = name
-            else:
-                break
-        return sorted(cands.items())
-
-    def read_pointer(self, state_dir: str) -> int:
-        # Walk generations newest-first, SKIPPING torn ones: a crash
-        # between the exclusive create and the durable write leaves an
-        # empty/partial gen object — that commit never happened, so
-        # the previous generation is the committed state. A real
-        # conditional put is atomic and can't produce this; the
-        # emulation must tolerate it rather than wedging every reopen
-        # on int(''). Deliberately NO unlink here: a reader cannot
-        # distinguish an abandoned torn object from a commit that is
-        # mid-write (created, bytes not yet visible) — deleting the
-        # latter would destroy a succeeding commit and free its
-        # generation number for reuse. Skipped objects are reclaimed
-        # by the NEXT successful commit_pointer's superseded-
-        # generation cleanup, and their names stay occupied until
-        # then (commit_pointer numbers above ALL observed names), so
-        # no generation is ever won twice.
-        gen_dir = os.path.join(state_dir, "_pointer")
-        last_top, stalled = -1, 0
-        while True:
-            gens = self._gen_candidates(gen_dir)
-            top = gens[-1][0] if gens else 0
-            if top > last_top:
-                last_top, stalled = top, 0
-            else:
-                # a retry that observes no higher candidate than the
-                # one whose object it just found deleted is only
-                # legitimate transiently (a superseder mid-publish);
-                # unbounded it means the store broke the PUT-visibility
-                # contract (e.g. a regressed hint below a deleted gap
-                # the +1 probes cannot cross) — fail loud, never spin
-                # or silently return a stale/zero pointer
-                stalled += 1
-                if stalled > 100:
-                    raise RuntimeError(
-                        f"pointer resolution stalled in {gen_dir}: "
-                        f"candidate gen-{top} repeatedly deleted with no "
-                        "higher generation visible via the hint or probes"
-                    )
-            for _g, name in reversed(gens):
-                p = os.path.join(gen_dir, name)
-                try:
-                    with open(p) as fh:
-                        return int(fh.read().strip())
-                except FileNotFoundError:
-                    # superseded by a concurrent commit (the committer
-                    # deletes old gens only AFTER publishing its hint):
-                    # re-resolve — the fresh hint GET names the newer
-                    # generation. Falling through to an older name
-                    # instead could return a stale (or worse, zero)
-                    # pointer. Terminates: each retry observes a
-                    # strictly higher hint than the one whose gen it
-                    # just found deleted.
-                    break
-                except ValueError:
-                    continue  # torn: treat as never-committed
-            else:
-                return 0
-
-
-class LaggedManifestBackend(ManifestBackend):
-    """Eventual-consistency double: ``list_dir``/``dir_exists`` (the
-    LIST-backed reads) serve STALE views for ``lag_ops`` subsequent
-    backend operations after a mutation touches a prefix — the classic
-    object-store list-after-write hazard. Direct object GETs (sidecar
-    reads, pointer generation/hint reads, file opens) stay fresh: that
-    is the read-your-writes guarantee real stores do give, and it is
-    why the protocol's commit point is a pointer GET, never a listing.
-    The ``_pointer/`` prefix listing is lagged too (``commit_pointer``
-    snaps it); generation resolution never reads it — it rides the
-    ``_latest`` hint object plus exact-key GET probes
-    (``_gen_candidates``), with the dual-writer lost-commit scenario
-    and stale-listing reads pinned by tests. Running the full
-    crash/lifecycle suite under this double is what proves the GC and
-    its keep rule never depend on a listing reflecting a write that
-    just happened.
+class LaggedListingBackend(LocalPosixBackend):
+    """Eventual-consistency test double over the shipped backend:
+    ``list_dir``/``dir_exists`` (the LIST-backed reads) serve STALE
+    views for ``lag_ops`` subsequent backend operations after a
+    mutation touches a prefix — the classic object-store
+    list-after-write hazard. Direct object GETs (the ``CURRENT``
+    pointer, sidecars, file opens) stay fresh: that is the
+    read-your-writes guarantee real stores do give, and it is why the
+    protocol's commit point is a pointer GET, never a listing. The
+    state dir's own listing is lagged too (``commit_pointer`` snaps
+    it), so the GC's root listing runs stale after every commit. The
+    files and the ``local-posix`` seal are the shipped backend's.
+    Running the full crash/lifecycle suite under this double is what
+    proves the GC and its keep rule never depend on a listing
+    reflecting a write that just happened.
 
     SCOPE — what this double does and does not lag: windows open on
     BACKEND-MEDIATED mutations (prepare_dir/publish_file/remove_*/
@@ -1050,8 +792,6 @@ class LaggedManifestBackend(ManifestBackend):
     detector's cap-count delta enumeration and straggler fold) all
     degrade stale-SAFE (skip-and-retry-later or fire-late), each
     documented at its call site."""
-
-    layout_id = ManifestBackend.layout_id  # same protocol, same seal
 
     def __init__(self, lag_ops: int = 5):
         self._lag = lag_ops
@@ -1118,14 +858,12 @@ class LaggedManifestBackend(ManifestBackend):
         d = os.path.abspath(path)
         self._snap(d, os.path.dirname(d))
 
-    def commit_pointer(self, state_dir: str, version: int) -> int:
-        # the generation CAS, hint PUT, and superseded-gen deletes all
-        # mutate _pointer/: freeze its listing like any other prefix.
-        # Resolution never reads it (the _latest hint + exact-key GET
-        # probes of _gen_candidates), and running every suite with
-        # this window open is what proves it.
-        self._snap(os.path.join(os.path.abspath(state_dir), "_pointer"))
-        return super().commit_pointer(state_dir, version)
+    def commit_pointer(self, state_dir: str, version: int) -> None:
+        # the CURRENT flip mutates the state dir's prefix: freeze its
+        # listing like any other, so the GC's root listing runs stale
+        # after every commit (resolution is the CURRENT GET, fresh)
+        self._snap(state_dir)
+        super().commit_pointer(state_dir, version)
 
     # -- LIST-backed reads: serve the stale view while it lasts ----------
     def dir_exists(self, path: str) -> bool:

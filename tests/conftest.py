@@ -37,3 +37,25 @@ def tree_digest(root: str) -> dict[str, str]:
             with open(p, "rb") as fh:
                 out[os.path.relpath(p, root)] = hashlib.sha256(fh.read()).hexdigest()
     return out
+
+
+def to_manifest_backend_dir(state: str) -> None:
+    """Reshape a committed local-posix state dir into what the retired
+    generation-pointer backend left: a seal naming ``manifest`` and the
+    committed version in ``_pointer/gen-*`` (plus its ``_latest`` hint)
+    instead of ``CURRENT``."""
+    import json
+
+    with open(os.path.join(state, "_layout.json")) as fh:
+        layout = json.load(fh)
+    with open(os.path.join(state, "_layout.json"), "w") as fh:
+        json.dump({**layout, "backend": "manifest"}, fh)
+    current = os.path.join(state, "CURRENT")
+    with open(current) as fh:
+        version = fh.read().strip()
+    os.remove(current)
+    os.makedirs(os.path.join(state, "_pointer"))
+    with open(os.path.join(state, "_pointer", "gen-000000000001"), "w") as fh:
+        fh.write(version)
+    with open(os.path.join(state, "_pointer", "_latest"), "w") as fh:
+        fh.write("1")

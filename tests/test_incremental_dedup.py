@@ -7,7 +7,7 @@ import os
 
 import pytest
 
-from tests.conftest import spark  # noqa: F401
+from tests.conftest import spark, to_manifest_backend_dir, tree_digest  # noqa: F401
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat sleeps "
@@ -22,22 +22,20 @@ OTHER = (
 
 def _backends():
     from streaming_examples_spark.streaming.state_backend import (
-        LaggedManifestBackend,
+        LaggedListingBackend,
         LocalPosixBackend,
-        ManifestBackend,
     )
 
     return {
         "posix": LocalPosixBackend,
-        "manifest": ManifestBackend,
         # list-after-write lag on every backend-mediated read (LISTs
         # stale for 5 ops after a mutation, GETs fresh) — the same
-        # third parameterization the tx suite runs. The detector lists
-        # and probes over the same seam (version GC, compaction pointer
+        # parameterization the tx suite runs. The detector lists and
+        # probes over the same seam (version GC, compaction pointer
         # flips, cap counts), so the bug class the lagged double
         # catches (a stale-absent listing = silent state loss) must be
         # probed here too.
-        "manifest-lagged": LaggedManifestBackend,
+        "lagged": LaggedListingBackend,
     }
 
 
@@ -48,10 +46,10 @@ def backend_cls(request):
 
 @pytest.fixture(params=sorted(_backends()))
 def detector(spark, tmp_path, request):
-    """The plain detector, parameterized over BOTH storage backends:
-    every lifecycle test in this module doubles as proof that the
-    store's commit protocol carries no POSIX assumption (directory
-    renames, a rename as the commit point, fresh listings)."""
+    """The plain detector, on the shipped backend and under its
+    list-lag double: every lifecycle test in this module doubles as
+    proof that the store's commit protocol never depends on a fresh
+    listing."""
     from streaming_examples_spark.streaming.incremental_dedup import IncrementalNearDup
 
     return IncrementalNearDup(
@@ -265,7 +263,7 @@ def test_compact_crash_keeps_every_store_in_one_version(
     det._refresh_cap_counts(want)
     fresh._refresh_cap_counts(want)  # exact cold rebuild from the live store
     assert det._cap_hot == fresh._cap_hot
-    if backend_cls.__name__ == "LaggedManifestBackend":
+    if backend_cls.__name__ == "LaggedListingBackend":
         # a lagging bands listing can only defer files: never stale-HIGH
         assert det._cap_seen <= fresh._cap_seen
         assert all(n <= fresh._cap_delta[k] for k, n in det._cap_delta.items())
@@ -357,34 +355,6 @@ def test_lost_pointer_refused_not_gcd(spark, tmp_path):
     assert r[3]["is_dup"] and r[3]["dup_of"] == 1
 
 
-def test_cross_backend_reopen_refused(spark, tmp_path):
-    """The layout seals the backend that committed the store: the two
-    encode pointers differently, so a foreign reopen would read epoch 0
-    and GC live files — the same silent-loss class as a bucket-count
-    mismatch. Must refuse at init."""
-    from streaming_examples_spark.streaming.incremental_dedup import IncrementalNearDup
-    from streaming_examples_spark.streaming.state_backend import (
-        LocalPosixBackend,
-        ManifestBackend,
-    )
-
-    det = IncrementalNearDup(
-        spark, str(tmp_path / "state"), threshold=0.5, backend=ManifestBackend()
-    )
-    det.process_batch(_docs(spark, [(1, BASE)]), 0)
-    with pytest.raises(ValueError, match="storage backend"):
-        IncrementalNearDup(
-            spark, str(tmp_path / "state"), threshold=0.5,
-            backend=LocalPosixBackend(),
-        )
-    # and the sealed backend still opens
-    again = IncrementalNearDup(
-        spark, str(tmp_path / "state"), threshold=0.5, backend=ManifestBackend()
-    )
-    r = {x["doc_id"]: x for x in again.process_batch(_docs(spark, [(2, NEAR)]), 1).collect()}
-    assert r[2]["is_dup"] and r[2]["dup_of"] == 1
-
-
 @pytest.fixture(scope="module")
 def committed_detector_state(spark, tmp_path_factory):
     """One committed single-batch plain near-dup state dir, copied by
@@ -459,6 +429,7 @@ _RETIRED_DETECTOR_SHAPES = {
         st,
         {"format": 1, "backend": "local-posix", "bands_buckets": 4, "sigs_buckets": 4},
     ),
+    "manifest-backend": to_manifest_backend_dir,
 }
 
 
@@ -469,7 +440,7 @@ def test_retired_detector_state_shapes_refused(
     """The near-dup store reads exactly one on-disk format: opening any
     retired shape raises a ValueError naming the rebuild recipe — no
     store is read as empty (every known doc re-admitted) — and the
-    refused open leaves the dir untouched."""
+    refused open leaves the dir byte-identical."""
     import shutil
 
     from streaming_examples_spark.streaming.incremental_dedup import IncrementalNearDup
@@ -477,10 +448,10 @@ def test_retired_detector_state_shapes_refused(
     state = str(tmp_path / "state")
     shutil.copytree(committed_detector_state, state)
     _RETIRED_DETECTOR_SHAPES[shape](state)
-    before = sorted(os.walk(state))
+    before = sorted(os.walk(state)), tree_digest(state)
     with pytest.raises(ValueError, match="rebuild the state dir from the event log"):
         IncrementalNearDup(spark, state, threshold=0.5)
-    assert sorted(os.walk(state)) == before
+    assert (sorted(os.walk(state)), tree_digest(state)) == before
 
 
 @pytest.mark.slow
@@ -688,7 +659,7 @@ def test_writer_lock_blocks_concurrent_writers(spark, detector, tmp_path):
 
     detector.process_batch(_docs(spark, [(1, BASE)]), 0)
 
-    lock = detector._lock_path()
+    lock = os.path.join(detector.state_dir, "_writer.lock")
     with open(lock, "w") as fh:
         json.dump(
             {"pid": os.getpid(), "host": socket.gethostname(), "role": "compact"}, fh
@@ -718,21 +689,22 @@ def test_writer_lock_breaks_stale_lock_of_dead_process(spark, detector):
     proc = subprocess.Popen(["true"])
     proc.wait()
     os.makedirs(detector.state_dir, exist_ok=True)
-    with open(detector._lock_path(), "w") as fh:
+    lock = os.path.join(detector.state_dir, "_writer.lock")
+    with open(lock, "w") as fh:
         json.dump(
             {"pid": proc.pid, "host": socket.gethostname(), "role": "compact"}, fh
         )
     out = {r["doc_id"]: r for r in detector.process_batch(_docs(spark, [(1, BASE)]), 0).collect()}
     assert not out[1]["is_dup"]  # stale lock broken, batch ran
-    assert not os.path.exists(detector._lock_path())
+    assert not os.path.exists(lock)
 
-    with open(detector._lock_path(), "w") as fh:
+    with open(lock, "w") as fh:
         json.dump({"pid": proc.pid, "host": "some-other-host", "role": "compact"}, fh)
     try:
         with pytest.raises(RuntimeError, match="locked by another writer"):
             detector.process_batch(_docs(spark, [(2, OTHER)]), 1)
     finally:
-        os.unlink(detector._lock_path())
+        os.unlink(lock)
 
 
 def _lock_hammer_worker(state_dir, log_path, n_iters):
@@ -861,7 +833,7 @@ def test_cap_uses_compacted_summary_and_survives_restart(spark, tmp_path):
 
 @pytest.mark.slow
 def test_dual_writer_build_fencing_detector(spark, tmp_path, monkeypatch):
-    """Two-host schedule over one manifest-backed detector store (the
+    """Two-host schedule over one detector store (the
     advisory lock is per-filesystem — defeated to model two hosts):
     a remote builder's claim on the next epoch makes the local
     compact raise 'dual-writer detected'; the documented manual heal
@@ -877,19 +849,19 @@ def test_dual_writer_build_fencing_detector(spark, tmp_path, monkeypatch):
     from streaming_examples_spark.streaming.incremental_dedup import (
         IncrementalNearDup,
     )
-    from streaming_examples_spark.streaming.state_backend import ManifestBackend
+    from streaming_examples_spark.streaming.state_backend import LocalPosixBackend
 
     monkeypatch.setattr(
         incdedup_mod, "writer_lock", lambda *a, **kw: contextlib.nullcontext()
     )
     state = str(tmp_path / "state")
     detA = IncrementalNearDup(
-        spark, state, threshold=0.5, backend=ManifestBackend()
+        spark, state, threshold=0.5, backend=LocalPosixBackend()
     )
     detA.process_batch(_docs(spark, [(1, BASE)]), 0)
     # interleaved appends from a SECOND instance are additive
     detB = IncrementalNearDup(
-        spark, state, threshold=0.5, backend=ManifestBackend()
+        spark, state, threshold=0.5, backend=LocalPosixBackend()
     )
     detB.process_batch(_docs(spark, [(2, OTHER)]), 1)
     r = {x["doc_id"]: x for x in detA.process_batch(_docs(spark, [(3, NEAR)]), 2).collect()}
@@ -900,7 +872,7 @@ def test_dual_writer_build_fencing_detector(spark, tmp_path, monkeypatch):
     # writes must survive the refusal (a delete-then-refuse order
     # would gut the dir while hostB's intact marker still lets it
     # validate and commit the half-deleted epoch)
-    b = ManifestBackend()
+    b = LocalPosixBackend()
     v2 = os.path.join(state, "v2")
     b.claim_build(v2, "hostB:1:feedface")
     b.prepare_dir(v2)
@@ -931,7 +903,7 @@ def test_dual_writer_build_fencing_detector(spark, tmp_path, monkeypatch):
         detA.compact()
     # B's compaction committed; the store still answers correctly
     detC = IncrementalNearDup(
-        spark, state, threshold=0.5, backend=ManifestBackend()
+        spark, state, threshold=0.5, backend=LocalPosixBackend()
     )
     NEAR2 = BASE.replace("warm fire", "cold fire")
     r2 = {x["doc_id"]: x for x in detC.process_batch(_docs(spark, [(4, NEAR2)]), 3).collect()}
@@ -954,14 +926,14 @@ def test_compact_folds_concurrent_remote_append(spark, tmp_path, monkeypatch):
     from streaming_examples_spark.streaming.incremental_dedup import (
         IncrementalNearDup,
     )
-    from streaming_examples_spark.streaming.state_backend import ManifestBackend
+    from streaming_examples_spark.streaming.state_backend import LocalPosixBackend
 
     monkeypatch.setattr(
         incdedup_mod, "writer_lock", lambda *a, **kw: contextlib.nullcontext()
     )
     state = str(tmp_path / "state")
     detA = IncrementalNearDup(
-        spark, state, threshold=0.5, backend=ManifestBackend()
+        spark, state, threshold=0.5, backend=LocalPosixBackend()
     )
     detA.process_batch(_docs(spark, [(1, BASE), (2, OTHER)]), 0)
 
@@ -970,7 +942,7 @@ def test_compact_folds_concurrent_remote_append(spark, tmp_path, monkeypatch):
         "generation pointers with conditional puts on object storage"
     )
     detB = IncrementalNearDup(
-        spark, state, threshold=0.5, backend=ManifestBackend()
+        spark, state, threshold=0.5, backend=LocalPosixBackend()
     )
     # model the actual race window: a REMOTE batch whose (lagging)
     # listing never showed the in-flight build dir — with a fresh
@@ -998,7 +970,7 @@ def test_compact_folds_concurrent_remote_append(spark, tmp_path, monkeypatch):
     # the straggler doc's signatures/bands made it into the new epoch:
     # a near-variant still dedups against it, and its sig row survives
     detC = IncrementalNearDup(
-        spark, state, threshold=0.5, backend=ManifestBackend()
+        spark, state, threshold=0.5, backend=LocalPosixBackend()
     )
     sigs = {x["doc_id"] for x in detC.read_store("sigs").select("doc_id").collect()}
     assert 5 in sigs, sigs
@@ -1025,20 +997,20 @@ def test_gc_refolds_stragglers_after_crash_between_flip_and_removal(
     from streaming_examples_spark.streaming.incremental_dedup import (
         IncrementalNearDup,
     )
-    from streaming_examples_spark.streaming.state_backend import ManifestBackend
+    from streaming_examples_spark.streaming.state_backend import LocalPosixBackend
 
     monkeypatch.setattr(
         incdedup_mod, "writer_lock", lambda *a, **kw: contextlib.nullcontext()
     )
     state = str(tmp_path / "state")
-    detA = IncrementalNearDup(spark, state, threshold=0.5, backend=ManifestBackend())
+    detA = IncrementalNearDup(spark, state, threshold=0.5, backend=LocalPosixBackend())
     detA.process_batch(_docs(spark, [(1, BASE), (2, OTHER)]), 0)
 
     THIRD = (
         "entirely new material on state stores committing epochs through "
         "generation pointers with conditional puts on object storage"
     )
-    detB = IncrementalNearDup(spark, state, threshold=0.5, backend=ManifestBackend())
+    detB = IncrementalNearDup(spark, state, threshold=0.5, backend=LocalPosixBackend())
     monkeypatch.setattr(detB, "_gc_epochs", lambda: None)
     real_commit = detA.backend.commit_pointer
     fired = {"done": False}
@@ -1061,7 +1033,7 @@ def test_gc_refolds_stragglers_after_crash_between_flip_and_removal(
 
     # recovery: a fresh detector's first locked op runs _gc_epochs,
     # which folds the straggler from the manifest before reclaiming
-    detC = IncrementalNearDup(spark, state, threshold=0.5, backend=ManifestBackend())
+    detC = IncrementalNearDup(spark, state, threshold=0.5, backend=LocalPosixBackend())
     NEAR_THIRD = THIRD.replace("object storage", "cloud storage")
     r = {
         x["doc_id"]: x
@@ -1155,13 +1127,13 @@ def test_rebuild_hot_coverage_exact_under_list_lag(spark, tmp_path):
         IncrementalNearDup,
     )
     from streaming_examples_spark.streaming.state_backend import (
-        LaggedManifestBackend,
+        LaggedListingBackend,
     )
 
     state = str(tmp_path / "state")
     det = IncrementalNearDup(
         spark, state, threshold=0.5, max_bucket_size=2,
-        backend=LaggedManifestBackend(),
+        backend=LaggedListingBackend(),
     )
     # 3 identical docs, within-batch count 3 > cap 2: peer path gated,
     # all three stored canonical — every shared band key has n=3
@@ -1179,7 +1151,7 @@ def test_rebuild_hot_coverage_exact_under_list_lag(spark, tmp_path):
     # (3 + 3 = 6 ≥ 5 → spuriously gated, no candidates)
     det2 = IncrementalNearDup(
         spark, state, threshold=0.5, max_bucket_size=5,
-        backend=LaggedManifestBackend(),
+        backend=LaggedListingBackend(),
     )
     r = det2.process_batch(_docs(spark, [(4, BASE)]), 1).collect()[0]
     assert r["is_dup"] and r["dup_of"] == 1
@@ -1310,7 +1282,7 @@ def test_random_lifecycle_compactions_crashes_restarts(spark, tmp_path, seed, ba
 def test_random_dual_host_schedules_fail_loud_or_heal(
     spark, tmp_path, seed, monkeypatch
 ):
-    """Dual-HOST soak over one manifest-backed detector store: two
+    """Dual-HOST soak over one detector store: two
     instances carrying DIFFERENT host identities (the advisory lock is
     defeated — the object-store scenario it cannot order) run a random
     interleaved schedule of batches, full compactions, and mid-compact
@@ -1318,9 +1290,9 @@ def test_random_dual_host_schedules_fail_loud_or_heal(
     window, injected at the victim's commit_pointer with the remote
     batch's epoch GC lag-stubbed as in the focused fold test).
 
-    Allowed outcomes per op: success, or a LOUD fencing/CAS error
+    Allowed outcomes per op: success, or a LOUD fencing error
     ("dual-writer detected" / "build conflict" / "build fencing
-    violation" / "pointer generation conflict"). Forbidden, and
+    violation"). Forbidden, and
     asserted at the end regardless of schedule:
 
       * silent canonical loss — every doc a COMPLETED batch reported
@@ -1337,21 +1309,20 @@ def test_random_dual_host_schedules_fail_loud_or_heal(
     from streaming_examples_spark.streaming.incremental_dedup import (
         IncrementalNearDup,
     )
-    from streaming_examples_spark.streaming.state_backend import ManifestBackend
+    from streaming_examples_spark.streaming.state_backend import LocalPosixBackend
 
     monkeypatch.setattr(
         incdedup_mod, "writer_lock", lambda *a, **kw: contextlib.nullcontext()
     )
     _ALLOWED = _re.compile(
         "dual-writer detected|build conflict|build fencing violation"
-        "|pointer generation conflict"
     )
     rng = random.Random(seed)
     state = str(tmp_path / "state")
 
     def fresh(host):
         det = IncrementalNearDup(
-            spark, state, threshold=0.5, backend=ManifestBackend()
+            spark, state, threshold=0.5, backend=LocalPosixBackend()
         )
         det._writer_token = f"{host}:1:{rng.randrange(16**6):06x}"
         return det
@@ -1442,7 +1413,7 @@ def test_random_dual_host_schedules_fail_loud_or_heal(
     # no silent canonical loss: every reported canonical still catches
     # a near-variant through a FRESH instance after a healing compact
     final = IncrementalNearDup(
-        spark, state, threshold=0.5, backend=ManifestBackend()
+        spark, state, threshold=0.5, backend=LocalPosixBackend()
     )
     final.compact()
     probe_id = 90000
@@ -1463,7 +1434,7 @@ def test_random_dual_host_schedules_fail_loud_or_heal(
 # -- COMPOSED adversarial soak: dual-host × list-after-write lag ×
 # crash injection on ONE detector store (VERDICT r11 #3). The three
 # dimensions exist as separate soaks; a real object store presents
-# them together: a shared LaggedManifestBackend models the server-side
+# them together: a shared LaggedListingBackend models the server-side
 # eventual-consistency view BOTH hosts read through, crashes fire at
 # random backend primitives mid-op, and abandoned foreign claims are
 # healed the documented way (heal_stale_builds) before the retry.
@@ -1474,7 +1445,7 @@ def test_random_dual_host_schedules_fail_loud_or_heal(
 def test_composed_dual_host_lag_crash_detector_soak(
     spark, tmp_path, seed, monkeypatch
 ):
-    """Every op succeeds or fails LOUDLY (fencing/CAS/injected crash);
+    """Every op succeeds or fails LOUDLY (fencing/injected crash);
     wedged claims heal via the operator recipe; at the end: no double
     canonicals, no silent canonical loss, and a fresh instance reads
     and compacts the store.
@@ -1500,7 +1471,7 @@ def test_composed_dual_host_lag_crash_detector_soak(
         IncrementalNearDup,
     )
     from streaming_examples_spark.streaming.state_backend import (
-        LaggedManifestBackend,
+        LaggedListingBackend,
         heal_stale_builds,
     )
 
@@ -1509,11 +1480,11 @@ def test_composed_dual_host_lag_crash_detector_soak(
     )
     _ALLOWED = _re.compile(
         "dual-writer detected|build conflict|build fencing violation"
-        "|pointer generation conflict|injected crash"
+        "|injected crash"
     )
     rng = random.Random(seed)
     state = str(tmp_path / "state")
-    shared_backend = LaggedManifestBackend(lag_ops=rng.randint(3, 12))
+    shared_backend = LaggedListingBackend(lag_ops=rng.randint(3, 12))
 
     def fresh(host):
         det = IncrementalNearDup(

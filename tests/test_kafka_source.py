@@ -340,13 +340,12 @@ def test_sink_to_source_wire_roundtrip(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_composed_e2e_manifest_state_restart_and_replay(spark, tmp_path):
+def test_composed_e2e_state_restart_and_replay(spark, tmp_path):
     """The round-8 seams COMPOSED in one pipeline, which no other test
     does: the consumer double feeds the three-topic wire in, the tx
-    state commits through ManifestBackend (object-store constraints —
-    no renames, a conditional-put pointer), and emissions leave
-    through the file-stub producer. The stream is KILLED mid-corpus,
-    restarted with a fresh processor over the same manifest-backed
+    state commits through the versioned pointer protocol, and emissions
+    leave through the file-stub producer. The stream is KILLED
+    mid-corpus, restarted with a fresh processor over the same
     state, and finally fully REPLAYED from offset zero with a wiped
     checkpoint. The parquet output must equal the batch oracle exactly
     once — the restart loses nothing, the replay adds nothing — and
@@ -357,7 +356,6 @@ def test_composed_e2e_manifest_state_restart_and_replay(spark, tmp_path):
     from streaming_examples_spark.operators.txjoin import tx_denormalize
     from streaming_examples_spark.sources.kafka import upsert_sink_batch
     from streaming_examples_spark.streaming.cdc_stream import start_tx_denorm_stream
-    from streaming_examples_spark.streaming.state_backend import ManifestBackend
 
     log = _tx_log()
     staged = write_wire_log(tmp_path, log, files=4)
@@ -398,7 +396,6 @@ def test_composed_e2e_manifest_state_restart_and_replay(spark, tmp_path):
             output_dir=dirs["out"],
             checkpoint_dir=dirs["ckpt"],
             emission_sink=sink,
-            backend=ManifestBackend(),  # a NEW instance per restart
         )
         try:
             q.processAllAvailable()
@@ -409,10 +406,8 @@ def test_composed_e2e_manifest_state_restart_and_replay(spark, tmp_path):
     for c in chunks[:2]:
         shutil.copy2(os.path.join(staged, c), os.path.join(live, c))
     run_stream()
-    # the state really committed through the manifest protocol: a
-    # generation pointer, no POSIX CURRENT file
-    assert os.path.isdir(os.path.join(dirs["state"], "_pointer"))
-    assert not os.path.exists(os.path.join(dirs["state"], "CURRENT"))
+    # the state really committed: the pointer names a version
+    assert os.path.exists(os.path.join(dirs["state"], "CURRENT"))
 
     # phase 2: restart (fresh processor, fresh backend instance) over
     # the same state; the rest of the wire arrives

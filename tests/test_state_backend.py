@@ -1,16 +1,15 @@
-"""The storage seam, proven with TWO backends.
+"""The storage seam, proven on the shipped backend and under lag.
 
 `StateStorageBackend` (streaming/state_backend.py) documents an
-object-store translation of the versioned pointer-commit protocol;
-with only `LocalPosixBackend`, a POSIX-shaped assumption could hide in
-the protocol itself (reads resolving by directory listing, a rename as
-the commit). `ManifestBackend` enforces the object-store constraints —
-no directory renames, a conditional-put pointer — and
-`LaggedManifestBackend` adds list-after-write lag; this module drives
-the SAME lifecycle + crash-window suite through all three, with the
+object-store translation of the versioned pointer-commit protocol.
+`LocalPosixBackend` is the one shipped backend; `LaggedListingBackend`
+is its test double with list-after-write lag, so a protocol that
+resolved anything by a fresh listing would fail under it. This module
+drives the SAME lifecycle + crash-window suite through both, with the
 crash injected at the seam (the backend methods), not at POSIX
-primitives. The tx store carries untouched buckets by reference in
-its `_parts.json`, so no backend ever links or copies a state file.
+primitives, and with tripwires proving no state file is linked,
+copied or renamed: the tx store carries untouched buckets by
+reference in its `_parts.json`.
 
 Reference parity: the reference delegates equivalent durability to
 Flink checkpoints + Kafka (transactional-cdc-processing
@@ -28,20 +27,18 @@ from pyspark.sql import functions as F
 from streaming_examples_spark.model.fixtures import TxLog
 from streaming_examples_spark.streaming.cdc_stream import TxDenormBatchProcessor
 from streaming_examples_spark.streaming.state_backend import (
-    LaggedManifestBackend,
+    LaggedListingBackend,
     LocalPosixBackend,
-    ManifestBackend,
 )
 
 BACKENDS = {
     "posix": LocalPosixBackend,
-    "manifest": ManifestBackend,
     # list-after-write lag (the classic object-store hazard): every
     # LIST-backed read serves a stale view for 5 operations after a
     # mutation; GETs stay fresh. The same suite must hold — the
     # protocol may never depend on a listing reflecting a just-issued
     # write (the GC and its keep rule, bucket loads).
-    "manifest-lagged": LaggedManifestBackend,
+    "lagged": LaggedListingBackend,
 }
 
 
@@ -137,14 +134,13 @@ def test_lifecycle_carry_chain_and_restart(spark, tmp_path, backend_cls):
 
 
 @pytest.mark.slow
-def test_manifest_backend_never_links_or_renames_dirs(
+def test_state_files_never_linked_copied_or_renamed(
     spark, tmp_path, monkeypatch, backend_cls
 ):
-    """The constraint the manifest double exists to enforce, now held by
-    every backend and enforced with tripwires: run the carry-heavy
-    lifecycle while os.link on state files, any directory rename and
-    shutil's copies and moves raise unconditionally — the batches must
-    still commit, so the store provably used none of them. Untouched
+    """The object-store constraint, enforced with tripwires: run the
+    carry-heavy lifecycle while os.link on state files, any directory
+    rename and shutil's copies and moves raise unconditionally — the
+    batches must still commit, so the store provably used none of them. Untouched
     buckets are carried by reference: the committed ``_parts.json``
     resolves them to the older version dir that wrote them."""
     state = str(tmp_path / "state")
@@ -303,349 +299,19 @@ def test_retirement_keeps_exactly_the_parts_the_committed_sidecar_names(
     assert os.path.isdir(os.path.join(state, f"v{cur + 1}", "carry_txs"))
 
 
-def test_manifest_commit_is_conditional_put(tmp_path):
-    """Two writers committing the same generation: exactly one wins,
-    the other gets the conditional-put conflict error — never a silent
-    last-writer-wins overwrite (the property object stores actually
-    give you, and the one the protocol's single-writer lock assumes)."""
-    state = str(tmp_path / "state")
-    os.makedirs(state)
-    a, b = ManifestBackend(), ManifestBackend()
-    a.commit_pointer(state, 1)
-    assert b.read_pointer(state) == 1
-    # simulate the race: b resolves the generation candidates (its
-    # read of the current etag), a commits first, then b acts on the
-    # STALE resolution — b's exclusive create of the same generation
-    # object must fail. (Freeze the _gen_candidates resolution: the
-    # genuinely simultaneous read-before-either-creates race is what
-    # the CAS alone must catch.)
-    gen_dir = os.path.join(state, "_pointer")
-    stale = b._gen_candidates(gen_dir)
-    a.commit_pointer(state, 2)
-    b._gen_candidates = lambda _dir: stale  # freeze b's view at the stale read
-    with pytest.raises(RuntimeError, match="conditional put"):
-        b.commit_pointer(state, 3)
-    assert a.read_pointer(state) == 2  # a's commit stands, untouched
-
-
-def _cas_hammer_worker(state_dir, log_path, barrier, rounds):
-    """One 'host' racing the conditional put: every round, all workers
-    hit commit_pointer for the same logical step at the same instant
-    (barrier), bypassing the local advisory lock entirely — a real
-    object store has two HOSTS, and only the CAS stands between them."""
-    import os
-
-    from streaming_examples_spark.streaming.state_backend import ManifestBackend
-
-    be = ManifestBackend()
-    pid = os.getpid()
-    for r in range(1, rounds + 1):
-        barrier.wait()
-        try:
-            gen = be.commit_pointer(state_dir, r)
-            line = f"win {pid} {r} {gen}\n"
-        except RuntimeError:
-            line = f"lose {pid} {r}\n"
-        # pointer must be readable mid-contention, never torn
-        assert be.read_pointer(state_dir) >= 0
-        fd = os.open(log_path, os.O_WRONLY | os.O_APPEND | os.O_CREAT)
-        os.write(fd, line.encode())
-        os.close(fd)
-
-
-def test_manifest_cas_multi_writer_hammer(tmp_path):
-    """Two+ PROCESSES race commit_pointer's O_EXCL generation CAS
-    directly — not through the advisory writer lock, which is local
-    and cannot order two hosts. Invariants: every generation number is
-    won by exactly one writer, losers fail loudly with the
-    conditional-put error (never silent last-writer-wins), the pointer
-    stays readable throughout, and at least one real collision
-    occurred (the race was exercised, not dodged)."""
-    import multiprocessing as mp
-
-    state, log = str(tmp_path / "state"), str(tmp_path / "log")
-    os.makedirs(state)
-    n_workers, rounds = 4, 12
-    barrier = mp.Barrier(n_workers)
-    procs = [
-        mp.Process(
-            target=_cas_hammer_worker, args=(state, log, barrier, rounds)
-        )
-        for _ in range(n_workers)
-    ]
-    for p in procs:
-        p.start()
-    for p in procs:
-        p.join(timeout=120)
-        assert p.exitcode == 0
-    wins_by_gen: dict[int, list[str]] = {}
-    wins_per_round: dict[int, int] = {}
-    losses = 0
-    with open(log) as fh:
-        for line in fh:
-            parts = line.split()
-            if parts[0] == "win":
-                wins_by_gen.setdefault(int(parts[3]), []).append(parts[1])
-                wins_per_round[int(parts[2])] = (
-                    wins_per_round.get(int(parts[2]), 0) + 1
-                )
-            else:
-                losses += 1
-    # exactly one winner per generation — the CAS held under contention
-    multi = {g: ws for g, ws in wins_by_gen.items() if len(ws) > 1}
-    assert not multi, f"generations won twice: {multi}"
-    # every round made progress, and the race genuinely collided
-    assert set(wins_per_round) == set(range(1, rounds + 1))
-    assert losses > 0, "no CAS conflict ever fired — the hammer missed"
-    # the surviving pointer is clean and parseable
-    from streaming_examples_spark.streaming.state_backend import ManifestBackend
-
-    assert ManifestBackend().read_pointer(state) in range(1, rounds + 1)
-
-
-def test_manifest_torn_generation_skipped_not_unlinked(tmp_path):
-    """A crash between the exclusive create and the durable write
-    leaves an empty/partial gen object. A real conditional put is
-    atomic and cannot produce this, so the emulation must treat it as
-    a FAILED commit: read_pointer resolves the previous generation
-    (not a bare int('') ValueError on every reopen). It must NOT
-    unlink the torn object — a reader cannot tell an abandoned torn
-    write from a commit that is mid-write, and deleting the latter
-    would destroy a succeeding commit and free its generation number
-    for reuse. The next successful commit numbers ABOVE the torn name
-    and its superseded-generation cleanup reclaims it."""
-    state = str(tmp_path / "state")
-    os.makedirs(state)
-    be = ManifestBackend()
-    be.commit_pointer(state, 7)
-    gen_dir = os.path.join(state, "_pointer")
-    # the crash artifacts: an empty gen and a torn (non-numeric) gen
-    open(os.path.join(gen_dir, "gen-000000000002"), "w").close()
-    with open(os.path.join(gen_dir, "gen-000000000003"), "w") as fh:
-        fh.write("par")  # partial write
-    assert be.read_pointer(state) == 7
-    # the read path left everything in place (no reader-side deletes);
-    # _latest is the r12 resolution hint (published by the commit) and
-    # .hint.lock its conditional-PUT emulation lock
-    assert sorted(os.listdir(gen_dir)) == [
-        ".hint.lock",
-        "_latest",
-        "gen-000000000001",
-        "gen-000000000002",
-        "gen-000000000003",
-    ]
-    # the next commit lands ABOVE the torn names (no number reuse)...
-    won = be.commit_pointer(state, 8)
-    assert won == 4
-    assert be.read_pointer(state) == 8
-    # ...and its cleanup reclaimed the torn objects
-    assert sorted(os.listdir(gen_dir)) == [
-        ".hint.lock",
-        "_latest",
-        "gen-000000000004",
-    ]
-    # a torn object with no predecessor reads as "no commit yet"
-    state2 = str(tmp_path / "state2")
-    os.makedirs(os.path.join(state2, "_pointer"))
-    open(os.path.join(state2, "_pointer", "gen-000000000001"), "w").close()
-    assert be.read_pointer(state2) == 0
-
-
-# -- generation resolution never reads the _pointer/ LISTING: the
-# _latest hint object (PUT after every create, BEFORE superseded-
-# generation cleanup) + forward exact-key GET probes are the whole
-# resolution path. These tests run the lag double with the pointer
-# listing frozen STALE.
-
-
 def test_pointer_resolution_with_permanently_stale_listing(tmp_path):
-    """Commits through a lag window so wide the _pointer/ listing never
-    reflects ANY generation: every commit must still win the next dense
-    generation (no conditional-put false conflict, no silent reuse of a
-    reclaimed number), and read_pointer must resolve the latest version
-    via the _latest hint + probes alone."""
+    """Commits through a lag window so wide the state dir's listing
+    never reflects ANY of them: read_pointer must still resolve the
+    newest commit, because it is a GET of ``CURRENT``, never a LIST."""
     state = str(tmp_path / "state")
     os.makedirs(state)
-    lag = LaggedManifestBackend(lag_ops=10_000)
-    gens = [lag.commit_pointer(state, v) for v in (11, 22, 33)]
-    assert gens == [1, 2, 3]  # dense wins despite the stale-empty LIST
-    # the stale view really is open (the probe below is the LIST path)
-    gen_dir = os.path.join(state, "_pointer")
-    assert lag._physical_listing(gen_dir) == []
-    # lagged reader resolves by hint+GET; a fresh handle agrees
+    lag = LaggedListingBackend(lag_ops=10_000)
+    for v in (11, 22, 33):
+        lag.commit_pointer(state, v)
+    # the stale view really is open: the listing still shows no pointer
+    assert lag.list_dir(state) == []
     assert lag.read_pointer(state) == 33
-    assert ManifestBackend().read_pointer(state) == 33
-
-
-def test_dual_writer_stale_pointer_listing_no_lost_commit(tmp_path):
-    """THE lost-commit scenario the hint exists for: host B's pointer
-    listing is stale (shows only gen-5) while host A has advanced to
-    gen-8 and cleanup reclaimed gens 5-7. Without the hint, B would
-    compute nxt=6 and its exclusive create of the RECLAIMED gen-6 name
-    would SUCCEED — a silently lost commit (readers resolve gen-8,
-    B thinks it won). With the hint GET, B must win gen-9 and its
-    version must become the one every reader resolves."""
-    state = str(tmp_path / "state")
-    os.makedirs(state)
-    a = ManifestBackend()
-    for v in range(1, 6):
-        a.commit_pointer(state, v)  # gen-5 is the live generation
-    b = LaggedManifestBackend(lag_ops=10_000)
-    gen_dir = os.path.join(state, "_pointer")
-    b.note_spark_write(gen_dir)  # freeze B's LIST view at {gen-5}
-    for v in range(6, 9):
-        a.commit_pointer(state, v)  # cleanup reclaims gens 5..7
-    stale_view = [n for n in b._physical_listing(gen_dir) if n.startswith("gen-")]
-    assert stale_view == ["gen-000000000005"]
-    won = b.commit_pointer(state, 99)
-    assert won == 9, "stale listing must not re-win a reclaimed generation"
-    assert ManifestBackend().read_pointer(state) == 99
-    assert b.read_pointer(state) == 99
-
-
-def test_failed_hint_publish_does_not_fail_the_committed_batch(tmp_path):
-    """The exclusive create IS the commit point; the hint is advisory.
-    A hint-PUT failure right after the create must therefore NOT raise
-    out of commit_pointer — the caller would replay a batch whose
-    state transition already landed (duplicate application). Instead
-    the commit succeeds with a warning, the superseded-generation
-    cleanup is SKIPPED (deleting under a stale hint would break the
-    resolution invariant), resolution heals via the +1 forward probe,
-    and the next successful commit re-publishes the hint and reclaims.
-    """
-    state = str(tmp_path / "state")
-    os.makedirs(state)
-    lag = LaggedManifestBackend(lag_ops=10_000)
-    lag.commit_pointer(state, 1)
-    lag.commit_pointer(state, 2)
-    gen_dir = os.path.join(state, "_pointer")
-    real_publish = LaggedManifestBackend.publish_file
-    crashed = []
-
-    def crash_on_hint(self, path, data):
-        if os.path.basename(path) == ManifestBackend.LATEST and not crashed:
-            crashed.append(path)
-            raise RuntimeError("injected hint-publish failure")
-        return real_publish(self, path, data)
-
-    lag.publish_file = crash_on_hint.__get__(lag)
-    with pytest.warns(RuntimeWarning, match="hint publish failed"):
-        assert lag.commit_pointer(state, 3) == 3  # commit REPORTED won
-    assert crashed  # the injection really fired
-    # the hint is stale at 2, the listing stale-empty, gen-2 retained
-    # (cleanup skipped — the invariant "deleted ⇒ hint ≥ superseder")
-    assert lag._read_hint(gen_dir) == 2
-    assert lag._physical_listing(gen_dir) == []
-    assert os.path.exists(os.path.join(gen_dir, "gen-000000000002"))
-    assert lag.read_pointer(state) == 3  # +1 probe past the stale hint
-    # next commit numbers above the crash-committed gen, heals the
-    # hint, and its cleanup reclaims the retained gen-2
-    assert lag.commit_pointer(state, 4) == 4
-    assert lag._read_hint(gen_dir) == 4
-    assert lag.read_pointer(state) == 4
-    assert not os.path.exists(os.path.join(gen_dir, "gen-000000000002"))
-
-    # a store whose FIRST hint publish failed has no _latest at all:
-    # resolution probes up from gen 0, so the commit is found with the
-    # pointer listing frozen stale-empty, and the next commit heals
-    first = str(tmp_path / "first")
-    os.makedirs(first)
-    first_gens = os.path.join(first, "_pointer")
-    fresh_lag = LaggedManifestBackend(lag_ops=10_000)
-    crashed.clear()
-    fresh_lag.publish_file = crash_on_hint.__get__(fresh_lag)
-    with pytest.warns(RuntimeWarning, match="hint publish failed"):
-        assert fresh_lag.commit_pointer(first, 7) == 1
-    assert crashed
-    assert fresh_lag._read_hint(first_gens) == 0
-    assert fresh_lag._physical_listing(first_gens) == []
-    assert fresh_lag.read_pointer(first) == 7
-    assert ManifestBackend().read_pointer(first) == 7
-    assert fresh_lag.commit_pointer(first, 8) == 2
-    assert fresh_lag._read_hint(first_gens) == 2
-    assert fresh_lag.read_pointer(first) == 8
-
-
-def test_hint_publish_is_monotonic(tmp_path):
-    """A delayed writer must never move the hint backwards — the
-    deletion invariant readers rely on assumes monotonicity — and a
-    reader whose pointer listing is stale resolves by hint + probes."""
-    state = str(tmp_path / "state")
-    gen_dir = os.path.join(state, "_pointer")
-    os.makedirs(state)
-    be = ManifestBackend()
-    assert [be.commit_pointer(state, v) for v in (30, 40)] == [1, 2]
-    assert be._read_hint(gen_dir) == 2
-    # the guard: a stale writer's lower hint write is a no-op
-    be._publish_hint(gen_dir, 1)
-    assert be._read_hint(gen_dir) == 2
-    lag = LaggedManifestBackend(lag_ops=10_000)
-    lag.note_spark_write(gen_dir)  # freeze the LIST view at {gen-2}
-    be.commit_pointer(state, 50)
-    assert "gen-000000000003" not in lag._physical_listing(gen_dir)
-    assert lag.read_pointer(state) == 50
-    # a generation a crash stranded below the hint (after the hint PUT,
-    # before cleanup) is out of the probes' reach; the next commit's
-    # sweep still reclaims it
-    with open(os.path.join(gen_dir, "gen-000000000001"), "w") as fh:
-        fh.write("30")
-    assert be.commit_pointer(state, 60) == 4
-    assert [n for n in os.listdir(gen_dir) if n.startswith("gen-")] == [
-        "gen-000000000004"
-    ]
-
-
-def test_hint_guard_is_atomic_under_interleaved_writers(tmp_path):
-    """The monotonic guard must be check+PUT ATOMIC: a writer stalling
-    between reading the hint and writing its lower value must not
-    regress a hint a faster writer advanced past (review repro: hint
-    7 → 5 re-opened the reclaimed-generation reuse, because gens
-    between the regressed hint and the live one were already cleanup-
-    deleted and the +1 probe cannot cross the gap). The flock held
-    across check+PUT — the local emulation of a conditional PUT —
-    forces the interleave to serialize; final hint == max, always."""
-    import threading
-
-    state = str(tmp_path / "state")
-    gen_dir = os.path.join(state, "_pointer")
-    os.makedirs(gen_dir)
-    slow = ManifestBackend()
-    fast = ManifestBackend()
-    real_publish = ManifestBackend.publish_file
-
-    def slow_publish(self, path, data):
-        import time as _t
-
-        _t.sleep(0.3)  # stall INSIDE the critical section
-        return real_publish(self, path, data)
-
-    slow.publish_file = slow_publish.__get__(slow)
-    t = threading.Thread(target=lambda: slow._publish_hint(gen_dir, 5))
-    t.start()
-    import time as _t
-
-    _t.sleep(0.05)  # let the slow writer enter its check first
-    fast._publish_hint(gen_dir, 7)
-    t.join()
-    assert fast._read_hint(gen_dir) == 7, "hint regressed past a superseder"
-
-
-def test_corrupt_pointer_hint_fails_loud_not_silent(tmp_path):
-    """publish_file is an atomic PUT on every targeted store, so
-    unreadable _latest bytes mean the store broke that contract.
-    Degrading silently to the (possibly stale) listing would be the
-    r10 silent-state-loss class — resolution must raise instead."""
-    state = str(tmp_path / "state")
-    os.makedirs(state)
-    be = ManifestBackend()
-    be.commit_pointer(state, 5)
-    gen_dir = os.path.join(state, "_pointer")
-    with open(os.path.join(gen_dir, "_latest"), "w") as fh:
-        fh.write("not-a-generation")
-    with pytest.raises(RuntimeError, match="corrupt pointer hint"):
-        be.read_pointer(state)
-    with pytest.raises(RuntimeError, match="corrupt pointer hint"):
-        be.commit_pointer(state, 6)
+    assert LocalPosixBackend().read_pointer(state) == 33
 
 
 def test_backends_exclude_writer_sidecars_from_logical_namespace(tmp_path):
@@ -660,7 +326,7 @@ def test_backends_exclude_writer_sidecars_from_logical_namespace(tmp_path):
     (d / ".part-0001.parquet.crc").write_bytes(b"c")
     (d / "_SUCCESS").write_bytes(b"")
     (d / "_bucket=3").mkdir()
-    for be in (LocalPosixBackend(), ManifestBackend()):
+    for be in (LocalPosixBackend(), LaggedListingBackend()):
         assert be.list_dir(str(d)) == ["_bucket=3", "part-0001.parquet"], type(be)
 
 
@@ -799,7 +465,7 @@ def test_tx_metadata_order_regression_raises_not_silent(
 
 @pytest.mark.slow
 def test_dual_writer_build_fencing_tx_store(spark, tmp_path, monkeypatch):
-    """Two-host schedule over one manifest-backed tx store (the
+    """Two-host schedule over one tx store (the
     advisory lock is per-filesystem — defeated here to model separate
     hosts): (1) a REMOTE builder's claim on the next version dir makes
     the local batch raise 'dual-writer detected' instead of GC'ing and
@@ -812,19 +478,18 @@ def test_dual_writer_build_fencing_tx_store(spark, tmp_path, monkeypatch):
     import contextlib
 
     from streaming_examples_spark.streaming import locks as locks_mod
-    from streaming_examples_spark.streaming.state_backend import ManifestBackend
 
     monkeypatch.setattr(
         locks_mod, "writer_lock", lambda *a, **kw: contextlib.nullcontext()
     )
     state = str(tmp_path / "state")
     procA = TxDenormBatchProcessor(
-        spark, state, n_buckets=8, backend=ManifestBackend()
+        spark, state, n_buckets=8, backend=LocalPosixBackend()
     )
     assert procA.process(*_dfs(spark, _seed_log()), batch_id=0).count() == 8
 
     # (1) remote host mid-build: its claim blocks the local writer
-    b = ManifestBackend()
+    b = LocalPosixBackend()
     v2 = os.path.join(state, "v2")
     b.claim_build(v2, "hostB:1:feedface")
     # hostB's in-flight writes must survive the refusal: the refuse
@@ -847,7 +512,7 @@ def test_dual_writer_build_fencing_tx_store(spark, tmp_path, monkeypatch):
     # A's commit-time validation (B's GC reclaims A's same-host claim —
     # legitimate only because the lock normally forbids this schedule)
     procB = TxDenormBatchProcessor(
-        spark, state, n_buckets=8, backend=ManifestBackend()
+        spark, state, n_buckets=8, backend=LocalPosixBackend()
     )
     # A's tx carries the HIGHER commit LSN: after B's tx emits first,
     # A's retry still satisfies the (also enforced) commit-order intake
@@ -869,7 +534,7 @@ def test_dual_writer_build_fencing_tx_store(spark, tmp_path, monkeypatch):
     # fresh processor (A's retry) lands cleanly on top
     assert b.read_pointer(state) == 3
     fresh = TxDenormBatchProcessor(
-        spark, state, n_buckets=8, backend=ManifestBackend()
+        spark, state, n_buckets=8, backend=LocalPosixBackend()
     )
     d = fresh.process(*batchA, batch_id=8).collect()
     assert sorted(str(l["price"]) for l in d[0]["lines"]) == [
@@ -879,34 +544,8 @@ def test_dual_writer_build_fencing_tx_store(spark, tmp_path, monkeypatch):
     ]
 
 
-def test_cross_backend_reopen_refused(spark, tmp_path):
-    """A state dir committed by one backend reopened under the other
-    must RAISE: the two encode the commit pointer differently (CURRENT
-    file vs _pointer/gen-*), so a cross-backend reopen reads version 0,
-    treats live state as fresh, and the batch-start GC would delete the
-    committed versions as garbage — the same silent-loss class as an
-    n_buckets mismatch, sealed in _layout.json the same way."""
-    log = TxLog()
-    log.tx(lambda t: t.insert_order(10001), lambda t: t.insert_line(100001, 10001))
-    b0 = _dfs(spark, log)
-    for committer, reopener in (
-        (LocalPosixBackend, ManifestBackend),
-        (ManifestBackend, LocalPosixBackend),
-    ):
-        state = str(tmp_path / f"state_{committer.layout_id}")
-        proc = TxDenormBatchProcessor(spark, state, n_buckets=4, backend=committer())
-        assert proc.process(*b0, batch_id=0).count() == 1
-        wrong = TxDenormBatchProcessor(spark, state, n_buckets=4, backend=reopener())
-        with pytest.raises(ValueError, match="storage backend"):
-            wrong.process(*b0, batch_id=1)
-        # nothing was deleted by the refused open: the committed state
-        # is intact for the matching backend
-        again = TxDenormBatchProcessor(spark, state, n_buckets=4, backend=committer())
-        assert again.process(*b0, batch_id=1).count() == 0  # replay filtered
-
-
 @pytest.mark.slow
-def test_manifest_orphans_reclaimed_and_versions_bounded(spark, tmp_path):
+def test_orphans_reclaimed_and_versions_bounded(spark, tmp_path):
     """Retained versions must CONVERGE, not accumulate: once later
     batches rewrite the buckets whose parts an old version still
     owned, a subsequent GC pass reclaims that version dir entirely,
@@ -916,7 +555,7 @@ def test_manifest_orphans_reclaimed_and_versions_bounded(spark, tmp_path):
     import re
 
     state = str(tmp_path / "state")
-    proc = TxDenormBatchProcessor(spark, state, n_buckets=2, backend=ManifestBackend())
+    proc = TxDenormBatchProcessor(spark, state, n_buckets=2)
 
     # two keys provably in DIFFERENT buckets of 2
     cand = [30000 + i for i in range(8)]
@@ -962,70 +601,6 @@ def test_manifest_orphans_reclaimed_and_versions_bounded(spark, tmp_path):
         for r in proc.read_state("order_state").select("order_key").collect()
     }
     assert keys == {key_a, key_b}
-
-
-@pytest.mark.slow
-def test_stream_runs_on_manifest_backend(spark, tmp_path):
-    """start_tx_denorm_stream's backend/n_buckets passthrough: a real
-    micro-batch stream commits its state through ManifestBackend (the
-    generation-object pointer proves which backend ran), produces the
-    same emissions, and a restarted stream would reopen it — the seam
-    is usable from the public streaming entry point, not only from the
-    processor."""
-    import os
-
-    from streaming_examples_spark.model.fixtures import (
-        LINE_ROW_SCHEMA,
-        ORDER_ROW_SCHEMA,
-    )
-    from streaming_examples_spark.sources.files import (
-        read_envelope_log,
-        read_tx_log,
-        write_event_log,
-    )
-    from streaming_examples_spark.streaming.cdc_stream import start_tx_denorm_stream
-
-    log = TxLog()
-    log.tx(
-        lambda t: t.insert_order(10001),
-        lambda t: t.insert_line(100001, 10001, price="19.99"),
-    )
-    log.tx(lambda t: t.insert_line(100002, 10001, price="5.00"))
-
-    orders = [e for e in log.events if e["source"]["table"] == "orders"]
-    lines = [e for e in log.events if e["source"]["table"] == "order_lines"]
-    dirs = {n: str(tmp_path / n) for n in ("o", "l", "x", "out", "state", "ckpt")}
-    write_event_log(orders, dirs["o"], files=1)
-    write_event_log(lines, dirs["l"], files=2)  # ≥2 micro-batches
-    write_event_log(log.tx_events, dirs["x"], files=1)
-
-    q = start_tx_denorm_stream(
-        spark,
-        read_envelope_log(spark, dirs["o"], ORDER_ROW_SCHEMA, streaming=True),
-        read_envelope_log(spark, dirs["l"], LINE_ROW_SCHEMA, streaming=True),
-        read_tx_log(spark, dirs["x"], streaming=True),
-        state_dir=dirs["state"],
-        output_dir=dirs["out"],
-        checkpoint_dir=dirs["ckpt"],
-        n_buckets=4,
-        backend=ManifestBackend(),
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    rows = spark.read.parquet(dirs["out"]).orderBy("commit_lsn").collect()
-    assert [len(r["lines"] or []) for r in rows] == [1, 2]
-    # the manifest pointer encoding is on disk (not a CURRENT file) and
-    # the layout sealed the backend identity
-    assert os.path.isdir(os.path.join(dirs["state"], "_pointer"))
-    assert not os.path.exists(os.path.join(dirs["state"], "CURRENT"))
-    import json
-
-    with open(os.path.join(dirs["state"], "_layout.json")) as fh:
-        layout = json.load(fh)
-    assert layout == {"format": 1, "backend": "manifest", "n_buckets": 4}
 
 
 @pytest.mark.parametrize("backend_key", sorted(BACKENDS))
@@ -1184,7 +759,7 @@ def test_heal_stale_builds_tool_covers_both_layouts(tmp_path):
 def test_random_dual_host_tx_schedules_exactly_once_or_loud(
     spark, tmp_path, seed, monkeypatch
 ):
-    """Randomized dual-HOST soak over one manifest-backed tx store —
+    """Randomized dual-HOST soak over one tx store —
     the tx-store counterpart of the detector soak
     (test_incremental_dedup.py): two TxDenormBatchProcessor instances
     with distinct writer tokens (the advisory lock is defeated to
@@ -1198,7 +773,7 @@ def test_random_dual_host_tx_schedules_exactly_once_or_loud(
 
       * fail-loud: every op either succeeds or raises a KNOWN loud
         error (injected crash / build fencing violation / dual-writer
-        detected / pointer generation conflict) — never silent
+        detected) — never silent
       * sink-level at-least-once, nothing lost: the union of pairs
         delivered through emission_sink == the oracle's touched pairs
       * caller-level exactly-once: pairs across successfully RETURNED
@@ -1231,7 +806,7 @@ def test_random_dual_host_tx_schedules_exactly_once_or_loud(
 
     def mk_host():
         return TxDenormBatchProcessor(
-            spark, state, n_buckets=8, backend=ManifestBackend(),
+            spark, state, n_buckets=8, backend=LocalPosixBackend(),
             emission_sink=sink,
         )
 
@@ -1240,7 +815,6 @@ def test_random_dual_host_tx_schedules_exactly_once_or_loud(
         "injected crash",
         "build fencing violation",
         "dual-writer detected",
-        "generation conflict",
     )
 
     n_batches = rng.randint(3, 4)
@@ -1557,7 +1131,7 @@ def test_marker_bearing_store_through_public_readers(spark, tmp_path):
 # (VERDICT r11 #3). The per-dimension soaks exist separately (dual-host
 # above; lag via the backend_cls matrix; crash via _crash_once suites);
 # a real object store presents all three AT ONCE. One shared
-# LaggedManifestBackend models the server-side eventual-consistency
+# LaggedListingBackend models the server-side eventual-consistency
 # view both hosts read through; crashes leave same-host-reclaimable
 # claims the retry heals; the remote-mid-commit hijack exercises the
 # build-marker fence under stale listings.
@@ -1590,7 +1164,7 @@ def test_composed_dual_host_lag_crash_tx_soak(
 
     # ONE shared lag double: the store's eventual-consistency view is
     # server-side, so either host's mutation lags BOTH hosts' listings
-    shared_backend = LaggedManifestBackend(lag_ops=rng.randint(3, 12))
+    shared_backend = LaggedListingBackend(lag_ops=rng.randint(3, 12))
 
     sink_pairs: list[tuple] = []
 
@@ -1610,7 +1184,6 @@ def test_composed_dual_host_lag_crash_tx_soak(
         "injected crash",
         "build fencing violation",
         "dual-writer detected",
-        "generation conflict",
     )
 
     n_batches = rng.randint(3, 4)

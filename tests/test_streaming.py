@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from streaming_examples_spark.model.fixtures import TxLog
 from streaming_examples_spark.model.envelope import TOAST_SENTINEL
 from streaming_examples_spark.streaming.cdc_stream import TxDenormBatchProcessor
+from tests.conftest import to_manifest_backend_dir
 
 
 @pytest.mark.slow
@@ -1165,6 +1166,7 @@ _RETIRED_TX_SHAPES = {
         os.path.join(st, "v1", "_parts.json")
     )),
     "lost-pointer": (False, _lose_pointer),
+    "manifest-backend": (False, to_manifest_backend_dir),
 }
 
 

@@ -38,7 +38,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from streaming_examples_spark.streaming.locks import writer_lock  # noqa: E402
 from streaming_examples_spark.streaming.state_backend import (  # noqa: E402
     LocalPosixBackend,
-    ManifestBackend,
     heal_stale_builds,
 )
 
@@ -59,17 +58,12 @@ def main() -> int:
         action="store_true",
         help="actually release (default: dry-run report only)",
     )
-    ap.add_argument(
-        "--backend", choices=("posix", "manifest"), default="posix"
-    )
     args = ap.parse_args()
 
-    backend = (
-        ManifestBackend() if args.backend == "manifest" else LocalPosixBackend()
-    )
     with writer_lock(args.state_dir, "heal"):
         report = heal_stale_builds(
-            backend, args.state_dir, args.older_than, dry_run=not args.apply
+            LocalPosixBackend(), args.state_dir, args.older_than,
+            dry_run=not args.apply,
         )
     print(json.dumps({"apply": args.apply, "report": report}, indent=2))
     healed, kept = len(report["healed"]), len(report["kept"])

@@ -5,7 +5,7 @@ size — the evidence that per-batch cost tracks BATCH size (probe is an
 equi-join into the band store), not accumulated corpus size.
 
 Usage: python tools/stress_incremental_dedup.py [--seed M]
-       [--cap K|none] [--backend posix|manifest] [sf_dir] [n_batches]
+       [--cap K|none] [sf_dir] [n_batches]
 
 Every run ends with the store maintenance cycle: ``compact()``, a
 redelivery of batch 0, and a second ``compact()``. The tool exits
@@ -18,10 +18,6 @@ the compactions.
 ``--cap`` sets the viral-band guard (default 256, the measured batch-family
 value; ``none`` disables) — A/B the per-batch cost of the cap's extra
 store scan.
-
-``--backend manifest`` commits the stores through the object-store
-double (no renames, a conditional-put pointer) — the same batches and
-compaction passes must hold under both backends.
 
 ``--seed M`` pre-folds M synthetic docs (``synth_docs``) into the
 store before streaming the sf batches — the big-store regime.
@@ -101,11 +97,6 @@ def main() -> int:
         i = argv.index("--cap")
         cap = None if argv[i + 1] == "none" else int(argv[i + 1])
         del argv[i : i + 2]
-    backend_name = "posix"
-    if "--backend" in argv:
-        i = argv.index("--backend")
-        backend_name = argv[i + 1]
-        del argv[i : i + 2]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.1"
     n_batches = int(argv[1]) if len(argv) > 1 else 10
 
@@ -115,20 +106,11 @@ def main() -> int:
     n_docs = docs.count()
 
     state = tempfile.mkdtemp(prefix="incdedup_")
-    from streaming_examples_spark.streaming.state_backend import (
-        LocalPosixBackend,
-        ManifestBackend,
-    )
-
-    backend = {"posix": LocalPosixBackend, "manifest": ManifestBackend}[
-        backend_name
-    ]()
     det = IncrementalNearDup(
         spark,
         os.path.join(state, "state"),
         threshold=0.7,
         max_bucket_size=cap,
-        backend=backend,
     )
 
     if seed:

@@ -7,9 +7,8 @@ the chosen SF (one tx per order, via the same envelope synthesis as the
 tx_denorm_orders catalog query, LSN-offset per round); batches 1..K
 each touch a disjoint ~1% slice of the orders with NEW transactions.
 
-Usage: python tools/stress_state_store.py [sf_dir] [n_batches] [n_buckets] [slice_modulus] [backend]
+Usage: python tools/stress_state_store.py [sf_dir] [n_batches] [n_buckets] [slice_modulus]
 
-``backend`` = posix (default) | manifest.
 Prints one line per batch: wall time, emissions, bytes written to the
 two bucketed state tables, the bucket count rewritten, the bytes both
 tables hold on disk, and the backend calls the batch made (in total and
@@ -181,20 +180,14 @@ def main():
     n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 5
     n_buckets = int(sys.argv[3]) if len(sys.argv) > 3 else 256
     slice_mod = int(sys.argv[4]) if len(sys.argv) > 4 else 1000
-    backend_name = sys.argv[5] if len(sys.argv) > 5 else "posix"
     spark = get_spark("stress-state")
     spark.sparkContext.setLogLevel("ERROR")
 
     import tempfile
 
-    from streaming_examples_spark.streaming.state_backend import (
-        LocalPosixBackend,
-        ManifestBackend,
-    )
+    from streaming_examples_spark.streaming.state_backend import LocalPosixBackend
 
-    backend = CountingBackend(
-        {"posix": LocalPosixBackend, "manifest": ManifestBackend}[backend_name]()
-    )
+    backend = CountingBackend(LocalPosixBackend())
     state_dir = tempfile.mkdtemp(prefix="stress_state_")
     proc = TxDenormBatchProcessor(
         spark, state_dir, n_buckets=n_buckets, backend=backend
