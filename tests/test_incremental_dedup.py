@@ -34,8 +34,10 @@ def _backends():
         # probes over the same seam (version GC, compaction pointer
         # flips, cap counts), so the bug class the lagged double
         # catches (a stale-absent listing = silent state loss) must be
-        # probed here too.
-        "lagged": LaggedListingBackend,
+        # probed here too. The id keeps the name it had when the double
+        # wrapped the retired generation-pointer backend, so test ids
+        # stay stable across the consolidation.
+        "manifest-lagged": LaggedListingBackend,
     }
 
 
@@ -353,6 +355,35 @@ def test_lost_pointer_refused_not_gcd(spark, tmp_path):
         fh.write("2")
     r = {x["doc_id"]: x for x in fresh.process_batch(_docs(spark, [(3, NEAR)]), 1).collect()}
     assert r[3]["is_dup"] and r[3]["dup_of"] == 1
+
+
+def test_cross_backend_reopen_refused(spark, tmp_path):
+    """The layout seals the layout_id of the backend that committed the
+    store: an opener with another id would look for the pointer where
+    it is not, read epoch 0 and GC live files — the same silent-loss
+    class as a bucket-count mismatch. Must refuse at init with the
+    rebuild hint, and the sealed backend still opens the store."""
+    from streaming_examples_spark.streaming.incremental_dedup import IncrementalNearDup
+    from streaming_examples_spark.streaming.state_backend import LocalPosixBackend
+
+    class ForeignSealBackend(LocalPosixBackend):
+        layout_id = "foreign"
+
+    det = IncrementalNearDup(
+        spark, str(tmp_path / "state"), threshold=0.5, backend=LocalPosixBackend()
+    )
+    det.process_batch(_docs(spark, [(1, BASE)]), 0)
+    with pytest.raises(ValueError, match="storage backend") as exc:
+        IncrementalNearDup(
+            spark, str(tmp_path / "state"), threshold=0.5,
+            backend=ForeignSealBackend(),
+        )
+    assert "rebuild the state dir from the event log" in str(exc.value)
+    again = IncrementalNearDup(
+        spark, str(tmp_path / "state"), threshold=0.5, backend=LocalPosixBackend()
+    )
+    r = {x["doc_id"]: x for x in again.process_batch(_docs(spark, [(2, NEAR)]), 1).collect()}
+    assert r[2]["is_dup"] and r[2]["dup_of"] == 1
 
 
 @pytest.fixture(scope="module")

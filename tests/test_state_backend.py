@@ -37,8 +37,10 @@ BACKENDS = {
     # LIST-backed read serves a stale view for 5 operations after a
     # mutation; GETs stay fresh. The same suite must hold — the
     # protocol may never depend on a listing reflecting a just-issued
-    # write (the GC and its keep rule, bucket loads).
-    "lagged": LaggedListingBackend,
+    # write (the GC and its keep rule, bucket loads). The id keeps the
+    # name it had when the double wrapped the retired generation-pointer
+    # backend, so test ids stay stable across the consolidation.
+    "manifest-lagged": LaggedListingBackend,
 }
 
 
@@ -542,6 +544,38 @@ def test_dual_writer_build_fencing_tx_store(spark, tmp_path, monkeypatch):
         "5.00",
         "9.00",
     ]
+
+
+class _ForeignSealBackend(LocalPosixBackend):
+    """The posix primitives under another seal id: stands in for any
+    backend other than the one the engine opens."""
+
+    layout_id = "foreign"
+
+
+def test_cross_backend_reopen_refused(spark, tmp_path):
+    """The layout seals the layout_id of the backend that committed the
+    dir, and an opener with another id must RAISE with the rebuild hint
+    in both directions: a backend that keeps its commit pointer
+    elsewhere would read version 0, treat live state as fresh, and the
+    batch-start GC would delete the committed versions as garbage. The
+    refused open deletes nothing: the sealed backend resumes on it."""
+    log = TxLog()
+    log.tx(lambda t: t.insert_order(10001), lambda t: t.insert_line(100001, 10001))
+    b0 = _dfs(spark, log)
+    for committer, reopener in (
+        (LocalPosixBackend, _ForeignSealBackend),
+        (_ForeignSealBackend, LocalPosixBackend),
+    ):
+        state = str(tmp_path / f"state_{committer.layout_id}")
+        proc = TxDenormBatchProcessor(spark, state, n_buckets=4, backend=committer())
+        assert proc.process(*b0, batch_id=0).count() == 1
+        wrong = TxDenormBatchProcessor(spark, state, n_buckets=4, backend=reopener())
+        with pytest.raises(ValueError, match="storage backend") as exc:
+            wrong.process(*b0, batch_id=1)
+        assert "rebuild the state dir from the event log" in str(exc.value)
+        again = TxDenormBatchProcessor(spark, state, n_buckets=4, backend=committer())
+        assert again.process(*b0, batch_id=1).count() == 0  # replay filtered
 
 
 @pytest.mark.slow
